@@ -1,4 +1,4 @@
-"""Exact distributed kNN via Morton-cell candidate pruning (SURVEY.md J5/J6).
+"""Exact distributed kNN via cell-ring candidate pruning (SURVEY.md J5/J6).
 
 Reference semantics:
 - J5: per target point, euclidean distances to candidates, argsort, take k
@@ -7,89 +7,90 @@ Reference semantics:
   dropping candidates closer than ``remove_too_close`` = 3 m
   (batch_sam.py:427-460, 195-207; config.py:34).
 
-Physical plan (the north_star's "cell-local broadcast candidate pruning"):
-1. ring r: left points explode to their (2r+1)^2 ring cells → equi-join with
-   right points on cell_id → distance expression → window rank ≤ k.
-2. a left point is PROVEN complete when it found ≥ k candidates and its k-th
-   distance is < r*cell_size (the ring guarantees covering radius r*cell_size
-   around any point in the cell — anything closer is already a candidate), OR
-   when the ring box already covers the DATA BOUNDS (min/max of the right
-   side, one tiny agg) — the boundary-probe proof round 1 lacked: a probe at
-   the site edge has provably-empty space outside the bounds, so it no longer
-   escalates to the cross-join fallback (VERDICT.md "What's wrong" 3).
-3. survivors escalate with 4x ring radius; each escalation round handles an
-   exponentially-shrinking set, so total work stays near the ring-1 cost, and
-   rings reach data-bounds coverage in O(log(extent/cell)) rounds — the
-   cross-join fallback is retained only as a never-reached safety net.
+One core, ``_ring_knn``, serves both: the top-k per (probe, group), where the
+group is a constant for J5 and the candidate's quadrant for J6.
+``knn_join`` and ``quadrant_knn_join`` are thin wrappers.
 
-Why this scales: the join is a plain shuffle equi-join on int64 cell keys —
-AQE skew-splits hot cells — and the completeness proofs make the result EXACT
-(not approximate) without ever materializing the cross product.
+Cells are keyed to the origin of the candidate DATA BOUNDS (the cellexprs
+origin grid: no clamp, every candidate in 0 <= g <= g_max), and the cell size
+comes from the candidate density inside the bounds box. A negative or
+UTM-sized frame therefore gets the same grid, fan-out and ring-1 proofs as
+the [0, 1000) site frame instead of falling into the crossJoin fallback.
+
+Physical plan:
+1. ring round r: probes explode to their (2r+1)^2 ring cells (clipped to the
+   grid) → equi-join with the candidates on the int64 cell key → distance →
+   ONE row per probe holding each group's sorted <= k winners and the
+   completeness proof as a boolean column. Only this tagged table is
+   persisted: the proven winners and the residue are both projections of
+   it.
+2. proof (``_dir_reach``): a group is complete when its k-th winner is
+   strictly closer than the probe's search reach in every direction it could
+   be displaced from; a direction the data bounds already cover is +inf.
+3. the ring-1 prologue — proven winners enriched to full rows, plus the
+   residue — is ONE localCheckpoint job, and the residue count reads its
+   blocks. A non-empty residue escalates with 4x rings through the same
+   step, or goes straight to an exact crossJoin when residue x candidates is
+   cheap.
+
+Why this scales: the join is a plain shuffle equi-join on cell keys — AQE
+skew-splits hot cells — and the proofs make the result EXACT without ever
+materializing the cross product.
 """
 
 from __future__ import annotations
 
 import math
-import os
-import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotreehealth_spark.geo import cellexprs
 from geotreehealth_spark.operators.pip_join import distance_expr
 
-
-def _trace(msg: str, t0: float) -> None:
-    if os.environ.get("SPARK_GRAFT_KNN_TRACE"):
-        print(f"[knn-trace] {msg}: {time.time() - t0:.2f}s", flush=True)
+# ring rounds (rings 1, 4, 16, 64) before the residue takes the exact
+# crossJoin; with bounds-keyed cells the prologue proves ~every probe
+_MAX_ROUNDS = 4
+# residue x candidates at or under this many distance rows goes straight to
+# the exact crossJoin (measured r2: one straggler otherwise burns O(log
+# extent) barrier rounds; r4 raised it from 50M after the quadrant residue,
+# 137 x 457k = 62M, just missed the switch and paid 2 extra rounds)
+_CROSS_ROWS = 500_000_000
+_QUADS = ("NE", "SE", "NW", "SW")
+_INF = float("inf")
 
 
 def _data_bounds(
-    right: DataFrame, rx: str, ry: str
+    right: DataFrame, right_id: str, rx: str, ry: str
 ) -> tuple[float, float, float, float, int] | None:
     """(xmin, xmax, ymin, ymax, count) of the candidate side — one agg job
-    shared by the coverage proofs AND the density-based cell sizing (fused so
-    auto-sized calls don't pay a separate count() scan).
-    Returns None when the candidate side is empty (ADVICE.md round 2: the
-    min/max come back NULL; callers short-circuit to an empty result instead
-    of crashing on float(None))."""
+    shared by the grid, the density-based cell sizing and the proofs. The
+    same job counts ``right_id`` so a NULL id raises instead of being
+    silently dropped by enrich(). Returns None when the candidate side is
+    empty (callers short-circuit to an empty result)."""
     b = right.agg(
         F.min(rx).alias("x0"), F.max(rx).alias("x1"),
         F.min(ry).alias("y0"), F.max(ry).alias("y1"),
-        F.count("*").alias("n"),
+        F.count("*").alias("n"), F.count(right_id).alias("n_id"),
     ).first()
+    if b.n != b.n_id:
+        raise ValueError(f"NULL values in right id column {right_id!r}")
     if b.x0 is None:
         return None
     return float(b.x0), float(b.x1), float(b.y0), float(b.y1), int(b.n)
 
 
-def _with_cells(right: DataFrame, cell_size: float, rx: str, ry: str) -> DataFrame:
-    """Right side indexed by cell ONCE per kNN call (persisted by callers so
-    escalation rounds reuse it instead of re-scanning + re-encoding).
-    Cell key is a pure Catalyst expression (geo/cellexprs.py)."""
-    return right.withColumn(
-        "__cell", cellexprs.point_cell(F.col(rx), F.col(ry), cell_size)
-    )
-
-
-def _candidates(
-    left: DataFrame,
-    right_cells: DataFrame,
-    cell_size: float,
-    ring: int,
-    lx: str,
-    ly: str,
-    rx: str,
-    ry: str,
-) -> DataFrame:
-    lc = cellexprs.with_ring_cells(left, lx, ly, cell_size, ring)
-    return (
-        lc.join(right_cells, "__cell")
-        .drop("__cell")
-        .withColumn("dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry)))
-    )
+def _cell_size(bounds: tuple[float, float, float, float], n: int, k: int, factor: float) -> float:
+    """``factor`` x the expected k-th neighbour radius under uniform density
+    inside the bounds box, clamped to [w/4096, w/2] of its wider side (a
+    degenerate box — one point, one line — counts as at least w^2/4096)."""
+    bx0, bx1, by0, by1 = bounds
+    w = max(bx1 - bx0, by1 - by0)
+    if w <= 0:
+        return 1.0
+    density = n / max((bx1 - bx0) * (by1 - by0), w * w / 4096)
+    return max(min(factor * math.sqrt(k / density), w / 2), w / 4096)
 
 
 def _dir_reach(
@@ -97,61 +98,42 @@ def _dir_reach(
     ly: str,
     cell_size: float,
     ring: int,
-    bounds: tuple[float, float, float, float],
-    exact: bool = True,
-) -> dict:
+    origin: tuple[float, float],
+    g_max: tuple[int, int],
+) -> dict[str, Column]:
     """Per-probe, per-direction guaranteed search reach of the ring-r box.
 
-    The searched cells around a probe in cell (gx, gy) cover
-    [(gx-r)*s, (gx+r+1)*s) x [(gy-r)*s, (gy+r+1)*s) — so the probe's
-    guaranteed reach is ``x - (gx-r)*s`` on the closed low edge and
-    ``(gx+r+1)*s - x`` on the open high edge of each axis: always >= r*s,
-    up to (r+1)*s. A direction whose DATA bound already lies within that
-    reach constrains nothing (no candidate can exist beyond the bound), so
-    it contributes +inf. The completeness proofs take the min over the
-    directions a result could be displaced from; using the exact per-probe
-    reach instead of the conservative r*s constant proves strictly more
-    probes at ZERO candidate cost (r6 third session) — marginal probes no
-    longer pay the escalation rare path. Soundness: an unsearched candidate
-    in direction +x has fl(rx/s) > gx+r, hence rx >= (gx+r+1)*s, hence
-    dist >= reach_xp (the same one-ULP boundary class as the constant-rcs
-    proof and the cell join itself); low edges are closed, so the
-    bound-covered arms there use <= while the open high edges use <.
-    With ``exact=False`` every reach is the constant r*s and the arms use
-    <= (the pre-r6 proof, kept as the A/B / fallback escape hatch —
-    SPARK_GRAFT_KNN_CONSERVATIVE_PROOF=1).
+    On the origin grid the cells searched around a probe in cell (gx, gy)
+    span offsets [(gx-r)*s, (gx+r+1)*s) on x (likewise y), so with
+    u = x - ox the reach is ``u - (gx-r)*s`` toward -x and
+    ``(gx+r+1)*s - u`` toward +x: at least r*s, up to (r+1)*s. gx/gy and u
+    are cellexprs' own expressions, so the proof and the join key share one
+    definition. A direction whose searched cells reach the grid edge
+    (gx-r <= 0, gx+r >= gx_max) has nothing unsearched beyond it — every
+    candidate sits in 0 <= gx <= gx_max — and contributes +inf; that arm is
+    integer arithmetic. Finite reaches are rounded down by a slack of
+    2^-44 x (|u| + |v| + (r+2)s), which bounds the float error between a
+    candidate's computed cell and distance and the computed reach (a few
+    ULPs of the offsets), so ``dist < reach`` never admits an unsearched
+    candidate at a cell edge.
 
-    Proofs are performance-only: they decide which probes escalate, never
-    what a probe's winners are, so either setting yields identical results.
+    Proofs only decide which probes escalate, never a probe's winners.
     """
-    bx0, bx1, by0, by1 = bounds
-    s = float(cell_size)
+    s = F.lit(float(cell_size))
     x, y = F.col(lx), F.col(ly)
-    inf = F.lit(float("inf"))
-    if not exact:
-        rcs = F.lit(float(ring * s))
-        return {
-            "xm": F.when(x - F.lit(bx0) <= rcs, inf).otherwise(rcs),
-            "xp": F.when(F.lit(bx1) - x <= rcs, inf).otherwise(rcs),
-            "ym": F.when(y - F.lit(by0) <= rcs, inf).otherwise(rcs),
-            "yp": F.when(F.lit(by1) - y <= rcs, inf).otherwise(rcs),
-        }
-    gx = F.greatest(F.floor(x / F.lit(s)), F.lit(0)).cast("double")
-    gy = F.greatest(F.floor(y / F.lit(s)), F.lit(0)).cast("double")
-    dxm = x - (gx - ring) * F.lit(s)
-    dxp = (gx + ring + 1) * F.lit(s) - x
-    dym = y - (gy - ring) * F.lit(s)
-    dyp = (gy + ring + 1) * F.lit(s) - y
+    gx, gy = cellexprs._gxy(x, y, cell_size, origin)
+    u, v = cellexprs.offsets(x, y, origin)
+    slack = (F.abs(u) + F.abs(v) + F.lit((ring + 2) * float(cell_size))) * F.lit(2.0**-44)
+
+    def arm(covered: Column, reach: Column) -> Column:
+        return F.when(covered, F.lit(_INF)).otherwise(reach - slack)
+
     return {
-        "xm": F.when(x - F.lit(bx0) <= dxm, inf).otherwise(dxm),
-        "xp": F.when(F.lit(bx1) - x < dxp, inf).otherwise(dxp),
-        "ym": F.when(y - F.lit(by0) <= dym, inf).otherwise(dym),
-        "yp": F.when(F.lit(by1) - y < dyp, inf).otherwise(dyp),
+        "xm": arm(gx - ring <= 0, u - (gx - ring) * s),
+        "xp": arm(gx + ring >= g_max[0], (gx + ring + 1) * s - u),
+        "ym": arm(gy - ring <= 0, v - (gy - ring) * s),
+        "yp": arm(gy + ring >= g_max[1], (gy + ring + 1) * s - v),
     }
-
-
-def _proof_exact() -> bool:
-    return not os.environ.get("SPARK_GRAFT_KNN_CONSERVATIVE_PROOF")
 
 
 def _cached(df: DataFrame) -> tuple[DataFrame, bool]:
@@ -163,6 +145,251 @@ def _cached(df: DataFrame) -> tuple[DataFrame, bool]:
     return df.persist(), True
 
 
+def _quadrant(lx: str, ly: str, rx: str, ry: str) -> Column:
+    east, north = F.col(rx) >= F.col(lx), F.col(ry) >= F.col(ly)
+    return (
+        F.when(east & north, F.lit("NE"))
+        .when(east, F.lit("SE"))
+        .when(north, F.lit("NW"))
+        .otherwise(F.lit("SW"))
+    )
+
+
+def _ring_knn(
+    left: DataFrame,
+    right: DataFrame,
+    k: int,
+    left_id: str,
+    right_id: str,
+    left_xy: tuple[str, str],
+    right_xy: tuple[str, str],
+    quadrants: bool,
+    cell_size: float | None,
+    cell_factor: float,
+    min_dist: float | None,
+) -> DataFrame:
+    """Exact top-k `right` rows per (left row, group) — J5 when
+    ``quadrants`` is False (one group; tag column ``knn_rank``), J6 when True
+    (one group per quadrant; tag column ``quadrant``). Output: left columns +
+    right columns + ``dist`` + the tag column."""
+    lx, ly = left_xy
+    rx, ry = right_xy
+    tag, tag_type = ("quadrant", "string") if quadrants else ("knn_rank", "int")
+    groups = _QUADS if quadrants else (None,)
+    out_cols = [*left.columns, *right.columns, "dist", tag]
+    dist = distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
+
+    # ONE scan of the candidate side feeds the bounds/count agg, the
+    # cell-keyed join input and the rare crossJoin (profiling at sf0.1:
+    # each re-scan of a synthesized right side cost ~2.5 s)
+    right_mat, right_owned = _cached(right)
+    # everything this call caches is released when it returns or fails
+    owned = [right_mat] if right_owned else []
+    persisted: list[DataFrame] = []
+    try:
+        bounds = _data_bounds(right_mat, right_id, rx, ry)
+        if bounds is None:
+            # empty candidate side: zero rows with the full output schema
+            return left.crossJoin(right.limit(0)).select(
+                *left.columns, *right.columns, dist.alias("dist"),
+                F.lit(None).cast(tag_type).alias(tag),
+            )
+        bx0, bx1, by0, by1, n_right = bounds
+        if cell_size is None:
+            cell_size = _cell_size(bounds[:4], n_right, k, cell_factor)
+        s = float(cell_size)
+        g_max = cellexprs.grid_max(bounds[:4], s)
+        origin = (bx0, by0)
+        max_ring = max(g_max) + 1  # a ring this wide covers the whole grid
+        # slim projections: the candidate explode/join/rank pipeline moves
+        # ONLY ids, coordinates and dist. A side with more columns is
+        # re-attached to the winners by enrich(); a side that is just
+        # (id, x, y) needs no join, and the probe side then no cache either
+        # (it is read once)
+        wide_left = bool(set(left.columns) - {left_id, lx, ly})
+        wide_right = bool(set(right.columns) - {right_id, rx, ry})
+        if wide_left:
+            left, left_owned = _cached(left)
+            owned += [left] if left_owned else []
+        left_slim = left.select(left_id, lx, ly)
+        right_slim = right_mat.select(right_id, rx, ry)
+        right_cells = right_slim.withColumn(
+            "__cell", cellexprs.point_cell(F.col(rx), F.col(ry), s, origin)
+        )
+
+        def reaches(ring: int) -> list[Column]:
+            # per-group proof radius, in `groups` order
+            eff = _dir_reach(lx, ly, s, ring, origin, g_max)
+            if not quadrants:
+                return [F.least(*eff.values())]
+            # a quadrant whose defining half-plane the data bounds rule out
+            # is provably empty — e.g. no candidate is strictly west
+            # (cx < px) of a probe with px <= bx0. West/south are strict
+            # half-planes, east/north inclusive, mirroring _quadrant. This
+            # proves the outward quadrants of a probe at the site corner,
+            # which are empty but unbounded along one axis.
+            x, y, inf = F.col(lx), F.col(ly), F.lit(_INF)
+            no_w, no_e = x <= F.lit(bx0), x > F.lit(bx1)
+            no_s, no_n = y <= F.lit(by0), y > F.lit(by1)
+            arms = {
+                "NE": (no_e | no_n, "xp", "yp"), "SE": (no_e | no_s, "xp", "ym"),
+                "NW": (no_w | no_n, "xm", "yp"), "SW": (no_w | no_s, "xm", "ym"),
+            }
+            return [
+                F.when(arms[q][0], inf).otherwise(F.least(eff[arms[q][1]], eff[arms[q][2]]))
+                for q in _QUADS
+            ]
+
+        def step(rem: DataFrame, ring: int, final: bool) -> DataFrame:
+            """One round over probes ``rem`` (id, x, y): one row per probe
+            with each group's sorted winner array ``__w<i>`` and the proof
+            ``__ok``. ``final`` takes the exact crossJoin, which proves every
+            probe."""
+            if final:
+                cands = rem.crossJoin(right_slim)
+            else:
+                cands = cellexprs.with_ring_cells(rem, lx, ly, s, ring, origin, g_max).join(
+                    right_cells, "__cell"
+                )
+            keys = [left_id, "__g"] if quadrants else [left_id]
+            cands = cands.select(
+                left_id, lx, ly, right_id, rx, ry, dist.alias("dist"),
+                *([_quadrant(lx, ly, rx, ry).alias("__g")] if quadrants else []),
+            )
+            if min_dist is not None:
+                cands = cands.where(F.col("dist") >= min_dist)
+            if k == 1:
+                # two-phase exact argmin instead of a window: min(dist) is a
+                # fixed-width HashAggregate with map-side partial combine, so
+                # the shuffle moves ~one row per (probe, group), not every
+                # candidate (a min-over-struct on all candidates falls back
+                # to SortAggregate, measured as slow as the window). The
+                # equality join back broadcasts the tiny minima. No persist
+                # between the phases (r6): re-running the cell join from the
+                # cached right side beats caching the larger candidate set.
+                m = cands.groupBy(*keys).agg(F.min("dist").alias("__md"))
+                top = cands.join(m, keys).where(F.col("dist") == F.col("__md"))
+            else:
+                w = Window.partitionBy(*keys).orderBy("dist", right_id)
+                top = cands.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
+            # One row per probe: a winner-less copy of every probe rides the
+            # same aggregation exchange, so probes without candidates get
+            # their row without a join back onto the probes. The sorted
+            # (dist, right_id, ...) structs ARE the rank window's
+            # (dist asc, right_id asc) order, ties included.
+            top = top.select(left_id, lx, ly, right_id, rx, ry, "dist", *keys[1:])
+            win = F.struct("dist", right_id, rx, ry)
+            found = F.col("dist").isNotNull()
+            tagged = top.unionByName(rem, allowMissingColumns=True)
+            tagged = tagged.groupBy(left_id, lx, ly).agg(
+                *[
+                    F.slice(
+                        F.sort_array(
+                            F.collect_list(
+                                F.when(found if g is None else F.col("__g") == g, win)
+                            )
+                        ),
+                        1, k,
+                    ).alias(f"__w{i}")
+                    for i, g in enumerate(groups)
+                ]
+            )
+            # a NULL id never proves: it lands in the residue, which raises
+            ok = F.col(left_id).isNotNull()
+            if not final:
+                for i, reach in enumerate(reaches(ring)):
+                    kth = F.try_element_at(F.col(f"__w{i}"), F.lit(k))["dist"]
+                    ok = ok & ((reach == F.lit(_INF)) | F.coalesce(kth < reach, F.lit(False)))
+            return tagged.withColumn("__ok", ok)
+
+        def winners(tagged: DataFrame) -> DataFrame:
+            # proven rows -> one (left_id, lx, ly, right_id, rx, ry, dist, tag)
+            # row per winner
+            def entry(g: str | None):
+                return lambda e, j: F.struct(
+                    *[e[c].alias(c) for c in ("dist", right_id, rx, ry)],
+                    (j + 1 if g is None else F.lit(g)).alias(tag),
+                )
+
+            arrs = [F.transform(F.col(f"__w{i}"), entry(g)) for i, g in enumerate(groups)]
+            return tagged.where(F.col("__ok")).select(
+                left_id, lx, ly, F.explode(F.concat(*arrs) if quadrants else arrs[0]).alias("__e")
+            ).select(left_id, lx, ly, "__e.*")
+
+        def enrich(slim: DataFrame) -> DataFrame:
+            # winners -> full output rows: AQE broadcasts the slim winner set
+            # and streams the cached wide sides — no wide shuffles
+            if wide_left:
+                slim = slim.drop(lx, ly).join(left, left_id)
+            if wide_right:
+                slim = slim.drop(rx, ry).join(right_mat, right_id)
+            return slim.select(*out_cols)
+
+        def residue_rows(tagged: DataFrame) -> DataFrame:
+            # unproven probes in the output schema: the slim probe columns,
+            # typed NULLs for the rest
+            keep = {left_id, lx, ly}
+            return tagged.where(~F.col("__ok")).select(
+                *[
+                    F.col(f.name) if f.name in keep else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in left.schema.fields
+                ],
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in right.schema.fields],
+                F.lit(None).cast("double").alias("dist"),
+                F.lit(None).cast(tag_type).alias(tag),
+                F.lit(True).alias("__residue"),
+            )
+
+        # --- prologue: ONE ring-1 round and ONE job -----------------------
+        # The proven winners (enriched) and the residue are both projections
+        # of the persisted tagged table, checkpointed together: the
+        # checkpoint is the common case's only job barrier and the result's
+        # flat lineage, and the residue count reads its blocks. The blocks
+        # are not releasable through the DataFrame API (ADVICE r3); long-lived
+        # sessions clear them via getPersistentRDDs, as bench.py does.
+        tagged = step(left_slim, 1, final=False).persist()
+        persisted.append(tagged)
+        chk = (
+            enrich(winners(tagged))
+            .withColumn("__residue", F.lit(False))
+            .unionByName(residue_rows(tagged))
+            .localCheckpoint(eager=True)
+        )
+        remaining = chk.where(F.col("__residue")).select(left_id, lx, ly)
+        n_rem, n_id = remaining.agg(F.count("*"), F.count(left_id)).first()
+        if n_rem != n_id:
+            raise ValueError(f"NULL values in left id column {left_id!r}")
+        results = [chk.where(~F.col("__residue")).drop("__residue")]
+
+        # --- rare path: 4x rings through the same step, then the crossJoin --
+        ring, rounds = 4, 1
+        while n_rem:
+            if ring >= max_ring or rounds >= _MAX_ROUNDS or n_rem * n_right <= _CROSS_ROWS:
+                # task-count clamp: a 4-probe residue otherwise inherits the
+                # probe side's partitioning and fans the crossJoin into ~96
+                # near-empty tasks; ~2M distance rows per task is < 1 s each
+                parts = max(1, min(n_rem * n_right // 2_000_000 + 1, 64))
+                results.append(enrich(winners(step(remaining.coalesce(parts), ring, True))))
+                break
+            tagged = step(remaining, ring, final=False).persist()
+            persisted.append(tagged)
+            results.append(enrich(winners(tagged)))
+            remaining = tagged.where(~F.col("__ok")).select(left_id, lx, ly)
+            n_rem = remaining.count()
+            ring, rounds = ring * 4, rounds + 1
+        if len(results) == 1:
+            return results[0]
+        # checkpoint ONLY the rare-path pieces: results[0] already reads the
+        # prologue's blocks, and the rest read caches released below
+        extra = results[1]
+        for r in results[2:]:
+            extra = extra.unionByName(r)
+        return results[0].unionByName(extra.localCheckpoint(eager=True))
+    finally:
+        for df in persisted + owned:
+            df.unpersist()
+
+
 def knn_join(
     left: DataFrame,
     right: DataFrame,
@@ -172,325 +399,25 @@ def knn_join(
     cell_size: float | None = None,
     left_xy: tuple[str, str] = ("x", "y"),
     right_xy: tuple[str, str] = ("cx", "cy"),
-    extent: float = 1000.0,
     min_dist: float | None = None,
-    max_proof_rounds: int = 4,
-    prologue_rings: tuple[int, ...] = (1,),
 ) -> DataFrame:
     """Exact k nearest `right` rows per `left` row; ties broken by right_id.
 
     Output: all left columns + right columns + `dist` + `knn_rank` (1..k).
     CONTRACT: ``left_id`` / ``right_id`` must be non-null and unique per
     side — winners are re-attached to their full rows via equi-joins on
-    these ids (enrich()), so a NULL id silently drops its row and a
-    duplicated id multiplies its matches. (The r3 path carried full rows
-    through the ranking and would have surfaced such rows; the slim-id
-    rewrite trades that visibility for the narrow-shuffle plan.)
+    these ids. A NULL id raises ValueError naming the column; a duplicated
+    id multiplies its matches.
     ``min_dist``: drop candidates strictly closer than this (reference's
     remove_too_close, batch_sam.py:430-432) before ranking.
-    ``max_proof_rounds``: ring-proof rounds before the residue goes to the
-    cross-join fallback. With the data-bounds coverage proof, rings reach
-    full coverage in O(log4(extent/cell)) rounds, so the fallback is a
-    safety net, not a planned phase.
+    ``cell_size``: default ~1.25x the expected k-th neighbour radius under
+    uniform density in the candidate bounds — tight enough to cut the
+    candidate fan-out, with escalation handling sparse regions exactly.
     """
-    lx, ly = left_xy
-    rx, ry = right_xy
-    w = Window.partitionBy(left_id).orderBy(F.col("dist").asc(), F.col(right_id).asc())
-    # ONE scan of the candidate side feeds everything: the bounds/count agg,
-    # the cell-keyed join input (a cheap map over the cache), and the rare
-    # escalation path — profiling at sf0.1 showed each re-scan of a
-    # synthesized right side costs ~2.5 s, dominating kNN latency.
-    right_mat, right_owned = _cached(right)
-    bounds = _data_bounds(right_mat, rx, ry)
-    if bounds is None:
-        if right_owned:
-            right_mat.unpersist()
-        # empty candidate side: the crossJoin plan yields zero rows with the
-        # full output schema (left cols + right cols + dist + knn_rank)
-        empty = left.crossJoin(right.limit(0)).withColumn(
-            "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-        )
-        return empty.withColumn("knn_rank", F.row_number().over(w)).where(
-            F.col("knn_rank") <= k
-        )
-    bx0, bx1, by0, by1, n_right = bounds
-    bounds_box = (bx0, bx1, by0, by1)
-    if cell_size is None:
-        # aim for ring-1 sufficiency: cell ~ 1.25x expected k-th radius under
-        # uniform density (r3 used 2x; the tighter cell cuts the candidate
-        # join fan-out ~2.5x and escalation handles sparse regions exactly).
-        density = max(n_right, 1) / (extent * extent)
-        cell_size = max(min(1.25 * math.sqrt(k / density), extent / 2), extent / 4096)
-    # slim projections: the candidate explode/join/rank pipeline moves ONLY
-    # (id, x, y, dist) — full rows are re-attached to the ~|left|*k winners by
-    # one pair of joins inside the same job (r4: the r3 pipeline dragged all
-    # ~25 left+right columns through every exchange and persist).
-    left_mat, left_owned = _cached(left)
-    left_slim = left_mat.select(left_id, lx, ly)
-    right_slim = right_mat.select(right_id, rx, ry)
-    right_cells = _with_cells(right_slim, cell_size, rx, ry)
-    max_ring = max(int(math.ceil(extent / cell_size)) + 1, 2)
-
-    scratch: list[DataFrame] = []
-
-    def ranked_for(rem: DataFrame, ring: int, final: bool) -> DataFrame:
-        if final:
-            # tiny-residue fallback: a direct cross join beats exploding a
-            # quarter-million ring cells per row (window path: the slim
-            # candidates are only computed once here)
-            cands = rem.crossJoin(right_slim).withColumn(
-                "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-            )
-        else:
-            cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        if min_dist is not None:
-            cands = cands.where(F.col("dist") >= min_dist)
-        if k == 1 and not final:
-            # two-phase exact argmin instead of a window: min(dist) is a
-            # fixed-width HashAggregate with map-side partial combine, so the
-            # shuffle moves ~|rem| group rows, not every candidate row (a
-            # min-over-struct agg would fall back to SortAggregate — measured
-            # as slow as the window it replaced); the equality join back is a
-            # broadcast of the tiny per-group minima, and the window ranks
-            # only the min-dist rows (exact right_id tie-break preserved).
-            # The candidate set is NOT persisted between the two phases (r6):
-            # both phases re-run the broadcast cell join against the cached
-            # right side, which is strictly cheaper than writing+reading the
-            # LARGER candidate set (fan-out x right rows) through the cache —
-            # interleaved A/B at sf0.1: knn 2.63 s vs 3.82 s, every pass.
-            m = cands.groupBy(left_id).agg(F.min("dist").alias("__md"))
-            matched = (
-                cands.join(m, left_id)
-                .where(F.col("dist") == F.col("__md"))
-                # a USING join moves the key column first — restore order
-                .select(left_id, lx, ly, right_id, rx, ry, "dist")
-            )
-            return matched.withColumn("knn_rank", F.row_number().over(w)).where(
-                F.col("knn_rank") <= 1
-            )
-        return cands.withColumn("knn_rank", F.row_number().over(w)).where(
-            F.col("knn_rank") <= k
-        )
-
-    def proven_for(rem: DataFrame, ranked: DataFrame, ring: int) -> DataFrame:
-        # completeness proof (unified exact-reach form, _dir_reach): D = min
-        # over the four directions of the effective reach (+inf for
-        # bound-covered directions). D == inf -> the ring box covers every
-        # possible candidate, so whatever was found (even < k rows) is ALL
-        # there is (the old coverage arm); else a k-th neighbor strictly
-        # inside D proves nothing unsearched can displace the top-k (the old
-        # distance arm, with per-probe reach instead of the r*s constant).
-        # One left join replaces the old union+distinct exchange.
-        eff = _dir_reach(lx, ly, cell_size, ring, bounds_box, _proof_exact())
-        D = F.least(eff["xm"], eff["xp"], eff["ym"], eff["yp"])
-        kth = ranked.groupBy(left_id).agg(
-            F.max("dist").alias("__kth"), F.count("*").alias("__n")
-        )
-        return (
-            rem.join(kth, left_id, "left")
-            .where(
-                (D == F.lit(float("inf")))
-                | (
-                    (F.coalesce(F.col("__n"), F.lit(0)) >= k)
-                    & (F.col("__kth") < D)
-                )
-            )
-            .select(left_id)
-        )
-
-    def enrich(slim: DataFrame) -> DataFrame:
-        # winners -> full output rows: AQE broadcasts the slim winner set and
-        # streams the cached left/right sides — no wide shuffles
-        return (
-            slim.select(left_id, right_id, "dist", "knn_rank")
-            .join(left_mat, left_id)
-            .join(right_mat, right_id)
-            .select(*left.columns, *right.columns, "dist", "knn_rank")
-        )
-
-    def win1_for(rem: DataFrame, ring: int) -> DataFrame:
-        """r6 prologue fusion for k=1 (mirrors quadrant_knn_join's win_for):
-        one winner-struct row per probe — min(struct(dist, right_id)) over
-        the phase-1 minima matches IS the rank window's (dist asc, right_id
-        asc) rn=1 pick, and the k=1 distance proof is a projection of it, so
-        the window exchange and proven_for's kth aggregation both fold into
-        this tiny SortAggregate."""
-        cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        if min_dist is not None:
-            cands = cands.where(F.col("dist") >= min_dist)
-        m = cands.groupBy(left_id).agg(F.min("dist").alias("__md"))
-        matched = cands.join(m, left_id).where(F.col("dist") == F.col("__md"))
-        return matched.groupBy(left_id).agg(
-            F.min(F.struct("dist", right_id)).alias("__w")
-        )
-
-    def proven_from_win1(rem: DataFrame, win: DataFrame, ring: int) -> DataFrame:
-        # k=1: a winner row exists iff >= 1 candidate was found, so the
-        # count>=k arm of proven_for is implied and the k-th distance IS the
-        # winner's dist — same unified exact-reach proof as proven_for
-        eff = _dir_reach(lx, ly, cell_size, ring, bounds_box, _proof_exact())
-        D = F.least(eff["xm"], eff["xp"], eff["ym"], eff["yp"])
-        return (
-            rem.join(win, left_id, "left")
-            .where(
-                (D == F.lit(float("inf")))
-                | F.coalesce(F.col("__w")["dist"] < D, F.lit(False))
-            )
-            .select(left_id)
-        )
-
-    # --- fused prologue: the prologue_rings rounds composed into ONE job ---
-    # Default is a SINGLE ring-1 round: at forest density the ring-1 box
-    # already proves ~all probes, and the second (ring-4) round cost 5-7
-    # near-empty stages per call for a residue the escalation path handles
-    # anyway (A/B at sf0.1: knn 9.0->6.3 s, quadrant 16.5->13.2 s, identical
-    # rows). Pass (1, 4) for sparse/clustered data where ring-1 proves few.
-    # Round 2 (item 3 of VERDICT r3): the per-round count() driver barriers
-    # dominated kNN latency (2-3 full jobs per call). Here ring-1 and ring-4
-    # candidates, both proofs, the winner enrichment, and the leftover residue
-    # are one DAG whose single localCheckpoint job materializes everything;
-    # per-ring ranked rows and residues are persisted so the branches sharing
-    # them compute each subtree once WITHIN that job. The residue emerges as
-    # tagged rows of the same checkpoint, so deciding whether to escalate
-    # costs a block-read count, not another job. No broadcast hints on the
-    # probe-proportional proven-id sets (r3 item 2).
-    pieces: list[DataFrame] = []
-    prologue_cached: list[DataFrame] = []
-    rem = left_slim
-    last_ring, n_prologue = 1, 0
-    try:
-        for ring in (r for r in prologue_rings if r < max_ring):
-            if k == 1:
-                # r6 fusion — window + kth-proof agg folded into win1_for
-                win = win1_for(rem, ring).persist()
-                prologue_cached.append(win)
-                proven = proven_from_win1(rem, win, ring)
-                pieces.append(
-                    win.join(proven, left_id, "left_semi").select(
-                        left_id,
-                        F.col("__w")["dist"].alias("dist"),
-                        F.col("__w")[right_id].alias(right_id),
-                        F.lit(1).alias("knn_rank"),
-                    )
-                )
-            else:
-                ranked = ranked_for(rem, ring, final=False).persist()
-                prologue_cached.append(ranked)
-                proven = proven_for(rem, ranked, ring)
-                pieces.append(ranked.join(proven, left_id, "left_semi"))
-            rem = rem.join(proven, left_id, "left_anti").persist()
-            prologue_cached.append(rem)
-            last_ring, n_prologue = ring, n_prologue + 1
-        res_piece = rem.select(left_id).join(left_mat, left_id)
-        for f in right.schema.fields:
-            res_piece = res_piece.withColumn(f.name, F.lit(None).cast(f.dataType))
-        res_piece = (
-            res_piece.select(*left.columns, *right.columns)
-            .withColumn("dist", F.lit(None).cast("double"))
-            .withColumn("knn_rank", F.lit(-1))
-            .withColumn("__residue", F.lit(1))
-        )
-        if pieces:
-            good_slim = pieces[0]
-            for p in pieces[1:]:
-                good_slim = good_slim.unionByName(p)
-            enriched = enrich(good_slim).withColumn("__residue", F.lit(-1))
-            allp = enriched.unionByName(res_piece)
-        else:
-            # no prologue ring fit under max_ring (caller-tuned rings at a
-            # coarse cell size): every probe is residue, the escalation loop
-            # does all the work
-            allp = res_piece
-        # THE one job barrier for the common case; also the flat-lineage
-        # result handle. The checkpointed blocks themselves are NOT
-        # releasable through the DataFrame API (ADVICE r3) — long-lived
-        # sessions clear them via sparkContext getPersistentRDDs + unpersist,
-        # as bench.py's release_caches does between queries.
-        chk = allp.localCheckpoint(eager=True)
-    except BaseException:
-        # release the input caches too — a failed call must not leak the
-        # full cached candidate table into a long-lived session
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        raise
-    finally:
-        for df in prologue_cached + scratch:
-            df.unpersist()
-        scratch.clear()
-    good = chk.where(F.col("__residue") == -1).drop("__residue")
-    residue = chk.where(F.col("__residue") == 1).select(left_id, lx, ly)
-    t0 = time.time()
-    n_rem = residue.count()  # reads checkpointed blocks — not a recompute
-    _trace(f"knn residue count (n_rem={n_rem})", t0)
-    if n_rem == 0:
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        return good
-
-    # --- rare path: ring-16+ escalation loop on the tagged residue ---------
-    # (reuses the still-cached left/right sides — no re-scan)
-    # cost-based switch first: when residue x n_right distance rows are
-    # cheaper than another ring round, jump straight to the exact crossJoin
-    # (measured r2: one straggler otherwise burns O(log extent) rounds;
-    # threshold 500M slim distance rows ~ 0.5M/task at 128 tasks — r4 raised
-    # it from 50M after the quadrant residue, 137 x 457k = 62M, just missed
-    # the switch and paid 2 extra barrier rounds).
-    results = [good]
-    persisted: list[DataFrame] = (
-        ([right_mat] if right_owned else []) + ([left_mat] if left_owned else [])
+    return _ring_knn(
+        left, right, k, left_id, right_id, left_xy, right_xy,
+        quadrants=False, cell_size=cell_size, cell_factor=1.25, min_dist=min_dist,
     )
-    remaining = residue
-    # escalation continues 4x from wherever the prologue stopped — with the
-    # default single-ring prologue that's ring 4, not a 16^2-cell explode
-    ring, rounds = 4 * last_ring, max(n_prologue, 1)
-    if n_rem * max(n_right, 1) <= 500_000_000:
-        rounds = max_proof_rounds
-    try:
-        while True:
-            final = ring >= max_ring or rounds >= max_proof_rounds
-            if final:
-                # task-count clamp: a 4-probe residue otherwise inherits the
-                # probe side's partitioning and fans the crossJoin into ~96
-                # near-empty tasks across 2 stages (measured ~3 s of the
-                # sf0.1 quadrant call); ~2M distance rows per task is < 1 s
-                # of real work each
-                parts = max(1, min(n_rem * max(n_right, 1) // 2_000_000 + 1, 64))
-                remaining = remaining.coalesce(int(parts))
-            ranked = ranked_for(remaining, ring, final)
-            if final:
-                results.append(enrich(ranked))
-                break
-            ranked = ranked.persist()  # reused by proof, semi-join, and union
-            persisted.append(ranked)
-            proven = proven_for(remaining, ranked, ring)
-            results.append(enrich(ranked.join(proven, left_id, "left_semi")))
-            remaining = remaining.join(proven, left_id, "left_anti").persist()
-            persisted.append(remaining)
-            n_rem = remaining.count()
-            if n_rem == 0:
-                break
-            if n_rem * max(n_right, 1) <= 500_000_000:
-                rounds = max_proof_rounds  # next iteration takes final branch
-            else:
-                rounds += 1
-            ring *= 4
-        # checkpoint ONLY the rare-path pieces (they read `persisted` caches
-        # released below) — `good` is already backed by the prologue's
-        # checkpoint blocks; re-materializing it through a second checkpoint
-        # doubled the result write for a handful of residue probes
-        if len(results) == 1:  # guard the loop invariant (ADVICE r5)
-            return results[0]
-        extra = results[1]
-        for r in results[2:]:
-            extra = extra.unionByName(r)
-        return results[0].unionByName(extra.localCheckpoint(eager=True))
-    finally:
-        for df in persisted + scratch:
-            df.unpersist()
 
 
 def quadrant_knn_join(
@@ -501,10 +428,7 @@ def quadrant_knn_join(
     cell_size: float | None = None,
     left_xy: tuple[str, str] = ("x", "y"),
     right_xy: tuple[str, str] = ("cx", "cy"),
-    extent: float = 1000.0,
     min_dist: float = 3.0,
-    max_proof_rounds: int = 4,
-    prologue_rings: tuple[int, ...] = (1,),
 ) -> DataFrame:
     """J6: nearest `right` per cardinal quadrant around each `left` point.
 
@@ -513,351 +437,18 @@ def quadrant_knn_join(
     (batch_sam.py:195-207), which maps (x2>x1, y2>y1) to 'SE' (its y axis is
     image-down) and keeps dist strictly > remove_too_close: the engine uses
     math-up axes (NE = +x,+y) and an inclusive dist >= min_dist boundary; the
-    SQL oracle encodes the engine's convention (ADVICE.md round 1 asked for
-    the docstring to say so). Candidates with dist < min_dist are dropped
-    first (batch_sam.py:430-432, config.py:34). Output: left/right columns +
-    quadrant + dist (one row per non-empty quadrant, ≤ 4 per left point).
-    CONTRACT: ``left_id`` / ``right_id`` non-null and unique per side — same
-    enrich()-by-equi-join re-attachment as knn_join, same silent row loss /
-    multiplication on violation.
+    SQL oracle encodes the engine's convention. Candidates with
+    dist < min_dist are dropped first (batch_sam.py:430-432, config.py:34).
+    Output: left/right columns + dist + quadrant (one row per non-empty
+    quadrant, <= 4 per left point). CONTRACT: as knn_join.
 
-    Completeness proof per (left, quadrant): found-best dist < ring radius,
-    OR the quadrant's intersection with the candidate DATA BOUNDS is fully
-    covered by the ring box — the extent-clipped proof that lets boundary
-    probes (whose outward quadrants are provably empty) finish without the
-    round-1 full cross-join fallback (VERDICT.md "What's wrong" 3).
+    ``cell_size``: default 6x the mean candidate spacing. The binding
+    constraint is the per-quadrant proof, not fan-out: with the exact-reach
+    and empty-quadrant arms the ring-1 proof holds at 6x with ~0.56x the
+    fan-out of 8x, while at 5x the residue returns (interleaved min-of-3 A/B
+    at sf0.1: 6x 6.23 s vs 8x 7.39 vs 5x 7.29, identical rows).
     """
-    lx, ly = left_xy
-    rx, ry = right_xy
-
-    quadrant = (
-        F.when((F.col(rx) >= F.col(lx)) & (F.col(ry) >= F.col(ly)), F.lit("NE"))
-        .when((F.col(rx) >= F.col(lx)) & (F.col(ry) < F.col(ly)), F.lit("SE"))
-        .when((F.col(rx) < F.col(lx)) & (F.col(ry) >= F.col(ly)), F.lit("NW"))
-        .otherwise(F.lit("SW"))
+    return _ring_knn(
+        left, right, 1, left_id, right_id, left_xy, right_xy,
+        quadrants=True, cell_size=cell_size, cell_factor=6.0, min_dist=min_dist,
     )
-    w = Window.partitionBy(left_id, "quadrant").orderBy(
-        F.col("dist").asc(), F.col(right_id).asc()
-    )
-    # one scan of the candidate side for bounds + cells + rare path — see
-    # knn_join
-    right_mat, right_owned = _cached(right)
-    bounds = _data_bounds(right_mat, rx, ry)
-    if bounds is None:
-        if right_owned:
-            right_mat.unpersist()
-        empty = left.crossJoin(right.limit(0)).withColumn(
-            "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-        )
-        empty = empty.where(F.col("dist") >= min_dist).withColumn("quadrant", quadrant)
-        return empty.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).drop("__rn")
-    bx0, bx1, by0, by1, n_right = bounds
-    bounds_box = (bx0, bx1, by0, by1)
-    if cell_size is None:
-        density = max(n_right, 1) / (extent * extent)
-        # 6x mean spacing (r6 third session, down from 8x): the binding
-        # constraint is PROOF coverage, not fan-out — at r4's 4x a handful of
-        # probes fail the ring-1 quadrant proof and pay a 4-5 s escalation
-        # round, and before the exact-reach proofs 8x was needed for full
-        # ring-1 coverage (A/B: 8x+ring1 14.6 s vs 4x+ring2 15.9 vs 4x+ring1
-        # ~16-20 s). With the exact per-probe reach + empty-quadrant arms
-        # (_dir_reach/_quad_reach) the ring-1 proof reaches 1-2 cells per
-        # direction, so the cell can shrink to 6x — ~0.56x the candidate
-        # fan-out — while the residue stays 0; at 5x the residue returns.
-        # Interleaved min-of-3 A/B at sf0.1: 6x 6.23 s vs 8x 7.39 vs 5x
-        # 7.29; 6x won every pass, identical output rows.
-        cell_size = max(min(6.0 * math.sqrt(1.0 / density), extent / 2), extent / 1024)
-    # slim pipeline + winner enrichment — see knn_join
-    left_mat, left_owned = _cached(left)
-    left_slim = left_mat.select(left_id, lx, ly)
-    right_slim = right_mat.select(right_id, rx, ry)
-    right_cells = _with_cells(right_slim, cell_size, rx, ry)
-    max_ring = max(int(math.ceil(extent / cell_size)) + 1, 2)
-    quads = ("NE", "SE", "NW", "SW")
-
-    scratch: list[DataFrame] = []
-
-    def best_for(
-        rem: DataFrame, ring: int, final: bool, small_final: bool = True
-    ) -> DataFrame:
-        if final:
-            # safety net only: with coverage proofs every probe is provable
-            # once the ring covers the data bounds (slim candidates are only
-            # computed once here; same two-phase argmin as the ring path —
-            # the full-window sort over |residue| x |right| crossJoin rows
-            # was ~3 s for FOUR residue probes at sf0.1)
-            cands = rem.crossJoin(right_slim).withColumn(
-                "dist", distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
-            )
-        else:
-            cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        cands = cands.where(F.col("dist") >= min_dist).withColumn("quadrant", quadrant)
-        if final and not small_final:
-            # big-residue final: the two-phase argmin persists the candidate
-            # set for its second scan — up to the 500M-row cost switch that
-            # is multi-GB of cache, so stream a single window pass instead
-            # (review r5)
-            return cands.withColumn("__rn", F.row_number().over(w)).where(
-                F.col("__rn") == 1
-            ).drop("__rn")
-        # two-phase exact argmin per (probe, quadrant) instead of a window:
-        # min(dist) is a fixed-width HashAggregate with map-side partial
-        # combine, so the shuffle moves ~|rem|x4 group rows instead of every
-        # candidate row (profiled at sf0.1: the window sort-exchange of 1.7M
-        # candidates was 6.3 s of a 12 s call; a min-over-struct agg falls
-        # back to SortAggregate and is just as slow). The equality join back
-        # broadcasts the tiny minima, and the window ranks only the min-dist
-        # rows — the exact (dist asc, right_id asc) tie-break is preserved.
-        # No persist between the phases (r6): recomputing the broadcast cell
-        # join from the cached right side beats caching the larger candidate
-        # set (A/B: quadrant 8.6 s vs 9.9 s min-of-3, every pass) — see
-        # knn_join's ranked_for.
-        m = cands.groupBy(left_id, "quadrant").agg(F.min("dist").alias("__md"))
-        matched = (
-            cands.join(m, [left_id, "quadrant"])
-            .where(F.col("dist") == F.col("__md"))
-            # a USING join moves the key columns first — restore order
-            .select(left_id, lx, ly, right_id, rx, ry, "dist", "quadrant")
-        )
-        return matched.withColumn("__rn", F.row_number().over(w)).where(
-            F.col("__rn") == 1
-        ).drop("__rn")
-
-    def _quad_reach(ring: int) -> dict:
-        # per-quadrant effective proof radius: min of the quadrant's two
-        # direction reaches (_dir_reach; +inf for bound-covered directions).
-        # D_q == inf -> the quadrant's region ∩ data bounds sits entirely
-        # inside the searched box (the old _coverage arm); else a winner
-        # strictly inside D_q proves nothing unsearched in that quadrant can
-        # beat it (the old dist<rcs arm, with per-probe reach).
-        #
-        # Third arm (r6 third session): a quadrant whose defining half-plane
-        # is IMPOSSIBLE given the data bounds is provably empty — e.g. the
-        # west quadrants need a candidate with cx < px, which cannot exist
-        # when px <= bx0 (every candidate has cx >= bx0). The old two-arm
-        # proof required BOTH of a quadrant's directions to be bounds-covered
-        # and so never proved e.g. the corner probe at the site origin, whose
-        # three outward quadrants are empty but unbounded along one axis —
-        # the ONE residue probe at sf0.1 that paid the whole escalation rare
-        # path (~1.3-2.3 s/call). West/south arms are strict half-planes
-        # (cx < px), east/north inclusive (cx >= px), mirroring the quadrant
-        # definition exactly.
-        eff = _dir_reach(lx, ly, cell_size, ring, bounds_box, _proof_exact())
-        inf = F.lit(float("inf"))
-        x, y = F.col(lx), F.col(ly)
-        if _proof_exact():
-            no_w = x <= F.lit(bx0)  # no candidate strictly west of the probe
-            no_e = x > F.lit(bx1)  # no candidate at-or-east of the probe
-            no_s = y <= F.lit(by0)
-            no_n = y > F.lit(by1)
-        else:
-            no_w = no_e = no_s = no_n = F.lit(False)
-        return {
-            "NE": F.when(no_e | no_n, inf).otherwise(F.least(eff["xp"], eff["yp"])),
-            "SE": F.when(no_e | no_s, inf).otherwise(F.least(eff["xp"], eff["ym"])),
-            "NW": F.when(no_w | no_n, inf).otherwise(F.least(eff["xm"], eff["yp"])),
-            "SW": F.when(no_w | no_s, inf).otherwise(F.least(eff["xm"], eff["ym"])),
-        }
-
-    def proven_for(rem: DataFrame, best: DataFrame, ring: int) -> DataFrame:
-        # per-(left, quadrant) winner distances, pivoted to 4 columns (the
-        # old flag pivot baked the conservative rcs into the aggregation;
-        # carrying the dist lets the exact-reach condition run per probe)
-        dists = best.groupBy(left_id).agg(
-            *[
-                F.min(F.when(F.col("quadrant") == q, F.col("dist"))).alias(f"__d_{q}")
-                for q in quads
-            ]
-        )
-        Dq = _quad_reach(ring)
-        # probe-proportional sets join without a broadcast hint — AQE decides
-        complete = rem.select(left_id, lx, ly).join(dists, left_id, "left")
-        for q in quads:
-            complete = complete.where(
-                (Dq[q] == F.lit(float("inf")))
-                | F.coalesce(F.col(f"__d_{q}") < Dq[q], F.lit(False))
-            )
-        return complete.select(left_id)
-
-    def win_for(rem: DataFrame, ring: int) -> DataFrame:
-        """r6 prologue fusion: ONE row per probe with a per-quadrant winner
-        struct — min(struct(dist, right_id)) over the min-dist rows IS the
-        rank window's (dist asc, right_id asc) rn=1 pick, and the proof flag
-        is a projection of the winner's dist, so the rank-window exchange AND
-        proven_for's flag pivot collapse into this one tiny aggregation. The
-        struct-min takes the SortAggregate fallback, but its input is only
-        the phase-1 minima matches (~4 rows/probe); the full-candidate
-        struct-min that was measured window-slow in r4 stays rejected."""
-        cands = _candidates(rem, right_cells, cell_size, ring, lx, ly, rx, ry)
-        cands = cands.where(F.col("dist") >= min_dist).withColumn("quadrant", quadrant)
-        m = cands.groupBy(left_id, "quadrant").agg(F.min("dist").alias("__md"))
-        matched = cands.join(m, [left_id, "quadrant"]).where(
-            F.col("dist") == F.col("__md")
-        )
-        return matched.groupBy(left_id).agg(
-            *[
-                F.min(
-                    F.when(F.col("quadrant") == q, F.struct("dist", right_id))
-                ).alias(f"__w_{q}")
-                for q in quads
-            ]
-        )
-
-    def proven_from_win(rem: DataFrame, win: DataFrame, ring: int) -> DataFrame:
-        Dq = _quad_reach(ring)
-        complete = rem.select(left_id, lx, ly).join(win, left_id, "left")
-        for q in quads:
-            complete = complete.where(
-                (Dq[q] == F.lit(float("inf")))
-                | F.coalesce(F.col(f"__w_{q}")["dist"] < Dq[q], F.lit(False))
-            )
-        return complete.select(left_id)
-
-    def explode_win(win: DataFrame) -> DataFrame:
-        # wide winner row -> one (left_id, dist, right_id, quadrant) row per
-        # non-empty quadrant, the shape enrich() reads
-        e = win.select(
-            left_id,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(q).alias("quadrant"), F.col(f"__w_{q}").alias("w")
-                        )
-                        for q in quads
-                    ]
-                )
-            ).alias("e"),
-        ).where(F.col("e.w").isNotNull())
-        return e.select(
-            left_id,
-            F.col("e.w.dist").alias("dist"),
-            F.col(f"e.w.{right_id}").alias(right_id),
-            F.col("e.quadrant").alias("quadrant"),
-        )
-
-    def enrich(slim: DataFrame) -> DataFrame:
-        # winners -> full output rows — see knn_join
-        return (
-            slim.select(left_id, right_id, "dist", "quadrant")
-            .join(left_mat, left_id)
-            .join(right_mat, right_id)
-            .select(*left.columns, *right.columns, "dist", "quadrant")
-        )
-
-    # fused ring-1 + ring-4 prologue, one checkpoint job — see knn_join.
-    # r6 fusion: the per-ring unit is win_for's one-row-per-probe winner
-    # table — rank window + flag pivot fused into its struct-min agg; the
-    # escalation loop below keeps the best_for/proven_for machinery.
-    pieces: list[DataFrame] = []
-    prologue_cached: list[DataFrame] = []
-    rem = left_slim
-    last_ring, n_prologue = 1, 0
-    try:
-        for ring in (r for r in prologue_rings if r < max_ring):
-            win = win_for(rem, ring).persist()
-            prologue_cached.append(win)
-            proven = proven_from_win(rem, win, ring)
-            pieces.append(explode_win(win.join(proven, left_id, "left_semi")))
-            rem = rem.join(proven, left_id, "left_anti").persist()
-            prologue_cached.append(rem)
-            last_ring, n_prologue = ring, n_prologue + 1
-        res_piece = rem.select(left_id).join(left_mat, left_id)
-        for f in right.schema.fields:
-            res_piece = res_piece.withColumn(f.name, F.lit(None).cast(f.dataType))
-        res_piece = (
-            res_piece.select(*left.columns, *right.columns)
-            .withColumn("dist", F.lit(None).cast("double"))
-            .withColumn("quadrant", F.lit(None).cast("string"))
-            .withColumn("__residue", F.lit(1))
-        )
-        if pieces:
-            good_slim = pieces[0]
-            for p in pieces[1:]:
-                good_slim = good_slim.unionByName(p)
-            enriched = enrich(good_slim).withColumn("__residue", F.lit(-1))
-            allp = enriched.unionByName(res_piece)
-        else:
-            # no prologue ring fit under max_ring — see knn_join
-            allp = res_piece
-        t0 = time.time()
-        chk = allp.localCheckpoint(eager=True)
-        _trace("quadrant prologue checkpoint", t0)
-    except BaseException:
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        raise
-    finally:
-        for df in prologue_cached + scratch:
-            df.unpersist()
-        scratch.clear()
-    good = chk.where(F.col("__residue") == -1).drop("__residue")
-    residue = chk.where(F.col("__residue") == 1).select(left_id, lx, ly)
-    t0 = time.time()
-    n_rem = residue.count()  # reads checkpointed blocks — not a recompute
-    _trace(f"quadrant residue count (n_rem={n_rem})", t0)
-    if n_rem == 0:
-        if right_owned:
-            right_mat.unpersist()
-        if left_owned:
-            left_mat.unpersist()
-        return good
-
-    # rare path: ring-16+ escalation on the residue, reusing the cached
-    # left/right sides (see knn_join)
-    results = [good]
-    persisted: list[DataFrame] = (
-        ([right_mat] if right_owned else []) + ([left_mat] if left_owned else [])
-    )
-    remaining = residue
-    # escalate 4x from wherever the prologue stopped — see knn_join
-    ring, rounds = 4 * last_ring, max(n_prologue, 1)
-    if n_rem * max(n_right, 1) <= 500_000_000:
-        rounds = max_proof_rounds
-    try:
-        while True:
-            final = ring >= max_ring or rounds >= max_proof_rounds
-            if final:
-                # task-count clamp for tiny residues — see knn_join
-                parts = max(1, min(n_rem * max(n_right, 1) // 2_000_000 + 1, 64))
-                remaining = remaining.coalesce(int(parts))
-            best = best_for(
-                remaining, ring, final,
-                small_final=n_rem * max(n_right, 1) <= 50_000_000,
-            )
-            if final:
-                results.append(enrich(best))
-                break
-            best = best.persist()  # reused by proof, semi-join, and union
-            persisted.append(best)
-            proven = proven_for(remaining, best, ring)
-            results.append(enrich(best.join(proven, left_id, "left_semi")))
-            remaining = remaining.join(proven, left_id, "left_anti").persist()
-            persisted.append(remaining)
-            n_rem = remaining.count()
-            if n_rem == 0:
-                break
-            if n_rem * max(n_right, 1) <= 500_000_000:
-                rounds = max_proof_rounds
-            else:
-                rounds += 1
-            ring *= 4
-        # checkpoint only the rare-path pieces — `good` already reads the
-        # prologue's checkpoint blocks; flat-lineage, leak-free result
-        # (ADVICE.md round 2) — see knn_join
-        if len(results) == 1:  # guard the loop invariant (ADVICE r5)
-            return results[0]
-        extra = results[1]
-        for r in results[2:]:
-            extra = extra.unionByName(r)
-        t0 = time.time()
-        extra = extra.localCheckpoint(eager=True)
-        _trace("quadrant rare-path final checkpoint", t0)
-        return results[0].unionByName(extra)
-    finally:
-        for df in persisted + scratch:
-            df.unpersist()

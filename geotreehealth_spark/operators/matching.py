@@ -43,7 +43,6 @@ def containing_else_nearest(
     point_xy: tuple[str, str] = ("x", "y"),
     poly_wkb: str | None = "geometry_wkb",
     poly_bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    extent: float = 1000.0,
 ) -> DataFrame:
     """W1: (point_id, poly_id, method) — method 'contained'|'nearest'.
 
@@ -86,7 +85,6 @@ def containing_else_nearest(
         right_id=poly_id,
         left_xy=point_xy,
         right_xy=center,
-        extent=extent,
     ).select(point_id, poly_id).withColumn("method", F.lit("nearest"))
     return matched.unionByName(nearest)
 
