@@ -738,15 +738,12 @@ def q_geometric_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     (from_mask_to_polygons.py:34-41) — output (gid, n_parts, union_px); the
     oracle counts union pixels by enumeration and components by recursive
     min-label propagation over the box-adjacency graph."""
+    from geotreehealth_spark.geo import cellexprs
     from geotreehealth_spark.operators import vectorize
 
     crowns = synth.crowns(spark, sf_dir).where(F.col("crown_key") % 20 == 1)
     boxed = crowns.select(
-        F.concat_ws(
-            "_",
-            F.floor(F.col("cx") / 50).cast("long"),
-            F.floor(F.col("cy") / 50).cast("long"),
-        ).alias("gid"),
+        F.concat_ws("_", *cellexprs._gxy(F.col("cx"), F.col("cy"), 50.0)).alias("gid"),
         F.floor("xmin").cast("double").alias("x0"),
         F.floor("ymin").cast("double").alias("y0"),
         (F.floor("xmax") + 1).cast("double").alias("x1"),

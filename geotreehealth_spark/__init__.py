@@ -11,7 +11,7 @@ Design rules (north_star):
   materialized so predicate pushdown / partition pruning have something to chew on.
 - No per-row Python: all geometry kernels are numpy-vectorized inside Arrow-batched
   pandas UDFs / applyInPandas / mapInPandas.
-- Spatial joins are filter-refine: Morton-cell equi-join (coarse) + exact
+- Spatial joins are filter-refine: grid-cell equi-join (coarse) + exact
   numpy kernel (refine).
 """
 

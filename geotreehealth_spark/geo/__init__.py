@@ -1,9 +1,10 @@
-"""Pure-numpy geometry layer: WKB codec, Morton cell index, vectorized kernels.
+"""Pure-numpy geometry layer: WKB codec and vectorized kernels.
 
 No shapely / GEOS dependency — the sandbox has none, and the kernels the
 reference needs (PIP, area, centroid, convex clip IoU, distance) are small
 enough to implement vectorized from scratch. All functions operate on numpy
-arrays so they stay Arrow-batch-friendly inside pandas UDFs.
+arrays so they stay Arrow-batch-friendly inside pandas UDFs. Spatial cell
+keys are Catalyst expressions, not numpy: see ``geo/cellexprs.py``.
 """
 
 from geotreehealth_spark.geo.wkb import (  # noqa: F401
@@ -14,12 +15,6 @@ from geotreehealth_spark.geo.wkb import (  # noqa: F401
     encode_points,
     encode_polygon,
     polygon_bounds,
-)
-from geotreehealth_spark.geo.cells import (  # noqa: F401
-    cell_encode,
-    cell_ring,
-    cells_covering_bbox,
-    morton_interleave,
 )
 from geotreehealth_spark.geo.kernels import (  # noqa: F401
     clip_area,

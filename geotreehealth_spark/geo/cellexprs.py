@@ -1,31 +1,30 @@
 """JVM-side grid-cell expressions — the zero-Python spatial index.
 
-Round 1 encoded cells inside pandas UDFs (Morton bit-twiddling in numpy,
-geo/cells.py history); profiling showed those UDF stages were the joins'
-bottleneck at high parallelism — every candidate row crossed the Python
-boundary just to compute a join key. Under HASH partitioning the key needs no
-spatial locality, so Morton interleaving buys nothing in the join path; the
-key here is plain `gx * STRIDE + gy`, computed entirely in Catalyst
-(whole-stage codegen, no Python workers):
+Cell keys are computed entirely in Catalyst (whole-stage codegen, no Python
+workers); under HASH partitioning a join key needs no spatial locality, so the
+key is plain ``gx * CELL_STRIDE + gy``:
 
-- point_cell:      cell key of a point
-- covering_cells:  explode a bbox to its covering cells (sequence x sequence)
-- ring_cells:      explode a point to its (2r+1)^2 ring cells
+- point_cell:          cell key of a point
+- with_covering_cells: explode a bbox to its covering cells (sequence x sequence)
+- with_ring_cells:     explode a point to its (2r+1)^2 ring cells
 
-Locality for FILE layout (Iceberg sort keys) is a separate concern from join
-keys; a Morton/H3 transform can still be applied at write time.
+One convention, one formula (``_gxy``): a point's cell is
+``floor((x - ox) / s), floor((y - oy) / s)`` with no clamp, so data shifted
+to a negative or UTM-sized frame keeps the cell count it has in [0, extent).
 
-Two grid conventions share the key:
+- pip_join, overlap_selfjoin and NMS use origin (0, 0). ``x - 0.0`` is exact,
+  so those keys equal ``floor(x / s)``; a bbox's covering cells and a point's
+  cell (or a pair's reporting cell) come from the same expression.
+- kNN uses the candidate bounds' min corner as origin. Every candidate lands
+  in 0 <= g <= g_max (``grid_max``), and ring neighbours outside that range
+  are dropped (they hold no candidate).
 
-- the site grid (``origin=None``; pip_join, overlap, tiling): floor-division
-  cells, negative coordinates clamped to cell 0 — the site frame is
-  [0, extent) by construction (FIXTURES.md §2), matching the retired numpy
-  versions exactly;
-- the origin grid (kNN): cells keyed to an origin, the candidate bounds' min
-  corner, with NO clamp. Every candidate lands in 0 <= g <= g_max
-  (``grid_max``), so any frame — negative, UTM-sized — gets the same grid,
-  and ring neighbours outside that range are dropped (they hold no
-  candidate).
+Stride bound: gx and gy may be negative, and the key stays unique as long as
+the gy values that meet in one join span fewer than CELL_STRIDE cells.
+``gx*S + gy == gx'*S + gy'`` means ``gy - gy'`` is a multiple of S; with
+``|gy - gy'| < S`` that forces gy == gy' and then gx == gx', whatever the
+signs. ``grid_max`` checks the span for the kNN grid; the origin-(0, 0) grid
+needs a frame spanning fewer than 2^22 cells in y (~4 000 km at 1 m cells).
 """
 
 from __future__ import annotations
@@ -35,12 +34,12 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# gx/gy < 2^22 cells (~4 000 km at 1 m cells): key fits int64 with headroom
+# gy spans < 2^22 cells (~4 000 km at 1 m cells): keys are unique, int64 has headroom
 CELL_STRIDE = 1 << 22
 
 
 def offsets(x: Column, y: Column, origin: tuple[float, float]) -> tuple[Column, Column]:
-    """A point's offsets from the origin-grid origin."""
+    """A point's offsets from the grid origin."""
     return x - F.lit(float(origin[0])), y - F.lit(float(origin[1]))
 
 
@@ -48,16 +47,12 @@ def _gxy(
     x: Column,
     y: Column,
     cell_size: float,
-    origin: tuple[float, float] | None = None,
+    origin: tuple[float, float] = (0.0, 0.0),
 ) -> tuple[Column, Column]:
-    """Grid coords of a point: the site grid, or the origin grid when
-    ``origin`` is given. knn._dir_reach derives its completeness proofs from
-    these same coords (and the same offsets ``x - ox``), so the proof and the
-    join key share one definition."""
-    if origin is None:
-        gx = F.greatest(F.floor(x / F.lit(cell_size)), F.lit(0)).cast("long")
-        gy = F.greatest(F.floor(y / F.lit(cell_size)), F.lit(0)).cast("long")
-        return gx, gy
+    """Grid coords of a point: ``floor((x - ox) / s)``. knn._dir_reach
+    derives its completeness proofs from these same coords (and the same
+    offsets ``x - ox``), and overlap_selfjoin its reporting cell, so each
+    shares one definition with the join key."""
     u, v = offsets(x, y, origin)
     return F.floor(u / F.lit(cell_size)), F.floor(v / F.lit(cell_size))
 
@@ -82,7 +77,7 @@ def cell_key(gx: Column, gy: Column) -> Column:
 
 
 def point_cell(
-    x: Column, y: Column, cell_size: float, origin: tuple[float, float] | None = None
+    x: Column, y: Column, cell_size: float, origin: tuple[float, float] = (0.0, 0.0)
 ) -> Column:
     """Cell key of a point — pure Catalyst expression."""
     gx, gy = _gxy(x, y, cell_size, origin)
@@ -126,7 +121,7 @@ def with_ring_cells(
     g_max: tuple[int, int],
     cell_col: str = "__cell",
 ) -> DataFrame:
-    """One output row per (input row, ring cell) on the origin grid: cells
+    """One output row per (input row, ring cell) on the kNN grid: cells
     within `ring` grid steps of the point's cell, those outside
     [0, g_max] dropped (they hold no candidate, and dropping them keeps
     every key below the stride)."""

@@ -23,23 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _checkpoint_tracked(df: DataFrame, sc) -> tuple[DataFrame, list]:
-    """localCheckpoint(eager) + the java RDD handles its blocks live in.
-
-    The DataFrame API cannot release localCheckpoint blocks (ADVICE r3), but
-    the sparkContext-level persistent-RDD registry can: diffing the registry
-    around the checkpoint captures exactly the RDDs it created, so the loop
-    below can unpersist round r-1 once round r is materialized instead of
-    leaking O(rounds x |V|) blocks into a long-lived session. Assumes a
-    single-threaded driver (concurrent checkpoints would land in the diff).
-    """
-    reg = sc._jsc.getPersistentRDDs()
-    before = set(reg.keys())
-    out = df.localCheckpoint(eager=True)
-    reg = sc._jsc.getPersistentRDDs()
-    created = [reg[i] for i in reg.keys() if i not in before]
-    return out, created
+from geotreehealth_spark.operators.caching import checkpoint_tracked
 
 
 def connected_components(
@@ -65,7 +49,7 @@ def connected_components(
     live: list = []  # every block created, released wholesale on failure
 
     def tracked(df: DataFrame) -> tuple[DataFrame, list]:
-        out, blocks = _checkpoint_tracked(df, sc)
+        out, blocks = checkpoint_tracked(df, sc)
         live.extend(blocks)
         return out, blocks
 

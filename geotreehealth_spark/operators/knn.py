@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotreehealth_spark.geo import cellexprs
+from geotreehealth_spark.operators.caching import cached
 from geotreehealth_spark.operators.pip_join import distance_expr
 
 # ring rounds (rings 1, 4, 16, 64) before the residue takes the exact
@@ -136,15 +137,6 @@ def _dir_reach(
     }
 
 
-def _cached(df: DataFrame) -> tuple[DataFrame, bool]:
-    """persist df unless the CALLER already persisted it — unpersisting a
-    caller's cache on exit would silently drop their working set. Returns
-    (df, owned): owned=True means this call should unpersist it."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df, False
-    return df.persist(), True
-
-
 def _quadrant(lx: str, ly: str, rx: str, ry: str) -> Column:
     east, north = F.col(rx) >= F.col(lx), F.col(ry) >= F.col(ly)
     return (
@@ -182,7 +174,7 @@ def _ring_knn(
     # ONE scan of the candidate side feeds the bounds/count agg, the
     # cell-keyed join input and the rare crossJoin (profiling at sf0.1:
     # each re-scan of a synthesized right side cost ~2.5 s)
-    right_mat, right_owned = _cached(right)
+    right_mat, right_owned = cached(right)
     # everything this call caches is released when it returns or fails
     owned = [right_mat] if right_owned else []
     persisted: list[DataFrame] = []
@@ -209,7 +201,7 @@ def _ring_knn(
         wide_left = bool(set(left.columns) - {left_id, lx, ly})
         wide_right = bool(set(right.columns) - {right_id, rx, ry})
         if wide_left:
-            left, left_owned = _cached(left)
+            left, left_owned = cached(left)
             owned += [left] if left_owned else []
         left_slim = left.select(left_id, lx, ly)
         right_slim = right_mat.select(right_id, rx, ry)

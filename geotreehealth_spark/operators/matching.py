@@ -28,7 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from geotreehealth_spark.operators.knn import _cached, knn_join
+from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.knn import knn_join
 from geotreehealth_spark.operators.pip_join import distance_expr, pip_join
 
 
@@ -57,8 +58,8 @@ def containing_else_nearest(
     # matched arm AND the residue anti-join. All three lineages were
     # recomputed per consumer (crowns' groupBy derivation twice per call) —
     # persist each once; the session-level cache sweep releases them.
-    points, _ = _cached(points)
-    polygons, _ = _cached(polygons)
+    points, _ = cached(points)
+    polygons, _ = cached(polygons)
     contained = pip_join(
         points.select(point_id, px, py), polygons, cell_size, px, py, poly_wkb, poly_bounds
     )
@@ -233,8 +234,8 @@ def random_k_sample(
     # upstream lineage once for the cost-switch counts and again for the
     # plans. The direct branch's returned plan reads the caches too (released
     # by the session-level cache sweep, like other lazily-returned results).
-    left_mat, l_owned = _cached(left)
-    right_mat, r_owned = _cached(right)
+    left_mat, l_owned = cached(left)
+    right_mat, r_owned = cached(right)
     right = right_mat  # rebind: enumerate_pairs closes over this name
     n_left = left_mat.count()
     n_right = right_mat.count()
@@ -310,7 +311,7 @@ def random_k_sample(
     # stay live until the session-level release (bench release_caches), like
     # every checkpointed result in this engine.
     remaining = left_mat
-    from geotreehealth_spark.operators.components import _checkpoint_tracked
+    from geotreehealth_spark.operators.caching import checkpoint_tracked
 
     sc = left_mat.sparkSession.sparkContext
     parts: list[DataFrame] = []
@@ -323,7 +324,7 @@ def random_k_sample(
                 if final
                 else bucketed_pairs(remaining, threshold)
             )
-            cand, created = _checkpoint_tracked(
+            cand, created = checkpoint_tracked(
                 src.withColumn("__h", h)
                 .where(F.col("__h") < F.lit(threshold))
                 .select(left_id, right_id, "__h"),
@@ -360,7 +361,7 @@ def random_k_sample(
         # checkpoint blocks into a long-lived session — on success they ARE
         # the result's storage, but a raised call returns nothing that reads
         # them. Release goes through the registry-diffed java RDD handles
-        # (components._checkpoint_tracked): the DataFrame-level unpersist is
+        # (caching.checkpoint_tracked): the DataFrame-level unpersist is
         # a documented no-op for localCheckpoint blocks (ADVICE r3).
         for r in checkpointed_rdds:
             r.unpersist()

@@ -23,8 +23,8 @@ distribution (SURVEY.md §7 hazard 1). The engine reformulates it exactly:
    heavy lifting (pair discovery) happened once, fully distributed.
 
 This reproduces the sequential result EXACTLY (proved by parity tests vs the
-reference-order numpy oracle in tests/test_nms.py), unlike per-tile NMS which
-drifts at tile borders.
+reference-order numpy oracle in tests/test_spatial_parity.py), unlike per-tile
+NMS which drifts at tile borders.
 """
 
 from __future__ import annotations
@@ -32,9 +32,39 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotreehealth_spark.operators.knn import _cached
-from geotreehealth_spark.operators.overlap import overlap_selfjoin
+from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.overlap import (
+    box_inter_cols,
+    box_iou_cols,
+    box_overlap_ratio_cols,
+    overlap_selfjoin,
+)
 from geotreehealth_spark.operators.udfs import overlap_ratio_udf, iou_udf
+
+# edge lists up to this many (winner, loser) pairs run the fixpoint on the
+# driver; larger ones take the distributed join-based fixpoint
+_DRIVER_FIXPOINT_MAX = 2_000_000
+# round cap of the distributed fixpoint (the longest suppression chain)
+_MAX_ROUNDS = 64
+
+
+def _box_measure(criterion: str, bounds: tuple[str, str, str, str]):
+    """'iou' (batch_sam.py:699) or 'overlap_ratio' (inter/max area,
+    get_polygons.py:806-816) of the a_/b_ boxes; _measure_duck mirrors both
+    term-for-term."""
+    if criterion == "iou":
+        return box_iou_cols(bounds=bounds)
+    return box_overlap_ratio_cols(bounds=bounds)
+
+
+def _oriented(df: DataFrame, id_a, id_b, score_a, score_b) -> DataFrame:
+    """(winner, loser) of each pair under the global greedy order:
+    score desc, then id asc."""
+    a_wins = (score_a > score_b) | ((score_a == score_b) & (id_a < id_b))
+    return df.select(
+        F.when(a_wins, id_a).otherwise(id_b).alias("winner"),
+        F.when(a_wins, id_b).otherwise(id_a).alias("loser"),
+    )
 
 
 def nms_conflict_edges(
@@ -70,24 +100,14 @@ def nms_conflict_edges(
     slim = polys.select(*slim_cols)
     pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
     if wkb_col is not None:
-        x0, y0, x1, y1 = bounds
-        biw = F.greatest(
-            F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}"))
-            - F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
-            F.lit(0.0),
-        )
-        bih = F.greatest(
-            F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}"))
-            - F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
-            F.lit(0.0),
-        )
+        box_inter = box_inter_cols(bounds=bounds)
         if area_col is not None:
-            sound_bound = (biw * bih) / F.greatest(
+            sound_bound = box_inter / F.greatest(
                 F.col(f"a_{area_col}"), F.col(f"b_{area_col}")
             )
             pairs = pairs.where(sound_bound > threshold)
         else:
-            pairs = pairs.where(biw * bih > 0.0)
+            pairs = pairs.where(box_inter > 0.0)
         geoms = polys.select(id_col, wkb_col)
         pairs = pairs.join(
             geoms.select(
@@ -103,37 +123,14 @@ def nms_conflict_edges(
         udf = overlap_ratio_udf if criterion == "overlap_ratio" else iou_udf
         measure = udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
     else:
-        from geotreehealth_spark.operators.overlap import box_iou_cols
+        measure = _box_measure(criterion, bounds)
 
-        if criterion == "iou":
-            measure = box_iou_cols(bounds=bounds)
-        else:
-            x0, y0, x1, y1 = bounds
-            iw = F.greatest(
-                F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}"))
-                - F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
-                F.lit(0.0),
-            )
-            ih = F.greatest(
-                F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}"))
-                - F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
-                F.lit(0.0),
-            )
-            area_a = (F.col(f"a_{x1}") - F.col(f"a_{x0}")) * (F.col(f"a_{y1}") - F.col(f"a_{y0}"))
-            area_b = (F.col(f"b_{x1}") - F.col(f"b_{x0}")) * (F.col(f"b_{y1}") - F.col(f"b_{y0}"))
-            measure = (iw * ih) / F.greatest(area_a, area_b)
-
-    conflicts = pairs.where(measure > threshold)
-    # orient by global greedy order: (score desc, id asc)
-    a_wins = (F.col(f"a_{score_col}") > F.col(f"b_{score_col}")) | (
-        (F.col(f"a_{score_col}") == F.col(f"b_{score_col}"))
-        & (F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-    )
     # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
     # each unordered pair exactly once
-    return conflicts.select(
-        F.when(a_wins, F.col(f"a_{id_col}")).otherwise(F.col(f"b_{id_col}")).alias("winner"),
-        F.when(a_wins, F.col(f"b_{id_col}")).otherwise(F.col(f"a_{id_col}")).alias("loser"),
+    return _oriented(
+        pairs.where(measure > threshold),
+        F.col(f"a_{id_col}"), F.col(f"b_{id_col}"),
+        F.col(f"a_{score_col}"), F.col(f"b_{score_col}"),
     )
 
 
@@ -147,42 +144,40 @@ def greedy_nms(
     wkb_col: str | None = None,
     criterion: str = "overlap_ratio",
     area_col: str | None = None,
-    max_rounds: int = 64,
-    driver_fixpoint_max: int = 2_000_000,
-    precomputed_edges: DataFrame | None = None,
 ) -> DataFrame:
     """polys + `selected` boolean, exactly matching sequential greedy NMS.
 
     The conflict-edge DISCOVERY is always fully distributed (the quadratic
-    part). The fixpoint itself is O(edges x chain-depth): when the edge list
-    fits on the driver (< driver_fixpoint_max int64 pairs) it runs as a
-    vectorized numpy loop there — hundreds of rounds at milliseconds each
-    instead of seconds per distributed round of tiny joins. Beyond the cap the
-    distributed join-based fixpoint takes over (identical semantics).
-
-    ``precomputed_edges``: optional (winner, loser) conflict edges already
-    oriented by the greedy order — weighted_nms passes the edges it derives
-    from its penalty pair set so the quadratic cell self-join runs ONCE per
-    call instead of twice (r6; the r6 before-plan showed two full
-    overlap_selfjoin subtrees).
+    part); ``_suppress`` then runs the fixpoint over the edge list.
     """
     # r6: the polys lineage is read at least twice per call (conflict-edge
-    # discovery + the final selected join; 3x in weighted_nms) — persist it
-    # once instead of re-deriving the upstream joins/aggregations per use
-    polys, _ = _cached(polys)
+    # discovery + the final selected join) — persist it once instead of
+    # re-deriving the upstream joins/aggregations per use
+    polys, _ = cached(polys)
+    edges = nms_conflict_edges(
+        polys, id_col, score_col, threshold, cell_size, bounds, wkb_col,
+        criterion, area_col,
+    )
+    return _suppress(polys, id_col, edges)
+
+
+def _suppress(polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
+    """polys + `selected`, given their (winner, loser) conflict edges oriented
+    by the greedy order: a node is suppressed iff a surviving winner points
+    at it.
+
+    The fixpoint is O(edges x chain-depth): when the edge list fits on the
+    driver (<= _DRIVER_FIXPOINT_MAX int64 pairs) it runs as a vectorized
+    numpy loop there — hundreds of rounds at milliseconds each instead of
+    seconds per distributed round of tiny joins. Beyond the cap the
+    distributed join-based fixpoint takes over (identical semantics).
+    """
     # localCheckpoint each round: the fixpoint otherwise builds an
     # exponentially-deep logical plan (classic iterative-DataFrame trap) and
     # the driver burns all its time in Catalyst re-analysis.
-    edges = (
-        precomputed_edges
-        if precomputed_edges is not None
-        else nms_conflict_edges(
-            polys, id_col, score_col, threshold, cell_size, bounds, wkb_col,
-            criterion, area_col,
-        )
-    ).localCheckpoint(eager=True)
+    edges = edges.localCheckpoint(eager=True)
 
-    if edges.count() <= driver_fixpoint_max:
+    if edges.count() <= _DRIVER_FIXPOINT_MAX:
         suppressed_ids = _fixpoint_local(edges.toPandas())
         if not suppressed_ids:
             return polys.withColumn("selected", F.lit(True))
@@ -205,7 +200,7 @@ def greedy_nms(
         )
 
     suppressed_acc: DataFrame | None = None
-    for _ in range(max_rounds):
+    for _ in range(_MAX_ROUNDS):
         if edges.limit(1).count() == 0:
             break
         # kept-for-sure: winners that are nobody's loser in the live graph
@@ -240,11 +235,11 @@ def greedy_nms(
         )
     if edges.limit(1).count() != 0:
         # never return a partial result: a suppression chain deeper than
-        # max_rounds means undecided nodes would silently default to
+        # _MAX_ROUNDS means undecided nodes would silently default to
         # selected=True (ADVICE.md round 1) — fail loudly instead
         raise RuntimeError(
-            f"greedy_nms distributed fixpoint did not converge in {max_rounds} "
-            "rounds; raise max_rounds (chain depth exceeds it)"
+            f"greedy NMS distributed fixpoint did not converge in {_MAX_ROUNDS} "
+            "rounds: a suppression chain is deeper than nms._MAX_ROUNDS"
         )
     if suppressed_acc is None:
         return polys.withColumn("selected", F.lit(True))
@@ -280,22 +275,14 @@ def weighted_nms(
     which is order-independent and exact in both engines; the final score is
     priority - penalty_micro / 1e6.
     """
-    polys, _ = _cached(polys)  # read by the pair join AND the scored join (r6)
+    polys, _ = cached(polys)  # read by the pair join AND the scored join (r6)
     slim = polys.select(id_col, *bounds)
     pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
-    if criterion == "iou":
-        from geotreehealth_spark.operators.overlap import box_iou_cols
-
-        m = box_iou_cols(bounds=bounds)
-    else:
-        m = _box_overlap_ratio_cols(bounds)
     # r6: ONE quadratic pair-discovery pass. The threshold-surviving pairs
     # feed BOTH the penalty aggregation and (with wscore attached per
-    # endpoint by two slim id-joins) the greedy conflict edges — previously
-    # greedy_nms re-ran the whole cell self-join on the scored table, so the
-    # dominant quadratic stage executed twice with identical pair output.
+    # endpoint by two slim id-joins) the greedy conflict edges.
     contrib = (
-        pairs.withColumn("__m", m)
+        pairs.withColumn("__m", _box_measure(criterion, bounds))
         .where(F.col("__m") > threshold)
         .select(
             F.col(f"a_{id_col}").alias("__ida"),
@@ -319,7 +306,7 @@ def weighted_nms(
         )
         .drop("__pen_micro")
         # r6: read 3x (both edge-orientation sides + the final selected join
-        # inside greedy_nms) — persist so the penalty agg runs once
+        # inside _suppress) — persist so the penalty agg runs once
         .persist()
     )
     sc = scored.select(F.col(id_col), F.col(score_col))
@@ -328,35 +315,10 @@ def weighted_nms(
     ).join(
         sc.select(F.col(id_col).alias("__idb"), F.col(score_col).alias("__sb")), "__idb"
     )
-    a_wins = (F.col("__sa") > F.col("__sb")) | (
-        (F.col("__sa") == F.col("__sb")) & (F.col("__ida") < F.col("__idb"))
+    edges = _oriented(
+        oriented, F.col("__ida"), F.col("__idb"), F.col("__sa"), F.col("__sb")
     )
-    edges = oriented.select(
-        F.when(a_wins, F.col("__ida")).otherwise(F.col("__idb")).alias("winner"),
-        F.when(a_wins, F.col("__idb")).otherwise(F.col("__ida")).alias("loser"),
-    )
-    return greedy_nms(
-        scored, id_col=id_col, score_col=score_col, threshold=threshold,
-        cell_size=cell_size, bounds=bounds, wkb_col=None, criterion=criterion,
-        precomputed_edges=edges,
-    )
-
-
-def _box_overlap_ratio_cols(bounds):
-    x0, y0, x1, y1 = bounds
-    iw = F.greatest(
-        F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}"))
-        - F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
-        F.lit(0.0),
-    )
-    ih = F.greatest(
-        F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}"))
-        - F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
-        F.lit(0.0),
-    )
-    area_a = (F.col(f"a_{x1}") - F.col(f"a_{x0}")) * (F.col(f"a_{y1}") - F.col(f"a_{y0}"))
-    area_b = (F.col(f"b_{x1}") - F.col(f"b_{x0}")) * (F.col(f"b_{y1}") - F.col(f"b_{y0}"))
-    return (iw * ih) / F.greatest(area_a, area_b)
+    return _suppress(scored, id_col, edges)
 
 
 # ---------------------------------------------------------------------------

@@ -4,12 +4,12 @@ Reference semantics: R-tree candidate pairs then exact intersects/IoU tests
 (from_mask_to_polygons.py:11-32; get_polygons.py:806-816;
 delineation_utils.py:119-131, 293-326; batch_sam.py:224-258).
 
-Physical plan: both sides explode to bbox-covering Morton cells and equi-join
-on cell_id. Duplicate pairs (bboxes sharing several cells) are eliminated
-WITHOUT a distinct-shuffle by the canonical reporting-cell trick: a pair is
-emitted only from the cell that contains the top-left corner of the bbox
-intersection — every overlapping pair has exactly one such cell. AQE skew-join
-splits dense cells (north_rule).
+Physical plan: both sides explode to their bbox-covering grid cells
+(geo/cellexprs.py) and equi-join on the cell key. Duplicate pairs (bboxes
+sharing several cells) are eliminated WITHOUT a distinct-shuffle by the
+canonical reporting-cell trick: a pair is emitted only from the cell that
+contains the min corner of the bbox intersection — every overlapping pair has
+exactly one such cell. AQE skew-join splits dense cells (north_rule).
 """
 
 from __future__ import annotations
@@ -70,23 +70,23 @@ def overlap_selfjoin(
         & (F.col(f"a_{y1}") > F.col(f"b_{y0}"))
     )
     # reporting cell = cell containing the intersection's min corner →
-    # exactly-once emission, checked with pure JVM floor arithmetic (the
-    # exploded struct carries the cell's grid coords, so no Python here)
-    ix = F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}"))
-    iy = F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}"))
-    # clamp at 0 exactly like cells_covering_bbox does for out-of-frame bboxes
-    joined = joined.where(
-        (F.greatest(F.floor(ix / F.lit(cell_size)), F.lit(0)) == F.col("__gx"))
-        & (F.greatest(F.floor(iy / F.lit(cell_size)), F.lit(0)) == F.col("__gy"))
+    # exactly-once emission; the exploded row carries the cell's grid coords,
+    # and the corner's coords come from the same cellexprs formula
+    gx, gy = cellexprs._gxy(
+        F.greatest(F.col(f"a_{x0}"), F.col(f"b_{x0}")),
+        F.greatest(F.col(f"a_{y0}"), F.col(f"b_{y0}")),
+        cell_size,
     )
+    joined = joined.where((gx == F.col("__gx")) & (gy == F.col("__gy")))
     return joined.drop("__cell", "__gx", "__gy")
 
 
-def box_iou_cols(
+def box_inter_cols(
     prefix_a: str = "a_", prefix_b: str = "b_",
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
 ):
-    """IoU of two axis-aligned boxes as a pure Catalyst expression."""
+    """Clamped intersection area of two axis-aligned boxes — the one term both
+    box criteria (and NMS's polygon prune) are built from. Pure Catalyst."""
     x0, y0, x1, y1 = bounds
     iw = F.least(F.col(f"{prefix_a}{x1}"), F.col(f"{prefix_b}{x1}")) - F.greatest(
         F.col(f"{prefix_a}{x0}"), F.col(f"{prefix_b}{x0}")
@@ -94,11 +94,31 @@ def box_iou_cols(
     ih = F.least(F.col(f"{prefix_a}{y1}"), F.col(f"{prefix_b}{y1}")) - F.greatest(
         F.col(f"{prefix_a}{y0}"), F.col(f"{prefix_b}{y0}")
     )
-    inter = F.greatest(iw, F.lit(0.0)) * F.greatest(ih, F.lit(0.0))
-    area_a = (F.col(f"{prefix_a}{x1}") - F.col(f"{prefix_a}{x0}")) * (
-        F.col(f"{prefix_a}{y1}") - F.col(f"{prefix_a}{y0}")
+    return F.greatest(iw, F.lit(0.0)) * F.greatest(ih, F.lit(0.0))
+
+
+def _box_area(prefix: str, bounds: tuple[str, str, str, str]):
+    x0, y0, x1, y1 = bounds
+    return (F.col(f"{prefix}{x1}") - F.col(f"{prefix}{x0}")) * (
+        F.col(f"{prefix}{y1}") - F.col(f"{prefix}{y0}")
     )
-    area_b = (F.col(f"{prefix_b}{x1}") - F.col(f"{prefix_b}{x0}")) * (
-        F.col(f"{prefix_b}{y1}") - F.col(f"{prefix_b}{y0}")
+
+
+def box_iou_cols(
+    prefix_a: str = "a_", prefix_b: str = "b_",
+    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
+):
+    """IoU of two axis-aligned boxes as a pure Catalyst expression."""
+    inter = box_inter_cols(prefix_a, prefix_b, bounds)
+    return inter / (_box_area(prefix_a, bounds) + _box_area(prefix_b, bounds) - inter)
+
+
+def box_overlap_ratio_cols(
+    prefix_a: str = "a_", prefix_b: str = "b_",
+    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
+):
+    """inter / max(area_a, area_b) of two axis-aligned boxes
+    (get_polygons.py:806-816) as a pure Catalyst expression."""
+    return box_inter_cols(prefix_a, prefix_b, bounds) / F.greatest(
+        _box_area(prefix_a, bounds), _box_area(prefix_b, bounds)
     )
-    return inter / (area_a + area_b - inter)

@@ -9,11 +9,12 @@ Reference semantics:
   stability, we pin (dist, stem id) total order — SURVEY.md §7 hazard 2).
 
 Physical plan (scale rationale):
-- Polygons explode to their bbox-covering Morton cells (small fan-out:
+- Polygons explode to their bbox-covering grid cells (small fan-out:
   bbox ≤ a few cells at a well-chosen resolution) — this is the distributed
   replacement for the reference's R-tree (get_polygons.py:806-812).
-- Points carry a single cell_id → the spatial join becomes a shuffle equi-join
-  on cell_id that AQE can skew-split (dense forest cells, north_rule).
+- Points carry a single cell key (geo/cellexprs.py, the same formula) → the
+  spatial join becomes a shuffle equi-join on the key that AQE can skew-split
+  (dense forest cells, north_rule).
 - Exact PIP runs as a vectorized Arrow-batch refine on the joined candidates;
   each (point, polygon) candidate pair exists exactly once (a point lies in
   exactly one cell), so no post-dedup is needed.

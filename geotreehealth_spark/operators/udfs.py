@@ -16,8 +16,7 @@ from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DoubleType
 from geotreehealth_spark.geo import kernels, wkb
 
 # NOTE: cell encode / covering-cells / ring-cells UDFs were retired in round
-# 2 — join-path cell arithmetic is pure Catalyst now (geo/cellexprs.py); the
-# Morton transform (geo/cells.py) remains for write-time file ordering.
+# 2 — cell arithmetic is pure Catalyst now (geo/cellexprs.py).
 
 
 @pandas_udf(BooleanType())

@@ -1,12 +1,9 @@
-"""Unit tests for the pure-numpy geometry layer (WKB, cells, kernels)."""
+"""Unit tests for the pure-numpy geometry layer (WKB, kernels)."""
 
 import numpy as np
 import pytest
 
 from geotreehealth_spark.geo import (
-    cell_encode,
-    cell_ring,
-    cells_covering_bbox,
     convex_clip_area,
     decode_points,
     decode_polygon,
@@ -20,7 +17,6 @@ from geotreehealth_spark.geo import (
     polygon_iou,
     polygon_overlap_ratio,
 )
-from geotreehealth_spark.geo.cells import cell_decode, morton_interleave
 
 
 def square(x0, y0, s):
@@ -48,53 +44,6 @@ class TestWkb:
         xmin, ymin, xmax, ymax = polygon_bounds(wkbs)
         np.testing.assert_array_equal(xmin, [0, 5])
         np.testing.assert_array_equal(ymax, [2, 10])
-
-
-class TestCells:
-    def test_morton_known_values(self):
-        assert morton_interleave(np.array([0]), np.array([0]))[0] == 0
-        assert morton_interleave(np.array([1]), np.array([0]))[0] == 1
-        assert morton_interleave(np.array([0]), np.array([1]))[0] == 2
-        assert morton_interleave(np.array([3]), np.array([5]))[0] == 0b100111
-
-    def test_roundtrip(self):
-        rng = np.random.default_rng(42)
-        ix = rng.integers(0, 1 << 20, 1000)
-        iy = rng.integers(0, 1 << 20, 1000)
-        code = morton_interleave(ix, iy)
-        ox, oy = cell_decode(code)
-        np.testing.assert_array_equal(ox, ix)
-        np.testing.assert_array_equal(oy, iy)
-
-    def test_cell_encode_locality(self):
-        # points in same 50m cell share an id; neighbors differ
-        ids = cell_encode(np.array([10.0, 49.0, 51.0]), np.array([10.0, 10.0, 10.0]), 50.0)
-        assert ids[0] == ids[1] != ids[2]
-
-    def test_ring(self):
-        c = cell_encode(np.array([75.0]), np.array([75.0]), 50.0)  # cell (1,1)
-        ring = cell_ring(c, 1)[0]
-        assert len(ring) == 9
-        assert (ring >= 0).all()
-        # contains self and (0,0)
-        assert c[0] in ring
-        assert 0 in ring
-        # corner cell (0,0): 4 valid of 9
-        c0 = cell_encode(np.array([10.0]), np.array([10.0]), 50.0)
-        r0 = cell_ring(c0, 1)[0]
-        assert (r0 == -1).sum() == 5
-
-    def test_covering_bbox(self):
-        rows, cells = cells_covering_bbox(
-            np.array([10.0, 140.0]), np.array([10.0, 10.0]),
-            np.array([60.0, 160.0]), np.array([60.0, 40.0]), 50.0,
-        )
-        # bbox0 spans cells (0..1, 0..1) = 4 cells; bbox1 spans (2..3, 0) = 2
-        assert (rows == 0).sum() == 4
-        assert (rows == 1).sum() == 2
-        # point inside bbox0 falls in one of its covering cells
-        pid = cell_encode(np.array([55.0]), np.array([15.0]), 50.0)[0]
-        assert pid in cells[rows == 0]
 
 
 class TestKernels:

@@ -80,7 +80,7 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
     # DataFrame-level unpersist is a no-op for localCheckpoint storage) AND
     # the input caches, leaving the session's persistent-RDD registry as it
     # was before the call.
-    from geotreehealth_spark.operators import components, matching
+    from geotreehealth_spark.operators import caching, matching
 
     left = spark.range(0, 50).selectExpr(
         "CAST(id AS STRING) AS pid", "id AS lkey"
@@ -92,7 +92,7 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
         "CAST(id AS STRING) AS cid", "id * 2 AS rkey"
     )
     calls = {"n": 0}
-    orig = components._checkpoint_tracked
+    orig = caching.checkpoint_tracked
 
     def boom(df, sc):
         calls["n"] += 1
@@ -100,7 +100,7 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
             raise RuntimeError("injected mid-loop failure")
         return orig(df, sc)
 
-    monkeypatch.setattr(components, "_checkpoint_tracked", boom)
+    monkeypatch.setattr(caching, "checkpoint_tracked", boom)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     import pytest

@@ -120,8 +120,10 @@ def test_greedy_nms_parity(spark, crowns_geo_pd):
     assert n_suppressed > 50
 
 
-def test_greedy_nms_distributed_fixpoint_matches_driver_path(spark, crowns_geo_pd):
-    """driver_fixpoint_max=0 forces the join-based fixpoint; results must be
+def test_greedy_nms_distributed_fixpoint_matches_driver_path(
+    spark, crowns_geo_pd, monkeypatch
+):
+    """_DRIVER_FIXPOINT_MAX=0 forces the join-based fixpoint; results must be
     identical to the driver-local numpy path (same subset as parity test)."""
     pdf = crowns_geo_pd[
         (crowns_geo_pd.gxmin < 60.0) & (crowns_geo_pd.gymin < 300.0)
@@ -133,11 +135,8 @@ def test_greedy_nms_distributed_fixpoint_matches_driver_path(spark, crowns_geo_p
         area_col="garea",
     )
     a = nms.greedy_nms(geo, **kwargs).select("crown_id", "selected").toPandas()
-    b = (
-        nms.greedy_nms(geo, driver_fixpoint_max=0, **kwargs)
-        .select("crown_id", "selected")
-        .toPandas()
-    )
+    monkeypatch.setattr(nms, "_DRIVER_FIXPOINT_MAX", 0)
+    b = nms.greedy_nms(geo, **kwargs).select("crown_id", "selected").toPandas()
     ma = dict(zip(a.crown_id, a.selected))
     mb = dict(zip(b.crown_id, b.selected))
     assert ma == mb and len(ma) == len(pdf)

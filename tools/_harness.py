@@ -1,0 +1,74 @@
+"""Shared scaffolding for the timing tools in tools/.
+
+One copy of bench.py's session, warm-up and cache-release protocol, plus the
+tools' common ``q1 [q2 ...] [--passes N] [--sf DIR]`` command line. bench.py
+keeps its own frozen copy of the same protocol, so numbers from these tools
+are comparable to its records.
+
+Importing this module puts the repository root on ``sys.path``.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+if REPO not in sys.path:
+    sys.path.insert(0, REPO)
+
+
+def parse_args(argv: list[str]) -> tuple[list[str], int, str]:
+    """``q1 [q2 ...] [--passes N] [--sf DIR]`` → (names, passes, sf_dir).
+
+    passes defaults to 2; sf_dir to $SPARK_GRAFT_SF_DIR, and one of the two
+    must name it.
+    """
+    names: list[str] = []
+    passes = 2
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    i = 0
+    while i < len(argv):
+        if argv[i] == "--passes":
+            passes = int(argv[i + 1]); i += 2
+        elif argv[i] == "--sf":
+            sf_dir = argv[i + 1]; i += 2
+        else:
+            names.append(argv[i]); i += 1
+    if not sf_dir:
+        sys.exit("no input tables: pass --sf DIR or set SPARK_GRAFT_SF_DIR")
+    return names, passes, sf_dir
+
+
+def start_session(
+    app_name: str,
+    cores: int | None = None,
+    shuffle_partitions: int | None = None,
+    sf_dir: str | None = None,
+):
+    """The engine's session (``cores`` defaults to $SPARK_GRAFT_CPUS), warmed
+    outside timing: JVM, Python-UDF worker pool and Arrow path, plus the
+    parquet reader when ``sf_dir`` is given."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from geotreehealth_spark.session import get_spark
+
+    spark = get_spark(app_name=app_name, cores=cores, shuffle_partitions=shuffle_partitions)
+
+    @F.pandas_udf(LongType())
+    def _warm(v):
+        return v
+
+    spark.range(100000).select(F.sum(_warm(F.col("id")))).collect()
+    if sf_dir:
+        spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    return spark
+
+
+def release_caches(spark) -> None:
+    """Drop persisted DataFrames AND localCheckpoint RDDs between runs so one
+    query's working set doesn't GC-pressure the next."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()

@@ -25,9 +25,9 @@ import sys
 
 WORKER = r"""
 import json, sys, time
-sys.path.insert(0, ".")
+sys.path.insert(0, "tools")
+from _harness import release_caches, start_session
 from pyspark.sql import functions as F
-from geotreehealth_spark.session import get_spark
 from geotreehealth_spark import synth
 from geotreehealth_spark.docs import generator
 from geotreehealth_spark.operators import pip_join, tiling, zonal
@@ -35,14 +35,7 @@ from geotreehealth_spark.operators import pip_join, tiling, zonal
 cores = int(sys.argv[1])
 sf_dir = sys.argv[2]
 R = int(sys.argv[3])  # site replicas stacked along y (preserves density)
-spark = get_spark(app_name=f"scaling-{cores}", cores=cores,
-                  shuffle_partitions=4 * cores)
-# warm JVM + python workers outside timing
-from pyspark.sql.types import LongType
-@F.pandas_udf(LongType())
-def _warm(v):
-    return v
-spark.range(100000).select(F.sum(_warm(F.col("id")))).collect()
+spark = start_session(f"scaling-{cores}", cores, shuffle_partitions=4 * cores)
 
 RJ = 6 * R  # join replicas: sized so per-core compute dominates fixed job
             # costs at 4N cores (at 2*R the 32-core run is scheduler-bound)
@@ -77,11 +70,6 @@ crowns_j = (crowns_j.withColumn("cy", F.col("cy") + off)
 stems = stems.repartition(64).localCheckpoint(eager=True)
 crowns_j = crowns_j.repartition(64).localCheckpoint(eager=True)
 
-def release():
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-
 out = {}
 # min-of-2 trials per job: the sandbox host shows multi-x run-to-run noise
 # (same code, same session: 76s then 41s) — the MIN is the least-interfered
@@ -107,7 +95,7 @@ h = matches.select(
     F.expr("bit_xor(xxhash64(crown_id, stem_tag, dist))").alias("h")
 ).collect()[0].h
 out["join_hash"] = int(h)
-release()
+release_caches(spark)
 
 crowns = synth.crowns(spark, sf_dir).drop("stem_tag").crossJoin(F.broadcast(reps))
 crowns = (crowns.withColumn("cy", F.col("cy") + off)
@@ -159,7 +147,7 @@ def _merge_min(a: dict, b: dict) -> dict:
 
 
 def _health_probe() -> float:
-    """Single-thread compute probe (same as run_scaling_when_healthy.py).
+    """Single-thread compute probe (run_scaling_when_healthy.py gates on it too).
 
     <1.2s on a healthy host; the sandbox's throttled windows push this to
     ~20s, which is when scaling numbers turn into noise (BASELINE.md §3).

@@ -3,59 +3,29 @@
 Usage: python tools/bench_subset.py q1 [q2 ...] [--passes N] [--sf DIR]
 
 Same session config, warmup, interleaved min-of-N passes, and cache release
-as bench.py — produced numbers are comparable to BENCH_r*.json entries. Used
-for the idle-host spot-reruns of individual queries (VERDICT r4 "What's
-wrong" 4) and for A/B timing of operator variants without paying the full
-35-query headline sweep.
+as bench.py (tools/_harness.py) — produced numbers are comparable to
+BENCH_r*.json entries. Used for the idle-host spot-reruns of individual
+queries (VERDICT r4 "What's wrong" 4) and for A/B timing of operator variants
+without paying the full 35-query headline sweep.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import _harness  # puts the repository root on sys.path
 
-import __spark_entry__ as entrymod  # noqa: E402
-from geotreehealth_spark.session import get_spark  # noqa: E402
+import __spark_entry__ as entrymod
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    passes = 2
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--passes":
-            passes = int(args[i + 1]); i += 2
-        elif args[i] == "--sf":
-            sf_dir = args[i + 1]; i += 2
-        else:
-            names.append(args[i]); i += 1
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark(app_name="geotreehealth-bench-subset", cores=cpus)
+    names, passes, sf_dir = _harness.parse_args(sys.argv[1:])
     queries = entrymod.queries()
     unknown = [n for n in names if n not in queries]
     assert not unknown, f"unknown queries: {unknown}"
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def _warm(v):
-        return v
-
-    spark.range(100000).select(F.sum(_warm(F.col("id")))).collect()
-    spark.read.parquet(f"{sf_dir}/orders.parquet").count()
-
-    def release_caches() -> None:
-        spark.catalog.clearCache()
-        jsc = spark.sparkContext._jsc
-        for rdd in jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+    spark = _harness.start_session("geotreehealth-bench-subset", sf_dir=sf_dir)
 
     per_query: dict[str, float] = {}
     for p in range(passes):
@@ -66,8 +36,9 @@ def main() -> None:
             prev = per_query.get(name)
             per_query[name] = round(dt if prev is None else min(prev, dt), 3)
             print(f"# pass{p} {name}: {dt:.2f}s rows={n}", file=sys.stderr)
-            release_caches()
+            _harness.release_caches(spark)
 
+    cpus = spark.sparkContext.defaultParallelism
     print(json.dumps({"queries": per_query, "sf_dir": sf_dir, "cpus": cpus,
                       "passes": passes}))
     spark.stop()

@@ -12,49 +12,19 @@ execution-bound before touching the operator (guide §1 / §7.3).
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import _harness  # puts the repository root on sys.path
 
-import __spark_entry__ as entrymod  # noqa: E402
-from geotreehealth_spark.session import get_spark  # noqa: E402
-from tools.plan_audit import plan_string  # noqa: E402
+import __spark_entry__ as entrymod
+from plan_audit import plan_string
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    passes = 2
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    names = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--passes":
-            passes = int(args[i + 1]); i += 2
-        elif args[i] == "--sf":
-            sf_dir = args[i + 1]; i += 2
-        else:
-            names.append(args[i]); i += 1
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    spark = get_spark(app_name="profile-query", cores=cpus)
+    names, passes, sf_dir = _harness.parse_args(sys.argv[1:])
+    spark = _harness.start_session("profile-query", sf_dir=sf_dir)
     queries = entrymod.queries()
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def _warm(v):
-        return v
-
-    spark.range(100000).select(F.sum(_warm(F.col("id")))).collect()
-    spark.read.parquet(f"{sf_dir}/orders.parquet").count()
-
-    def release_caches() -> None:
-        spark.catalog.clearCache()
-        jsc = spark.sparkContext._jsc
-        for rdd in jsc.getPersistentRDDs().values():
-            rdd.unpersist()
 
     for p in range(passes):
         for name in names:
@@ -72,7 +42,7 @@ def main() -> None:
                 f"count={t_count:.2f}s rows={n}",
                 flush=True,
             )
-            release_caches()
+            _harness.release_caches(spark)
     spark.stop()
 
 

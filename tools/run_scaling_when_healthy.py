@@ -10,16 +10,7 @@ import subprocess
 import sys
 import time
 
-import numpy as np
-
-
-def probe() -> float:
-    a = np.random.rand(1500, 1500)
-    t0 = time.time()
-    for _ in range(3):
-        a = a @ a
-        a /= np.abs(a).max()
-    return time.time() - t0
+from bench_scaling import AMBIENT_BUSY_MAX, _ambient_busy_cores, _health_probe
 
 
 def wait_healthy(threshold: float = 1.2, max_wait: float = 7200.0) -> bool:
@@ -29,12 +20,10 @@ def wait_healthy(threshold: float = 1.2, max_wait: float = 7200.0) -> bool:
     # probe alone cannot see, and which is what poisoned the r4 record
     # (probe 0.27s "healthy", ambient ~10 busy cores, local[32] 3.7x slower
     # than local[8]).
-    from bench_scaling import _ambient_busy_cores, AMBIENT_BUSY_MAX
-
     t0 = time.time()
     streak = 0
     while time.time() - t0 < max_wait:
-        dt = probe()
+        dt = _health_probe()
         busy = _ambient_busy_cores()
         print(f"probe {dt:.2f}s ambient {busy:.1f} cores (streak {streak})",
               flush=True)
