@@ -33,6 +33,14 @@ def _span_of_kind(kind: str):
     return F.element_at(F.filter("spans", lambda s: s.kind == F.lit(kind)), 1)
 
 
+def _attr_fields():
+    """The attr span split into its CSV fields, the empty field read as NULL
+    (the generator's _attr_csv writes NULL as '') before any cast."""
+    return F.transform(
+        F.split(_span_of_kind("attr").text, ","), lambda f: F.nullif(f, F.lit(""))
+    )
+
+
 def _meta_table():
     return F.regexp_extract(_span_of_kind("meta").text, r"table=([a-z]+);", 1)
 
@@ -41,7 +49,7 @@ def decode_stems(docs: DataFrame) -> DataFrame:
     """docs → stems view (stem_tag, x, y, dbh, year, status, crown_position,
     fad, site_id)."""
     d = docs.where(_meta_table() == "stems")
-    attr = F.split(_span_of_kind("attr").text, ",")
+    attr = _attr_fields()
     geom = F.unhex(_span_of_kind("geom").media_ref)
     d = d.select(
         attr.getItem(0).alias("stem_tag"),
@@ -49,7 +57,7 @@ def decode_stems(docs: DataFrame) -> DataFrame:
         attr.getItem(2).cast("int").alias("year"),
         attr.getItem(3).alias("status"),
         attr.getItem(4).cast("int").alias("crown_position"),
-        F.when(attr.getItem(5) == "", None).otherwise(attr.getItem(5)).alias("fad"),
+        attr.getItem(5).alias("fad"),
         F.regexp_extract(_span_of_kind("meta").text, r"site=(.+)$", 1).alias("site_id"),
         point_xy_udf(geom).alias("__xy"),
     )
@@ -63,11 +71,11 @@ def decode_crowns(docs: DataFrame) -> DataFrame:
     from geotreehealth_spark.docs.generator import ring_bounds_udf
 
     d = docs.where(_meta_table() == "crowns")
-    attr = F.split(_span_of_kind("attr").text, ",")
+    attr = _attr_fields()
     d = d.select(
         attr.getItem(0).alias("crown_id"),
         attr.getItem(1).cast("double").alias("score"),
-        F.when(attr.getItem(2) == "", None).otherwise(attr.getItem(2)).alias("stem_tag"),
+        attr.getItem(2).alias("stem_tag"),
         attr.getItem(3).cast("boolean").alias("selected"),
         F.unhex(_span_of_kind("geom").media_ref).alias("geometry_wkb"),
     )
@@ -84,7 +92,7 @@ def decode_crowns(docs: DataFrame) -> DataFrame:
 def decode_tiles(docs: DataFrame) -> DataFrame:
     """docs → tile manifest with raster media_ref + parsed raster meta."""
     d = docs.where(_meta_table() == "tiles")
-    attr = F.split(_span_of_kind("attr").text, ",")
+    attr = _attr_fields()
     raster = _span_of_kind("raster")
     return d.select(
         attr.getItem(0).alias("tile_id"),
@@ -102,7 +110,7 @@ def decode_lidar(docs: DataFrame) -> DataFrame:
     """docs → LiDAR tile manifest with laz:// media_ref + point count, ready
     for media.load_lidar_points (S6 scan path)."""
     d = docs.where(_meta_table() == "lidar")
-    attr = F.split(_span_of_kind("attr").text, ",")
+    attr = _attr_fields()
     span = _span_of_kind("lidar")
     return d.select(
         attr.getItem(0).alias("tile_id"),

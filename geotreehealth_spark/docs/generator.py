@@ -37,6 +37,13 @@ def _span(kind, text, media_ref, offset: int):
     )
 
 
+def _attr_csv(*cols: str):
+    """attr span text: the columns as CSV fields, a NULL written as the
+    empty field (bare concat_ws skips NULLs, shifting every later field) —
+    decode._attr_fields reads it back as NULL."""
+    return F.concat_ws(",", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols])
+
+
 def crown_polygon_ring(key: int, cx: float, cy: float, radius: float) -> np.ndarray:
     """Deterministic convex crown polygon around (cx, cy).
 
@@ -52,14 +59,6 @@ def crown_polygon_ring(key: int, cx: float, cy: float, radius: float) -> np.ndar
     r = radius * (0.70 + 0.30 * jitter)
     pts = np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], axis=1)
     return kernels.convex_hull(pts)
-
-
-@F.pandas_udf(BinaryType())
-def crown_wkb_udf(key: pd.Series, cx: pd.Series, cy: pd.Series, radius: pd.Series) -> pd.Series:
-    out = []
-    for k, x, y, r in zip(key, cx, cy, radius):
-        out.append(wkb.encode_polygon(crown_polygon_ring(int(k), float(x), float(y), float(r))))
-    return pd.Series(out)
 
 
 # one combined UDF: polygon WKB + bounds in a single pass, so Catalyst cannot
@@ -127,9 +126,9 @@ def two_box_multi_udf(
     """MultiPolygon WKB of two axis-aligned boxes (P8 explode fixtures)."""
     out = []
     for a0, b0, a1, b1, c0, d0, c1, d1 in zip(x0, y0, x1, y1, u0, v0, u1, v1):
-        r1 = np.array([[a0, b0], [a1, b0], [a1, b1], [a0, b1], [a0, b0]], float)
-        r2 = np.array([[c0, d0], [c1, d0], [c1, d1], [c0, d1], [c0, d0]], float)
-        out.append(wkb.encode_multipolygon([r1, r2]))
+        out.append(wkb.encode_multipolygon(
+            [kernels.box_ring(a0, b0, a1, b1), kernels.box_ring(c0, d0, c1, d1)]
+        ))
     return pd.Series(out)
 
 
@@ -172,15 +171,7 @@ def crowns_with_geometry(crowns: DataFrame) -> DataFrame:
 
 def stems_to_docs(stems: DataFrame) -> DataFrame:
     """One doc per stem: meta + attr(CSV) + geom(point WKB hex) spans."""
-    attr_csv = F.concat_ws(
-        ",",
-        F.col("stem_tag"),
-        F.col("dbh").cast("string"),
-        F.col("year").cast("string"),
-        F.col("status"),
-        F.col("crown_position").cast("string"),
-        F.coalesce(F.col("fad"), F.lit("")),
-    )
+    attr_csv = _attr_csv("stem_tag", "dbh", "year", "status", "crown_position", "fad")
     geom_hex = F.lower(F.hex(point_wkb_udf(F.col("x"), F.col("y"))))
     return stems.select(
         F.concat(F.lit("stem-"), F.col("stem_tag")).alias("doc_id"),
@@ -194,13 +185,7 @@ def stems_to_docs(stems: DataFrame) -> DataFrame:
 
 def crowns_to_docs(crowns_geo: DataFrame) -> DataFrame:
     """One doc per crown: meta + attr + geom(polygon WKB hex) spans."""
-    attr_csv = F.concat_ws(
-        ",",
-        F.col("crown_id"),
-        F.col("score").cast("string"),
-        F.coalesce(F.col("stem_tag"), F.lit("")),
-        F.col("selected").cast("string"),
-    )
+    attr_csv = _attr_csv("crown_id", "score", "stem_tag", "selected")
     geom_hex = F.lower(F.hex(F.col("geometry_wkb")))
     return crowns_geo.select(
         F.concat(F.lit("crown-"), F.col("crown_id")).alias("doc_id"),
@@ -214,14 +199,7 @@ def crowns_to_docs(crowns_geo: DataFrame) -> DataFrame:
 
 def tiles_to_docs(tiles: DataFrame, bands: int = 12, h: int = 100, w: int = 100) -> DataFrame:
     """One doc per raster tile: meta + attr(bounds CSV) + raster(media_ref)."""
-    attr_csv = F.concat_ws(
-        ",",
-        F.col("tile_id"),
-        F.col("txmin").cast("string"),
-        F.col("tymin").cast("string"),
-        F.col("txmax").cast("string"),
-        F.col("tymax").cast("string"),
-    )
+    attr_csv = _attr_csv("tile_id", "txmin", "tymin", "txmax", "tymax")
     return tiles.select(
         F.concat(F.lit("tile-"), F.col("tile_id")).alias("doc_id"),
         F.array(
@@ -241,14 +219,7 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
     """One doc per LiDAR tile: meta + attr(bounds CSV) + lidar(laz:// ref)
     span — the S6 media_ref twin of tiles_to_docs (reference keeps per-tile
     point-cloud paths in its labels CSV, store_data_structures.py:174-183)."""
-    attr_csv = F.concat_ws(
-        ",",
-        F.col("tile_id"),
-        F.col("txmin").cast("string"),
-        F.col("tymin").cast("string"),
-        F.col("txmax").cast("string"),
-        F.col("tymax").cast("string"),
-    )
+    attr_csv = _attr_csv("tile_id", "txmin", "tymin", "txmax", "tymax")
     return tiles.select(
         F.concat(F.lit("laz-"), F.col("tile_id")).alias("doc_id"),
         F.array(
@@ -263,11 +234,3 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
         ).alias("spans"),
     )
 
-
-def build_docs(stems: DataFrame, crowns_geo: DataFrame, tiles: DataFrame) -> DataFrame:
-    """The one physical input table: union of all entity docs."""
-    return (
-        stems_to_docs(stems)
-        .unionByName(crowns_to_docs(crowns_geo))
-        .unionByName(tiles_to_docs(tiles))
-    )

@@ -98,10 +98,6 @@ def decode_polygon(wkb: bytes) -> np.ndarray:
     return ring.reshape(npts, 2).astype(np.float64)
 
 
-def decode_polygons(wkbs) -> list[np.ndarray]:
-    return [decode_polygon(w) for w in wkbs]
-
-
 def encode_multipolygon(rings: list[np.ndarray]) -> bytes:
     """List of exterior rings → WKB MultiPolygon of single-ring parts."""
     header = struct.pack("<bII", _LE, _MULTIPOLYGON, len(rings))

@@ -25,13 +25,15 @@ from pyspark.sql import functions as F
 
 from geotreehealth_spark.operators.caching import checkpoint_tracked
 
+# round cap of the propagation (the longest shortest path it can close)
+_MAX_ITERS = 50
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
     nodes: DataFrame | None = None,
-    max_iters: int = 50,
 ) -> DataFrame:
     """(node, comp) for every node, comp = MIN node id in its component.
 
@@ -39,7 +41,7 @@ def connected_components(
     nodes: optional (single-column) node universe; nodes without edges become
            singleton components. Defaults to the edge endpoints.
     Raises RuntimeError if the propagation has not converged after
-    ``max_iters`` rounds (diameter > max_iters — never for dedup graphs).
+    ``_MAX_ITERS`` rounds (diameter > _MAX_ITERS — never for dedup graphs).
     """
     # materialize the symmetric edge list ONCE — every propagation round
     # re-reads it, and the upstream pair generation (e.g. the full Jaccard
@@ -54,7 +56,7 @@ def connected_components(
         return out, blocks
 
     try:
-        return _run(edges, src, dst, nodes, max_iters, tracked)
+        return _run(edges, src, dst, nodes, tracked)
     except BaseException:
         # a failed call must not leak checkpoint blocks into a long-lived
         # session (unpersist of an already-released RDD is a no-op, so the
@@ -64,7 +66,7 @@ def connected_components(
         raise
 
 
-def _run(edges, src, dst, nodes, max_iters, tracked) -> DataFrame:
+def _run(edges, src, dst, nodes, tracked) -> DataFrame:
     sym, sym_blocks = tracked(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -75,7 +77,7 @@ def _run(edges, src, dst, nodes, max_iters, tracked) -> DataFrame:
     else:
         node_df = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
     labels, prev_blocks = tracked(node_df.withColumn("comp", F.col("node")))
-    for _ in range(max_iters):
+    for _ in range(_MAX_ITERS):
         # (a) best neighbor label
         nbr = (
             sym.join(
@@ -129,6 +131,6 @@ def _run(edges, src, dst, nodes, max_iters, tracked) -> DataFrame:
     for r in sym_blocks + prev_blocks:
         r.unpersist()
     raise RuntimeError(
-        f"connected_components did not converge in {max_iters} rounds "
-        "(graph diameter exceeds max_iters)"
+        f"connected_components did not converge in {_MAX_ITERS} rounds "
+        "(graph diameter exceeds the round cap)"
     )

@@ -175,6 +175,11 @@ def same_tag_pair_distances(
 
 
 RANDOM_K_HASH_P = 1000003
+# |L|·|R| up to this many pairs takes random_k_sample's direct window plan
+_DIRECT_MAX_PAIRS = 2_000_000
+# the threshold plan sizes T so ~_OVERSAMPLE·k candidates survive per probe,
+# and escalates T by this factor (floored at 2) for shortfall probes
+_OVERSAMPLE = 8
 
 
 def random_k_sample(
@@ -186,8 +191,6 @@ def random_k_sample(
     left_key: str,
     right_key: str,
     self_key: str | None = None,
-    direct_max_pairs: int = 2_000_000,
-    oversample: int = 8,
 ) -> DataFrame:
     """J7: k deterministic pseudo-random candidates per probe.
 
@@ -198,10 +201,10 @@ def random_k_sample(
     self_key: optional left column equal to right_key for self-exclusion.
 
     Plans (identical output, cost-switched like nms/knn residues):
-    - |L|·|R| <= direct_max_pairs: window rank over the enumerated product.
+    - |L|·|R| <= _DIRECT_MAX_PAIRS: window rank over the enumerated product.
     - else: candidates with h < T survive into the shuffle + per-probe sort,
-      T sized so ~oversample·k survive per probe (h is near-uniform mod p).
-      Probes with < k survivors (hash clumping) escalate T x oversample and
+      T sized so ~_OVERSAMPLE·k survive per probe (h is near-uniform mod p).
+      Probes with < k survivors (hash clumping) escalate T x _OVERSAMPLE and
       re-scan only those probes; the last escalation is T = p (full
       product), so the result is EXACTLY the global top-k draw regardless of
       distribution — same completeness-proof-or-escalate shape as the kNN
@@ -209,10 +212,10 @@ def random_k_sample(
       enumerated |L|·|R| product — the affine hash decomposes into
       per-probe admissible rv-intervals, the right side is bucketed by
       rv = (40503·rk) mod p once, and each round is an equi-join on the
-      bucket id touching only ~oversample·k right rows per probe, with the
+      bucket id touching only ~_OVERSAMPLE·k right rows per probe, with the
       original h < T predicate re-applied after the join (the candidate set
       is provably the enumerated plan's). Scan, shuffle and sort volumes
-      are all O(oversample·k·|L|) per round.
+      are all O(_OVERSAMPLE·k·|L|) per round.
     """
     lk = F.col(left_key)
     rk = F.col(right_key)
@@ -239,7 +242,7 @@ def random_k_sample(
     right = right_mat  # rebind: enumerate_pairs closes over this name
     n_left = left_mat.count()
     n_right = right_mat.count()
-    if n_left * n_right <= direct_max_pairs:
+    if n_left * n_right <= _DIRECT_MAX_PAIRS:
         return (
             enumerate_pairs(left_mat)
             .withColumn("draw_rank", F.row_number().over(w))
@@ -249,7 +252,7 @@ def random_k_sample(
 
     import math
 
-    frac = min(1.0, (oversample * k) / max(n_right, 1))
+    frac = min(1.0, (_OVERSAMPLE * k) / max(n_right, 1))
     threshold = max(1, int(math.ceil(RANDOM_K_HASH_P * frac)))
 
     # Bucketed admissible-window join (r6, VERDICT r5 item 5): the affine
@@ -261,7 +264,7 @@ def random_k_sample(
     # [0, T−a) and [p−a, p−a+T) ∩ [0, p). The right side is bucketed by rv
     # ONCE; each probe explodes to only the ~T·n_buckets/p + 2 buckets its
     # intervals touch, and the join is a plain equi-join on the bucket id —
-    # the enumerated volume drops from |L|·|R| to ~|L|·oversample·k rows.
+    # the enumerated volume drops from |L|·|R| to ~|L|·_OVERSAMPLE·k rows.
     # SAFETY: bucket coverage only needs to be a SUPERSET of the admissible
     # rows — the loop re-applies the ORIGINAL `h < T` predicate after the
     # join, so the candidate set (and the draw) is provably identical to the
@@ -352,10 +355,10 @@ def random_k_sample(
             remaining = remaining.join(satisfied, left_id, "left_anti")
             if remaining.isEmpty():
                 break
-            # escalation factor floored at 2: with oversample=1 a literal
-            # `*= oversample` never grows T and the loop spins forever
+            # escalation factor floored at 2: with _OVERSAMPLE=1 a literal
+            # `*= _OVERSAMPLE` never grows T and the loop spins forever
             # re-scanning the same shortfall probes at the same threshold
-            threshold *= max(2, oversample)
+            threshold *= max(2, _OVERSAMPLE)
     except BaseException:
         # r6 (ADVICE r5): a mid-loop failure must not leak the per-round
         # checkpoint blocks into a long-lived session — on success they ARE

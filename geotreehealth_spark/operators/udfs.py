@@ -1,9 +1,12 @@
 """Arrow-batched pandas UDFs bridging Spark columns to the numpy geo kernels.
 
-These are the ONLY Python boundaries in the engine (north_star: "no per-row
-Python"). Each UDF is vectorized over the whole Arrow batch; the PIP refine UDF
-additionally amortizes polygon decoding by factorizing on the WKB bytes within
-a batch (many rows share a polygon after a cell join).
+These are the scalar pandas UDFs of the spatial operators (pip_join, nms and
+the explode fixtures). They are not the engine's only Python boundary: docs/
+(WKB encode/decode), operators/vectorize.py and zonal.py (mapInPandas /
+applyInPandas), media.py, media_features.py, alignment.py and streaming.py
+cross it too, all Arrow-batched (north_star: "no per-row Python"). The PIP
+refine UDF additionally amortizes polygon decoding by factorizing on the WKB
+bytes within a batch (many rows share a polygon after a cell join).
 """
 
 from __future__ import annotations
@@ -11,7 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DoubleType
+from pyspark.sql.types import BooleanType, DoubleType
 
 from geotreehealth_spark.geo import kernels, wkb
 
@@ -57,22 +60,6 @@ def overlap_ratio_udf(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
     return pd.Series([kernels.polygon_overlap_ratio(a, b) for a, b in zip(ra, rb)])
 
 
-@pandas_udf(BinaryType())
-def point_wkb_udf(x: pd.Series, y: pd.Series) -> pd.Series:
-    return pd.Series(wkb.encode_points(x.to_numpy(), y.to_numpy()))
-
-
 @pandas_udf(DoubleType())
 def polygon_area_udf(geom_wkb: pd.Series) -> pd.Series:
     return pd.Series([kernels.polygon_area(wkb.decode_polygon(w)) for w in geom_wkb])
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def polygon_centroid_udf(geom_wkb: pd.Series) -> pd.Series:
-    return pd.Series([list(kernels.polygon_centroid(wkb.decode_polygon(w))) for w in geom_wkb])
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def polygon_bounds_udf(geom_wkb: pd.Series) -> pd.Series:
-    xmin, ymin, xmax, ymax = wkb.polygon_bounds(list(geom_wkb))
-    return pd.Series(np.stack([xmin, ymin, xmax, ymax], axis=1).tolist())

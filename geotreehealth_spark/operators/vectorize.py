@@ -27,8 +27,49 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType
 
+from geotreehealth_spark import media
+from geotreehealth_spark.geo import kernels, wkb
 from geotreehealth_spark.geo import polygonize as pz
-from geotreehealth_spark.geo import wkb
+
+
+def _parts_schema(key_col: str) -> str:
+    return f"{key_col} string, part_idx int, n_px long, area double, geometry_wkb binary"
+
+
+def _parts(key_col: str, items) -> pd.DataFrame:
+    """Parts rows of (key, mask, txmin, tymax, res) items: one row per
+    4-connected mask component, part_idx in polygonize's first-pixel
+    (row-major) order — the one emitter behind every mask→parts operator."""
+    out = {key_col: [], "part_idx": [], "n_px": [], "area": [], "geometry_wkb": []}
+    for key, mask, txmin, tymax, res in items:
+        polys = pz.polygonize(mask, txmin=txmin, tymax=tymax, res_x=res, res_y=res)
+        for i, p in enumerate(polys):
+            out[key_col].append(key)
+            out["part_idx"].append(i)
+            out["n_px"].append(p["n_px"])
+            out["area"].append(p["area"])
+            out["geometry_wkb"].append(wkb.encode_polygon(p["ring"]))
+    return pd.DataFrame(out)
+
+
+def _grid(mn: np.ndarray, mx: np.ndarray, res: float, pad: float):
+    """(gx0, gy1, empty mask) of the pixel grid covering the (x, y) bounds
+    mn..mx padded by `pad`, its origin snapped to res-multiples (so
+    integer-aligned inputs rasterize exactly)."""
+    lo = mn - pad
+    hi = mx + pad
+    gx0 = np.floor(lo[0] / res) * res
+    gy1 = np.ceil(hi[1] / res) * res
+    w = int(np.ceil((hi[0] - gx0) / res))
+    h = int(np.ceil((gy1 - lo[1]) / res))
+    return gx0, gy1, np.zeros((h, w), dtype=bool)
+
+
+def _burn(mask: np.ndarray, ring: np.ndarray, gx0, gy1, res: float, value: bool) -> None:
+    """Set the mask pixels whose centers the ring contains to `value`."""
+    rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, res, res)
+    if ok:
+        mask[rr, cc] = value
 
 
 def polygonize_masks(
@@ -48,36 +89,23 @@ def polygonize_masks(
     part_idx orders components by their first pixel (row-major scan), the
     same order rasterio.features.shapes emits them.
     """
-    schema = (
-        f"{mask_id} string, part_idx int, n_px long, area double, geometry_wkb binary"
-    )
+
+    def bits(row) -> np.ndarray:
+        h = int(getattr(row, h_col))
+        w = int(getattr(row, w_col))
+        return np.unpackbits(
+            np.frombuffer(getattr(row, mask_col), dtype=np.uint8), count=h * w
+        ).astype(bool).reshape(h, w)
 
     def per_batch(it):
         for pdf in it:
-            out = {mask_id: [], "part_idx": [], "n_px": [], "area": [], "geometry_wkb": []}
-            for row in pdf.itertuples():
-                h = int(getattr(row, h_col))
-                w = int(getattr(row, w_col))
-                bits = np.unpackbits(
-                    np.frombuffer(getattr(row, mask_col), dtype=np.uint8),
-                    count=h * w,
-                ).astype(bool).reshape(h, w)
-                polys = pz.polygonize(
-                    bits,
-                    txmin=float(getattr(row, txmin_col)),
-                    tymax=float(getattr(row, tymax_col)),
-                    res_x=res,
-                    res_y=res,
-                )
-                for i, p in enumerate(polys):
-                    out[mask_id].append(getattr(row, mask_id))
-                    out["part_idx"].append(i)
-                    out["n_px"].append(p["n_px"])
-                    out["area"].append(p["area"])
-                    out["geometry_wkb"].append(wkb.encode_polygon(p["ring"]))
-            yield pd.DataFrame(out)
+            yield _parts(mask_id, (
+                (getattr(row, mask_id), bits(row), float(getattr(row, txmin_col)),
+                 float(getattr(row, tymax_col)), res)
+                for row in pdf.itertuples()
+            ))
 
-    return masks.mapInPandas(per_batch, schema)
+    return masks.mapInPandas(per_batch, _parts_schema(mask_id))
 
 
 def geometric_union(
@@ -100,46 +128,26 @@ def geometric_union(
     (vertex-identical to the encoded boxes), skipping the WKB encode UDF and
     the per-row decode, like zonal_raster_stats/pip_join's box conventions.
     """
-    schema = (
-        f"{group_col} string, part_idx int, n_px long, area double, geometry_wkb binary"
-    )
     if (wkb_col is None) != (bounds_cols is not None):
         raise ValueError("pass exactly one of wkb_col / bounds_cols")
 
     def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         if wkb_col is None:
             bx0, by0, bx1, by1 = (pdf[c].to_numpy(dtype=float) for c in bounds_cols)
-            rings = [
-                np.array([[a, b], [c, b], [c, d], [a, d], [a, b]])
-                for a, b, c, d in zip(bx0, by0, bx1, by1)
-            ]
+            rings = [kernels.box_ring(*b) for b in zip(bx0, by0, bx1, by1)]
         else:
             rings = [wkb.decode_polygon(b) for b in pdf[wkb_col]]
-        mins = np.array([r.min(axis=0) for r in rings])
-        maxs = np.array([r.max(axis=0) for r in rings])
-        gx0 = np.floor((mins[:, 0].min() - pad) / res) * res
-        gy1 = np.ceil((maxs[:, 1].max() + pad) / res) * res
-        w = int(np.ceil((maxs[:, 0].max() + pad - gx0) / res))
-        h = int(np.ceil((gy1 - (mins[:, 1].min() - pad)) / res))
-        from geotreehealth_spark import media
-
-        mask = np.zeros((h, w), dtype=bool)
+        mn = np.array([r.min(axis=0) for r in rings]).min(axis=0)
+        mx = np.array([r.max(axis=0) for r in rings]).max(axis=0)
+        gx0, gy1, mask = _grid(mn, mx, res, pad)
         for ring in rings:
-            rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, h, w, res, res)
-            if ok:
-                mask[rr, cc] = True
-        out = {group_col: [], "part_idx": [], "n_px": [], "area": [], "geometry_wkb": []}
-        gid = pdf[group_col].iloc[0]
-        for i, p in enumerate(pz.polygonize(mask, txmin=gx0, tymax=gy1, res_x=res, res_y=res)):
-            out[group_col].append(gid)
-            out["part_idx"].append(i)
-            out["n_px"].append(p["n_px"])
-            out["area"].append(p["area"])
-            out["geometry_wkb"].append(wkb.encode_polygon(p["ring"]))
-        return pd.DataFrame(out)
+            _burn(mask, ring, gx0, gy1, res, True)
+        return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1, res)])
 
     cols = [group_col, *bounds_cols] if wkb_col is None else [group_col, wkb_col]
-    return polys.select(*cols).groupBy(group_col).applyInPandas(per_group, schema)
+    return polys.select(*cols).groupBy(group_col).applyInPandas(
+        per_group, _parts_schema(group_col)
+    )
 
 
 def geometric_difference(
@@ -155,42 +163,22 @@ def geometric_difference(
     AND-NOT the masks, polygonize the remainder. Output one row per
     connected part: (id, part_idx, n_px, area, geometry_wkb); rows whose
     difference is empty produce no output."""
-    schema = (
-        f"{id_col} string, part_idx int, n_px long, area double, geometry_wkb binary"
-    )
+
+    def diff(row):
+        ra = wkb.decode_polygon(getattr(row, a_wkb))
+        rb = wkb.decode_polygon(getattr(row, b_wkb))
+        mn = np.minimum(ra.min(axis=0), rb.min(axis=0))
+        mx = np.maximum(ra.max(axis=0), rb.max(axis=0))
+        gx0, gy1, mask = _grid(mn, mx, res, pad)
+        _burn(mask, ra, gx0, gy1, res, True)
+        _burn(mask, rb, gx0, gy1, res, False)
+        return getattr(row, id_col), mask, gx0, gy1, res
 
     def per_batch(it):
-        from geotreehealth_spark import media
-
         for pdf in it:
-            out = {id_col: [], "part_idx": [], "n_px": [], "area": [], "geometry_wkb": []}
-            for row in pdf.itertuples():
-                ra = wkb.decode_polygon(getattr(row, a_wkb))
-                rb = wkb.decode_polygon(getattr(row, b_wkb))
-                mn = np.minimum(ra.min(axis=0), rb.min(axis=0)) - pad
-                mx = np.maximum(ra.max(axis=0), rb.max(axis=0)) + pad
-                gx0 = np.floor(mn[0] / res) * res
-                gy1 = np.ceil(mx[1] / res) * res
-                w = int(np.ceil((mx[0] - gx0) / res))
-                h = int(np.ceil((gy1 - mn[1]) / res))
-                mask = np.zeros((h, w), dtype=bool)
-                rr, cc, ok = media.rasterize_mask(ra, gx0, gy1, h, w, res, res)
-                if ok:
-                    mask[rr, cc] = True
-                rr, cc, ok = media.rasterize_mask(rb, gx0, gy1, h, w, res, res)
-                if ok:
-                    mask[rr, cc] = False
-                for i, p in enumerate(
-                    pz.polygonize(mask, txmin=gx0, tymax=gy1, res_x=res, res_y=res)
-                ):
-                    out[id_col].append(getattr(row, id_col))
-                    out["part_idx"].append(i)
-                    out["n_px"].append(p["n_px"])
-                    out["area"].append(p["area"])
-                    out["geometry_wkb"].append(wkb.encode_polygon(p["ring"]))
-            yield pd.DataFrame(out)
+            yield _parts(id_col, (diff(row) for row in pdf.itertuples()))
 
-    return pairs.select(id_col, a_wkb, b_wkb).mapInPandas(per_batch, schema)
+    return pairs.select(id_col, a_wkb, b_wkb).mapInPandas(per_batch, _parts_schema(id_col))
 
 
 def overlay_intersection(
@@ -207,8 +195,6 @@ def overlay_intersection(
     (kernels.polygon_intersection_parts), so SUM(area) per id is the exact
     intersection area. Runs as mapInPandas — geometry never leaves the Arrow
     batch, output rows are slim."""
-    from geotreehealth_spark.geo import kernels
-
     schema = f"{id_col} string, part_idx int, area double, geometry_wkb binary"
 
     def per_batch(it):

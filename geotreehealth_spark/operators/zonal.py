@@ -34,34 +34,56 @@ from geotreehealth_spark.geo import wkb
 from geotreehealth_spark.operators.tiling import assign_tiles
 
 
+# COUNT-PROPORTIONAL salting (north_rule skew handling): a cheap
+# groupBy(tile_id).count() sketch sizes each tile's salt so every
+# applyInPandas group holds ~_ROWS_PER_GROUP crowns. Round 1 used a constant
+# salt, which left the dense-strip tiles 5x heavier than the rest and capped
+# tile_zonal scaling efficiency at 0.375 (VERDICT.md); proportional salt
+# flattens group cost regardless of skew. The tile cube is re-resolved per
+# sub-group (cheap — seeded generator / cached tile-store read) and the
+# partial-sum merge is unchanged. 4096 (r6, was 256): each applyInPandas
+# group pays a fixed Arrow/pandas dispatch cost, so thousands of ~256-row
+# groups spent more wall time on dispatch than on rasterizing (A/B at sf0.1:
+# 8.3 s -> 6.4 s min-of-3); ~4k rows is still far below a task's memory
+# budget (one tile cube + slim crown rows) and leaves salt splitting active
+# for genuinely hot tiles.
+_ROWS_PER_GROUP = 4096
+
+
+def _partials(rows) -> pd.DataFrame:
+    """Partial rows (crown_id, n_px, band_sum, band_sumsq) of (crown_id,
+    n_px, vals) items, vals a crown's F-ordered (bands, n) pixel values —
+    consumed one item at a time, so only one crown's pixels are held."""
+    out = {"crown_id": [], "n_px": [], "band_sum": [], "band_sumsq": []}
+    for crown_id, n_px, vals in rows:
+        out["crown_id"].append(crown_id)
+        out["n_px"].append(n_px)
+        out["band_sum"].append(vals.sum(axis=1).tolist())
+        out["band_sumsq"].append((vals * vals).sum(axis=1).tolist())
+    return pd.DataFrame(
+        {
+            "crown_id": pd.Series(out["crown_id"], dtype=object),
+            "n_px": pd.Series(out["n_px"], dtype="int64"),
+            "band_sum": pd.Series(out["band_sum"], dtype=object),
+            "band_sumsq": pd.Series(out["band_sumsq"], dtype=object),
+        }
+    )
+
+
 def zonal_raster_stats(
     crowns_geo: DataFrame,
     tiles: DataFrame,
     crown_bounds: tuple[str, str, str, str] = ("gxmin", "gymin", "gxmax", "gymax"),
     wkb_col: str | None = "geometry_wkb",
     n_bands: int = 12,
-    rows_per_group: int = 4096,
     core_bounds: tuple[str, str, str, str] | None = None,
 ) -> DataFrame:
     """Per-crown band means/stds over the synthetic HSI tiles.
 
     tiles must carry (tile_id, txmin, tymin, txmax, tymax, media_ref, bands,
     height, width). Output: crown_id, n_px, band_mean: array<double>,
-    band_std: array<double> (population std, like np.std).
-
-    rows_per_group — COUNT-PROPORTIONAL salting (north_rule skew handling):
-    a cheap groupBy(tile_id).count() sketch sizes each tile's salt so every
-    applyInPandas group holds ~rows_per_group crowns. Round 1 used a constant
-    salt, which left the dense-strip tiles 5x heavier than the rest and capped
-    tile_zonal scaling efficiency at 0.375 (VERDICT.md); proportional salt
-    flattens group cost regardless of skew. The tile cube is re-resolved per
-    sub-group (cheap — seeded generator / cached tile-store read) and the
-    partial-sum merge is unchanged. Default 4096 (r6, was 256): each
-    applyInPandas group pays a fixed Arrow/pandas dispatch cost, so thousands
-    of ~256-row groups spent more wall time on dispatch than on rasterizing
-    (A/B at sf0.1: 8.3 s -> 6.4 s min-of-3); ~4k rows is still far below a
-    task's memory budget (one tile cube + slim crown rows) and leaves salt
-    splitting active for genuinely hot tiles.
+    band_std: array<double> (population std, like np.std). Crowns are salted
+    into applyInPandas groups of ~_ROWS_PER_GROUP per tile.
 
     core_bounds — optional names of the tile's OWNED (unbuffered) window
     columns. When tiles overlap, a pixel lies in several windows; clipping
@@ -70,10 +92,9 @@ def zonal_raster_stats(
     instead of enforcing it). With abutting tiles (overlap=0) it's a no-op.
 
     wkb_col=None (r6) — the crown footprint IS its bounds box, exactly like
-    pip_join's poly_wkb=None convention: the ring is built from the bounds
-    columns inside the batch (identical vertices/winding to the WKB the box
-    entry used to encode), so box callers skip the encode-UDF + 93 B/row
-    shuffle + per-row decode entirely.
+    pip_join's poly_wkb=None convention, so box callers skip the encode-UDF
+    + 93 B/row shuffle + per-row decode entirely: each box selects a
+    contiguous pixel block found by one batched searchsorted.
     """
     keep = ["crown_id", *crown_bounds] if wkb_col is None else [
         "crown_id", wkb_col, *crown_bounds
@@ -90,7 +111,7 @@ def zonal_raster_stats(
             "__salt",
             F.pmod(
                 F.xxhash64("crown_id"),
-                F.greatest(F.ceil(F.col("__cnt") / F.lit(rows_per_group)), F.lit(1)),
+                F.greatest(F.ceil(F.col("__cnt") / F.lit(_ROWS_PER_GROUP)), F.lit(1)),
             ),
         )
         .drop("__cnt")
@@ -115,9 +136,8 @@ def zonal_raster_stats(
         if cb is not None:
             core = tuple(float(getattr(first, c)) for c in cb)
         cube = media.resolve_raster(first.media_ref, bands, h, w).astype(np.float64)
-        flat = cube.reshape(bands, -1)
-        out = {"crown_id": [], "n_px": [], "band_sum": [], "band_sumsq": []}
-        if wkb_col is None and cb is None:
+
+        def box_rows():
             # batch box path (r6): every footprint is an axis-aligned box, so
             # the per-crown selection is a contiguous (row, col) sub-rectangle.
             # The pixel-center arrays below use the SAME per-element float
@@ -128,7 +148,8 @@ def zonal_raster_stats(
             # order, and the np.sum bits — is identical to the per-row path.
             # Half-pixel margins put the box edges far from the subwindow
             # clipping rasterize_mask applies, so the full-axis search agrees
-            # with its bbox-restricted scan.
+            # with its bbox-restricted scan. The core rect is the same
+            # half-open pixel-center test, so it is two more limits per axis.
             px = txmin + (np.arange(w) + 0.5) * res_x
             qy = -(tymax - (np.arange(h) + 0.5) * res_y)  # increasing
             bx0, by0, bx1, by1 = (pdf[c].to_numpy(dtype=np.float64) for c in crown_bounds)
@@ -136,65 +157,46 @@ def zonal_raster_stats(
             # inverted box selects the same (possibly empty) block
             bx0, bx1 = np.minimum(bx0, bx1), np.maximum(bx0, bx1)
             by0, by1 = np.minimum(by0, by1), np.maximum(by0, by1)
-            ids = pdf["crown_id"].to_numpy()
             c_lo = np.searchsorted(px, bx0, side="left")
             c_hi = np.searchsorted(px, bx1, side="left")
             r_lo = np.searchsorted(qy, -by1, side="right")
             r_hi = np.searchsorted(qy, -by0, side="right")
-            n_px_all = (r_hi - r_lo) * (c_hi - c_lo)
-            for i in np.nonzero(n_px_all > 0)[0]:
+            if cb is not None:
+                c_lo = np.maximum(c_lo, np.searchsorted(px, core[0], side="left"))
+                c_hi = np.minimum(c_hi, np.searchsorted(px, core[2], side="left"))
+                r_lo = np.maximum(r_lo, np.searchsorted(qy, -core[3], side="right"))
+                r_hi = np.minimum(r_hi, np.searchsorted(qy, -core[1], side="right"))
+            n_px = np.maximum(r_hi - r_lo, 0) * np.maximum(c_hi - c_lo, 0)
+            ids = pdf["crown_id"].to_numpy()
+            for i in np.nonzero(n_px > 0)[0]:
                 # F-ordered (bands, n) — the LAYOUT is load-bearing: fancy
                 # indexing flat[:, idx] returns an F-contiguous array, and
                 # numpy's sum(axis=1) accumulation order depends on strides,
                 # so a C-ordered copy changes the low bits of the partials
                 block = cube[:, r_lo[i]:r_hi[i], c_lo[i]:c_hi[i]]
                 vals = np.ascontiguousarray(block.transpose(1, 2, 0)).reshape(-1, bands).T
-                out["crown_id"].append(ids[i])
-                out["n_px"].append(int(n_px_all[i]))
-                out["band_sum"].append(vals.sum(axis=1).tolist())
-                out["band_sumsq"].append((vals * vals).sum(axis=1).tolist())
-            return pd.DataFrame(
-                {
-                    "crown_id": pd.Series(out["crown_id"], dtype=object),
-                    "n_px": pd.Series(out["n_px"], dtype="int64"),
-                    "band_sum": pd.Series(out["band_sum"], dtype=object),
-                    "band_sumsq": pd.Series(out["band_sumsq"], dtype=object),
-                }
-            )
-        for row in pdf.itertuples():
-            if wkb_col is None:
-                x0, y0, x1, y1 = (float(getattr(row, c)) for c in crown_bounds)
-                ring = np.array(
-                    [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
-                )
-            else:
-                ring = wkb.decode_polygon(row.geometry_wkb)
-            rr, cc, any_px = media.rasterize_mask(ring, txmin, tymax, h, w, res_x, res_y)
-            if not any_px:
-                continue
-            if cb is not None:
-                # exactly-once ownership: keep pixels whose CENTER lies in the
-                # tile's core rect (half-open, matching the grid convention)
-                px = txmin + (cc + 0.5) * res_x
-                py = tymax - (rr + 0.5) * res_y
-                own = (px >= core[0]) & (px < core[2]) & (py >= core[1]) & (py < core[3])
-                rr, cc = rr[own], cc[own]
-                if len(rr) == 0:
+                yield ids[i], int(n_px[i]), vals
+
+        def ring_rows():
+            flat = cube.reshape(bands, -1)
+            for row in pdf.itertuples():
+                ring = wkb.decode_polygon(getattr(row, wkb_col))
+                rr, cc, any_px = media.rasterize_mask(ring, txmin, tymax, h, w, res_x, res_y)
+                if not any_px:
                     continue
-            idx = rr * w + cc
-            vals = flat[:, idx]
-            out["crown_id"].append(row.crown_id)
-            out["n_px"].append(len(idx))
-            out["band_sum"].append(vals.sum(axis=1).tolist())
-            out["band_sumsq"].append((vals * vals).sum(axis=1).tolist())
-        return pd.DataFrame(
-            {
-                "crown_id": pd.Series(out["crown_id"], dtype=object),
-                "n_px": pd.Series(out["n_px"], dtype="int64"),
-                "band_sum": pd.Series(out["band_sum"], dtype=object),
-                "band_sumsq": pd.Series(out["band_sumsq"], dtype=object),
-            }
-        )
+                if cb is not None:
+                    # exactly-once ownership: keep pixels whose CENTER lies in
+                    # the tile's core rect (half-open, the grid convention)
+                    px = txmin + (cc + 0.5) * res_x
+                    py = tymax - (rr + 0.5) * res_y
+                    own = (px >= core[0]) & (px < core[2]) & (py >= core[1]) & (py < core[3])
+                    rr, cc = rr[own], cc[own]
+                    if len(rr) == 0:
+                        continue
+                idx = rr * w + cc
+                yield row.crown_id, len(idx), flat[:, idx]
+
+        return _partials(box_rows() if wkb_col is None else ring_rows())
 
     partials = assigned.groupBy("tile_id", "__salt").applyInPandas(per_tile, partial_schema)
 

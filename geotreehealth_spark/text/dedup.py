@@ -33,6 +33,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from geotreehealth_spark.operators.caching import cached
+
 P31 = (1 << 31) - 1  # modulus for MinHash permutations (31-bit Mersenne prime)
 SIMHASH_BITS = 60  # md5-derived hash width that fits BIGINT in both dialects
 
@@ -85,6 +87,59 @@ def shingles_df(
     )
 
 
+def _self_pairs(
+    table: DataFrame, id_col: str, keys: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """`table` joined to itself on `keys`, each unordered pair once (id_a <
+    id_b): rows (*keys, id_a, <c>_a..., id_b, <c>_b...) for c in carry.
+
+    The one near-dup blocking join: the table is persisted once (r6 — each
+    join side otherwise re-ran its whole derivation from the scan, with no
+    exchange reuse across the self-join), so callers read it again for
+    free; the cache is released by the session-level cache sweep."""
+    table, _ = cached(table)
+
+    def side(s: str) -> DataFrame:
+        return table.select(
+            F.col(id_col).alias(f"id_{s}"), *[F.col(c).alias(f"{c}_{s}") for c in carry], *keys
+        )
+
+    return side("a").join(side("b"), keys).where(F.col("id_a") < F.col("id_b"))
+
+
+def _set_jaccard(
+    sets: DataFrame, elem: str, threshold: float, id_col: str, max_df: int | None
+) -> DataFrame:
+    """Pairs (id_a < id_b, jaccard >= threshold) of the distinct (id, elem)
+    sets — the inverted-index plan: posting lists drive the self-join and
+    |A∩B| / (|A|+|B|-|A∩B|) is computed JVM-side.
+
+    max_df: drop elements appearing in more than max_df sets (stop-token cap)
+    — the standard trick that keeps the self-join near-linear. Jaccard is
+    then computed over the REDUCED universe (sizes and intersections both
+    post-filter), which is the semantics the oracles in __spark_entry__
+    mirror."""
+    if max_df is not None:
+        hot = sets.groupBy(elem).count().where(F.col("count") > max_df).select(elem)
+        sets = sets.join(F.broadcast(hot), elem, "left_anti")
+    inter = (
+        _self_pairs(sets, id_col, [elem])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("__inter"))
+    )
+    sizes = sets.groupBy(id_col).agg(F.count("*").alias("__sz"))
+    return (
+        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"), "id_a")
+        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 4,
@@ -99,38 +154,8 @@ def ngram_jaccard_pairs(
     inverted-index plan: shingle posting lists drive a bucketed self-join,
     max_df caps stop-shingles, Jaccard computed over the post-filter shingle
     universe (mirrored by the SQL oracle)."""
-    sh = shingles_df(docs, n, id_col, text_col)
-    if max_df is not None:
-        hot = sh.groupBy("shingle").count().where(F.col("count") > max_df).select("shingle")
-        sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    # r6: the shingle table feeds three consumers (sizes, both join sides) and
-    # was recomputed per consumer — shingling + distinct-shuffle x3; persist
-    # once (released by the session-level cache sweep, like other operators)
-    sh = sh.persist()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__inter"))
-    )
-    return (
-        inter.join(
-            sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"),
-            "id_a",
-        )
-        .join(
-            sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"),
-            "id_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _set_jaccard(
+        shingles_df(docs, n, id_col, text_col), "shingle", threshold, id_col, max_df
     )
 
 
@@ -150,41 +175,9 @@ def jaccard_pairs(
     text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
-    """Pairs (id_a < id_b, jaccard) with word-set Jaccard >= threshold.
-
-    max_df: drop tokens appearing in more than max_df docs (stop-token cap) —
-    the standard trick that keeps the inverted-index self-join near-linear.
-    Jaccard is then computed over the REDUCED token universe (sizes and
-    intersections both post-filter), which is the semantics the oracle in
-    __spark_entry__ mirrors.
-    """
-    toks = tokens_df(docs, id_col, text_col)
-    if max_df is not None:
-        hot = toks.groupBy("token").count().where(F.col("count") > max_df).select("token")
-        toks = toks.join(F.broadcast(hot), "token", "left_anti")
-    # r6: persist — sizes + both inverted-index join sides otherwise re-run
-    # the tokenize + distinct shuffle three times (no cross-join exchange
-    # reuse; see plans/r06/jaccard_pairs_before.txt)
-    toks = toks.persist()
-    sizes = toks.groupBy(id_col).agg(F.count("*").alias("__sz"))
-    a = toks.select(F.col(id_col).alias("id_a"), "token")
-    b = toks.select(F.col(id_col).alias("id_b"), "token")
-    inter = (
-        a.join(b, "token")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return out.select("id_a", "id_b", "jaccard")
+    """Pairs (id_a < id_b, jaccard) with word-set Jaccard >= threshold;
+    max_df caps stop-tokens (see _set_jaccard)."""
+    return _set_jaccard(tokens_df(docs, id_col, text_col), "token", threshold, id_col, max_df)
 
 
 def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:
@@ -248,16 +241,9 @@ def minhash_lsh_pairs(
     banded = sig.select(
         F.col(id_col),
         F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_hash"),
-    ).persist()
-    # r6: persist — the self-join's two sides each re-ran the whole signature
-    # pipeline (tokenize, distinct, 64-min agg, band md5) from the scan; the
-    # r6 before-plan shows the full subtree duplicated (one side as the
-    # broadcast build). One computation now feeds both sides.
-    a = banded.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
+    )
     return (
-        a.join(b, ["band_idx", "band_hash"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(banded, id_col, ["band_idx", "band_hash"])
         .select("id_a", "id_b")
         .distinct()
     )
@@ -349,23 +335,17 @@ def simhash_dedup_pairs(
     recall: blocked on max_hamming+1 chunks (pigeonhole), refined by
     bit_count(xor) JVM-side. Output: (id_a, id_b, hamming:int)."""
     layout = _simhash_chunks(max_hamming)
-    sh = simhash_signatures(docs, id_col, text_col)
     chunk_exprs = [
         F.shiftright(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
         for off, w in layout
     ]
-    chunks = sh.select(
+    chunks = simhash_signatures(docs, id_col, text_col).select(
         id_col,
-        "simhash",
+        F.col("simhash").alias("sh"),
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk"),
-    ).persist()
-    # r6: persist — both self-join sides otherwise recompute the 60-bit-vote
-    # signature aggregation from the scan (same duplication as minhash)
-    a = chunks.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "chunk_idx", "chunk")
-    b = chunks.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"), "chunk_idx", "chunk")
+    )
     pairs = (
-        a.join(b, ["chunk_idx", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(chunks, id_col, ["chunk_idx", "chunk"], carry=("sh",))
         .select("id_a", "id_b", "sh_a", "sh_b")
         .distinct()
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"))

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from geotreehealth_spark.text.dedup import _self_pairs
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -105,12 +107,19 @@ def cosine_topk(
     )
     joined = e.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
     sim = _dot(F.col("__pv"), F.col("__v")) / (F.col("__pn") * F.col("__n"))
-    slim = joined.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+    return _top_k(
+        joined.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")), k
+    )
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(probe_id, neighbor_id, sim, rank): the k best-scored neighbors per
+    probe, ranked by (sim DESC, neighbor_id ASC)."""
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
-        slim.withColumn("rank", F.row_number().over(w))
+        scored.select("probe_id", "neighbor_id", "sim")
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "sim", "rank")
     )
 
 
@@ -165,16 +174,13 @@ def rp_lsh_pairs(
     then exact cosine >= min_sim. Vectors join back only for the deduped
     candidate set, so the bucket join shuffles ids, not arrays.
 
-    r6: the bucket table is computed ONCE and persisted — the self-join's two
-    sides previously each re-ran the 48-dot bucket pipeline from the scan (no
-    exchange reuse across the join: the r6 before-plan shows the full subtree
-    twice); the b side is now a rename of the cached a side."""
+    The bucket table is computed ONCE (dedup._self_pairs persists it): the
+    48-dot bucket pipeline never re-runs per join side."""
     planes = rp_planes(dim, n_tables, n_planes)
-    a = _bucketed(embeddings, planes, id_col, vec_col, "id_a").persist()
-    b = a.withColumnRenamed("id_a", "id_b")
     cand = (
-        a.join(b, ["table_idx", "bucket"])
-        .where(F.col("id_a") < F.col("id_b"))
+        _self_pairs(
+            _bucketed(embeddings, planes, id_col, vec_col, id_col), id_col, ["table_idx", "bucket"]
+        )
         .select("id_a", "id_b")
         .distinct()
     )
@@ -224,12 +230,7 @@ def ann_lsh_topk(
         .join(F.broadcast(p), "probe_id")
         .withColumn("sim", cosine_expr(F.col("__pv"), F.col("__v")))
     )
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.select("probe_id", "neighbor_id", "sim")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 def ivf_centroids(dim: int, n_lists: int) -> np.ndarray:
@@ -349,15 +350,7 @@ def ann_ivf_topk(
     cand = e.join(p, "list_id").where(
         F.col("neighbor_id") != F.col("probe_id")
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("sim", cosine_expr(F.col("__pv"), F.col("__v")))
-        .select("probe_id", "neighbor_id", "sim")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(cand.withColumn("sim", cosine_expr(F.col("__pv"), F.col("__v"))), k)
 
 
 # ---------------------------------------------------------------------------

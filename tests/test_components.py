@@ -38,7 +38,10 @@ def test_long_chain_converges(spark):
     assert len(got) == 13
 
 
-def test_nonconvergence_raises(spark):
+def test_nonconvergence_raises(spark, monkeypatch):
+    from geotreehealth_spark.operators import components
+
+    monkeypatch.setattr(components, "_MAX_ITERS", 1)
     edges = spark.createDataFrame([(i, i + 1) for i in range(12)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iters=1)
+        connected_components(edges)

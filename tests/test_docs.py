@@ -109,3 +109,30 @@ def test_lidar_docs_roundtrip(spark):
     assert ((pts.z * 1000) - (pts.z * 1000).round()).abs().max() < 1e-9
     pts2 = media.load_lidar_points(manifest).toPandas().sort_values("point_id")
     assert (pts.reset_index(drop=True) == pts2.reset_index(drop=True)).all().all()
+
+
+def test_null_fields_roundtrip(spark):
+    """A NULL attr field decodes back as NULL and leaves the later fields in
+    place (concat_ws alone skips NULLs, so every later field shifted)."""
+    stems = spark.createDataFrame(
+        [
+            ("t1", 1.5, 2.5, None, 2015, "A", 3, "x", "S1"),
+            ("t2", 3.5, 4.5, 12.5, 2016, None, None, None, "S2"),
+            ("t3", 5.5, 6.5, 7.0, None, "D", 1, None, "S1"),
+        ],
+        "stem_tag string, x double, y double, dbh double, year int, status string, "
+        "crown_position int, fad string, site_id string",
+    )
+    got = decode.decode_stems(generator.stems_to_docs(stems)).select(stems.columns)
+    assert sorted(got.collect()) == sorted(stems.collect())
+
+    tiles = spark.createDataFrame(
+        [("7", 7, 0.0, None, 100.0, 100.0), ("8", 8, 100.0, 0.0, 200.0, 100.0)],
+        "tile_id string, tile_key int, txmin double, tymin double, txmax double, tymax double",
+    )
+    cols = ["tile_id", "txmin", "tymin", "txmax", "tymax"]
+    for decoded in (
+        decode.decode_tiles(generator.tiles_to_docs(tiles)),
+        decode.decode_lidar(generator.lidar_to_docs(tiles)),
+    ):
+        assert sorted(decoded.select(cols).collect()) == sorted(tiles.select(cols).collect())

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from geotreehealth_spark.geo import (
-    convex_clip_area,
+    clip_area,
     decode_points,
     decode_polygon,
     encode_point,
@@ -72,12 +72,12 @@ class TestKernels:
 
     def test_clip_area(self):
         a, b = square(0, 0, 10), square(5, 5, 10)
-        assert convex_clip_area(a, b) == pytest.approx(25.0)
-        assert convex_clip_area(a, square(20, 20, 5)) == 0.0
-        assert convex_clip_area(a, a) == pytest.approx(100.0)
+        assert clip_area(a, b) == pytest.approx(25.0)
+        assert clip_area(a, square(20, 20, 5)) == 0.0
+        assert clip_area(a, a) == pytest.approx(100.0)
         # winding-insensitive
-        assert convex_clip_area(a[::-1], b) == pytest.approx(25.0)
-        assert convex_clip_area(a, b[::-1]) == pytest.approx(25.0)
+        assert clip_area(a[::-1], b) == pytest.approx(25.0)
+        assert clip_area(a, b[::-1]) == pytest.approx(25.0)
 
     def test_iou_and_overlap_ratio(self):
         a, b = square(0, 0, 10), square(5, 5, 10)

@@ -5,7 +5,7 @@ product and a hash-threshold prefilter + escalate-on-shortfall plan
 (matching.py random_k_sample). Both are defined to return the SAME rows —
 the k smallest draw hashes per probe, ties by right_id — so this forces each
 path on the same input and asserts byte-identical sorted output, including
-an oversample=1 run where ~half the probes fall short of k survivors in
+an _OVERSAMPLE=1 run where ~half the probes fall short of k survivors in
 round 1 and the escalation loop actually executes.
 """
 
@@ -30,24 +30,29 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_threshold_path_equals_direct(spark):
+def _sample(monkeypatch, left, right, direct_max_pairs,
+            oversample=matching._OVERSAMPLE, **kw):
+    """random_k_sample with its plan-switch constants patched."""
+    monkeypatch.setattr(matching, "_DIRECT_MAX_PAIRS", direct_max_pairs)
+    monkeypatch.setattr(matching, "_OVERSAMPLE", oversample)
+    return _rows(matching.random_k_sample(left, right, **kw))
+
+
+def test_threshold_path_equals_direct(spark, monkeypatch):
     left, right = _inputs(spark)
     kw = dict(k=7, left_id="pid", right_id="cid", left_key="lkey",
               right_key="rkey")
-    direct = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=10**9, **kw))
+    direct = _sample(monkeypatch, left, right, 10**9, **kw)
     assert len(direct) == 60 * 7
-    thresh = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, **kw))
+    thresh = _sample(monkeypatch, left, right, 0, **kw)
     assert thresh == direct
-    # oversample=1: expected survivors per probe == k, so shortfall probes
+    # _OVERSAMPLE=1: expected survivors per probe == k, so shortfall probes
     # exist with near-certainty and the escalation re-scan runs
-    tight = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, oversample=1, **kw))
+    tight = _sample(monkeypatch, left, right, 0, oversample=1, **kw)
     assert tight == direct
 
 
-def test_threshold_path_self_exclusion_and_small_pool(spark):
+def test_threshold_path_self_exclusion_and_small_pool(spark, monkeypatch):
     # candidate pool smaller than k: every probe returns all (non-self)
     # candidates, both paths
     left = spark.range(30).select(
@@ -61,10 +66,8 @@ def test_threshold_path_self_exclusion_and_small_pool(spark):
     )
     kw = dict(k=9, left_id="pid", right_id="cid", left_key="lkey",
               right_key="rkey", self_key="self_rk")
-    direct = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=10**9, **kw))
-    thresh = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, **kw))
+    direct = _sample(monkeypatch, left, right, 10**9, **kw)
+    thresh = _sample(monkeypatch, left, right, 0, **kw)
     assert thresh == direct
     # probes 0-3 exclude their self candidate (3 rows), probes 4+ get all 4
     per_probe = {}
@@ -105,12 +108,13 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
     before = set(jsc.getPersistentRDDs().keys())
     import pytest
 
+    # _OVERSAMPLE=1 guarantees shortfall probes -> a second round
+    monkeypatch.setattr(matching, "_DIRECT_MAX_PAIRS", 0)
+    monkeypatch.setattr(matching, "_OVERSAMPLE", 1)
     with pytest.raises(RuntimeError, match="injected"):
-        # oversample=1 guarantees shortfall probes -> a second round
         matching.random_k_sample(
             left, right, k=5, left_id="pid", right_id="cid",
             left_key="lkey", right_key="rkey",
-            direct_max_pairs=0, oversample=1,
         )
     assert calls["n"] >= 2, "escalation never reached a second round"
     after = set(jsc.getPersistentRDDs().keys())
@@ -118,7 +122,7 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
     assert not leaked, f"leaked persistent RDDs after failure: {leaked}"
 
 
-def test_threshold_path_bucketed_wraparound_and_nulls(spark):
+def test_threshold_path_bucketed_wraparound_and_nulls(spark, monkeypatch):
     # r6 bucketed admissible-window join: large scattered keys make the
     # per-probe window a = (48271*lk) mod p land anywhere in [0, p), so both
     # the [0, T-a) and the wraparound [p-a, p-a+T) interval arms are
@@ -137,12 +141,9 @@ def test_threshold_path_bucketed_wraparound_and_nulls(spark):
     )
     kw = dict(k=5, left_id="pid", right_id="cid", left_key="lkey",
               right_key="rkey")
-    direct = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=10**9, **kw))
+    direct = _sample(monkeypatch, left, right, 10**9, **kw)
     assert len(direct) == 49 * 5  # the NULL-key probe draws nothing
-    thresh = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, **kw))
+    thresh = _sample(monkeypatch, left, right, 0, **kw)
     assert thresh == direct
-    tight = _rows(matching.random_k_sample(
-        left, right, direct_max_pairs=0, oversample=1, **kw))
+    tight = _sample(monkeypatch, left, right, 0, oversample=1, **kw)
     assert tight == direct

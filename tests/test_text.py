@@ -147,3 +147,55 @@ def test_ann_lsh_topk_subset_of_exact(spark):
     for pid, grp in got.groupby("probe_id"):
         s = grp.sort_values("rank").sim.to_numpy()
         assert (np.diff(s) <= 1e-12).all()
+
+
+_SET_CORPUS = [
+    "the quick brown fox jumps over the lazy dog",
+    "the quick brown fox jumped over the lazy dog",
+    "a quick brown fox jumps over a lazy cat",
+    "lorem ipsum dolor sit amet",
+    "lorem ipsum dolor sit amet consectetur",
+    "Lorem  IPSUM dolor\tsit",
+    "the the the",
+    "fox",
+    "",
+    "   ",
+    "completely unrelated words here",
+    "the lazy dog sleeps over the quick fox",
+]
+
+
+def _brute_set_jaccard(sets: dict, threshold: float, max_df):
+    """All-pairs Jaccard of the id -> element-set map, post max_df cap."""
+    if max_df is not None:
+        df = {}
+        for s in sets.values():
+            for e in s:
+                df[e] = df.get(e, 0) + 1
+        sets = {i: {e for e in s if df[e] <= max_df} for i, s in sets.items()}
+    out = {}
+    ids = sorted(sets)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            inter = len(sets[a] & sets[b])
+            if inter and inter / (len(sets[a]) + len(sets[b]) - inter) >= threshold:
+                out[(a, b)] = inter / (len(sets[a]) + len(sets[b]) - inter)
+    return out
+
+
+@pytest.mark.parametrize("max_df", [None, 3])
+def test_set_jaccard_matches_brute_force(spark, max_df):
+    """jaccard_pairs (word sets) and ngram_jaccard_pairs (character 4-gram
+    sets) equal an all-pairs Python Jaccard exactly, with and without the
+    stop-element cap."""
+    rows = [(f"d{i:02d}", t) for i, t in enumerate(_SET_CORPUS)]
+    docs = spark.createDataFrame(rows, "doc_id string, text string")
+    words = {i: set(t.lower().split()) for i, t in rows}
+    grams = {i: {t.lower()[j:j + 4] for j in range(len(t) - 3)} for i, t in rows}
+    for got, sets, threshold in (
+        (tdedup.jaccard_pairs(docs, threshold=0.3, max_df=max_df), words, 0.3),
+        (tdedup.ngram_jaccard_pairs(docs, n=4, threshold=0.25, max_df=max_df), grams, 0.25),
+    ):
+        expect = _brute_set_jaccard(sets, threshold, max_df)
+        assert expect, "corpus must produce pairs"
+        assert {(r.id_a, r.id_b): r.jaccard for r in got.collect()} == expect

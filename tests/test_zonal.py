@@ -6,7 +6,7 @@ import pytest
 
 from geotreehealth_spark import media, synth
 from geotreehealth_spark.docs import generator
-from geotreehealth_spark.geo import wkb
+from geotreehealth_spark.geo import kernels, wkb
 from geotreehealth_spark.operators import tiling, zonal
 from tests.conftest import SF_DIR
 
@@ -155,6 +155,58 @@ def test_zonal_box_batch_parity(spark):
     )
     assert list(via_box.index) == list(via_wkb.index)
     assert len(via_box) > 250  # the sub-pixel boxes drop out
+    assert (via_box.n_px == via_wkb.n_px).all()
+    for cid in via_box.index:
+        a, b = via_box.loc[cid], via_wkb.loc[cid]
+        assert np.asarray(a.band_mean).tobytes() == np.asarray(b.band_mean).tobytes()
+        assert np.asarray(a.band_std).tobytes() == np.asarray(b.band_std).tobytes()
+
+
+@pytest.mark.parametrize("overlap", [10.0, 9.5])
+def test_zonal_box_core_bounds_parity(spark, overlap):
+    """Box footprints with core_bounds on an overlapping manifest take the
+    searchsorted block path, with the core rect as extra block limits; the
+    result must be BIT-identical to the same boxes routed through the WKB +
+    per-pixel core ownership path. Boxes cluster around tile seams so they
+    reach into the buffers; a 9.5 m overlap puts pixel centers exactly on
+    the core lines, so the half-open ownership edges are exercised."""
+    import pandas as pd
+
+    rng = np.random.default_rng(11)
+    n = 300
+    seam = rng.integers(1, 9, size=(n, 2)) * 100.0
+    off = rng.choice([-12.0, -10.0, -5.5, -0.5, 0.0, 0.25, 3.0], size=(n, 2))
+    x0 = seam[:, 0] + off[:, 0] + rng.uniform(-2.0, 2.0, n) * (rng.random(n) < 0.5)
+    y0 = seam[:, 1] + off[:, 1]
+    x1 = x0 + rng.choice([0.3, 1.0, 5.5, 12.0, 25.0], size=n)
+    y1 = y0 + rng.choice([0.3, 1.0, 5.5, 12.0, 25.0], size=n)
+    pdf = pd.DataFrame(
+        {"crown_id": [f"b{i}" for i in range(n)],
+         "bxmin": x0, "bymin": y0, "bxmax": x1, "bymax": y1}
+    )
+    pdf["geometry_wkb"] = [
+        wkb.encode_polygon(kernels.box_ring(a, b, c, d))
+        for a, b, c, d in zip(x0, y0, x1, y1)
+    ]
+    boxes = spark.createDataFrame(pdf)
+    px = int(100 + 2 * overlap)  # 1 m pixels
+    tiles = tiling.tile_grid(spark, extent=1000.0, tile_size=100.0, overlap=overlap).selectExpr(
+        "tile_id", "txmin", "tymin", "txmax", "tymax", "cxmin", "cymin", "cxmax", "cymax",
+        "concat('hsi://tile/', tile_id) AS media_ref",
+        "5 AS bands", f"{px} AS height", f"{px} AS width",
+    )
+    kw = dict(crown_bounds=("bxmin", "bymin", "bxmax", "bymax"), n_bands=5,
+              core_bounds=("cxmin", "cymin", "cxmax", "cymax"))
+    via_box = (
+        zonal.zonal_raster_stats(boxes, tiles, wkb_col=None, **kw)
+        .toPandas().set_index("crown_id").sort_index()
+    )
+    via_wkb = (
+        zonal.zonal_raster_stats(boxes, tiles, wkb_col="geometry_wkb", **kw)
+        .toPandas().set_index("crown_id").sort_index()
+    )
+    assert list(via_box.index) == list(via_wkb.index)
+    assert len(via_box) > 200
     assert (via_box.n_px == via_wkb.n_px).all()
     for cid in via_box.index:
         a, b = via_box.loc[cid], via_wkb.loc[cid]
