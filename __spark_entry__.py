@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from geotreehealth_spark import synth
-from geotreehealth_spark.operators import aggregates, dedup, knn, overlap, pip_join, rebalance, tiling
+from geotreehealth_spark.operators import aggregates, knn, overlap, pip_join, rebalance, tiling
 
 V = synth.ORACLE_VIEWS
 PLOT_BOUNDS = ("pxmin", "pymin", "pxmax", "pymax")
@@ -23,8 +23,16 @@ DIST_SQL = "SQRT((s.x - c.cx) * (s.x - c.cx) + (s.y - c.cy) * (s.y - c.cy))"
 
 
 def _recoded_stems(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """P11: Status 'D'→'DS' (main.py:159); 'A'→'AU' when FAD is non-null
+    (tmp.py:13)."""
     s = synth.stems(spark, sf_dir)
-    return s.withColumn("status_r", dedup.recode_status(F.col("status"), F.col("fad")))
+    status, fad = F.col("status"), F.col("fad")
+    return s.withColumn(
+        "status_r",
+        F.when(status == "D", F.lit("DS"))
+        .when((status == "A") & fad.isNotNull(), F.lit("AU"))
+        .otherwise(status),
+    )
 
 RECODE_SQL = (
     "SELECT stems.*, CASE WHEN status = 'D' THEN 'DS' "
@@ -103,16 +111,22 @@ def q_boundary_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_keep_max_dbh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9: per dup-tag keep the max-DBH stem (batch_sam.py:741)."""
+    """P9: per dup-tag keep the max-DBH stem (batch_sam.py:741), ties by
+    stem_key desc."""
     stems = synth.stems(spark, sf_dir).select("dup_tag", "stem_tag", "dbh", "stem_key")
-    out = dedup.keep_best(stems, key="dup_tag", order_col="dbh", tie_col="stem_key")
+    out = aggregates.best_per_key(
+        stems, "dup_tag", [F.col("dbh").desc(), F.col("stem_key").desc()]
+    )
     return out.select("dup_tag", "stem_tag", "dbh")
 
 
 def q_keep_latest_year(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9/W5: per dup-tag keep the latest-Year stem (batch_sam.py:765)."""
+    """P9/W5: per dup-tag keep the latest-Year stem (batch_sam.py:765), ties
+    by stem_key desc."""
     stems = synth.stems(spark, sf_dir)
-    out = dedup.keep_best(stems, key="dup_tag", order_col="year", tie_col="stem_key")
+    out = aggregates.best_per_key(
+        stems, "dup_tag", [F.col("year").desc(), F.col("stem_key").desc()]
+    )
     return out.select("dup_tag", "stem_tag", "year")
 
 
@@ -134,7 +148,7 @@ def q_class_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P12: deterministic label encode of status values."""
     s = _recoded_stems(spark, sf_dir)
-    return dedup.factorize(s, "status_r", "label_id")
+    return aggregates.factorize(s, "status_r", "label_id")
 
 
 def q_median_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,17 +309,11 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2-style ranking: top-3 orders per priority by (price desc, key)."""
     synth.register_tpch_views(spark, sf_dir)
-    from pyspark.sql.window import Window
-
-    orders = spark.table("orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
+    out = aggregates.best_per_key(
+        spark.table("orders"), "o_orderpriority",
+        [F.col("o_totalprice").desc(), "o_orderkey"], k=3, rank_col="rk",
     )
-    return (
-        orders.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rk")
-    )
+    return out.select("o_orderpriority", "o_orderkey", "o_totalprice", "rk")
 
 
 def q_containing_else_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,9 +410,7 @@ def q_group_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: per stem_tag, first crown under (score desc, crown_id) order
     (delineation_utils.py:453)."""
     crowns = synth.crowns(spark, sf_dir).where(F.col("stem_tag").isNotNull())
-    out = aggregates.first_by_order(
-        crowns, key="stem_tag", order_cols=[F.col("score").desc(), F.col("crown_id").asc()]
-    )
+    out = aggregates.best_per_key(crowns, "stem_tag", [F.col("score").desc(), "crown_id"])
     return out.select("stem_tag", "crown_id", "score")
 
 
@@ -878,14 +884,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "stratified_split": q_stratified_split,
         "percentile_stretch": q_percentile_stretch,
         "group_first": q_group_first,
-        "distinct_count": q_distinct_count,
-        "drop_smallest": q_drop_smallest,
         "polygonize": q_polygonize,
         "geometric_union": q_geometric_union,
-        "band_ops": q_band_ops,
         "window_translate": q_window_translate,
         "explode_multi": q_explode_multi,
-        "tpch_q1": q_tpch_q1,
         "topk_orders": q_topk_orders,
         "dedup_exact": q_dedup_exact,
         "fingerprint": q_fingerprint,
@@ -910,6 +912,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_features": q_audio_features,
         "frame_features": q_frame_features,
         "dup_components": q_dup_components,
+        "tpch_q1": q_tpch_q1,
+        "distinct_count": q_distinct_count,
+        "drop_smallest": q_drop_smallest,
+        "band_ops": q_band_ops,
     }
 
 

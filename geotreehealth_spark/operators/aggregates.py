@@ -1,6 +1,10 @@
 """Group-wise selection and zonal aggregation operators (SURVEY.md A1-A10).
 
 Reference semantics:
+- best-per-key: one primitive for every per-key pick — keep-max-DBH /
+  keep-latest-Year (P9, batch_sam.py:741,765), group-first after a multi-key
+  sort (A1, delineation_utils.py:453), the median pick, argmins and top-k. The reference leans on pandas sort stability for
+  ties (SURVEY.md §7 hazard 2); every caller pins an explicit total order.
 - median-pick (A2): per StemTag, keep the crown whose area CA is closest to
   the group median (batch_sam.py:158-178). Median = interpolated middle
   ((lo+hi)/2 for even groups), like np.median; tie-break (|CA-med|, crown_id).
@@ -9,22 +13,42 @@ Reference semantics:
   generalization. Percentiles here are RANK-BASED (value at ceil(q*n), ties by
   (z, point_id)) so results are exact doubles — reproducible across engines
   with no interpolation drift.
-- group-first after multi-key sort (A1): delineation_utils.py:453.
+- factorize (P12): pd.factorize(labels) → dense ints (main.py:179-180), made
+  deterministic via dense_rank over the sorted distinct values.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from geotreehealth_spark.operators.caching import cached
 
 
-def first_by_order(df: DataFrame, key: str, order_cols: list) -> DataFrame:
-    """A1: per key, first row under the given explicit total order."""
-    w = Window.partitionBy(key).orderBy(*order_cols)
-    return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
+def best_per_key(
+    df: DataFrame,
+    keys: str | list[str],
+    order: list[str | Column],
+    k: int = 1,
+    rank_col: str | None = None,
+) -> DataFrame:
+    """Per key, the first ``k`` rows under ``order`` — every keep-best,
+    group-first, argmin and top-k pick in the engine.
+
+    ``order`` is the caller's total order: column names (ascending) or sort
+    Columns, with the tie-break and NULL placement spelled out. One
+    ``row_number`` window filtered to ``<= k``; Spark plans a partial
+    WindowGroupLimit before the exchange, so each key collapses to k rows
+    map-side. The rank column is kept only when ``rank_col`` names it.
+    """
+    keys = [keys] if isinstance(keys, str) else keys
+    w = Window.partitionBy(*keys).orderBy(
+        *[F.col(c).asc() if isinstance(c, str) else c for c in order]
+    )
+    rn = rank_col or "__rn"
+    out = df.withColumn(rn, F.row_number().over(w)).where(F.col(rn) <= k)
+    return out if rank_col else out.drop(rn)
 
 
 def median_pick(
@@ -48,15 +72,8 @@ def median_pick(
         | (F.col("__rn") == F.ceil((F.col("__n") + 1) / 2))
     )
     med = mid.groupBy(key).agg(((F.min(value) + F.max(value)) / F.lit(2.0)).alias("__med"))
-    w_pick = Window.partitionBy(key).orderBy(
-        F.abs(F.col(value) - F.col("__med")).asc(), F.col(id_col).asc()
-    )
-    return (
-        df.join(med, key)
-        .withColumn("__rn", F.row_number().over(w_pick))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__med")
-    )
+    pick = [F.abs(F.col(value) - F.col("__med")).asc(), id_col]
+    return best_per_key(df.join(med, key), key, pick).drop("__med")
 
 
 def rank_percentile(
@@ -152,3 +169,14 @@ def drop_smallest_fraction(
 def distinct_count(df: DataFrame, key: str, value: str, out_col: str = "n_distinct") -> DataFrame:
     """A9: COUNT(DISTINCT value) per key."""
     return df.groupBy(key).agg(F.countDistinct(value).alias(out_col))
+
+
+def factorize(df: DataFrame, col: str, out_col: str = "label_id") -> DataFrame:
+    """P12: deterministic label encode — distinct values sorted → dense
+    0..n-1 ids."""
+    w = Window.orderBy(F.col(col).asc())
+    return (
+        df.select(col)
+        .distinct()
+        .withColumn(out_col, F.dense_rank().over(w) - 1)
+    )

@@ -44,9 +44,9 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from geotreehealth_spark.geo import cellexprs
+from geotreehealth_spark.operators.aggregates import best_per_key
 from geotreehealth_spark.operators.caching import cached
 from geotreehealth_spark.operators.pip_join import distance_expr
 
@@ -262,8 +262,7 @@ def _ring_knn(
                 m = cands.groupBy(*keys).agg(F.min("dist").alias("__md"))
                 top = cands.join(m, keys).where(F.col("dist") == F.col("__md"))
             else:
-                w = Window.partitionBy(*keys).orderBy("dist", right_id)
-                top = cands.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") <= k)
+                top = best_per_key(cands, keys, ["dist", right_id], k)
             # One row per probe: a winner-less copy of every probe rides the
             # same aggregation exchange, so probes without candidates get
             # their row without a join back onto the probes. The sorted

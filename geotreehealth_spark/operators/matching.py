@@ -16,8 +16,9 @@ Reference semantics:
   points). The engine replaces RNG state with a deterministic integer hash
   order so the sample is reproducible across engines and retries.
 
-All selection logic is min-struct aggregation or rank windows over slim
-columns — map-side combinable, no driver loops, no Python in the hot path.
+Every pick is ``best_per_key`` over slim columns, whose WindowGroupLimit
+collapses each key before the shuffle — no driver loops, no Python in the
+hot path.
 """
 
 from __future__ import annotations
@@ -26,8 +27,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from geotreehealth_spark.operators.aggregates import best_per_key
 from geotreehealth_spark.operators.caching import cached
 from geotreehealth_spark.operators.knn import knn_join
 from geotreehealth_spark.operators.pip_join import distance_expr, pip_join
@@ -48,7 +49,8 @@ def containing_else_nearest(
     """W1: (point_id, poly_id, method) — method 'contained'|'nearest'.
 
     Physical plan: the containing arm is the PIP filter-refine join followed
-    by a map-side max(struct(area, ...)) — shuffle O(points), not O(pairs);
+    by ``best_per_key`` on (area desc, NULLs first; poly_id asc) — shuffle
+    O(points), not O(pairs);
     the fallback arm is the exact cell-pruned kNN (k=1) on the RESIDUE only
     (points with no containing polygon), which is tiny for real crown data.
     """
@@ -63,16 +65,12 @@ def containing_else_nearest(
     contained = pip_join(
         points.select(point_id, px, py), polygons, cell_size, px, py, poly_wkb, poly_bounds
     )
-    # greedy pick: area desc, poly_id asc — encoded as max(struct(area, neg-id))
-    # needs an orderable inverse for the id; use min(struct(-area, id)) instead
-    best = contained.groupBy(point_id).agg(
-        F.min(F.struct((-F.col(area_col)).alias("na"), F.col(poly_id).alias("pid"))).alias("__b")
-    ).select(
+    best = best_per_key(
+        contained.select(point_id, poly_id, area_col),
         point_id,
-        F.col("__b.pid").alias(poly_id),
-        (-F.col("__b.na")).alias(area_col),
-    ).persist()
-    matched = best.select(point_id, poly_id).withColumn("method", F.lit("contained"))
+        [F.col(area_col).desc_nulls_first(), poly_id],
+    ).select(point_id, poly_id).persist()
+    matched = best.withColumn("method", F.lit("contained"))
 
     # no broadcast hint: matched ids are probe-proportional (≈ every matched
     # point) — a forced broadcast is a driver OOM at 100-TB probe cardinality;
@@ -104,8 +102,8 @@ def feature_nn_match(
     (align_data, delineation_utils.py:381-396).
 
     Output: (left_id, right_id, fdist). The equi-join on tag keeps the pair
-    stream linear in the tag-group sizes; argmin is a min(struct) aggregation
-    (map-side combinable). The distance is an explicit left-associated
+    stream linear in the tag-group sizes; the argmin is ``best_per_key`` on
+    (fdist asc, right_id asc). The distance is an explicit left-associated
     expression so the SQL oracle is bit-identical.
     """
     terms: list[Column] = []
@@ -120,15 +118,8 @@ def feature_nn_match(
         d = F.col(lc) - F.col(rcols[rc])
         terms.append(d * d)
     fdist = F.sqrt(reduce(lambda a, b: a + b, terms))
-    best = (
-        j.withColumn("fdist", fdist)
-        .groupBy(left_id)
-        .agg(F.min(F.struct(F.col("fdist"), F.col(right_id))).alias("__b"))
-        .select(
-            left_id,
-            F.col(f"__b.{right_id}").alias(right_id),
-            F.col("__b.fdist").alias("fdist"),
-        )
+    best = best_per_key(
+        j.select(left_id, right_id, fdist.alias("fdist")), left_id, ["fdist", right_id]
     )
     return best.where(F.col("fdist") < threshold)
 
@@ -220,7 +211,6 @@ def random_k_sample(
     lk = F.col(left_key)
     rk = F.col(right_key)
     h = F.pmod(lk * F.lit(48271) + rk * F.lit(40503), F.lit(RANDOM_K_HASH_P))
-    w = Window.partitionBy(left_id).orderBy(h.asc(), F.col(right_id).asc())
 
     def enumerate_pairs(probes: DataFrame) -> DataFrame:
         pairs = probes.crossJoin(right)
@@ -243,12 +233,9 @@ def random_k_sample(
     n_left = left_mat.count()
     n_right = right_mat.count()
     if n_left * n_right <= _DIRECT_MAX_PAIRS:
-        return (
-            enumerate_pairs(left_mat)
-            .withColumn("draw_rank", F.row_number().over(w))
-            .where(F.col("draw_rank") <= k)
-            .select(left_id, right_id, "draw_rank")
-        )
+        return best_per_key(
+            enumerate_pairs(left_mat), left_id, [h.asc(), right_id], k, "draw_rank"
+        ).select(left_id, right_id, "draw_rank")
 
     import math
 
@@ -342,12 +329,7 @@ def random_k_sample(
             )
             done = cand if final else cand.join(satisfied, left_id, "left_semi")
             parts.append(
-                done.withColumn("draw_rank", F.row_number().over(
-                    Window.partitionBy(left_id).orderBy(
-                        F.col("__h").asc(), F.col(right_id).asc()
-                    )
-                ))
-                .where(F.col("draw_rank") <= k)
+                best_per_key(done, left_id, ["__h", right_id], k, "draw_rank")
                 .select(left_id, right_id, "draw_rank")
             )
             if final:

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geotreehealth_spark.geo import cellexprs
+from geotreehealth_spark.operators.aggregates import best_per_key
 from geotreehealth_spark.operators.udfs import pip_udf
 
 
@@ -88,13 +89,8 @@ def pip_assign_best(
     deterministic tie-break (dist, point_id). Output: (poly_id, point_id,
     dist_col) — one row per polygon that contains at least one point.
 
-    Physical plan: min(struct(dist, point_id)) AGGREGATION, not a row_number
-    window — Spark's partial (map-side) aggregation collapses each polygon's
-    candidate set before the shuffle, so shuffle volume is O(polygons), not
-    O(candidate pairs). On a window plan the full candidate stream would
-    shuffle; at dense-forest pair counts that is the job's bottleneck.
-    struct comparison is lexicographic on (dist asc, point_id asc) — exactly
-    the documented tie-break.
+    The pick is ``best_per_key`` on (dist asc, point_id asc), whose
+    WindowGroupLimit collapses each polygon's candidates before the shuffle.
     """
     # slim the cell-join payload to ids + coords (VERDICT.md round 2 next 2):
     # the output needs only (poly_id, point_id, dist), so every attribute
@@ -112,13 +108,8 @@ def pip_assign_best(
         dist_col,
         distance_expr(F.col(point_x), F.col(point_y), F.col(center[0]), F.col(center[1])),
     )
-    best = cands.groupBy(poly_id).agg(
-        F.min(F.struct(F.col(dist_col), F.col(point_id))).alias("__best")
-    )
-    return best.select(
-        poly_id,
-        F.col(f"__best.{point_id}").alias(point_id),
-        F.col(f"__best.{dist_col}").alias(dist_col),
+    return best_per_key(
+        cands.select(poly_id, point_id, dist_col), poly_id, [dist_col, point_id]
     )
 
 

@@ -23,8 +23,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from geotreehealth_spark.operators.aggregates import best_per_key
 from geotreehealth_spark.text.dedup import _self_pairs
 
 
@@ -107,20 +107,8 @@ def cosine_topk(
     )
     joined = e.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
     sim = _dot(F.col("__pv"), F.col("__v")) / (F.col("__pn") * F.col("__n"))
-    return _top_k(
-        joined.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim")), k
-    )
-
-
-def _top_k(scored: DataFrame, k: int) -> DataFrame:
-    """(probe_id, neighbor_id, sim, rank): the k best-scored neighbors per
-    probe, ranked by (sim DESC, neighbor_id ASC)."""
-    w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.select("probe_id", "neighbor_id", "sim")
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    scored = joined.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -228,9 +216,11 @@ def ann_lsh_topk(
     scored = (
         cand.join(e, "neighbor_id")
         .join(F.broadcast(p), "probe_id")
-        .withColumn("sim", cosine_expr(F.col("__pv"), F.col("__v")))
+        .select(
+            "probe_id", "neighbor_id", cosine_expr(F.col("__pv"), F.col("__v")).alias("sim")
+        )
     )
-    return _top_k(scored, k)
+    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
 
 
 def ivf_centroids(dim: int, n_lists: int) -> np.ndarray:
@@ -350,7 +340,10 @@ def ann_ivf_topk(
     cand = e.join(p, "list_id").where(
         F.col("neighbor_id") != F.col("probe_id")
     )
-    return _top_k(cand.withColumn("sim", cosine_expr(F.col("__pv"), F.col("__v"))), k)
+    scored = cand.select(
+        "probe_id", "neighbor_id", cosine_expr(F.col("__pv"), F.col("__v")).alias("sim")
+    )
+    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
 
 
 # ---------------------------------------------------------------------------

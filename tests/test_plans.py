@@ -66,3 +66,23 @@ def test_no_cartesian_products(audits):
 def test_codegen_present(audits):
     offenders = [n for n in PURE_JVM if audits[n]["codegen_spans"] == 0]
     assert offenders == [], f"no WholeStageCodegen span in: {offenders}"
+
+
+# every per-key pick goes through aggregates.best_per_key: a row_number
+# window whose map-side WindowGroupLimit collapses each key before the
+# shuffle, never a min/max(struct) aggregate
+PICKS = [
+    "dedup_keep_max_dbh", "keep_latest_year", "group_first", "median_pick",
+    "topk_orders", "pip_assign_best", "containing_else_nearest", "feature_nn",
+    "ann_cosine_topk", "ann_ivf_topk",
+]
+
+
+def test_picks_plan_a_window_group_limit(spark):
+    qs = entry.queries()
+    offenders = {}
+    for name in PICKS:
+        a = audit(qs[name](spark, SF_DIR))
+        if a["window_group_limit"] == 0 or a["struct_min_max"] > 0:
+            offenders[name] = (a["window_group_limit"], a["struct_min_max"])
+    assert offenders == {}, f"(WindowGroupLimit, min/max(struct) aggs) per query: {offenders}"

@@ -12,6 +12,9 @@ the markers that decide 100-TB behavior:
                     be a bug, so the audit reports it for review
 - WholeStageCodegen JVM codegen spans — expected on every non-trivial plan
 - PushedFilters / ReadSchema — scan-level pushdown evidence
+- WindowGroupLimit  the map-side per-key limit of a best_per_key pick
+- struct_min_max    SortAggregate nodes over min(struct / max(struct — the
+                    argmin spelling best_per_key replaced
 
 Run as a script to dump the audit table for all queries (judge evidence);
 tests/test_plans.py asserts the invariants per query class.
@@ -54,6 +57,12 @@ def audit(df, execute: bool = False) -> dict:
         "codegen_spans": spans,
         "exchanges": len(re.findall(r"\bExchange\b", p)),
         "pushed_filters": len(re.findall(r"PushedFilters: \[[^\]]*Is", p)),
+        "window_group_limit": len(re.findall(r"^\(\d+\) WindowGroupLimit\b", p, re.M)),
+        # one block per node in the formatted details: "(n) Name" + its args
+        "struct_min_max": sum(
+            bool(re.match(r"\(\d+\) SortAggregate\b", b) and re.search(r"(?:min|max)\(struct\(", b))
+            for b in re.split(r"\n(?=\(\d+\) )", p)
+        ),
         "plan": p,
     }
 
