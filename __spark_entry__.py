@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from geotreehealth_spark import synth
 from geotreehealth_spark.operators import aggregates, knn, overlap, pip_join, rebalance, tiling
+from geotreehealth_spark.operators.caching import owned
 
 V = synth.ORACLE_VIEWS
 PLOT_BOUNDS = ("pxmin", "pymin", "pxmax", "pymax")
@@ -162,6 +163,21 @@ def q_median_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("stem_tag", "crown_id", "ca")
 
 
+def _z_stats(cands: DataFrame) -> DataFrame:
+    """Per-crown LiDAR aggregate of PIP candidates: n_pts, z_mean, z_min,
+    z_max. z is milli-quantized by construction → exact integer sum, one
+    division (summation-order-independent, so bit-identical to the oracle)."""
+    n = F.count("*")
+    return cands.groupBy("crown_id").agg(
+        n.alias("n_pts"),
+        (
+            F.sum(F.round(F.col("z") * 1000).cast("long")).cast("double") / (F.lit(1000.0) * n)
+        ).alias("z_mean"),
+        F.min("z").alias("z_min"),
+        F.max("z").alias("z_max"),
+    )
+
+
 def q_zonal_lidar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: per-crown lidar point count / mean / min / max of z."""
     # r6: slim both PIP-join sides to the columns the zonal agg reads — the
@@ -170,18 +186,7 @@ def q_zonal_lidar(spark: SparkSession, sf_dir: str) -> DataFrame:
         "crown_id", "xmin", "ymin", "xmax", "ymax"
     )
     lidar = synth.lidar(spark, sf_dir).select("x", "y", "z")
-    cands = pip_join.pip_join(lidar, crowns, cell_size=25.0, poly_wkb=None)
-    # z is milli-quantized by construction → exact integer sum, one division
-    # (summation-order-independent, so bit-identical to the oracle)
-    return cands.groupBy("crown_id").agg(
-        F.count("*").alias("n_pts"),
-        (
-            F.sum(F.round(F.col("z") * 1000).cast("long")).cast("double")
-            / (F.lit(1000.0) * F.count("*"))
-        ).alias("z_mean"),
-        F.min("z").alias("z_min"),
-        F.max("z").alias("z_max"),
-    )
+    return _z_stats(pip_join.pip_join(lidar, crowns, cell_size=25.0, poly_wkb=None))
 
 
 def q_zonal_lidar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -197,16 +202,7 @@ def q_zonal_lidar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = generator.lidar_to_docs(synth.tiles(spark, sf_dir), n_points=1000)
     pts = media.load_lidar_points(decode.decode_lidar(docs))
-    cands = pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None)
-    return cands.groupBy("crown_id").agg(
-        F.count("*").alias("n_pts"),
-        (
-            F.sum(F.round(F.col("z") * 1000).cast("long")).cast("double")
-            / (F.lit(1000.0) * F.count("*"))
-        ).alias("z_mean"),
-        F.min("z").alias("z_min"),
-        F.max("z").alias("z_max"),
-    )
+    return _z_stats(pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None))
 
 
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,41 +219,34 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = stems.where(F.col("stem_tag").cast("long") % 10 == 0)
     # r6: crowns feed three stages (match, tile fan-out, zonal) — persist the
     # derivation once instead of re-running the lineitem groupBy per stage,
-    # projected to the columns those stages read (see q_knn)
-    crowns = synth.crowns(spark, sf_dir).select(
-        "crown_id", "cx", "cy", "xmin", "ymin", "xmax", "ymax", "ca"
-    ).persist()
-    # stage 2: containing-else-nearest (PIP, kNN fallback for the residue)
-    matched = matching.containing_else_nearest(
-        probes, crowns, point_id="stem_tag", poly_id="crown_id", area_col="ca",
-        cell_size=25.0, poly_wkb=None,
-    ).select("stem_tag", "crown_id", "method")
-    # stage 3: raster-tile fan-out per crown (J12 broadcast range join)
-    tiles = synth.tiles(spark)
-    tile_counts = (
-        tiling.assign_tiles(crowns, tiles)
-        .groupBy("crown_id")
-        .agg(F.count("*").alias("n_tiles"))
-    )
-    # stage 4: zonal LiDAR stats via the laz:// media_ref docs path (S6/A7)
-    docs = generator.lidar_to_docs(synth.tiles(spark, sf_dir), n_points=1000)
-    pts = media.load_lidar_points(decode.decode_lidar(docs))
-    zl = (
-        pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None)
-        .groupBy("crown_id")
-        .agg(
-            F.count("*").alias("n_pts"),
-            (
-                F.sum(F.round(F.col("z") * 1000).cast("long")).cast("double")
-                / (F.lit(1000.0) * F.count("*"))
-            ).alias("z_mean"),
+    # projected to the columns those stages read (see q_knn); the returned
+    # plan reads the cache, so it is kept
+    with owned() as o:
+        crowns = o.keep(o.persist(synth.crowns(spark, sf_dir).select(
+            "crown_id", "cx", "cy", "xmin", "ymin", "xmax", "ymax", "ca"
+        )))
+        # stage 2: containing-else-nearest (PIP, kNN fallback for the residue)
+        matched = matching.containing_else_nearest(
+            probes, crowns, point_id="stem_tag", poly_id="crown_id", area_col="ca",
+            cell_size=25.0, poly_wkb=None,
+        ).select("stem_tag", "crown_id", "method")
+        # stage 3: raster-tile fan-out per crown (J12 broadcast range join)
+        tiles = synth.tiles(spark)
+        tile_counts = (
+            tiling.assign_tiles(crowns, tiles)
+            .groupBy("crown_id")
+            .agg(F.count("*").alias("n_tiles"))
         )
-    )
-    return (
-        matched.join(tile_counts, "crown_id", "left")
-        .join(zl, "crown_id", "left")
-        .select("stem_tag", "crown_id", "method", "n_tiles", "n_pts", "z_mean")
-    )
+        # stage 4: zonal LiDAR stats via the laz:// media_ref docs path (S6/A7)
+        docs = generator.lidar_to_docs(synth.tiles(spark, sf_dir), n_points=1000)
+        pts = media.load_lidar_points(decode.decode_lidar(docs))
+        # (the final select keeps n_pts and z_mean; Catalyst prunes z_min/z_max)
+        zl = _z_stats(pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None))
+        return (
+            matched.join(tile_counts, "crown_id", "left")
+            .join(zl, "crown_id", "left")
+            .select("stem_tag", "crown_id", "method", "n_tiles", "n_pts", "z_mean")
+        )
 
 
 def q_zonal_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,7 +585,7 @@ def q_weighted_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = nms.weighted_nms(
         polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-        cell_size=10.0, criterion="iou",
+        cell_size=10.0,
     )
     return out.select("crown_id", "wscore", "selected")
 

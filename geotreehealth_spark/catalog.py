@@ -30,20 +30,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 class Catalog:
     """Path-rooted catalog. `table` names map to `<base>/<table>` directories
-    (Iceberg: `<catalog>.<db>.<table>` identifiers)."""
+    (Iceberg: `<catalog>.<db>.<table>` identifiers). An Iceberg deployment
+    configures a SparkCatalog and replaces the three method bodies below
+    with writeTo(...).overwritePartitions() / append() and
+    spark.read.table."""
 
-    def __init__(self, base: str, backend: str = "parquet"):
-        if backend not in ("parquet", "iceberg"):
-            raise ValueError(f"unknown catalog backend {backend!r}")
-        if backend == "iceberg":
-            raise NotImplementedError(
-                "Iceberg runtime not available in the sandbox; production "
-                "deployments configure a SparkCatalog and replace the three "
-                "write/read bodies below with writeTo(...).overwritePartitions/"
-                "append and spark.read.table"
-            )
+    def __init__(self, base: str):
         self.base = base
-        self.backend = backend
 
     def _path(self, table: str) -> str:
         return os.path.join(self.base, table)

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.caching import owned
 
 
 def best_per_key(
@@ -58,9 +58,11 @@ def median_pick(
 
     One shuffle on `key`; median computed with two windows (no second shuffle —
     same partitioning reused by Catalyst). r6: the input lineage feeds both
-    the median derivation and the final pick join — persist it once.
+    the median derivation and the final pick join — persist it once (kept:
+    the returned plan reads it).
     """
-    df, _ = cached(df)
+    with owned() as o:
+        df = o.keep(o.persist(df))
     w_order = Window.partitionBy(key).orderBy(F.col(value).asc(), F.col(id_col).asc())
     w_all = Window.partitionBy(key)
     ranked = df.withColumn("__rn", F.row_number().over(w_order)).withColumn(

@@ -1,39 +1,79 @@
-"""Cache and checkpoint ownership shared by the operators.
+"""Cache and checkpoint ownership: the one place the engine stores blocks.
 
-An operator that persists or checkpoints an input must release exactly what
-it created — never a caller's cache — and a failed call must not leak blocks
-into a long-lived session. These two helpers are the one definition of that
-ownership rule.
+Rule: every persist, localCheckpoint and release in the engine goes through
+an ``owned`` scope opened for one operator call. The scope releases what the
+call stored when it returns — except storage marked ``keep``, which the
+returned (lazy) plan reads — and releases everything, kept storage included,
+when the call raises, so a failed call leaks nothing into a long-lived
+session. A cache the caller made is never taken over. Nothing outside this
+module persists, checkpoints, unpersists or reads the persistent-RDD
+registry (tests/test_caching.py scans the sources for it).
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 
-def cached(df: DataFrame) -> tuple[DataFrame, bool]:
-    """persist df unless the CALLER already persisted it — unpersisting a
-    caller's cache on exit would silently drop their working set. Returns
-    (df, owned): owned=True means this call should unpersist it."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df, False
-    return df.persist(), True
+class Owner:
+    """The storage one operator call created: persisted DataFrames and
+    localCheckpoint RDDs, each with its release and a keep flag."""
+
+    def __init__(self) -> None:
+        self._held: list[list] = []  # [df, release, kept]
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        """persist df unless the CALLER already persisted it — releasing a
+        caller's cache would silently drop their working set."""
+        if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
+            self._held.append([df.persist(), df.unpersist, False])
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Eager localCheckpoint of df, owned by this call.
+
+        The DataFrame API cannot release localCheckpoint blocks (ADVICE r3);
+        the RDD they live in is the one the returned plan's LogicalRDD
+        holds. Diffing the persistent-RDD registry around the checkpoint
+        finds it too, but also catches a DataFrame cache that the same job
+        materialized first — releasing that would drop a cache its owner
+        still reads."""
+        out = df.localCheckpoint(eager=True)
+        rdd = out._jdf.queryExecution().logical().rdd()
+        self._held.append([out, lambda: rdd.unpersist(False), False])
+        return out
+
+    def release(self, df: DataFrame) -> None:
+        """Free df's storage now (e.g. the previous round's); a no-op for
+        storage this call does not own."""
+        for i, (held, release, _) in enumerate(self._held):
+            if held is df:
+                del self._held[i]
+                release()
+                return
+
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Mark df's storage as read by the returned plan: it outlives a
+        call that returns (session-level sweeps release it)."""
+        for entry in self._held:
+            if entry[0] is df:
+                entry[2] = True
+        return df
 
 
-def checkpoint_tracked(df: DataFrame, sc) -> tuple[DataFrame, list]:
-    """localCheckpoint(eager) + the java RDD handles its blocks live in.
-
-    The DataFrame API cannot release localCheckpoint blocks (ADVICE r3), but
-    the sparkContext-level persistent-RDD registry can: diffing the registry
-    around the checkpoint captures exactly the RDDs it created, so an
-    iterative caller can unpersist round r-1 once round r is materialized
-    instead of leaking O(rounds x |V|) blocks into a long-lived session.
-    Assumes a single-threaded driver (concurrent checkpoints would land in
-    the diff).
-    """
-    reg = sc._jsc.getPersistentRDDs()
-    before = set(reg.keys())
-    out = df.localCheckpoint(eager=True)
-    reg = sc._jsc.getPersistentRDDs()
-    created = [reg[i] for i in reg.keys() if i not in before]
-    return out, created
+@contextmanager
+def owned() -> Iterator[Owner]:
+    """One operator call's storage lifetime: on return release everything
+    not kept, on failure release everything."""
+    o = Owner()
+    failed = True
+    try:
+        yield o
+        failed = False
+    finally:
+        for df, release, kept in o._held:
+            if failed or not kept:
+                release()

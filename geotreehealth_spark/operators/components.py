@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotreehealth_spark.operators.caching import checkpoint_tracked
+from geotreehealth_spark.operators.caching import Owner, owned
 
 # round cap of the propagation (the longest shortest path it can close)
 _MAX_ITERS = 50
@@ -43,31 +43,16 @@ def connected_components(
     Raises RuntimeError if the propagation has not converged after
     ``_MAX_ITERS`` rounds (diameter > _MAX_ITERS — never for dedup graphs).
     """
+    with owned() as o:
+        return _run(o, edges, src, dst, nodes)
+
+
+def _run(o: Owner, edges, src, dst, nodes) -> DataFrame:
     # materialize the symmetric edge list ONCE — every propagation round
     # re-reads it, and the upstream pair generation (e.g. the full Jaccard
     # inverted-index join) must not re-execute per round (measured 44 s -> a
     # few s at sf0.1 for the dup_components query)
-    sc = edges.sparkSession.sparkContext
-    live: list = []  # every block created, released wholesale on failure
-
-    def tracked(df: DataFrame) -> tuple[DataFrame, list]:
-        out, blocks = checkpoint_tracked(df, sc)
-        live.extend(blocks)
-        return out, blocks
-
-    try:
-        return _run(edges, src, dst, nodes, tracked)
-    except BaseException:
-        # a failed call must not leak checkpoint blocks into a long-lived
-        # session (unpersist of an already-released RDD is a no-op, so the
-        # wholesale sweep is safe alongside _run's inline releases)
-        for r in live:
-            r.unpersist()
-        raise
-
-
-def _run(edges, src, dst, nodes, tracked) -> DataFrame:
-    sym, sym_blocks = tracked(
+    sym = o.checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
             edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
         )
@@ -76,7 +61,7 @@ def _run(edges, src, dst, nodes, tracked) -> DataFrame:
         node_df = sym.select(F.col("a").alias("node")).distinct()
     else:
         node_df = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
-    labels, prev_blocks = tracked(node_df.withColumn("comp", F.col("node")))
+    prev = labels = o.checkpoint(node_df.withColumn("comp", F.col("node")))
     for _ in range(_MAX_ITERS):
         # (a) best neighbor label
         nbr = (
@@ -113,23 +98,18 @@ def _run(edges, src, dst, nodes, tracked) -> DataFrame:
         # one checkpoint per round keeps lineage flat; the convergence probe
         # below reads the checkpointed blocks (an in-row flag, not a join).
         # Round r-1's blocks are released as soon as round r is materialized
-        # (eager=True truncates the dependency), so a long-lived session
-        # holds at most TWO rounds of (node, comp) blocks plus the edge
-        # list, not O(rounds) of them (ADVICE r4).
-        new, new_blocks = tracked(new)
+        # (eager=True truncates the dependency), so a call holds at most TWO
+        # rounds of (node, comp) blocks plus the edge list, not O(rounds) of
+        # them (ADVICE r4).
+        new = o.checkpoint(new)
         changed = new.agg(F.sum("__changed")).first()[0]
-        for r in prev_blocks:
-            r.unpersist()
-        prev_blocks = new_blocks
-        labels = new.drop("__changed")
+        o.release(prev)
+        prev, labels = new, new.drop("__changed")
         if not changed:
-            # the returned handle reads new_blocks — keep those; the edge
-            # list is no longer reachable from it and can go now
-            for r in sym_blocks:
-                r.unpersist()
+            # the returned handle reads this round only; the edge list is
+            # released on return
+            o.keep(new)
             return labels
-    for r in sym_blocks + prev_blocks:
-        r.unpersist()
     raise RuntimeError(
         f"connected_components did not converge in {_MAX_ITERS} rounds "
         "(graph diameter exceeds the round cap)"

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 
 from geotreehealth_spark.geo import cellexprs
 from geotreehealth_spark.operators.aggregates import best_per_key
-from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.caching import owned
 from geotreehealth_spark.operators.pip_join import distance_expr
 
 # ring rounds (rings 1, 4, 16, 64) before the residue takes the exact
@@ -171,15 +171,12 @@ def _ring_knn(
     out_cols = [*left.columns, *right.columns, "dist", tag]
     dist = distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
 
-    # ONE scan of the candidate side feeds the bounds/count agg, the
-    # cell-keyed join input and the rare crossJoin (profiling at sf0.1:
-    # each re-scan of a synthesized right side cost ~2.5 s)
-    right_mat, right_owned = cached(right)
-    # everything this call caches is released when it returns or fails
-    owned = [right_mat] if right_owned else []
-    persisted: list[DataFrame] = []
-    try:
-        bounds = _data_bounds(right_mat, right_id, rx, ry)
+    with owned() as o:
+        # ONE scan of the candidate side feeds the bounds/count agg, the
+        # cell-keyed join input and the rare crossJoin (profiling at sf0.1:
+        # each re-scan of a synthesized right side cost ~2.5 s)
+        right = o.persist(right)
+        bounds = _data_bounds(right, right_id, rx, ry)
         if bounds is None:
             # empty candidate side: zero rows with the full output schema
             return left.crossJoin(right.limit(0)).select(
@@ -201,10 +198,9 @@ def _ring_knn(
         wide_left = bool(set(left.columns) - {left_id, lx, ly})
         wide_right = bool(set(right.columns) - {right_id, rx, ry})
         if wide_left:
-            left, left_owned = cached(left)
-            owned += [left] if left_owned else []
+            left = o.persist(left)
         left_slim = left.select(left_id, lx, ly)
-        right_slim = right_mat.select(right_id, rx, ry)
+        right_slim = right.select(right_id, rx, ry)
         right_cells = right_slim.withColumn(
             "__cell", cellexprs.point_cell(F.col(rx), F.col(ry), s, origin)
         )
@@ -313,7 +309,7 @@ def _ring_knn(
             if wide_left:
                 slim = slim.drop(lx, ly).join(left, left_id)
             if wide_right:
-                slim = slim.drop(rx, ry).join(right_mat, right_id)
+                slim = slim.drop(rx, ry).join(right, right_id)
             return slim.select(*out_cols)
 
         def residue_rows(tagged: DataFrame) -> DataFrame:
@@ -335,17 +331,14 @@ def _ring_knn(
         # The proven winners (enriched) and the residue are both projections
         # of the persisted tagged table, checkpointed together: the
         # checkpoint is the common case's only job barrier and the result's
-        # flat lineage, and the residue count reads its blocks. The blocks
-        # are not releasable through the DataFrame API (ADVICE r3); long-lived
-        # sessions clear them via getPersistentRDDs, as bench.py does.
-        tagged = step(left_slim, 1, final=False).persist()
-        persisted.append(tagged)
-        chk = (
+        # flat lineage, and the residue count reads its blocks. The result
+        # reads the checkpoint, so it is kept (caching.py's ownership rule).
+        tagged = o.persist(step(left_slim, 1, final=False))
+        chk = o.keep(o.checkpoint(
             enrich(winners(tagged))
             .withColumn("__residue", F.lit(False))
             .unionByName(residue_rows(tagged))
-            .localCheckpoint(eager=True)
-        )
+        ))
         remaining = chk.where(F.col("__residue")).select(left_id, lx, ly)
         n_rem, n_id = remaining.agg(F.count("*"), F.count(left_id)).first()
         if n_rem != n_id:
@@ -362,8 +355,7 @@ def _ring_knn(
                 parts = max(1, min(n_rem * n_right // 2_000_000 + 1, 64))
                 results.append(enrich(winners(step(remaining.coalesce(parts), ring, True))))
                 break
-            tagged = step(remaining, ring, final=False).persist()
-            persisted.append(tagged)
+            tagged = o.persist(step(remaining, ring, final=False))
             results.append(enrich(winners(tagged)))
             remaining = tagged.where(~F.col("__ok")).select(left_id, lx, ly)
             n_rem = remaining.count()
@@ -371,14 +363,11 @@ def _ring_knn(
         if len(results) == 1:
             return results[0]
         # checkpoint ONLY the rare-path pieces: results[0] already reads the
-        # prologue's blocks, and the rest read caches released below
+        # prologue's blocks, and the rest read caches released on return
         extra = results[1]
         for r in results[2:]:
             extra = extra.unionByName(r)
-        return results[0].unionByName(extra.localCheckpoint(eager=True))
-    finally:
-        for df in persisted + owned:
-            df.unpersist()
+        return results[0].unionByName(o.keep(o.checkpoint(extra)))
 
 
 def knn_join(

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from geotreehealth_spark.operators.aggregates import best_per_key
-from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.caching import owned
 from geotreehealth_spark.operators.knn import knn_join
 from geotreehealth_spark.operators.pip_join import distance_expr, pip_join
 
@@ -59,33 +59,35 @@ def containing_else_nearest(
     # the PIP arm AND the kNN fallback's candidate side; `best` feeds the
     # matched arm AND the residue anti-join. All three lineages were
     # recomputed per consumer (crowns' groupBy derivation twice per call) —
-    # persist each once; the session-level cache sweep releases them.
-    points, _ = cached(points)
-    polygons, _ = cached(polygons)
-    contained = pip_join(
-        points.select(point_id, px, py), polygons, cell_size, px, py, poly_wkb, poly_bounds
-    )
-    best = best_per_key(
-        contained.select(point_id, poly_id, area_col),
-        point_id,
-        [F.col(area_col).desc_nulls_first(), poly_id],
-    ).select(point_id, poly_id).persist()
-    matched = best.withColumn("method", F.lit("contained"))
+    # persist each once; the returned plan reads all three, so they are kept.
+    with owned() as o:
+        points = o.keep(o.persist(points))
+        polygons = o.keep(o.persist(polygons))
+        contained = pip_join(
+            points.select(point_id, px, py), polygons, cell_size, px, py, poly_wkb, poly_bounds
+        )
+        best = o.keep(o.persist(best_per_key(
+            contained.select(point_id, poly_id, area_col),
+            point_id,
+            [F.col(area_col).desc_nulls_first(), poly_id],
+        ).select(point_id, poly_id)))
+        matched = best.withColumn("method", F.lit("contained"))
 
-    # no broadcast hint: matched ids are probe-proportional (≈ every matched
-    # point) — a forced broadcast is a driver OOM at 100-TB probe cardinality;
-    # AQE broadcasts when the set is actually small (VERDICT.md r3)
-    residue = points.join(best.select(point_id), point_id, "left_anti")
-    nearest = knn_join(
-        residue.select(point_id, px, py),
-        polygons.select(poly_id, *center),
-        k=1,
-        left_id=point_id,
-        right_id=poly_id,
-        left_xy=point_xy,
-        right_xy=center,
-    ).select(point_id, poly_id).withColumn("method", F.lit("nearest"))
-    return matched.unionByName(nearest)
+        # no broadcast hint: matched ids are probe-proportional (≈ every
+        # matched point) — a forced broadcast is a driver OOM at 100-TB probe
+        # cardinality; AQE broadcasts when the set is actually small
+        # (VERDICT.md r3)
+        residue = points.join(best.select(point_id), point_id, "left_anti")
+        nearest = knn_join(
+            residue.select(point_id, px, py),
+            polygons.select(poly_id, *center),
+            k=1,
+            left_id=point_id,
+            right_id=poly_id,
+            left_xy=point_xy,
+            right_xy=center,
+        ).select(point_id, poly_id).withColumn("method", F.lit("nearest"))
+        return matched.unionByName(nearest)
 
 
 def feature_nn_match(
@@ -225,88 +227,84 @@ def random_k_sample(
     # r6 (ADVICE r5): persist BEFORE counting — the counts then materialize
     # the same caches every later branch reads, instead of computing the
     # upstream lineage once for the cost-switch counts and again for the
-    # plans. The direct branch's returned plan reads the caches too (released
-    # by the session-level cache sweep, like other lazily-returned results).
-    left_mat, l_owned = cached(left)
-    right_mat, r_owned = cached(right)
-    right = right_mat  # rebind: enumerate_pairs closes over this name
-    n_left = left_mat.count()
-    n_right = right_mat.count()
-    if n_left * n_right <= _DIRECT_MAX_PAIRS:
-        return best_per_key(
-            enumerate_pairs(left_mat), left_id, [h.asc(), right_id], k, "draw_rank"
-        ).select(left_id, right_id, "draw_rank")
+    # plans. The direct branch's returned plan reads the caches, so there
+    # they are kept; the threshold branch's result reads only its per-round
+    # draw checkpoints, so the input caches are released on return.
+    with owned() as o:
+        left = o.persist(left)
+        right = o.persist(right)  # rebind: enumerate_pairs closes over this name
+        n_left = left.count()
+        n_right = right.count()
+        if n_left * n_right <= _DIRECT_MAX_PAIRS:
+            o.keep(left)
+            o.keep(right)
+            return best_per_key(
+                enumerate_pairs(left), left_id, [h.asc(), right_id], k, "draw_rank"
+            ).select(left_id, right_id, "draw_rank")
+        import math
 
-    import math
+        frac = min(1.0, (_OVERSAMPLE * k) / max(n_right, 1))
+        threshold = max(1, int(math.ceil(RANDOM_K_HASH_P * frac)))
 
-    frac = min(1.0, (_OVERSAMPLE * k) / max(n_right, 1))
-    threshold = max(1, int(math.ceil(RANDOM_K_HASH_P * frac)))
-
-    # Bucketed admissible-window join (r6, VERDICT r5 item 5): the affine
-    # draw hash decomposes as h = (a + rv) mod p with a = (48271·lk) mod p
-    # and rv = (40503·rk) mod p (valid while 48271·lk / 40503·rk stay inside
-    # int64, i.e. |key| < ~1.9e14 — beyond that the ORIGINAL h expression
-    # already wraps and its documented affine semantics are void anyway).
-    # h < T therefore admits, per probe, at most TWO rv-intervals:
-    # [0, T−a) and [p−a, p−a+T) ∩ [0, p). The right side is bucketed by rv
-    # ONCE; each probe explodes to only the ~T·n_buckets/p + 2 buckets its
-    # intervals touch, and the join is a plain equi-join on the bucket id —
-    # the enumerated volume drops from |L|·|R| to ~|L|·_OVERSAMPLE·k rows.
-    # SAFETY: bucket coverage only needs to be a SUPERSET of the admissible
-    # rows — the loop re-applies the ORIGINAL `h < T` predicate after the
-    # join, so the candidate set (and the draw) is provably identical to the
-    # enumerated plan's. The final T = p round keeps the crossJoin (every
-    # bucket would be admissible).
-    P = RANDOM_K_HASH_P
-    n_buckets = int(min(max(16, (2 * n_right) // max(k, 1)), 1_048_576))
-    bucket_w = -(-P // n_buckets)  # ceil(P / n_buckets)
-    right_b = right_mat.withColumn(
-        "__rb",
-        F.floor(F.pmod(rk * F.lit(40503), F.lit(P)) / F.lit(bucket_w)).cast("long"),
-    )
-
-    def bucketed_pairs(probes: DataFrame, t: int) -> DataFrame:
-        a = F.pmod(lk * F.lit(48271), F.lit(P))
-        hi1 = F.lit(t) - a  # exclusive end of interval 1 (start 0); may be <= 0
-        lo2 = F.lit(P) - a  # interval 2 start; empty when a == 0
-        hi2 = F.least(F.lit(P), lo2 + F.lit(t))
-        empty = F.array().cast("array<bigint>")
-        seq1 = F.when(
-            hi1 > 0,
-            F.sequence(
-                F.lit(0).cast("long"),
-                F.floor((hi1 - 1) / F.lit(bucket_w)).cast("long"),
-            ),
+        # Bucketed admissible-window join (r6, VERDICT r5 item 5): the affine
+        # draw hash decomposes as h = (a + rv) mod p with a = (48271·lk) mod p
+        # and rv = (40503·rk) mod p (valid while 48271·lk / 40503·rk stay inside
+        # int64, i.e. |key| < ~1.9e14 — beyond that the ORIGINAL h expression
+        # already wraps and its documented affine semantics are void anyway).
+        # h < T therefore admits, per probe, at most TWO rv-intervals:
+        # [0, T−a) and [p−a, p−a+T) ∩ [0, p). The right side is bucketed by rv
+        # ONCE; each probe explodes to only the ~T·n_buckets/p + 2 buckets its
+        # intervals touch, and the join is a plain equi-join on the bucket id —
+        # the enumerated volume drops from |L|·|R| to ~|L|·_OVERSAMPLE·k rows.
+        # SAFETY: bucket coverage only needs to be a SUPERSET of the admissible
+        # rows — the loop re-applies the ORIGINAL `h < T` predicate after the
+        # join, so the candidate set (and the draw) is provably identical to the
+        # enumerated plan's. The final T = p round keeps the crossJoin (every
+        # bucket would be admissible).
+        P = RANDOM_K_HASH_P
+        n_buckets = int(min(max(16, (2 * n_right) // max(k, 1)), 1_048_576))
+        bucket_w = -(-P // n_buckets)  # ceil(P / n_buckets)
+        right_b = right.withColumn(
+            "__rb",
+            F.floor(F.pmod(rk * F.lit(40503), F.lit(P)) / F.lit(bucket_w)).cast("long"),
         )
-        seq2 = F.when(
-            hi2 > lo2,
-            F.sequence(
-                F.floor(lo2 / F.lit(bucket_w)).cast("long"),
-                F.floor((hi2 - 1) / F.lit(bucket_w)).cast("long"),
-            ),
-        )
-        buckets = F.array_distinct(
-            F.flatten(F.array(F.coalesce(seq1, empty), F.coalesce(seq2, empty)))
-        )
-        # NULL-keyed probes yield a NULL bucket array → explode drops them,
-        # matching enumerate_pairs' h-notnull filter; NULL right keys get a
-        # NULL __rb and never join
-        pairs = probes.withColumn("__rb", F.explode(buckets)).join(right_b, "__rb")
-        if self_key is not None:
-            pairs = pairs.where(F.col(self_key) != rk)
-        return pairs.where(h.isNotNull())
-    # the escalation loop is fully eager (checkpoint per round), so the
-    # cached inputs serve its rounds and are released before returning.
-    # The per-round `cand` checkpoint blocks ARE the result's storage and
-    # stay live until the session-level release (bench release_caches), like
-    # every checkpointed result in this engine.
-    remaining = left_mat
-    from geotreehealth_spark.operators.caching import checkpoint_tracked
 
-    sc = left_mat.sparkSession.sparkContext
-    parts: list[DataFrame] = []
-    checkpointed_rdds: list = []
-    try:
+        def bucketed_pairs(probes: DataFrame, t: int) -> DataFrame:
+            a = F.pmod(lk * F.lit(48271), F.lit(P))
+            hi1 = F.lit(t) - a  # exclusive end of interval 1 (start 0); may be <= 0
+            lo2 = F.lit(P) - a  # interval 2 start; empty when a == 0
+            hi2 = F.least(F.lit(P), lo2 + F.lit(t))
+            empty = F.array().cast("array<bigint>")
+            seq1 = F.when(
+                hi1 > 0,
+                F.sequence(
+                    F.lit(0).cast("long"),
+                    F.floor((hi1 - 1) / F.lit(bucket_w)).cast("long"),
+                ),
+            )
+            seq2 = F.when(
+                hi2 > lo2,
+                F.sequence(
+                    F.floor(lo2 / F.lit(bucket_w)).cast("long"),
+                    F.floor((hi2 - 1) / F.lit(bucket_w)).cast("long"),
+                ),
+            )
+            buckets = F.array_distinct(
+                F.flatten(F.array(F.coalesce(seq1, empty), F.coalesce(seq2, empty)))
+            )
+            # NULL-keyed probes yield a NULL bucket array → explode drops them,
+            # matching enumerate_pairs' h-notnull filter; NULL right keys get a
+            # NULL __rb and never join
+            pairs = probes.withColumn("__rb", F.explode(buckets)).join(right_b, "__rb")
+            if self_key is not None:
+                pairs = pairs.where(F.col(self_key) != rk)
+            return pairs.where(h.isNotNull())
+
+        # the escalation loop is fully eager (checkpoint per round), so the
+        # cached inputs serve its rounds and are released on return. The
+        # per-round `cand` checkpoints ARE the result's storage: kept.
+        remaining = left
+        parts: list[DataFrame] = []
         while True:
             final = threshold >= RANDOM_K_HASH_P
             src = (
@@ -314,13 +312,11 @@ def random_k_sample(
                 if final
                 else bucketed_pairs(remaining, threshold)
             )
-            cand, created = checkpoint_tracked(
+            cand = o.keep(o.checkpoint(
                 src.withColumn("__h", h)
                 .where(F.col("__h") < F.lit(threshold))
-                .select(left_id, right_id, "__h"),
-                sc,
-            )
-            checkpointed_rdds.extend(created)
+                .select(left_id, right_id, "__h")
+            ))
             # >= k survivors under T ⇒ the k-th smallest (h, right_id) is
             # under T too ⇒ this probe's global top-k is fully inside `cand`
             satisfied = (
@@ -341,20 +337,4 @@ def random_k_sample(
             # `*= _OVERSAMPLE` never grows T and the loop spins forever
             # re-scanning the same shortfall probes at the same threshold
             threshold *= max(2, _OVERSAMPLE)
-    except BaseException:
-        # r6 (ADVICE r5): a mid-loop failure must not leak the per-round
-        # checkpoint blocks into a long-lived session — on success they ARE
-        # the result's storage, but a raised call returns nothing that reads
-        # them. Release goes through the registry-diffed java RDD handles
-        # (caching.checkpoint_tracked): the DataFrame-level unpersist is
-        # a documented no-op for localCheckpoint blocks (ADVICE r3).
-        for r in checkpointed_rdds:
-            r.unpersist()
-        raise
-    finally:
-        # parts read only the checkpointed blocks — the input caches can go
-        if l_owned:
-            left_mat.unpersist()
-        if r_owned:
-            right_mat.unpersist()
-    return reduce(lambda a, b: a.unionByName(b), parts)
+        return reduce(lambda a, b: a.unionByName(b), parts)

@@ -32,29 +32,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.caching import Owner, owned
 from geotreehealth_spark.operators.overlap import (
     box_inter_cols,
     box_iou_cols,
     box_overlap_ratio_cols,
     overlap_selfjoin,
 )
-from geotreehealth_spark.operators.udfs import overlap_ratio_udf, iou_udf
+from geotreehealth_spark.operators.udfs import overlap_ratio_udf
 
 # edge lists up to this many (winner, loser) pairs run the fixpoint on the
 # driver; larger ones take the distributed join-based fixpoint
 _DRIVER_FIXPOINT_MAX = 2_000_000
 # round cap of the distributed fixpoint (the longest suppression chain)
 _MAX_ROUNDS = 64
-
-
-def _box_measure(criterion: str, bounds: tuple[str, str, str, str]):
-    """'iou' (batch_sam.py:699) or 'overlap_ratio' (inter/max area,
-    get_polygons.py:806-816) of the a_/b_ boxes; _measure_duck mirrors both
-    term-for-term."""
-    if criterion == "iou":
-        return box_iou_cols(bounds=bounds)
-    return box_overlap_ratio_cols(bounds=bounds)
 
 
 def _oriented(df: DataFrame, id_a, id_b, score_a, score_b) -> DataFrame:
@@ -75,21 +66,19 @@ def nms_conflict_edges(
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     wkb_col: str | None = None,
-    criterion: str = "overlap_ratio",
     area_col: str | None = None,
 ) -> DataFrame:
     """Directed conflict edges (winner, loser) under the global greedy order.
 
-    criterion: 'overlap_ratio' (inter/max area, get_polygons.py:806-816) or
-    'iou' (batch_sam.py:699). With wkb_col=None boxes are exact geometry;
+    Criterion: overlap ratio, inter / max(areaA, areaB)
+    (get_polygons.py:806-816). With wkb_col=None boxes are exact geometry;
     otherwise the polygon kernel refines the bbox candidates.
 
     area_col: optional TRUE polygon area column. When present, the JVM prune
     keeps only pairs with box_inter / max(poly_area) > threshold — sound for
-    both criteria for ANY polygons (poly_inter <= box_inter; denominators
-    max-area and union are both >= max poly area). Without it the prune is
-    just box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim
-    that thin diagonal slivers violate — ADVICE.md round 1).
+    ANY polygons (poly_inter <= box_inter). Without it the prune is just
+    box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim that
+    thin diagonal slivers violate — ADVICE.md round 1).
 
     Plan note: the cell self-join runs on SLIM columns (id, score, bbox) so
     the quadratic candidate stream never carries WKB blobs; polygon payloads
@@ -120,10 +109,9 @@ def nms_conflict_edges(
             ),
             f"b_{id_col}",
         )
-        udf = overlap_ratio_udf if criterion == "overlap_ratio" else iou_udf
-        measure = udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
+        measure = overlap_ratio_udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
     else:
-        measure = _box_measure(criterion, bounds)
+        measure = box_overlap_ratio_cols(bounds=bounds)
 
     # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
     # each unordered pair exactly once
@@ -142,7 +130,6 @@ def greedy_nms(
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     wkb_col: str | None = None,
-    criterion: str = "overlap_ratio",
     area_col: str | None = None,
 ) -> DataFrame:
     """polys + `selected` boolean, exactly matching sequential greedy NMS.
@@ -150,21 +137,21 @@ def greedy_nms(
     The conflict-edge DISCOVERY is always fully distributed (the quadratic
     part); ``_suppress`` then runs the fixpoint over the edge list.
     """
-    # r6: the polys lineage is read at least twice per call (conflict-edge
-    # discovery + the final selected join) — persist it once instead of
-    # re-deriving the upstream joins/aggregations per use
-    polys, _ = cached(polys)
-    edges = nms_conflict_edges(
-        polys, id_col, score_col, threshold, cell_size, bounds, wkb_col,
-        criterion, area_col,
-    )
-    return _suppress(polys, id_col, edges)
+    with owned() as o:
+        # r6: the polys lineage is read at least twice per call (conflict-edge
+        # discovery + the final selected join) — persist it once instead of
+        # re-deriving the upstream joins/aggregations per use
+        polys = o.keep(o.persist(polys))
+        edges = o.checkpoint(nms_conflict_edges(
+            polys, id_col, score_col, threshold, cell_size, bounds, wkb_col, area_col,
+        ))
+        return _suppress(o, polys, id_col, edges)
 
 
-def _suppress(polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
+def _suppress(o: Owner, polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
     """polys + `selected`, given their (winner, loser) conflict edges oriented
-    by the greedy order: a node is suppressed iff a surviving winner points
-    at it.
+    by the greedy order — checkpointed by ``o`` — where a node is suppressed
+    iff a surviving winner points at it.
 
     The fixpoint is O(edges x chain-depth): when the edge list fits on the
     driver (<= _DRIVER_FIXPOINT_MAX int64 pairs) it runs as a vectorized
@@ -172,13 +159,9 @@ def _suppress(polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
     seconds per distributed round of tiny joins. Beyond the cap the
     distributed join-based fixpoint takes over (identical semantics).
     """
-    # localCheckpoint each round: the fixpoint otherwise builds an
-    # exponentially-deep logical plan (classic iterative-DataFrame trap) and
-    # the driver burns all its time in Catalyst re-analysis.
-    edges = edges.localCheckpoint(eager=True)
-
     if edges.count() <= _DRIVER_FIXPOINT_MAX:
         suppressed_ids = _fixpoint_local(edges.toPandas())
+        o.release(edges)
         if not suppressed_ids:
             return polys.withColumn("selected", F.lit(True))
         spark = polys.sparkSession
@@ -199,6 +182,10 @@ def _suppress(polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
             .drop("__supp")
         )
 
+    # localCheckpoint each round: the fixpoint otherwise builds an
+    # exponentially-deep logical plan (classic iterative-DataFrame trap) and
+    # the driver burns all its time in Catalyst re-analysis. Each round's
+    # superseded checkpoints are released once the next ones are built.
     suppressed_acc: DataFrame | None = None
     for _ in range(_MAX_ROUNDS):
         if edges.limit(1).count() == 0:
@@ -211,28 +198,28 @@ def _suppress(polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
             .join(losers, "id", "left_anti")
         )
         # their direct losers are suppressed for good
-        newly_suppressed = (
+        newly_suppressed = o.checkpoint(
             edges.join(kept_now.withColumnRenamed("id", "winner"), "winner")
             .select(F.col("loser").alias("id"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
         if newly_suppressed.limit(1).count() == 0:
             break  # no sources left → remaining graph is empty (DAG is acyclic)
-        suppressed_acc = (
-            newly_suppressed
-            if suppressed_acc is None
-            else suppressed_acc.unionByName(newly_suppressed)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        if suppressed_acc is None:
+            suppressed_acc = newly_suppressed
+        else:
+            merged = o.checkpoint(suppressed_acc.unionByName(newly_suppressed).distinct())
+            o.release(suppressed_acc)
+            o.release(newly_suppressed)
+            suppressed_acc = merged
         # drop edges involving suppressed nodes (they can no longer suppress),
         # and edges whose loser is already suppressed (decided)
-        edges = (
+        live = o.checkpoint(
             edges.join(suppressed_acc.withColumnRenamed("id", "winner"), "winner", "left_anti")
             .join(suppressed_acc.withColumnRenamed("id", "loser"), "loser", "left_anti")
-            .localCheckpoint(eager=True)
         )
+        o.release(edges)
+        edges = live
     if edges.limit(1).count() != 0:
         # never return a partial result: a suppression chain deeper than
         # _MAX_ROUNDS means undecided nodes would silently default to
@@ -244,7 +231,7 @@ def _suppress(polys: DataFrame, id_col: str, edges: DataFrame) -> DataFrame:
     if suppressed_acc is None:
         return polys.withColumn("selected", F.lit(True))
     return polys.join(
-        suppressed_acc.withColumnRenamed("id", id_col).withColumn("__supp", F.lit(True)),
+        o.keep(suppressed_acc).withColumnRenamed("id", id_col).withColumn("__supp", F.lit(True)),
         id_col,
         "left",
     ).withColumn("selected", F.col("__supp").isNull()).drop("__supp")
@@ -257,10 +244,9 @@ def weighted_nms(
     threshold: float = 0.5,
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    criterion: str = "iou",
-    score_col: str = "wscore",
 ) -> DataFrame:
-    """W4 weighted NMS (batch_sam.py:692-731): score = priority - Σ overlap.
+    """W4 weighted NMS (batch_sam.py:692-731): score ``wscore`` = priority -
+    Σ overlap, with box IoU as the overlap (batch_sam.py:699).
 
     Reference semantics: per polygon, priority (crwnpst + DBH via identity
     funcs, batch_sam.py:579-580) minus the sum of pairwise overlaps that
@@ -275,50 +261,51 @@ def weighted_nms(
     which is order-independent and exact in both engines; the final score is
     priority - penalty_micro / 1e6.
     """
-    polys, _ = cached(polys)  # read by the pair join AND the scored join (r6)
-    slim = polys.select(id_col, *bounds)
-    pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
-    # r6: ONE quadratic pair-discovery pass. The threshold-surviving pairs
-    # feed BOTH the penalty aggregation and (with wscore attached per
-    # endpoint by two slim id-joins) the greedy conflict edges.
-    contrib = (
-        pairs.withColumn("__m", _box_measure(criterion, bounds))
-        .where(F.col("__m") > threshold)
-        .select(
-            F.col(f"a_{id_col}").alias("__ida"),
-            F.col(f"b_{id_col}").alias("__idb"),
-            "__m",
+    with owned() as o:
+        # read by the pair join AND the scored join (r6)
+        polys = o.keep(o.persist(polys))
+        slim = polys.select(id_col, *bounds)
+        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
+        # r6: ONE quadratic pair-discovery pass. The threshold-surviving pairs
+        # feed BOTH the penalty aggregation and (with wscore attached per
+        # endpoint by two slim id-joins) the greedy conflict edges.
+        contrib = o.persist(
+            pairs.withColumn("__m", box_iou_cols(bounds=bounds))
+            .where(F.col("__m") > threshold)
+            .select(
+                F.col(f"a_{id_col}").alias("__ida"),
+                F.col(f"b_{id_col}").alias("__idb"),
+                "__m",
+            )
         )
-        .persist()
-    )
-    both = contrib.select(F.col("__ida").alias(id_col), F.col("__m")).unionByName(
-        contrib.select(F.col("__idb").alias(id_col), F.col("__m"))
-    )
-    penalty = both.groupBy(id_col).agg(
-        F.sum(F.round(F.col("__m") * 1e6).cast("long")).alias("__pen_micro")
-    )
-    scored = (
-        polys.join(penalty, id_col, "left")
-        .withColumn(
-            score_col,
-            F.col(priority_col)
-            - F.coalesce(F.col("__pen_micro"), F.lit(0)).cast("double") / 1e6,
+        both = contrib.select(F.col("__ida").alias(id_col), F.col("__m")).unionByName(
+            contrib.select(F.col("__idb").alias(id_col), F.col("__m"))
         )
-        .drop("__pen_micro")
+        penalty = both.groupBy(id_col).agg(
+            F.sum(F.round(F.col("__m") * 1e6).cast("long")).alias("__pen_micro")
+        )
         # r6: read 3x (both edge-orientation sides + the final selected join
         # inside _suppress) — persist so the penalty agg runs once
-        .persist()
-    )
-    sc = scored.select(F.col(id_col), F.col(score_col))
-    oriented = contrib.join(
-        sc.select(F.col(id_col).alias("__ida"), F.col(score_col).alias("__sa")), "__ida"
-    ).join(
-        sc.select(F.col(id_col).alias("__idb"), F.col(score_col).alias("__sb")), "__idb"
-    )
-    edges = _oriented(
-        oriented, F.col("__ida"), F.col("__idb"), F.col("__sa"), F.col("__sb")
-    )
-    return _suppress(scored, id_col, edges)
+        scored = o.keep(o.persist(
+            polys.join(penalty, id_col, "left")
+            .withColumn(
+                "wscore",
+                F.col(priority_col)
+                - F.coalesce(F.col("__pen_micro"), F.lit(0)).cast("double") / 1e6,
+            )
+            .drop("__pen_micro")
+        ))
+        sc = scored.select(F.col(id_col), F.col("wscore"))
+        oriented = contrib.join(
+            sc.select(F.col(id_col).alias("__ida"), F.col("wscore").alias("__sa")), "__ida"
+        ).join(
+            sc.select(F.col(id_col).alias("__idb"), F.col("wscore").alias("__sb")), "__idb"
+        )
+        edges = o.checkpoint(_oriented(
+            oriented, F.col("__ida"), F.col("__idb"), F.col("__sa"), F.col("__sb")
+        ))
+        o.release(contrib)
+        return _suppress(o, scored, id_col, edges)
 
 
 # ---------------------------------------------------------------------------

@@ -45,14 +45,6 @@ def _decode_cached(series: pd.Series) -> list:
 
 
 @pandas_udf(DoubleType())
-def iou_udf(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
-    """Pairwise polygon IoU (batch_sam.py:150-151 calculate_overlap)."""
-    ra = _decode_cached(wkb_a)
-    rb = _decode_cached(wkb_b)
-    return pd.Series([kernels.polygon_iou(a, b) for a, b in zip(ra, rb)])
-
-
-@pandas_udf(DoubleType())
 def overlap_ratio_udf(wkb_a: pd.Series, wkb_b: pd.Series) -> pd.Series:
     """inter / max(areaA, areaB) — greedy-NMS criterion (get_polygons.py:806-816)."""
     ra = _decode_cached(wkb_a)

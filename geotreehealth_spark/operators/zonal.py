@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from geotreehealth_spark import media
 from geotreehealth_spark.geo import wkb
+from geotreehealth_spark.operators.caching import owned
 from geotreehealth_spark.operators.tiling import assign_tiles
 
 
@@ -102,8 +103,10 @@ def zonal_raster_stats(
     assigned = assign_tiles(crowns_geo.select(*keep), tiles, bounds=crown_bounds)
     # r6: the count sketch AND the salted join both read `assigned` — without
     # a persist the broadcast range join (|crowns| x |tiles| predicate evals)
-    # and the upstream crown derivation ran twice per call
-    assigned = assigned.persist()
+    # and the upstream crown derivation ran twice per call. Kept: the
+    # returned plan reads it.
+    with owned() as o:
+        assigned = o.keep(o.persist(assigned))
     counts = assigned.groupBy("tile_id").agg(F.count("*").alias("__cnt"))
     assigned = (
         assigned.join(F.broadcast(counts), "tile_id")

@@ -1,8 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
 Every entry point (tests, bench, driver contract) builds its session here so the
-whole engine runs with one consistent config: Arrow transport for pandas UDFs,
-AQE with skew-join splitting (north_rule: "salted repartitioning on H3 cell keys
+whole engine runs with one consistent config: Arrow transport across the
+Python boundary (pandas UDFs, mapInPandas, applyInPandas, toPandas), AQE
+with skew-join splitting (north_rule: "salted repartitioning on H3 cell keys
 plus AQE skew-join splitting"), and shuffle parallelism tied to core count.
 """
 
@@ -34,7 +35,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        # Arrow everywhere: pandas UDFs are the only Python boundary.
+        # Arrow everywhere: pandas UDFs, mapInPandas and applyInPandas always
+        # move Arrow batches (sized below); this flag also puts toPandas and
+        # createDataFrame(pandas) on Arrow.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # AQE: runtime coalescing, skew-join splitting (dense forest cells).

@@ -33,7 +33,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from geotreehealth_spark.operators.caching import cached
+from geotreehealth_spark.operators.caching import owned
 
 P31 = (1 << 31) - 1  # modulus for MinHash permutations (31-bit Mersenne prime)
 SIMHASH_BITS = 60  # md5-derived hash width that fits BIGINT in both dialects
@@ -96,8 +96,9 @@ def _self_pairs(
     The one near-dup blocking join: the table is persisted once (r6 — each
     join side otherwise re-ran its whole derivation from the scan, with no
     exchange reuse across the self-join), so callers read it again for
-    free; the cache is released by the session-level cache sweep."""
-    table, _ = cached(table)
+    free; the returned plan reads the cache, so it is kept."""
+    with owned() as o:
+        table = o.keep(o.persist(table))
 
     def side(s: str) -> DataFrame:
         return table.select(

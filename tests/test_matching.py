@@ -79,8 +79,7 @@ def test_threshold_path_self_exclusion_and_small_pool(spark, monkeypatch):
 
 def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
     # r6: a mid-escalation failure must sweep the per-round candidate
-    # checkpoint blocks (via the registry-diffed java RDD handles — the
-    # DataFrame-level unpersist is a no-op for localCheckpoint storage) AND
+    # checkpoint blocks (kept on success: they are the result's storage) AND
     # the input caches, leaving the session's persistent-RDD registry as it
     # was before the call.
     from geotreehealth_spark.operators import caching, matching
@@ -95,15 +94,15 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
         "CAST(id AS STRING) AS cid", "id * 2 AS rkey"
     )
     calls = {"n": 0}
-    orig = caching.checkpoint_tracked
+    orig = caching.Owner.checkpoint
 
-    def boom(df, sc):
+    def boom(self, df):
         calls["n"] += 1
         if calls["n"] >= 2:  # fail entering round 2: round-1 blocks exist
             raise RuntimeError("injected mid-loop failure")
-        return orig(df, sc)
+        return orig(self, df)
 
-    monkeypatch.setattr(caching, "checkpoint_tracked", boom)
+    monkeypatch.setattr(caching.Owner, "checkpoint", boom)
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keys())
     import pytest

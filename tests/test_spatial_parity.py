@@ -187,7 +187,7 @@ def test_weighted_nms_parity(spark):
     got = (
         nms.weighted_nms(
             polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-            cell_size=10.0, criterion="iou",
+            cell_size=10.0,
         )
         .select("crown_id", "wscore", "selected")
         .toPandas()
