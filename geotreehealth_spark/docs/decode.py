@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from geotreehealth_spark.docs.generator import ATTR_FIELDS, ring_bounds_udf
 from geotreehealth_spark.geo import wkb
 
 
@@ -41,6 +42,15 @@ def _attr_fields():
     )
 
 
+def _attr_columns(table: str) -> list:
+    """The table's attr fields as typed columns, in ATTR_FIELDS order."""
+    attr = _attr_fields()
+    return [
+        (attr.getItem(i) if t is None else attr.getItem(i).cast(t)).alias(name)
+        for i, (name, t) in enumerate(ATTR_FIELDS[table])
+    ]
+
+
 def _meta_table():
     return F.regexp_extract(_span_of_kind("meta").text, r"table=([a-z]+);", 1)
 
@@ -49,15 +59,9 @@ def decode_stems(docs: DataFrame) -> DataFrame:
     """docs → stems view (stem_tag, x, y, dbh, year, status, crown_position,
     fad, site_id)."""
     d = docs.where(_meta_table() == "stems")
-    attr = _attr_fields()
     geom = F.unhex(_span_of_kind("geom").media_ref)
     d = d.select(
-        attr.getItem(0).alias("stem_tag"),
-        attr.getItem(1).cast("double").alias("dbh"),
-        attr.getItem(2).cast("int").alias("year"),
-        attr.getItem(3).alias("status"),
-        attr.getItem(4).cast("int").alias("crown_position"),
-        attr.getItem(5).alias("fad"),
+        *_attr_columns("stems"),
         F.regexp_extract(_span_of_kind("meta").text, r"site=(.+)$", 1).alias("site_id"),
         point_xy_udf(geom).alias("__xy"),
     )
@@ -68,15 +72,9 @@ def decode_stems(docs: DataFrame) -> DataFrame:
 
 def decode_crowns(docs: DataFrame) -> DataFrame:
     """docs → crowns view with polygon WKB + bounds columns."""
-    from geotreehealth_spark.docs.generator import ring_bounds_udf
-
     d = docs.where(_meta_table() == "crowns")
-    attr = _attr_fields()
     d = d.select(
-        attr.getItem(0).alias("crown_id"),
-        attr.getItem(1).cast("double").alias("score"),
-        attr.getItem(2).alias("stem_tag"),
-        attr.getItem(3).cast("boolean").alias("selected"),
+        *_attr_columns("crowns"),
         F.unhex(_span_of_kind("geom").media_ref).alias("geometry_wkb"),
     )
     d = d.withColumn("__b", ring_bounds_udf(F.col("geometry_wkb")))
@@ -92,32 +90,23 @@ def decode_crowns(docs: DataFrame) -> DataFrame:
 def decode_tiles(docs: DataFrame) -> DataFrame:
     """docs → tile manifest with raster media_ref + parsed raster meta."""
     d = docs.where(_meta_table() == "tiles")
-    attr = _attr_fields()
     raster = _span_of_kind("raster")
     return d.select(
-        attr.getItem(0).alias("tile_id"),
-        attr.getItem(1).cast("double").alias("txmin"),
-        attr.getItem(2).cast("double").alias("tymin"),
-        attr.getItem(3).cast("double").alias("txmax"),
-        attr.getItem(4).cast("double").alias("tymax"),
+        *_attr_columns("tiles"),
         raster.media_ref.alias("media_ref"),
         F.regexp_extract(raster.text, r"bands=(\d+)", 1).cast("int").alias("bands"),
         F.regexp_extract(raster.text, r"h=(\d+)", 1).cast("int").alias("height"),
         F.regexp_extract(raster.text, r"w=(\d+)", 1).cast("int").alias("width"),
     )
 
+
 def decode_lidar(docs: DataFrame) -> DataFrame:
     """docs → LiDAR tile manifest with laz:// media_ref + point count, ready
     for media.load_lidar_points (S6 scan path)."""
     d = docs.where(_meta_table() == "lidar")
-    attr = _attr_fields()
     span = _span_of_kind("lidar")
     return d.select(
-        attr.getItem(0).alias("tile_id"),
-        attr.getItem(1).cast("double").alias("txmin"),
-        attr.getItem(2).cast("double").alias("tymin"),
-        attr.getItem(3).cast("double").alias("txmax"),
-        attr.getItem(4).cast("double").alias("tymax"),
+        *_attr_columns("lidar"),
         span.media_ref.alias("media_ref"),
         F.regexp_extract(span.text, r"n=(\d+)", 1).cast("int").alias("n_points"),
     )

@@ -21,11 +21,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType, DoubleType, StructField, StructType
 
+from geotreehealth_spark import media
 from geotreehealth_spark.geo import kernels, wkb
 
 SPAN_SCHEMA = (
     "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
+
+# The attr span's CSV layout per doc table: (column, Spark type) in field
+# order. _attr_csv writes it and decode reads it back; a None type keeps the
+# field a string.
+_TILE_FIELDS = (
+    ("tile_id", None), ("txmin", "double"), ("tymin", "double"),
+    ("txmax", "double"), ("tymax", "double"),
+)
+ATTR_FIELDS = {
+    "stems": (
+        ("stem_tag", None), ("dbh", "double"), ("year", "int"),
+        ("status", None), ("crown_position", "int"), ("fad", None),
+    ),
+    "crowns": (("crown_id", None), ("score", "double"), ("stem_tag", None), ("selected", "boolean")),
+    "tiles": _TILE_FIELDS,
+    "lidar": _TILE_FIELDS,
+}
 
 
 def _span(kind, text, media_ref, offset: int):
@@ -37,11 +55,13 @@ def _span(kind, text, media_ref, offset: int):
     )
 
 
-def _attr_csv(*cols: str):
-    """attr span text: the columns as CSV fields, a NULL written as the
-    empty field (bare concat_ws skips NULLs, shifting every later field) —
-    decode._attr_fields reads it back as NULL."""
-    return F.concat_ws(",", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in cols])
+def _attr_csv(table: str):
+    """attr span text: the table's ATTR_FIELDS columns as CSV fields, a NULL
+    written as the empty field (bare concat_ws skips NULLs, shifting every
+    later field) — decode._attr_fields reads it back as NULL."""
+    return F.concat_ws(
+        ",", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c, _ in ATTR_FIELDS[table]]
+    )
 
 
 def crown_polygon_ring(key: int, cx: float, cy: float, radius: float) -> np.ndarray:
@@ -171,7 +191,7 @@ def crowns_with_geometry(crowns: DataFrame) -> DataFrame:
 
 def stems_to_docs(stems: DataFrame) -> DataFrame:
     """One doc per stem: meta + attr(CSV) + geom(point WKB hex) spans."""
-    attr_csv = _attr_csv("stem_tag", "dbh", "year", "status", "crown_position", "fad")
+    attr_csv = _attr_csv("stems")
     geom_hex = F.lower(F.hex(point_wkb_udf(F.col("x"), F.col("y"))))
     return stems.select(
         F.concat(F.lit("stem-"), F.col("stem_tag")).alias("doc_id"),
@@ -185,7 +205,7 @@ def stems_to_docs(stems: DataFrame) -> DataFrame:
 
 def crowns_to_docs(crowns_geo: DataFrame) -> DataFrame:
     """One doc per crown: meta + attr + geom(polygon WKB hex) spans."""
-    attr_csv = _attr_csv("crown_id", "score", "stem_tag", "selected")
+    attr_csv = _attr_csv("crowns")
     geom_hex = F.lower(F.hex(F.col("geometry_wkb")))
     return crowns_geo.select(
         F.concat(F.lit("crown-"), F.col("crown_id")).alias("doc_id"),
@@ -197,9 +217,10 @@ def crowns_to_docs(crowns_geo: DataFrame) -> DataFrame:
     )
 
 
-def tiles_to_docs(tiles: DataFrame, bands: int = 12, h: int = 100, w: int = 100) -> DataFrame:
-    """One doc per raster tile: meta + attr(bounds CSV) + raster(media_ref)."""
-    attr_csv = _attr_csv("tile_id", "txmin", "tymin", "txmax", "tymax")
+def tiles_to_docs(tiles: DataFrame) -> DataFrame:
+    """One doc per raster tile: meta + attr(bounds CSV) + raster(media_ref)
+    span of a 12-band 100x100 float32 tile."""
+    attr_csv = _attr_csv("tiles")
     return tiles.select(
         F.concat(F.lit("tile-"), F.col("tile_id")).alias("doc_id"),
         F.array(
@@ -207,8 +228,8 @@ def tiles_to_docs(tiles: DataFrame, bands: int = 12, h: int = 100, w: int = 100)
             _span(F.lit("attr"), attr_csv, "", 1),
             _span(
                 F.lit("raster"),
-                F.lit(f"bands={bands};h={h};w={w};dtype=float32"),
-                F.concat(F.lit("hsi://tile/"), F.col("tile_id")),
+                F.lit("bands=12;h=100;w=100;dtype=float32"),
+                F.concat(F.lit(media.HSI_PREFIX), F.col("tile_id")),
                 2,
             ),
         ).alias("spans"),
@@ -219,7 +240,7 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
     """One doc per LiDAR tile: meta + attr(bounds CSV) + lidar(laz:// ref)
     span — the S6 media_ref twin of tiles_to_docs (reference keeps per-tile
     point-cloud paths in its labels CSV, store_data_structures.py:174-183)."""
-    attr_csv = _attr_csv("tile_id", "txmin", "tymin", "txmax", "tymax")
+    attr_csv = _attr_csv("lidar")
     return tiles.select(
         F.concat(F.lit("laz-"), F.col("tile_id")).alias("doc_id"),
         F.array(
@@ -228,7 +249,7 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
             _span(
                 F.lit("lidar"),
                 F.lit(f"n={n_points};fmt=xyz"),
-                F.concat(F.lit("laz://tile/"), F.col("tile_key").cast("string")),
+                F.concat(F.lit(media.LAZ_PREFIX), F.col("tile_key").cast("string")),
                 2,
             ),
         ).alias("spans"),

@@ -18,10 +18,11 @@ _UNIT_SEP = ""
 _REC_SEP = ""
 
 
-def doc_fingerprint(spans_col: str = "spans") -> Column:
-    """md5 over the ordered (kind, text, media_ref, offset) sequence."""
+def doc_fingerprint() -> Column:
+    """md5 over the ordered (kind, text, media_ref, offset) sequence of
+    `spans`."""
     parts = F.transform(
-        spans_col,
+        "spans",
         lambda s: F.concat_ws(
             _UNIT_SEP, s.kind, s.text, s.media_ref, s.offset.cast("string")
         ),
@@ -29,20 +30,21 @@ def doc_fingerprint(spans_col: str = "spans") -> Column:
     return F.md5(F.array_join(parts, _REC_SEP))
 
 
-def offsets_valid(spans_col: str = "spans") -> Column:
-    """True iff span offsets are exactly 0..n-1 in array order."""
-    idx = F.sequence(F.lit(0), F.size(spans_col) - 1)
+def offsets_valid() -> Column:
+    """True iff `spans` offsets are exactly 0..n-1 in array order."""
+    idx = F.sequence(F.lit(0), F.size("spans") - 1)
     return F.forall(
-        F.zip_with(spans_col, idx, lambda s, i: s.offset == i.cast("int")),
+        F.zip_with("spans", idx, lambda s, i: s.offset == i.cast("int")),
         lambda ok: ok,
     )
 
 
-def span_parity(a: DataFrame, b: DataFrame, id_col: str = "doc_id") -> dict[str, int]:
-    """Compare two docs tables; returns mismatch/missing counts (all 0 = pass)."""
-    fa = a.select(F.col(id_col), doc_fingerprint().alias("__fa"))
-    fb = b.select(F.col(id_col), doc_fingerprint().alias("__fb"))
-    joined = fa.join(fb, id_col, "full_outer")
+def span_parity(a: DataFrame, b: DataFrame) -> dict[str, int]:
+    """Compare two docs tables on doc_id; returns mismatch/missing counts
+    (all 0 = pass)."""
+    fa = a.select(F.col("doc_id"), doc_fingerprint().alias("__fa"))
+    fb = b.select(F.col("doc_id"), doc_fingerprint().alias("__fb"))
+    joined = fa.join(fb, "doc_id", "full_outer")
     agg = joined.agg(
         F.sum(F.when(F.col("__fa").isNull(), 1).otherwise(0)).alias("missing_left"),
         F.sum(F.when(F.col("__fb").isNull(), 1).otherwise(0)).alias("missing_right"),

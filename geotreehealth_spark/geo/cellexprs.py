@@ -88,11 +88,11 @@ def with_covering_cells(
     df: DataFrame,
     bounds: tuple[str, str, str, str],
     cell_size: float,
-    cell_col: str = "__cell",
     gx_col: str | None = None,
     gy_col: str | None = None,
 ) -> DataFrame:
-    """One output row per (input row, covering cell) — nested JVM explodes.
+    """One output row per (input row, covering cell) keyed `__cell` — nested
+    JVM explodes.
 
     Optionally materializes the cell's grid coords (gx_col/gy_col) for
     reporting-cell dedup arithmetic downstream.
@@ -103,7 +103,7 @@ def with_covering_cells(
     out = df.withColumn("__cgx", F.explode(F.sequence(gx0, gx1))).withColumn(
         "__cgy", F.explode(F.sequence(gy0, gy1))
     )
-    out = out.withColumn(cell_col, cell_key(F.col("__cgx"), F.col("__cgy")))
+    out = out.withColumn("__cell", cell_key(F.col("__cgx"), F.col("__cgy")))
     if gx_col:
         out = out.withColumn(gx_col, F.col("__cgx"))
     if gy_col:
@@ -119,9 +119,8 @@ def with_ring_cells(
     ring: int,
     origin: tuple[float, float],
     g_max: tuple[int, int],
-    cell_col: str = "__cell",
 ) -> DataFrame:
-    """One output row per (input row, ring cell) on the kNN grid: cells
+    """One output row per (input row, ring cell `__cell`) on the kNN grid: cells
     within `ring` grid steps of the point's cell, those outside
     [0, g_max] dropped (they hold no candidate, and dropping them keeps
     every key below the stride)."""
@@ -131,6 +130,6 @@ def with_ring_cells(
         .where(F.col("__rgx").between(0, g_max[0]))
         .withColumn("__rgy", F.explode(F.sequence(gy - ring, gy + ring)))
         .where(F.col("__rgy").between(0, g_max[1]))
-        .withColumn(cell_col, cell_key(F.col("__rgx"), F.col("__rgy")))
+        .withColumn("__cell", cell_key(F.col("__rgx"), F.col("__rgy")))
     )
     return out.drop("__rgx", "__rgy")

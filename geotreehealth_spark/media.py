@@ -129,8 +129,8 @@ VID_PREFIX = "vid://"
 VID_CONST_PREFIX = "vidc://"
 
 
-def resolve_image(media_ref: str, height: int, width: int, channels: int = 3) -> np.ndarray:
-    """media_ref → (h, w, c) uint8 image.
+def resolve_image(media_ref: str, height: int, width: int) -> np.ndarray:
+    """media_ref → (h, w, 3) uint8 image.
 
     img:// refs resolve to a deterministic synthetic image (seeded by the ref
     digits) — the sandbox stand-in for a JPEG/PNG decoder (PIL not installed);
@@ -147,12 +147,12 @@ def resolve_image(media_ref: str, height: int, width: int, channels: int = 3) ->
     if media_ref.startswith(IMG_PREFIX):
         seed = (abs(hash_ref(media_ref)) * 2654435761 + 7) & 0xFFFFFFFF
         rng = np.random.default_rng(seed)
-        return rng.integers(0, 256, (height, width, channels), dtype=np.uint8)
+        return rng.integers(0, 256, (height, width, 3), dtype=np.uint8)
     if media_ref.startswith(IMG_CONST_PREFIX):
         key = int(media_ref[len(IMG_CONST_PREFIX):])
-        vals = (key * 31 + np.arange(channels) * 7) % 256
+        vals = (key * 31 + np.arange(3) * 7) % 256
         return np.broadcast_to(
-            vals.astype(np.uint8)[None, None, :], (height, width, channels)
+            vals.astype(np.uint8)[None, None, :], (height, width, 3)
         ).copy()
     return decode_external(media_ref)
 
@@ -190,9 +190,10 @@ def resolve_frames(
 
 AUD_PREFIX = "aud://"
 AUD_CONST_PREFIX = "audc://"
+SAMPLE_RATE = 16000  # synthetic clips' rate (Hz)
 
 
-def resolve_audio(media_ref: str, n_samples: int, sample_rate: int = 16000) -> np.ndarray:
+def resolve_audio(media_ref: str, n_samples: int) -> np.ndarray:
     """aud:// media_ref → float32 PCM waveform in [-1, 1].
 
     Deterministic synthetic clip (two seeded sinusoids + seeded noise) — the
@@ -214,7 +215,7 @@ def resolve_audio(media_ref: str, n_samples: int, sample_rate: int = 16000) -> n
     rng = np.random.default_rng(seed)
     f1 = float(rng.integers(80, 2000))
     f2 = float(rng.integers(2000, 7000))
-    t = np.arange(n_samples, dtype=np.float64) / sample_rate
+    t = np.arange(n_samples, dtype=np.float64) / SAMPLE_RATE
     wave = (
         0.6 * np.sin(2 * np.pi * f1 * t)
         + 0.25 * np.sin(2 * np.pi * f2 * t)

@@ -168,9 +168,9 @@ def drop_smallest_fraction(
     )
 
 
-def distinct_count(df: DataFrame, key: str, value: str, out_col: str = "n_distinct") -> DataFrame:
-    """A9: COUNT(DISTINCT value) per key."""
-    return df.groupBy(key).agg(F.countDistinct(value).alias(out_col))
+def distinct_count(df: DataFrame, key: str, value: str) -> DataFrame:
+    """A9: COUNT(DISTINCT value) per key, as n_distinct."""
+    return df.groupBy(key).agg(F.countDistinct(value).alias("n_distinct"))
 
 
 def factorize(df: DataFrame, col: str, out_col: str = "label_id") -> DataFrame:

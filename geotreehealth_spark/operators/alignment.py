@@ -37,11 +37,10 @@ def align_points(
     points: DataFrame,
     model,
     feature_cols: list[str],
-    xy: tuple[str, str] = ("x", "y"),
 ) -> DataFrame:
     """EP4: rewrite point geometry by a broadcast model's predicted offset.
 
-    Output: input columns + ``<x>_aligned`` / ``<y>_aligned``. The model is
+    Output: input columns + ``x_aligned`` / ``y_aligned``. The model is
     shipped once per executor (broadcast), features cross into Python as one
     Arrow batch per partition slice, and predict() runs on the whole batch.
     """
@@ -54,10 +53,9 @@ def align_points(
         d = bc.value.predict(X)
         return pd.Series(d.tolist())
 
-    x, y = xy
     out = points.withColumn("__off", offsets(*[F.col(c) for c in feature_cols]))
     return (
-        out.withColumn(f"{x}_aligned", F.col(x) + F.col("__off").getItem(0))
-        .withColumn(f"{y}_aligned", F.col(y) + F.col("__off").getItem(1))
+        out.withColumn("x_aligned", F.col("x") + F.col("__off").getItem(0))
+        .withColumn("y_aligned", F.col("y") + F.col("__off").getItem(1))
         .drop("__off")
     )

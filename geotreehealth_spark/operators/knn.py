@@ -153,19 +153,17 @@ def _ring_knn(
     k: int,
     left_id: str,
     right_id: str,
-    left_xy: tuple[str, str],
-    right_xy: tuple[str, str],
     quadrants: bool,
     cell_size: float | None,
     cell_factor: float,
     min_dist: float | None,
 ) -> DataFrame:
-    """Exact top-k `right` rows per (left row, group) — J5 when
-    ``quadrants`` is False (one group; tag column ``knn_rank``), J6 when True
-    (one group per quadrant; tag column ``quadrant``). Output: left columns +
-    right columns + ``dist`` + the tag column."""
-    lx, ly = left_xy
-    rx, ry = right_xy
+    """Exact top-k `right` rows (cx, cy) per (left row (x, y), group) — J5
+    when ``quadrants`` is False (one group; tag column ``knn_rank``), J6 when
+    True (one group per quadrant; tag column ``quadrant``). Output: left
+    columns + right columns + ``dist`` + the tag column."""
+    lx, ly = "x", "y"
+    rx, ry = "cx", "cy"
     tag, tag_type = ("quadrant", "string") if quadrants else ("knn_rank", "int")
     groups = _QUADS if quadrants else (None,)
     out_cols = [*left.columns, *right.columns, "dist", tag]
@@ -377,26 +375,22 @@ def knn_join(
     left_id: str,
     right_id: str,
     cell_size: float | None = None,
-    left_xy: tuple[str, str] = ("x", "y"),
-    right_xy: tuple[str, str] = ("cx", "cy"),
-    min_dist: float | None = None,
 ) -> DataFrame:
-    """Exact k nearest `right` rows per `left` row; ties broken by right_id.
+    """Exact k nearest `right` rows (cx, cy) per `left` row (x, y); ties
+    broken by right_id.
 
     Output: all left columns + right columns + `dist` + `knn_rank` (1..k).
     CONTRACT: ``left_id`` / ``right_id`` must be non-null and unique per
     side — winners are re-attached to their full rows via equi-joins on
     these ids. A NULL id raises ValueError naming the column; a duplicated
     id multiplies its matches.
-    ``min_dist``: drop candidates strictly closer than this (reference's
-    remove_too_close, batch_sam.py:430-432) before ranking.
     ``cell_size``: default ~1.25x the expected k-th neighbour radius under
     uniform density in the candidate bounds — tight enough to cut the
     candidate fan-out, with escalation handling sparse regions exactly.
     """
     return _ring_knn(
-        left, right, k, left_id, right_id, left_xy, right_xy,
-        quadrants=False, cell_size=cell_size, cell_factor=1.25, min_dist=min_dist,
+        left, right, k, left_id, right_id,
+        quadrants=False, cell_size=cell_size, cell_factor=1.25, min_dist=None,
     )
 
 
@@ -406,11 +400,10 @@ def quadrant_knn_join(
     left_id: str,
     right_id: str,
     cell_size: float | None = None,
-    left_xy: tuple[str, str] = ("x", "y"),
-    right_xy: tuple[str, str] = ("cx", "cy"),
     min_dist: float = 3.0,
 ) -> DataFrame:
-    """J6: nearest `right` per cardinal quadrant around each `left` point.
+    """J6: nearest `right` (cx, cy) per cardinal quadrant around each `left`
+    point (x, y).
 
     Quadrant of candidate = (dx >= 0, dy >= 0) → NE/NW/SE/SW. Documented
     deviation from the reference's find_cardinal_direction
@@ -429,6 +422,6 @@ def quadrant_knn_join(
     at sf0.1: 6x 6.23 s vs 8x 7.39 vs 5x 7.29, identical rows).
     """
     return _ring_knn(
-        left, right, 1, left_id, right_id, left_xy, right_xy,
+        left, right, 1, left_id, right_id,
         quadrants=True, cell_size=cell_size, cell_factor=6.0, min_dist=min_dist,
     )

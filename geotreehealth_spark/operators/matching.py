@@ -40,13 +40,12 @@ def containing_else_nearest(
     point_id: str,
     poly_id: str,
     area_col: str,
-    center: tuple[str, str] = ("cx", "cy"),
     cell_size: float = 50.0,
-    point_xy: tuple[str, str] = ("x", "y"),
     poly_wkb: str | None = "geometry_wkb",
-    poly_bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
 ) -> DataFrame:
     """W1: (point_id, poly_id, method) — method 'contained'|'nearest'.
+    Points carry (x, y); polygons carry bbox columns (xmin, ymin, xmax, ymax)
+    and a center (cx, cy).
 
     Physical plan: the containing arm is the PIP filter-refine join followed
     by ``best_per_key`` on (area desc, NULLs first; poly_id asc) — shuffle
@@ -54,7 +53,6 @@ def containing_else_nearest(
     the fallback arm is the exact cell-pruned kNN (k=1) on the RESIDUE only
     (points with no containing polygon), which is tiny for real crown data.
     """
-    px, py = point_xy
     # r6: points feed the PIP arm AND the residue anti-join; polygons feed
     # the PIP arm AND the kNN fallback's candidate side; `best` feeds the
     # matched arm AND the residue anti-join. All three lineages were
@@ -63,9 +61,7 @@ def containing_else_nearest(
     with owned() as o:
         points = o.keep(o.persist(points))
         polygons = o.keep(o.persist(polygons))
-        contained = pip_join(
-            points.select(point_id, px, py), polygons, cell_size, px, py, poly_wkb, poly_bounds
-        )
+        contained = pip_join(points.select(point_id, "x", "y"), polygons, cell_size, poly_wkb)
         best = o.keep(o.persist(best_per_key(
             contained.select(point_id, poly_id, area_col),
             point_id,
@@ -79,13 +75,11 @@ def containing_else_nearest(
         # (VERDICT.md r3)
         residue = points.join(best.select(point_id), point_id, "left_anti")
         nearest = knn_join(
-            residue.select(point_id, px, py),
-            polygons.select(poly_id, *center),
+            residue.select(point_id, "x", "y"),
+            polygons.select(poly_id, "cx", "cy"),
             k=1,
             left_id=point_id,
             right_id=poly_id,
-            left_xy=point_xy,
-            right_xy=center,
         ).select(point_id, poly_id).withColumn("method", F.lit("nearest"))
         return matched.unionByName(nearest)
 
@@ -132,24 +126,21 @@ def same_tag_pair_distances(
     tag_col: str,
     left_id: str,
     right_id: str,
-    left_xy: tuple[str, str] = ("x", "y"),
-    right_xy: tuple[str, str] = ("x", "y"),
     dedup_self: bool = False,
 ) -> DataFrame:
-    """J8: (tag, left_id, right_id, distance) for every equal-tag pair.
+    """J8: (tag, left_id, right_id, distance) for every equal-tag pair of
+    points (x, y).
 
     dedup_self=True treats left/right as the SAME table and emits each
     unordered pair once (left_id < right_id). Plain equi-join on the tag:
     output is Σ |tag group|² — the reference's double iterrows loop
     (delineation_utils.py:66-82) collapsed into one shuffle.
     """
-    lx, ly = left_xy
-    rx, ry = right_xy
     a = left.select(
-        tag_col, F.col(left_id).alias("__lid"), F.col(lx).alias("__lx"), F.col(ly).alias("__ly")
+        tag_col, F.col(left_id).alias("__lid"), F.col("x").alias("__lx"), F.col("y").alias("__ly")
     )
     b = right.select(
-        tag_col, F.col(right_id).alias("__rid"), F.col(rx).alias("__rx"), F.col(ry).alias("__ry")
+        tag_col, F.col(right_id).alias("__rid"), F.col("x").alias("__rx"), F.col("y").alias("__ry")
     )
     j = a.join(b, tag_col)
     if dedup_self:

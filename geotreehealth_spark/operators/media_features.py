@@ -17,66 +17,51 @@ from pyspark.sql import DataFrame
 from geotreehealth_spark import media
 
 
-def image_features(
-    refs: DataFrame,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    src_hw: tuple[int, int] = (64, 64),
-    out_hw: tuple[int, int] = (16, 16),
-) -> DataFrame:
-    """Per image: decode, bilinear-resize to out_hw, per-channel mean/std.
+def image_features(refs: DataFrame) -> DataFrame:
+    """Per image: decode at 64x64, bilinear-resize to 16x16, per-channel
+    mean/std.
 
-    Output: (id, feat: array<double> of 6 = mean_rgb + std_rgb, n_px int).
+    Output: (doc_id, feat: array<double> of 6 = mean_rgb + std_rgb, n_px int).
     """
-    schema = f"{id_col} string, feat array<double>, n_px long"
-    sh, sw = src_hw
-    oh, ow = out_hw
+    schema = "doc_id string, feat array<double>, n_px long"
+    oh, ow = 16, 16
 
     def per_batch(it):
         for pdf in it:
             ids, feats, npx = [], [], []
             for row in pdf.itertuples():
-                img = media.resolve_image(getattr(row, ref_col), sh, sw)
+                img = media.resolve_image(row.media_ref, 64, 64)
                 small = media.resize_bilinear(img, oh, ow)
                 flat = small.reshape(-1, small.shape[2])
                 feats.append(
                     np.concatenate([flat.mean(axis=0), flat.std(axis=0)]).tolist()
                 )
-                ids.append(str(getattr(row, id_col)))
+                ids.append(str(row.doc_id))
                 npx.append(oh * ow)
-            yield pd.DataFrame({id_col: ids, "feat": feats, "n_px": npx})
+            yield pd.DataFrame({"doc_id": ids, "feat": feats, "n_px": npx})
 
-    return refs.select(id_col, ref_col).mapInPandas(per_batch, schema)
+    return refs.select("doc_id", "media_ref").mapInPandas(per_batch, schema)
 
 
-def audio_features(
-    refs: DataFrame,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    n_samples: int = 16000,
-    sample_rate: int = 16000,
-    frame: int = 1024,
-    hop: int = 512,
-) -> DataFrame:
+def audio_features(refs: DataFrame, n_samples: int = 16000) -> DataFrame:
     """Per clip: windowed audio features over the decoded waveform.
 
-    Output: (id, frame_idx int, rms double, zcr double, centroid double) —
+    Output: (doc_id, frame_idx int, rms double, zcr double, centroid double) —
     one row per analysis window (the exploded layout downstream filters
     expect): RMS energy, zero-crossing rate, and FFT spectral centroid in Hz.
     Decode + framing + FFT all run vectorized inside the Arrow batch; the
     sandbox decoder is the deterministic media.resolve_audio (production
     audio decode is the decode_external hook).
     """
-    schema = f"{id_col} string, frame_idx int, rms double, zcr double, centroid double"
+    schema = "doc_id string, frame_idx int, rms double, zcr double, centroid double"
+    frame, hop = 1024, 512  # analysis window and hop (samples)
 
     def per_batch(it):
-        freqs = np.fft.rfftfreq(frame, d=1.0 / sample_rate)
+        freqs = np.fft.rfftfreq(frame, d=1.0 / media.SAMPLE_RATE)
         for pdf in it:
             ids, fidx, rms, zcr, cent = [], [], [], [], []
             for row in pdf.itertuples():
-                wave = media.resolve_audio(
-                    getattr(row, ref_col), n_samples, sample_rate
-                ).astype(np.float64)
+                wave = media.resolve_audio(row.media_ref, n_samples).astype(np.float64)
                 n_frames = max((len(wave) - frame) // hop + 1, 0)
                 if n_frames == 0:
                     continue
@@ -88,45 +73,36 @@ def audio_features(
                 denom = mag.sum(axis=1)
                 c = np.where(denom > 0, (mag * freqs[None, :]).sum(axis=1) /
                              np.where(denom > 0, denom, 1.0), 0.0)
-                ids.extend([str(getattr(row, id_col))] * n_frames)
+                ids.extend([str(row.doc_id)] * n_frames)
                 fidx.extend(range(n_frames))
                 rms.extend(e.tolist())
                 zcr.extend(z.tolist())
                 cent.extend(c.tolist())
             yield pd.DataFrame(
-                {id_col: ids, "frame_idx": fidx, "rms": rms, "zcr": zcr, "centroid": cent}
+                {"doc_id": ids, "frame_idx": fidx, "rms": rms, "zcr": zcr, "centroid": cent}
             )
 
-    return refs.select(id_col, ref_col).mapInPandas(per_batch, schema)
+    return refs.select("doc_id", "media_ref").mapInPandas(per_batch, schema)
 
 
-def frame_sample_features(
-    refs: DataFrame,
-    id_col: str = "doc_id",
-    ref_col: str = "media_ref",
-    n_frames: int = 32,
-    stride: int = 8,
-    hw: tuple[int, int] = (32, 32),
-) -> DataFrame:
-    """Per clip: sample every `stride`-th frame, per-frame channel means.
+def frame_sample_features(refs: DataFrame, n_frames: int = 32, stride: int = 8) -> DataFrame:
+    """Per clip: sample every `stride`-th 32x32 frame, per-frame channel means.
 
-    Output: (id, frame_idx int, feat array<double> of 3). One row per sampled
-    frame — the exploded layout downstream dedup/similarity ops expect.
+    Output: (doc_id, frame_idx int, feat array<double> of 3). One row per
+    sampled frame — the exploded layout downstream dedup/similarity ops expect.
     """
-    schema = f"{id_col} string, frame_idx int, feat array<double>"
-    h, w = hw
+    schema = "doc_id string, frame_idx int, feat array<double>"
+    h, w = 32, 32
 
     def per_batch(it):
         for pdf in it:
             ids, fidx, feats = [], [], []
             for row in pdf.itertuples():
-                frames = media.resolve_frames(
-                    getattr(row, ref_col), n_frames, stride, h, w
-                )
+                frames = media.resolve_frames(row.media_ref, n_frames, stride, h, w)
                 for i, fr in enumerate(frames):
-                    ids.append(str(getattr(row, id_col)))
+                    ids.append(str(row.doc_id))
                     fidx.append(i)
                     feats.append(fr.reshape(-1, 3).mean(axis=0).tolist())
-            yield pd.DataFrame({id_col: ids, "frame_idx": fidx, "feat": feats})
+            yield pd.DataFrame({"doc_id": ids, "frame_idx": fidx, "feat": feats})
 
-    return refs.select(id_col, ref_col).mapInPandas(per_batch, schema)
+    return refs.select("doc_id", "media_ref").mapInPandas(per_batch, schema)

@@ -243,10 +243,10 @@ def weighted_nms(
     priority_col: str,
     threshold: float = 0.5,
     cell_size: float = 50.0,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
 ) -> DataFrame:
     """W4 weighted NMS (batch_sam.py:692-731): score ``wscore`` = priority -
-    Σ overlap, with box IoU as the overlap (batch_sam.py:699).
+    Σ overlap, with IoU of the (xmin, ymin, xmax, ymax) boxes as the overlap
+    (batch_sam.py:699).
 
     Reference semantics: per polygon, priority (crwnpst + DBH via identity
     funcs, batch_sam.py:579-580) minus the sum of pairwise overlaps that
@@ -264,13 +264,13 @@ def weighted_nms(
     with owned() as o:
         # read by the pair join AND the scored join (r6)
         polys = o.keep(o.persist(polys))
-        slim = polys.select(id_col, *bounds)
-        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
+        slim = polys.select(id_col, "xmin", "ymin", "xmax", "ymax")
+        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size)
         # r6: ONE quadratic pair-discovery pass. The threshold-surviving pairs
         # feed BOTH the penalty aggregation and (with wscore attached per
         # endpoint by two slim id-joins) the greedy conflict edges.
         contrib = o.persist(
-            pairs.withColumn("__m", box_iou_cols(bounds=bounds))
+            pairs.withColumn("__m", box_iou_cols())
             .where(F.col("__m") > threshold)
             .select(
                 F.col(f"a_{id_col}").alias("__ida"),

@@ -81,18 +81,15 @@ def overlap_selfjoin(
     return joined.drop("__cell", "__gx", "__gy")
 
 
-def box_inter_cols(
-    prefix_a: str = "a_", prefix_b: str = "b_",
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-):
-    """Clamped intersection area of two axis-aligned boxes — the one term both
-    box criteria (and NMS's polygon prune) are built from. Pure Catalyst."""
+def box_inter_cols(bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax")):
+    """Clamped intersection area of the a_/b_-prefixed boxes — the one term
+    both box criteria (and NMS's polygon prune) are built from. Pure Catalyst."""
     x0, y0, x1, y1 = bounds
-    iw = F.least(F.col(f"{prefix_a}{x1}"), F.col(f"{prefix_b}{x1}")) - F.greatest(
-        F.col(f"{prefix_a}{x0}"), F.col(f"{prefix_b}{x0}")
+    iw = F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}")) - F.greatest(
+        F.col(f"a_{x0}"), F.col(f"b_{x0}")
     )
-    ih = F.least(F.col(f"{prefix_a}{y1}"), F.col(f"{prefix_b}{y1}")) - F.greatest(
-        F.col(f"{prefix_a}{y0}"), F.col(f"{prefix_b}{y0}")
+    ih = F.least(F.col(f"a_{y1}"), F.col(f"b_{y1}")) - F.greatest(
+        F.col(f"a_{y0}"), F.col(f"b_{y0}")
     )
     return F.greatest(iw, F.lit(0.0)) * F.greatest(ih, F.lit(0.0))
 
@@ -104,21 +101,15 @@ def _box_area(prefix: str, bounds: tuple[str, str, str, str]):
     )
 
 
-def box_iou_cols(
-    prefix_a: str = "a_", prefix_b: str = "b_",
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-):
-    """IoU of two axis-aligned boxes as a pure Catalyst expression."""
-    inter = box_inter_cols(prefix_a, prefix_b, bounds)
-    return inter / (_box_area(prefix_a, bounds) + _box_area(prefix_b, bounds) - inter)
+def box_iou_cols():
+    """IoU of the a_/b_-prefixed (xmin, ymin, xmax, ymax) boxes as a pure
+    Catalyst expression."""
+    bounds = ("xmin", "ymin", "xmax", "ymax")
+    inter = box_inter_cols(bounds)
+    return inter / (_box_area("a_", bounds) + _box_area("b_", bounds) - inter)
 
 
-def box_overlap_ratio_cols(
-    prefix_a: str = "a_", prefix_b: str = "b_",
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-):
-    """inter / max(area_a, area_b) of two axis-aligned boxes
+def box_overlap_ratio_cols(bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax")):
+    """inter / max(area_a, area_b) of the a_/b_-prefixed axis-aligned boxes
     (get_polygons.py:806-816) as a pure Catalyst expression."""
-    return box_inter_cols(prefix_a, prefix_b, bounds) / F.greatest(
-        _box_area(prefix_a, bounds), _box_area(prefix_b, bounds)
-    )
+    return box_inter_cols(bounds) / F.greatest(_box_area("a_", bounds), _box_area("b_", bounds))

@@ -34,12 +34,10 @@ def pip_join(
     points: DataFrame,
     polygons: DataFrame,
     cell_size: float = 50.0,
-    point_x: str = "x",
-    point_y: str = "y",
     poly_wkb: str | None = "geometry_wkb",
     poly_bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
 ) -> DataFrame:
-    """Inner join of points with the polygons containing them.
+    """Inner join of points (x, y) with the polygons containing them.
 
     ``polygons`` must carry bbox columns (poly_bounds). If ``poly_wkb`` is
     None the polygon is its bbox (axis-aligned, half-open [min, max) exactly
@@ -51,21 +49,19 @@ def pip_join(
     # cell keys are pure Catalyst (geo/cellexprs.py): the candidate join runs
     # whole-stage-codegen end to end; Python appears only in the exact-PIP
     # refine when poly_wkb is given
-    pts = points.withColumn(
-        "__cell", cellexprs.point_cell(F.col(point_x), F.col(point_y), cell_size)
-    )
+    pts = points.withColumn("__cell", cellexprs.point_cell(F.col("x"), F.col("y"), cell_size))
     polys = cellexprs.with_covering_cells(polygons, poly_bounds, cell_size)
 
     joined = pts.join(polys, "__cell").drop("__cell")
     # coarse bbox refine first — pure Catalyst, prunes before the UDF runs
     joined = joined.where(
-        (F.col(point_x) >= F.col(bx0))
-        & (F.col(point_x) < F.col(bx1))
-        & (F.col(point_y) >= F.col(by0))
-        & (F.col(point_y) < F.col(by1))
+        (F.col("x") >= F.col(bx0))
+        & (F.col("x") < F.col(bx1))
+        & (F.col("y") >= F.col(by0))
+        & (F.col("y") < F.col(by1))
     )
     if poly_wkb is not None:
-        joined = joined.where(pip_udf(F.col(poly_wkb), F.col(point_x), F.col(point_y)))
+        joined = joined.where(pip_udf(F.col(poly_wkb), F.col("x"), F.col("y")))
     return joined
 
 
@@ -74,20 +70,16 @@ def pip_assign_best(
     polygons: DataFrame,
     poly_id: str,
     point_id: str,
-    center: tuple[str, str] = ("cx", "cy"),
     cell_size: float = 50.0,
-    point_x: str = "x",
-    point_y: str = "y",
     poly_wkb: str | None = "geometry_wkb",
-    poly_bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    dist_col: str = "dist",
 ) -> DataFrame:
-    """J4: per polygon, the single contained point nearest the polygon center.
+    """J4: per polygon, the single contained point (x, y) nearest the polygon
+    center (cx, cy); polygons carry bbox columns (xmin, ymin, xmax, ymax).
 
     Reproduces assign_polygon_to_crown's selection semantics
     (tree_health_detection/utils.py:317: distance to crown centroid), with the
     deterministic tie-break (dist, point_id). Output: (poly_id, point_id,
-    dist_col) — one row per polygon that contains at least one point.
+    dist) — one row per polygon that contains at least one point.
 
     The pick is ``best_per_key`` on (dist asc, point_id asc), whose
     WindowGroupLimit collapses each polygon's candidates before the shuffle.
@@ -97,20 +89,15 @@ def pip_assign_best(
     # column a caller left on either side would otherwise ride the candidate
     # shuffle for nothing — at dense-forest pair counts that traffic is the
     # join's bottleneck, not the hash probe
-    pts_slim = points.select(point_id, point_x, point_y)
-    poly_cols = [poly_id, *poly_bounds, *center]
+    pts_slim = points.select(point_id, "x", "y")
+    poly_cols = [poly_id, "xmin", "ymin", "xmax", "ymax", "cx", "cy"]
     if poly_wkb is not None:
         poly_cols.append(poly_wkb)
-    polys_slim = polygons.select(*dict.fromkeys(poly_cols))
-    cands = pip_join(
-        pts_slim, polys_slim, cell_size, point_x, point_y, poly_wkb, poly_bounds
-    ).withColumn(
-        dist_col,
-        distance_expr(F.col(point_x), F.col(point_y), F.col(center[0]), F.col(center[1])),
+    polys_slim = polygons.select(*poly_cols)
+    cands = pip_join(pts_slim, polys_slim, cell_size, poly_wkb).withColumn(
+        "dist", distance_expr(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"))
     )
-    return best_per_key(
-        cands.select(poly_id, point_id, dist_col), poly_id, [dist_col, point_id]
-    )
+    return best_per_key(cands.select(poly_id, point_id, "dist"), poly_id, ["dist", point_id])
 
 
 def distance_expr(x1: Column, y1: Column, x2: Column, y2: Column) -> Column:

@@ -46,9 +46,6 @@ def stratified_split(
     df: DataFrame,
     strata_cols: list[str],
     order_cols: list,
-    fracs: tuple[float, float] = (0.7, 0.85),
-    labels: tuple[str, str, str] = ("train", "val", "test"),
-    out_col: str = "split",
 ) -> DataFrame:
     """70/15/15 stratified split on the strata columns (main.py:187-189
     train_test_split(stratify=Status x SiteID)).
@@ -56,8 +53,9 @@ def stratified_split(
     The reference uses sklearn's RNG; the engine pins a deterministic order
     (pass a pseudo-random integer-hash expression plus a unique tie-break as
     order_cols — documented deviation, SURVEY.md §7 hazard 2). Per stratum of
-    size n: rows ranked 1..n, rank <= ceil(f1*n) → labels[0], <= ceil(f2*n) →
-    labels[1], else labels[2]. One shuffle; both windows share it.
+    size n: rows ranked 1..n, rank <= ceil(0.7*n) → 'train', <= ceil(0.85*n)
+    → 'val', else 'test', in column `split`. One shuffle; both windows share
+    it.
     """
     order = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     w = Window.partitionBy(*strata_cols).orderBy(*[c.asc() for c in order])
@@ -66,8 +64,8 @@ def stratified_split(
         "__n", F.count("*").over(w_all)
     )
     split = (
-        F.when(F.col("__rn") <= F.ceil(F.lit(fracs[0]) * F.col("__n")), F.lit(labels[0]))
-        .when(F.col("__rn") <= F.ceil(F.lit(fracs[1]) * F.col("__n")), F.lit(labels[1]))
-        .otherwise(F.lit(labels[2]))
+        F.when(F.col("__rn") <= F.ceil(F.lit(0.7) * F.col("__n")), F.lit("train"))
+        .when(F.col("__rn") <= F.ceil(F.lit(0.85) * F.col("__n")), F.lit("val"))
+        .otherwise(F.lit("test"))
     )
-    return ranked.withColumn(out_col, split).drop("__rn", "__n")
+    return ranked.withColumn("split", split).drop("__rn", "__n")

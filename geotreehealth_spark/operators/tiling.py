@@ -51,16 +51,15 @@ def assign_tiles(
     df: DataFrame,
     tiles: DataFrame,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    tile_bounds: tuple[str, str, str, str] = ("txmin", "tymin", "txmax", "tymax"),
 ) -> DataFrame:
-    """J12: rows × overlapping tiles (bbox strict-overlap, broadcast join)."""
+    """J12: rows × overlapping tiles (bbox strict-overlap against the tile
+    window txmin..tymax, broadcast join)."""
     x0, y0, x1, y1 = bounds
-    tx0, ty0, tx1, ty1 = tile_bounds
     pred = (
-        (F.col(x0) < F.col(tx1))
-        & (F.col(x1) > F.col(tx0))
-        & (F.col(y0) < F.col(ty1))
-        & (F.col(y1) > F.col(ty0))
+        (F.col(x0) < F.col("txmax"))
+        & (F.col(x1) > F.col("txmin"))
+        & (F.col(y0) < F.col("tymax"))
+        & (F.col(y1) > F.col("tymin"))
     )
     return df.join(F.broadcast(tiles), pred)
 
@@ -71,28 +70,21 @@ def translate_to_window(
     y: str,
     origin_x: str,
     top_y: str,
-    out: tuple[str, str] = ("wx", "wy"),
 ) -> DataFrame:
     """P6: world → window-frame coordinates with the raster y-flip
     (get_polygons.py:540-548, 626-628; full_image_sam.py:19-27):
     wx = x - window_left, wy = window_top - y. Pure column arithmetic."""
-    return df.withColumn(out[0], F.col(x) - F.col(origin_x)).withColumn(
-        out[1], F.col(top_y) - F.col(y)
+    return df.withColumn("wx", F.col(x) - F.col(origin_x)).withColumn(
+        "wy", F.col(top_y) - F.col(y)
     )
 
 
-def boundary_filter(
-    assigned: DataFrame,
-    margin: float = 0.5,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    tile_bounds: tuple[str, str, str, str] = ("txmin", "tymin", "txmax", "tymax"),
-) -> DataFrame:
-    """P7: keep rows whose bbox stays `margin` inside the tile window."""
-    x0, y0, x1, y1 = bounds
-    tx0, ty0, tx1, ty1 = tile_bounds
+def boundary_filter(assigned: DataFrame, margin: float = 0.5) -> DataFrame:
+    """P7: keep rows whose bbox (xmin..ymax) stays `margin` inside the tile
+    window (txmin..tymax)."""
     return assigned.where(
-        (F.col(x0) >= F.col(tx0) + margin)
-        & (F.col(y0) >= F.col(ty0) + margin)
-        & (F.col(x1) <= F.col(tx1) - margin)
-        & (F.col(y1) <= F.col(ty1) - margin)
+        (F.col("xmin") >= F.col("txmin") + margin)
+        & (F.col("ymin") >= F.col("tymin") + margin)
+        & (F.col("xmax") <= F.col("txmax") - margin)
+        & (F.col("ymax") <= F.col("tymax") - margin)
     )

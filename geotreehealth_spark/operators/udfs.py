@@ -18,9 +18,6 @@ from pyspark.sql.types import BooleanType, DoubleType
 
 from geotreehealth_spark.geo import kernels, wkb
 
-# NOTE: cell encode / covering-cells / ring-cells UDFs were retired in round
-# 2 — cell arithmetic is pure Catalyst now (geo/cellexprs.py).
-
 
 @pandas_udf(BooleanType())
 def pip_udf(geom_wkb: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:

@@ -52,12 +52,12 @@ def _parts(key_col: str, items) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _grid(mn: np.ndarray, mx: np.ndarray, res: float, pad: float):
+def _grid(mn: np.ndarray, mx: np.ndarray, res: float):
     """(gx0, gy1, empty mask) of the pixel grid covering the (x, y) bounds
-    mn..mx padded by `pad`, its origin snapped to res-multiples (so
+    mn..mx padded by one unit, its origin snapped to res-multiples (so
     integer-aligned inputs rasterize exactly)."""
-    lo = mn - pad
-    hi = mx + pad
+    lo = mn - 1.0
+    hi = mx + 1.0
     gx0 = np.floor(lo[0] / res) * res
     gy1 = np.ceil(hi[1] / res) * res
     w = int(np.ceil((hi[0] - gx0) / res))
@@ -72,40 +72,31 @@ def _burn(mask: np.ndarray, ring: np.ndarray, gx0, gy1, res: float, value: bool)
         mask[rr, cc] = value
 
 
-def polygonize_masks(
-    masks: DataFrame,
-    mask_id: str = "mask_id",
-    mask_col: str = "mask_bits",
-    h_col: str = "height",
-    w_col: str = "width",
-    txmin_col: str = "txmin",
-    tymax_col: str = "tymax",
-    res: float = 1.0,
-) -> DataFrame:
+def polygonize_masks(masks: DataFrame) -> DataFrame:
     """One row per 4-connected mask component: (mask_id, part_idx, n_px,
-    area, geometry_wkb). mask_col carries np.packbits bytes of the h x w
-    boolean mask (row-major).
+    area, geometry_wkb). mask_bits carries np.packbits bytes of the
+    height x width boolean mask (row-major) at unit resolution, its top-left
+    corner at (txmin, tymax).
 
     part_idx orders components by their first pixel (row-major scan), the
     same order rasterio.features.shapes emits them.
     """
 
     def bits(row) -> np.ndarray:
-        h = int(getattr(row, h_col))
-        w = int(getattr(row, w_col))
+        h = int(row.height)
+        w = int(row.width)
         return np.unpackbits(
-            np.frombuffer(getattr(row, mask_col), dtype=np.uint8), count=h * w
+            np.frombuffer(row.mask_bits, dtype=np.uint8), count=h * w
         ).astype(bool).reshape(h, w)
 
     def per_batch(it):
         for pdf in it:
-            yield _parts(mask_id, (
-                (getattr(row, mask_id), bits(row), float(getattr(row, txmin_col)),
-                 float(getattr(row, tymax_col)), res)
+            yield _parts("mask_id", (
+                (row.mask_id, bits(row), float(row.txmin), float(row.tymax), 1.0)
                 for row in pdf.itertuples()
             ))
 
-    return masks.mapInPandas(per_batch, _parts_schema(mask_id))
+    return masks.mapInPandas(per_batch, _parts_schema("mask_id"))
 
 
 def geometric_union(
@@ -113,7 +104,6 @@ def geometric_union(
     group_col: str,
     wkb_col: str | None = "geometry_wkb",
     res: float = 1.0,
-    pad: float = 1.0,
     bounds_cols: tuple[str, str, str, str] | None = None,
 ) -> DataFrame:
     """A5: per group, the union of member polygons on the group's pixel grid.
@@ -121,7 +111,7 @@ def geometric_union(
     Output: (group_col, part_idx, n_px, area, geometry_wkb) — one row per
     connected part of the union. The grid origin snaps to res-multiples of
     the group bbox (so integer-aligned inputs are unioned EXACTLY), padded by
-    `pad` on each side.
+    one unit on each side.
 
     wkb_col=None + bounds_cols (r6): box members are their bounds rectangles
     — the rings are built from the four bound columns inside the batch
@@ -139,7 +129,7 @@ def geometric_union(
             rings = [wkb.decode_polygon(b) for b in pdf[wkb_col]]
         mn = np.array([r.min(axis=0) for r in rings]).min(axis=0)
         mx = np.array([r.max(axis=0) for r in rings]).max(axis=0)
-        gx0, gy1, mask = _grid(mn, mx, res, pad)
+        gx0, gy1, mask = _grid(mn, mx, res)
         for ring in rings:
             _burn(mask, ring, gx0, gy1, res, True)
         return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1, res)])
@@ -150,43 +140,31 @@ def geometric_union(
     )
 
 
-def geometric_difference(
-    pairs: DataFrame,
-    id_col: str,
-    a_wkb: str = "a_wkb",
-    b_wkb: str = "b_wkb",
-    res: float = 1.0,
-    pad: float = 1.0,
-) -> DataFrame:
-    """Per row, A \\ B on the pixel grid (shapely difference,
+def geometric_difference(pairs: DataFrame, id_col: str) -> DataFrame:
+    """Per row, a_wkb \\ b_wkb on the unit pixel grid (shapely difference,
     delineation_utils.py cleanup/batch_sam.py:534-537): rasterize both,
     AND-NOT the masks, polygonize the remainder. Output one row per
     connected part: (id, part_idx, n_px, area, geometry_wkb); rows whose
     difference is empty produce no output."""
 
     def diff(row):
-        ra = wkb.decode_polygon(getattr(row, a_wkb))
-        rb = wkb.decode_polygon(getattr(row, b_wkb))
+        ra = wkb.decode_polygon(row.a_wkb)
+        rb = wkb.decode_polygon(row.b_wkb)
         mn = np.minimum(ra.min(axis=0), rb.min(axis=0))
         mx = np.maximum(ra.max(axis=0), rb.max(axis=0))
-        gx0, gy1, mask = _grid(mn, mx, res, pad)
-        _burn(mask, ra, gx0, gy1, res, True)
-        _burn(mask, rb, gx0, gy1, res, False)
-        return getattr(row, id_col), mask, gx0, gy1, res
+        gx0, gy1, mask = _grid(mn, mx, 1.0)
+        _burn(mask, ra, gx0, gy1, 1.0, True)
+        _burn(mask, rb, gx0, gy1, 1.0, False)
+        return getattr(row, id_col), mask, gx0, gy1, 1.0
 
     def per_batch(it):
         for pdf in it:
             yield _parts(id_col, (diff(row) for row in pdf.itertuples()))
 
-    return pairs.select(id_col, a_wkb, b_wkb).mapInPandas(per_batch, _parts_schema(id_col))
+    return pairs.select(id_col, "a_wkb", "b_wkb").mapInPandas(per_batch, _parts_schema(id_col))
 
 
-def overlay_intersection(
-    pairs: DataFrame,
-    id_col: str,
-    a_wkb: str = "a_wkb",
-    b_wkb: str = "b_wkb",
-) -> DataFrame:
+def overlay_intersection(pairs: DataFrame, id_col: str) -> DataFrame:
     """J10 exact overlay: per row, the intersection GEOMETRY of two arbitrary
     simple polygons (reference gpd.overlay(how='intersection') over
     partitions, delineation_utils.py:108-109,161-163). Output one row per
@@ -201,8 +179,8 @@ def overlay_intersection(
         for pdf in it:
             out = {id_col: [], "part_idx": [], "area": [], "geometry_wkb": []}
             for row in pdf.itertuples():
-                ra = wkb.decode_polygon(getattr(row, a_wkb))
-                rb = wkb.decode_polygon(getattr(row, b_wkb))
+                ra = wkb.decode_polygon(row.a_wkb)
+                rb = wkb.decode_polygon(row.b_wkb)
                 for i, ring in enumerate(kernels.polygon_intersection_parts(ra, rb)):
                     out[id_col].append(getattr(row, id_col))
                     out["part_idx"].append(i)
@@ -210,7 +188,7 @@ def overlay_intersection(
                     out["geometry_wkb"].append(wkb.encode_polygon(ring))
             yield pd.DataFrame(out)
 
-    return pairs.select(id_col, a_wkb, b_wkb).mapInPandas(per_batch, schema)
+    return pairs.select(id_col, "a_wkb", "b_wkb").mapInPandas(per_batch, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -238,14 +216,13 @@ def _multi_parts_udf(buf: pd.Series) -> pd.Series:
     return pd.Series([wkb.split_multipolygon(b) for b in buf])
 
 
-def explode_multi(
-    df: DataFrame, wkb_col: str = "geometry_wkb", part_col: str = "part_wkb"
-) -> DataFrame:
+def explode_multi(df: DataFrame) -> DataFrame:
     """P8 Multi→single explode (delineation_utils.py:93-104 gdf.explode()):
-    one output row per Polygon part, with `part_idx` ordering parts as stored.
+    one output row per Polygon part of geometry_wkb, as (part_idx, part_wkb)
+    with `part_idx` ordering parts as stored.
     Plain Polygons pass through as their own single part. Point rows should be
     filtered out beforehand with geometry_type_col (the reference's
     geometry-type filter, delineation_utils.py:258-272)."""
     return df.select(
-        "*", F.posexplode(_multi_parts_udf(F.col(wkb_col))).alias("part_idx", part_col)
+        "*", F.posexplode(_multi_parts_udf(F.col("geometry_wkb"))).alias("part_idx", "part_wkb")
     )

@@ -39,15 +39,13 @@ def scan_parquet(
 def scan_csv(
     spark: SparkSession,
     paths: str | list[str],
-    header: bool = True,
-    renames: dict[str, str] | None = None,
     schema: dict[str, str] | None = None,
 ) -> DataFrame:
-    """CSV directory scan (labels / field survey, S3)."""
+    """CSV directory scan (labels / field survey, S3); files carry a header."""
     if isinstance(paths, str):
         paths = [paths]
-    df = spark.read.option("header", str(header).lower()).csv(paths)
-    return _apply_contract(df, renames, schema)
+    df = spark.read.option("header", "true").csv(paths)
+    return _apply_contract(df, None, schema)
 
 
 def _apply_contract(

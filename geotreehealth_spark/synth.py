@@ -212,7 +212,7 @@ def crowns(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(CROWNS_BBOX_SQL)
 
 
-def plots(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
+def plots(spark: SparkSession) -> DataFrame:
     return spark.sql(PLOTS_SQL_SPARK)
 
 

@@ -32,9 +32,9 @@ def _count_word(text_col: Column, word: str) -> Column:
     return F.floor(removed / len(needle)).cast("int")
 
 
-def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def text_stats(docs: DataFrame) -> DataFrame:
     """n_chars / n_words / avg word length / punctuation ratio / quality score."""
-    t = F.col(text_col)
+    t = F.col("text")
     n_chars = F.length(t)
     n_words = F.size(F.split(F.trim(t), r"\s+"))
     n_punct = F.length(t) - F.length(F.regexp_replace(t, r"[\.,;:!\?]", ""))
@@ -46,7 +46,7 @@ def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
         .otherwise(1.0)
     )
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.cast("long").alias("n_chars"),
         n_words.cast("long").alias("n_words"),
         n_punct.cast("long").alias("n_punct"),
@@ -55,9 +55,9 @@ def text_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     )
 
 
-def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: argmax of marker-word counts (ties → lang name asc)."""
-    t = F.col(text_col)
+    t = F.col("text")
     scores = [
         F.struct(
             sum(_count_word(t, w) for w in words).alias("score"),
@@ -73,21 +73,21 @@ def lang_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         lambda acc, s: F.when(s.score > acc.score, s).otherwise(acc),
     )
     return docs.select(
-        F.col(id_col), best.score.alias("lang_score"), best.lang.alias("lang_pred")
+        F.col("doc_id"), best.score.alias("lang_score"), best.lang.alias("lang_pred")
     )
 
 
-def token_count(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def token_count(docs: DataFrame) -> DataFrame:
     """Whitespace tokens + a BPE-ish proxy (~chars/4 ceiling), both JVM-side."""
-    t = F.col(text_col)
+    t = F.col("text")
     ws = F.size(F.split(F.trim(t), r"\s+"))
     bpe_ish = F.ceil(F.length(t) / F.lit(4.0)).cast("long")
     return docs.select(
-        F.col(id_col), ws.cast("long").alias("ws_tokens"), bpe_ish.alias("bpe_tokens_est")
+        F.col("doc_id"), ws.cast("long").alias("ws_tokens"), bpe_ish.alias("bpe_tokens_est")
     )
 
 
-def fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Normalized-content fingerprint: md5 of lower + whitespace-collapsed text."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
-    return docs.select(F.col(id_col), F.md5(norm).alias("fp"))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    return docs.select(F.col("doc_id"), F.md5(norm).alias("fp"))

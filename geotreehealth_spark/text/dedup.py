@@ -58,30 +58,28 @@ def _hash60_duck(col: str) -> str:
     return f"CAST('0x' || substr(md5({col}), 1, 15) AS BIGINT)"
 
 
-def tokens_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct (id, token) pairs, whitespace tokenization, lowercased."""
+def tokens_df(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, token) pairs, whitespace tokenization, lowercased."""
     return (
         docs.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("token"),
+            F.col("doc_id"),
+            F.explode(F.split(F.lower(F.col("text")), r"\s+")).alias("token"),
         )
         .where(F.col("token") != "")
         .distinct()
     )
 
 
-def shingles_df(
-    docs: DataFrame, n: int = 4, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Distinct (id, shingle) pairs: overlapping character n-grams of the
+def shingles_df(docs: DataFrame, n: int) -> DataFrame:
+    """Distinct (doc_id, shingle) pairs: overlapping character n-grams of the
     lowercased text — pure Catalyst (sequence + transform + explode), no
     Python. Texts shorter than n yield no shingles."""
     grams = F.expr(
-        f"transform(sequence(1, greatest(length(lower({text_col})) - {n - 1}, 0)), "
-        f"i -> substr(lower({text_col}), i, {n}))"
+        f"transform(sequence(1, greatest(length(lower(text)) - {n - 1}, 0)), "
+        f"i -> substr(lower(text), i, {n}))"
     )
     return (
-        docs.select(F.col(id_col), F.explode(grams).alias("shingle"))
+        docs.select(F.col("doc_id"), F.explode(grams).alias("shingle"))
         .where(F.length("shingle") == n)
         .distinct()
     )
@@ -109,9 +107,9 @@ def _self_pairs(
 
 
 def _set_jaccard(
-    sets: DataFrame, elem: str, threshold: float, id_col: str, max_df: int | None
+    sets: DataFrame, elem: str, threshold: float, max_df: int | None
 ) -> DataFrame:
-    """Pairs (id_a < id_b, jaccard >= threshold) of the distinct (id, elem)
+    """Pairs (id_a < id_b, jaccard >= threshold) of the distinct (doc_id, elem)
     sets — the inverted-index plan: posting lists drive the self-join and
     |A∩B| / (|A|+|B|-|A∩B|) is computed JVM-side.
 
@@ -124,14 +122,14 @@ def _set_jaccard(
         hot = sets.groupBy(elem).count().where(F.col("count") > max_df).select(elem)
         sets = sets.join(F.broadcast(hot), elem, "left_anti")
     inter = (
-        _self_pairs(sets, id_col, [elem])
+        _self_pairs(sets, "doc_id", [elem])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("__inter"))
     )
-    sizes = sets.groupBy(id_col).agg(F.count("*").alias("__sz"))
+    sizes = sets.groupBy("doc_id").agg(F.count("*").alias("__sz"))
     return (
-        inter.join(sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("__sz", "__sa"), "id_a")
-        .join(sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("__sz", "__sb"), "id_b")
+        inter.join(sizes.withColumnRenamed("doc_id", "id_a").withColumnRenamed("__sz", "__sa"), "id_a")
+        .join(sizes.withColumnRenamed("doc_id", "id_b").withColumnRenamed("__sz", "__sb"), "id_b")
         .withColumn(
             "jaccard",
             F.col("__inter") / (F.col("__sa") + F.col("__sb") - F.col("__inter")),
@@ -145,8 +143,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 4,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with character-n-gram-set Jaccard >=
@@ -155,30 +151,26 @@ def ngram_jaccard_pairs(
     inverted-index plan: shingle posting lists drive a bucketed self-join,
     max_df caps stop-shingles, Jaccard computed over the post-filter shingle
     universe (mirrored by the SQL oracle)."""
-    return _set_jaccard(
-        shingles_df(docs, n, id_col, text_col), "shingle", threshold, id_col, max_df
-    )
+    return _set_jaccard(shingles_df(docs, n), "shingle", threshold, max_df)
 
 
-def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Groups of byte-identical texts: (text_hash, n_docs, keeper_id)."""
     return (
-        docs.select(F.col(id_col), F.md5(F.col(text_col)).alias("text_hash"))
+        docs.select(F.col("doc_id"), F.md5(F.col("text")).alias("text_hash"))
         .groupBy("text_hash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper_id"))
     )
 
 
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int | None = None,
 ) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with word-set Jaccard >= threshold;
     max_df caps stop-tokens (see _set_jaccard)."""
-    return _set_jaccard(tokens_df(docs, id_col, text_col), "token", threshold, id_col, max_df)
+    return _set_jaccard(tokens_df(docs), "token", threshold, max_df)
 
 
 def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:
@@ -192,13 +184,11 @@ def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def _minhash_agg(
-    docs: DataFrame, n_perm: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, __m0..__m{n-1}) min-hash columns: one shuffle, all JVM codegen."""
+def _minhash_agg(docs: DataFrame, n_perm: int) -> DataFrame:
+    """(doc_id, __m0..__m{n-1}) min-hash columns: one shuffle, all JVM codegen."""
     a, b = _perm_params(n_perm)
-    toks = tokens_df(docs, id_col, text_col).select(
-        id_col, (token_hash60(F.col("token")) % F.lit(P31)).alias("__h")
+    toks = tokens_df(docs).select(
+        "doc_id", (token_hash60(F.col("token")) % F.lit(P31)).alias("__h")
     )
     aggs = [
         F.min((F.lit(int(a[i])) * F.col("__h") + F.lit(int(b[i]))) % F.lit(P31)).alias(
@@ -206,16 +196,14 @@ def _minhash_agg(
         )
         for i in range(n_perm)
     ]
-    return toks.groupBy(id_col).agg(*aggs)
+    return toks.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(
-    docs: DataFrame, n_perm: int = 64, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, signature: array<long>) — docs with zero tokens are absent."""
-    sig = _minhash_agg(docs, n_perm, id_col, text_col)
+def minhash_signatures(docs: DataFrame, n_perm: int = 64) -> DataFrame:
+    """(doc_id, signature: array<long>) — docs with zero tokens are absent."""
+    sig = _minhash_agg(docs, n_perm)
     return sig.select(
-        id_col, F.array(*[F.col(f"__m{i}") for i in range(n_perm)]).alias("signature")
+        "doc_id", F.array(*[F.col(f"__m{i}") for i in range(n_perm)]).alias("signature")
     )
 
 
@@ -223,8 +211,6 @@ def minhash_lsh_pairs(
     docs: DataFrame,
     n_perm: int = 64,
     bands: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded LSH on MinHash signatures.
 
@@ -234,17 +220,17 @@ def minhash_lsh_pairs(
     aggregate output (not a UDF), so band extraction re-reads agg columns
     instead of re-running any kernel — no checkpoint needed."""
     rows = n_perm // bands
-    sig = _minhash_agg(docs, n_perm, id_col, text_col)
+    sig = _minhash_agg(docs, n_perm)
     band_exprs = [
         F.md5(F.concat_ws(",", *[F.col(f"__m{bi * rows + j}") for j in range(rows)]))
         for bi in range(bands)
     ]
     banded = sig.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.array(*band_exprs)).alias("band_idx", "band_hash"),
     )
     return (
-        _self_pairs(banded, id_col, ["band_idx", "band_hash"])
+        _self_pairs(banded, "doc_id", ["band_idx", "band_hash"])
         .select("id_a", "id_b")
         .distinct()
     )
@@ -279,19 +265,15 @@ FROM bands a JOIN bands b
 """
 
 
-def simhash_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, simhash) — 60-bit SimHash by majority bit vote over token hashes.
+def simhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash) — 60-bit SimHash by majority bit vote over token hashes.
 
     All JVM: per-bit vote sums are 60 aggregate expressions over the exploded
     token stream (map-side partial aggregation keeps the shuffle at one 60-long
     row per doc per mapper), then the hash assembles as Σ 2^i·[vote_i > 0].
     60 bits keeps every intermediate positive int64 in both dialects."""
-    toks = tokens_df(docs, id_col, text_col).select(
-        id_col, token_hash60(F.col("token")).alias("__h")
-    )
-    votes = toks.groupBy(id_col).agg(
+    toks = tokens_df(docs).select("doc_id", token_hash60(F.col("token")).alias("__h"))
+    votes = toks.groupBy("doc_id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
@@ -306,7 +288,7 @@ def simhash_signatures(
             for i in range(SIMHASH_BITS)
         ],
     )
-    return votes.select(id_col, sim.cast("long").alias("simhash"))
+    return votes.select("doc_id", sim.cast("long").alias("simhash"))
 
 
 def _simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
@@ -329,9 +311,7 @@ def _simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
     return layout
 
 
-def simhash_dedup_pairs(
-    docs: DataFrame, max_hamming: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance <= max_hamming — EXACT
     recall: blocked on max_hamming+1 chunks (pigeonhole), refined by
     bit_count(xor) JVM-side. Output: (id_a, id_b, hamming:int)."""
@@ -340,13 +320,13 @@ def simhash_dedup_pairs(
         F.shiftright(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
         for off, w in layout
     ]
-    chunks = simhash_signatures(docs, id_col, text_col).select(
-        id_col,
+    chunks = simhash_signatures(docs).select(
+        "doc_id",
         F.col("simhash").alias("sh"),
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk"),
     )
     pairs = (
-        _self_pairs(chunks, id_col, ["chunk_idx", "chunk"], carry=("sh",))
+        _self_pairs(chunks, "doc_id", ["chunk_idx", "chunk"], carry=("sh",))
         .select("id_a", "id_b", "sh_a", "sh_b")
         .distinct()
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"))

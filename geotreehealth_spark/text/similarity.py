@@ -73,7 +73,7 @@ def _fmt_d(x: float) -> str:
 
 def _dot_lits_sql(vec: str, coeffs) -> str:
     """SQL text of _dot(transform(vec, cast-to-double), array(<coeffs>)) —
-    the exact fold tree `_bucket_col`/`_ivf_listed` used to build per-literal."""
+    the same fold tree _dot builds, parsed in one call."""
     lits = ", ".join(_fmt_d(c) for c in coeffs)
     return (
         f"aggregate(zip_with(transform(`{vec}`, x -> CAST(x AS DOUBLE)), "
@@ -85,8 +85,6 @@ def cosine_topk(
     embeddings: DataFrame,
     probes: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k cosine neighbors per probe (excluding self).
 
@@ -95,19 +93,19 @@ def cosine_topk(
     (probe_id, id, sim) — at |emb| x |probes| candidate volume the shuffle
     carries ~24 bytes/row instead of the two 64-float vectors."""
     e = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__v"),
+        F.col("vec_id"),
+        F.transform(F.col("embedding"), lambda v: v.cast("double")).alias("__v"),
     ).withColumn("__n", _norm(F.col("__v")))
     p = (
         probes.select(
-            F.col(id_col).alias("probe_id"),
-            F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("__pv"),
+            F.col("vec_id").alias("probe_id"),
+            F.transform(F.col("embedding"), lambda v: v.cast("double")).alias("__pv"),
         )
         .withColumn("__pn", _norm(F.col("__pv")))
     )
-    joined = e.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
+    joined = e.join(F.broadcast(p), F.col("vec_id") != F.col("probe_id"))
     sim = _dot(F.col("__pv"), F.col("__v")) / (F.col("__pn") * F.col("__n"))
-    scored = joined.select("probe_id", F.col(id_col).alias("neighbor_id"), sim.alias("sim"))
+    scored = joined.select("probe_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
     return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
 
 
@@ -121,30 +119,27 @@ def rp_planes(dim: int, n_tables: int, n_planes: int) -> np.ndarray:
     return rng.standard_normal((n_tables, n_planes, dim))
 
 
-def _bucket_sql(vec_col: str, table_planes: np.ndarray) -> str:
-    """Sign-bit bucket of one table: Σ 2^j · [dot(vec, plane_j) >= 0] — the
-    SQL-text twin of the retired fold-based _bucket_col (same left-associated
-    dot chains, same when/otherwise null handling via CASE)."""
+def _bucket_sql(table_planes: np.ndarray) -> str:
+    """Sign-bit bucket of one table: Σ 2^j · [dot(embedding, plane_j) >= 0]
+    (left-associated dot chains; a NULL dot takes the CASE's ELSE 0)."""
     bits = " + ".join(
-        f"(CASE WHEN ({_dot_lits_sql(vec_col, table_planes[j])}) >= 0 "
+        f"(CASE WHEN ({_dot_lits_sql('embedding', table_planes[j])}) >= 0 "
         f"THEN {1 << j} ELSE 0 END)"
         for j in range(table_planes.shape[0])
     )
     return f"CAST({bits} AS BIGINT)"
 
 
-def _bucketed(
-    df: DataFrame, planes: np.ndarray, id_col: str, vec_col: str, id_alias: str
-) -> DataFrame:
+def _bucketed(df: DataFrame, planes: np.ndarray, id_alias: str) -> DataFrame:
     """(id_alias, table_idx, bucket) — one row per (row, table). The bucket
     array is ONE parsed SQL expression: 48 literal dot products built as text
     cost one py4j round trip instead of ~3000 (r6 profile: the fold builders
     spent 5+ s of pure driver time per LSH query constructing this plan)."""
     arr = "array(" + ", ".join(
-        _bucket_sql(vec_col, planes[t]) for t in range(planes.shape[0])
+        _bucket_sql(planes[t]) for t in range(planes.shape[0])
     ) + ")"
     return df.select(
-        F.col(id_col).alias(id_alias),
+        F.col("vec_id").alias(id_alias),
         F.posexplode(F.expr(arr)).alias("table_idx", "bucket"),
     )
 
@@ -154,8 +149,6 @@ def rp_lsh_pairs(
     dim: int,
     n_tables: int = 8,
     n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     min_sim: float = 0.25,
 ) -> DataFrame:
     """Near-dup pairs: same bucket in ANY of the n_tables (OR-amplification),
@@ -166,14 +159,12 @@ def rp_lsh_pairs(
     48-dot bucket pipeline never re-runs per join side."""
     planes = rp_planes(dim, n_tables, n_planes)
     cand = (
-        _self_pairs(
-            _bucketed(embeddings, planes, id_col, vec_col, id_col), id_col, ["table_idx", "bucket"]
-        )
+        _self_pairs(_bucketed(embeddings, planes, "vec_id"), "vec_id", ["table_idx", "bucket"])
         .select("id_a", "id_b")
         .distinct()
     )
-    ea = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
-    eb = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
+    ea = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
+    eb = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
     return (
         cand.join(ea, "id_a")
         .join(eb, "id_b")
@@ -190,8 +181,6 @@ def ann_lsh_topk(
     dim: int = 64,
     n_tables: int = 8,
     n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Bucketed ANN: LSH candidate generation + exact cosine re-rank.
 
@@ -201,18 +190,16 @@ def ann_lsh_topk(
     the candidate set. Results are the exact top-k OF THE CANDIDATE SET (ANN
     semantics); the oracle replicates the buckets so the gate is exact."""
     planes = rp_planes(dim, n_tables, n_planes)
-    eb = _bucketed(embeddings, planes, id_col, vec_col, "neighbor_id")
-    pb = _bucketed(probes, planes, id_col, vec_col, "probe_id")
+    eb = _bucketed(embeddings, planes, "neighbor_id")
+    pb = _bucketed(probes, planes, "probe_id")
     cand = (
         eb.join(F.broadcast(pb), ["table_idx", "bucket"])
         .where(F.col("neighbor_id") != F.col("probe_id"))
         .select("probe_id", "neighbor_id")
         .distinct()
     )
-    e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
-    )
-    p = probes.select(F.col(id_col).alias("probe_id"), F.col(vec_col).alias("__pv"))
+    e = embeddings.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__v"))
+    p = probes.select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("__pv"))
     scored = (
         cand.join(e, "neighbor_id")
         .join(F.broadcast(p), "probe_id")
@@ -240,9 +227,6 @@ def train_ivf_centroids(
     dim: int = 64,
     n_lists: int = 16,
     iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    init: np.ndarray | None = None,
 ) -> np.ndarray:
     """Spherical k-means (Lloyd's) coarse quantizer, trained distributedly.
 
@@ -254,14 +238,14 @@ def train_ivf_centroids(
     combinable, no explode — n_lists x (dim+1) doubles cross the shuffle,
     nothing else) and an n_lists-row collect. Update = per-list mean
     re-normalized to the unit sphere (cosine IVF); empty lists keep their
-    previous centroid. Init defaults to the seeded `ivf_centroids` draw so
+    previous centroid. Init is the seeded `ivf_centroids` draw so
     training is reproducible run-to-run (up to float-sum association order
     across partitions — why the ORACLE-gated path keeps the seeded literals
     and the trained path is pytest-gated on recall instead).
     """
-    cents = (init if init is not None else ivf_centroids(dim, n_lists)).copy()
+    cents = ivf_centroids(dim, n_lists)
     for _ in range(iters):
-        assigned = _ivf_listed(embeddings, cents, 1, id_col, vec_col, "__id", "__v")
+        assigned = _ivf_listed(embeddings, cents, 1, "__id", "__v")
         rows = (
             assigned.groupBy("list_id")
             .agg(
@@ -285,8 +269,6 @@ def _ivf_listed(
     df: DataFrame,
     cents: np.ndarray,
     n_keep: int,
-    id_col: str,
-    vec_col: str,
     id_alias: str,
     vec_alias: str,
 ) -> DataFrame:
@@ -297,13 +279,13 @@ def _ivf_listed(
     array is ONE parsed SQL expression (r6): the per-literal builder cost
     ~1 s of driver time per call for the 16x64 centroid constants."""
     entries = "array(" + ", ".join(
-        f"named_struct('ns', -({_dot_lits_sql(vec_col, cents[j])}), 'list_id', {j})"
+        f"named_struct('ns', -({_dot_lits_sql('embedding', cents[j])}), 'list_id', {j})"
         for j in range(cents.shape[0])
     ) + ")"
     top = F.expr(f"slice(sort_array({entries}), 1, {int(n_keep)})")
     return df.select(
-        F.col(id_col).alias(id_alias),
-        F.col(vec_col).alias(vec_alias),
+        F.col("vec_id").alias(id_alias),
+        F.col("embedding").alias(vec_alias),
         F.explode(top).alias("__e"),
     ).select(id_alias, vec_alias, F.col("__e.list_id").alias("list_id"))
 
@@ -315,8 +297,6 @@ def ann_ivf_topk(
     dim: int = 64,
     n_lists: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF ANN: inverted-file candidate generation + exact cosine re-rank.
@@ -331,8 +311,8 @@ def ann_ivf_topk(
     ``centroids``: trained coarse quantizer (train_ivf_centroids); defaults
     to the seeded deterministic draw so the SQL oracle's literals match."""
     cents = centroids if centroids is not None else ivf_centroids(dim, n_lists)
-    e = _ivf_listed(embeddings, cents, 1, id_col, vec_col, "neighbor_id", "__v")
-    p = _ivf_listed(probes, cents, nprobe, id_col, vec_col, "probe_id", "__pv")
+    e = _ivf_listed(embeddings, cents, 1, "neighbor_id", "__v")
+    p = _ivf_listed(probes, cents, nprobe, "probe_id", "__pv")
     # No broadcast hint on the probe side: probes fan out nprobe-x with full
     # dim-wide vectors, so at north-star probe cardinality a forced broadcast
     # is a driver-OOM risk (same rationale that removed the matching.py hint,

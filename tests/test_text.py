@@ -122,7 +122,7 @@ def test_rp_lsh_buckets_match_numpy(spark):
     """Engine bucket bits == numpy sign bits from the same plane constants."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").limit(30)
     planes = similarity.rp_planes(64, n_tables=3, n_planes=5)
-    got = similarity._bucketed(emb, planes, "vec_id", "embedding", "id").toPandas()
+    got = similarity._bucketed(emb, planes, "id").toPandas()
     pdf = emb.toPandas()
     M = np.asarray(pdf.embedding.tolist(), dtype=np.float64)
     for t in range(3):
