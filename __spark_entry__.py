@@ -200,7 +200,7 @@ def q_zonal_lidar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     crowns = synth.crowns(spark, sf_dir).select(
         "crown_id", "xmin", "ymin", "xmax", "ymax"
     )
-    docs = generator.lidar_to_docs(synth.tiles(spark, sf_dir), n_points=1000)
+    docs = generator.lidar_to_docs(synth.tiles(spark), n_points=1000)
     pts = media.load_lidar_points(decode.decode_lidar(docs))
     return _z_stats(pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None))
 
@@ -238,7 +238,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_tiles"))
         )
         # stage 4: zonal LiDAR stats via the laz:// media_ref docs path (S6/A7)
-        docs = generator.lidar_to_docs(synth.tiles(spark, sf_dir), n_points=1000)
+        docs = generator.lidar_to_docs(synth.tiles(spark), n_points=1000)
         pts = media.load_lidar_points(decode.decode_lidar(docs))
         # (the final select keeps n_pts and z_mean; Catalyst prunes z_min/z_max)
         zl = _z_stats(pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None))

@@ -1,6 +1,6 @@
 """Decode typed entity views from the interleaved docs table.
 
-docs → filter by meta routing span → project attr/geom/raster spans into typed
+docs → filter by meta routing span → project attr/geom/lidar spans into typed
 columns (SURVEY.md §1.3: "docs → explode(spans) → pivot by kind → typed
 table"). Span access uses JVM-side array/struct expressions (F.filter /
 element_at) — the only Python is the vectorized WKB decode.
@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
-from geotreehealth_spark.docs.generator import ATTR_FIELDS, ring_bounds_udf
+from geotreehealth_spark.docs.generator import ATTR_FIELDS
 from geotreehealth_spark.geo import wkb
 
 
@@ -67,36 +67,6 @@ def decode_stems(docs: DataFrame) -> DataFrame:
     )
     return (
         d.withColumn("x", F.col("__xy")[0]).withColumn("y", F.col("__xy")[1]).drop("__xy")
-    )
-
-
-def decode_crowns(docs: DataFrame) -> DataFrame:
-    """docs → crowns view with polygon WKB + bounds columns."""
-    d = docs.where(_meta_table() == "crowns")
-    d = d.select(
-        *_attr_columns("crowns"),
-        F.unhex(_span_of_kind("geom").media_ref).alias("geometry_wkb"),
-    )
-    d = d.withColumn("__b", ring_bounds_udf(F.col("geometry_wkb")))
-    return (
-        d.withColumn("gxmin", F.col("__b")[0])
-        .withColumn("gymin", F.col("__b")[1])
-        .withColumn("gxmax", F.col("__b")[2])
-        .withColumn("gymax", F.col("__b")[3])
-        .drop("__b")
-    )
-
-
-def decode_tiles(docs: DataFrame) -> DataFrame:
-    """docs → tile manifest with raster media_ref + parsed raster meta."""
-    d = docs.where(_meta_table() == "tiles")
-    raster = _span_of_kind("raster")
-    return d.select(
-        *_attr_columns("tiles"),
-        raster.media_ref.alias("media_ref"),
-        F.regexp_extract(raster.text, r"bands=(\d+)", 1).cast("int").alias("bands"),
-        F.regexp_extract(raster.text, r"h=(\d+)", 1).cast("int").alias("height"),
-        F.regexp_extract(raster.text, r"w=(\d+)", 1).cast("int").alias("width"),
     )
 
 

@@ -2,15 +2,15 @@
 
 Builds the docs table FROM the synth-derived entity views with pure DataFrame
 ops: attribute payloads become an `attr` span (header-free CSV fragment, like
-the reference's labels CSV rows, store_data_structures.py:174-183), geometries
-become a `geom` span carrying hex WKB in media_ref (reference GPKG geometries,
-delineation_pipeline.py:64,177), raster/lidar tiles become `raster`/`lidar`
-spans with hsi:// media refs (reference GeoTIFF/LAZ paths,
-store_data_structures.py:176-178). A `meta` span routes rows to tables.
+the reference's labels CSV rows, store_data_structures.py:174-183), stem
+points become a `geom` span carrying hex WKB in media_ref (reference GPKG
+geometries, delineation_pipeline.py:64,177), LiDAR tiles become `lidar` spans
+with laz:// media refs (reference LAZ paths, store_data_structures.py:176-178).
+A `meta` span routes rows to tables.
 
-Crown geometries are irregular convex polygons generated deterministically
-from crown_key (star vertices → convex hull) — exercising the real WKB path
-that the box-based SQL oracles cannot.
+crowns_with_geometry gives crowns irregular convex polygons generated
+deterministically from crown_key (star vertices → convex hull) — exercising
+the real WKB path that the box-based SQL oracles cannot.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BinaryType, DoubleType, StructField, StructType
+from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
 
 from geotreehealth_spark import media
 from geotreehealth_spark.geo import kernels, wkb
@@ -31,18 +31,15 @@ SPAN_SCHEMA = (
 # The attr span's CSV layout per doc table: (column, Spark type) in field
 # order. _attr_csv writes it and decode reads it back; a None type keeps the
 # field a string.
-_TILE_FIELDS = (
-    ("tile_id", None), ("txmin", "double"), ("tymin", "double"),
-    ("txmax", "double"), ("tymax", "double"),
-)
 ATTR_FIELDS = {
     "stems": (
         ("stem_tag", None), ("dbh", "double"), ("year", "int"),
         ("status", None), ("crown_position", "int"), ("fad", None),
     ),
-    "crowns": (("crown_id", None), ("score", "double"), ("stem_tag", None), ("selected", "boolean")),
-    "tiles": _TILE_FIELDS,
-    "lidar": _TILE_FIELDS,
+    "lidar": (
+        ("tile_id", None), ("txmin", "double"), ("tymin", "double"),
+        ("txmax", "double"), ("tymax", "double"),
+    ),
 }
 
 
@@ -152,12 +149,6 @@ def two_box_multi_udf(
     return pd.Series(out)
 
 
-@F.pandas_udf(ArrayType(DoubleType()))
-def ring_bounds_udf(geom: pd.Series) -> pd.Series:
-    xmin, ymin, xmax, ymax = wkb.polygon_bounds(list(geom))
-    return pd.Series(np.stack([xmin, ymin, xmax, ymax], axis=1).tolist())
-
-
 @F.pandas_udf(BinaryType())
 def point_wkb_udf(x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(wkb.encode_points(x.to_numpy(), y.to_numpy()))
@@ -203,43 +194,10 @@ def stems_to_docs(stems: DataFrame) -> DataFrame:
     )
 
 
-def crowns_to_docs(crowns_geo: DataFrame) -> DataFrame:
-    """One doc per crown: meta + attr + geom(polygon WKB hex) spans."""
-    attr_csv = _attr_csv("crowns")
-    geom_hex = F.lower(F.hex(F.col("geometry_wkb")))
-    return crowns_geo.select(
-        F.concat(F.lit("crown-"), F.col("crown_id")).alias("doc_id"),
-        F.array(
-            _span(F.lit("meta"), F.lit("table=crowns;site=ALL"), "", 0),
-            _span(F.lit("attr"), attr_csv, "", 1),
-            _span(F.lit("geom"), "", geom_hex, 2),
-        ).alias("spans"),
-    )
-
-
-def tiles_to_docs(tiles: DataFrame) -> DataFrame:
-    """One doc per raster tile: meta + attr(bounds CSV) + raster(media_ref)
-    span of a 12-band 100x100 float32 tile."""
-    attr_csv = _attr_csv("tiles")
-    return tiles.select(
-        F.concat(F.lit("tile-"), F.col("tile_id")).alias("doc_id"),
-        F.array(
-            _span(F.lit("meta"), F.lit("table=tiles;site=ALL"), "", 0),
-            _span(F.lit("attr"), attr_csv, "", 1),
-            _span(
-                F.lit("raster"),
-                F.lit("bands=12;h=100;w=100;dtype=float32"),
-                F.concat(F.lit(media.HSI_PREFIX), F.col("tile_id")),
-                2,
-            ),
-        ).alias("spans"),
-    )
-
-
 def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
     """One doc per LiDAR tile: meta + attr(bounds CSV) + lidar(laz:// ref)
-    span — the S6 media_ref twin of tiles_to_docs (reference keeps per-tile
-    point-cloud paths in its labels CSV, store_data_structures.py:174-183)."""
+    span (the S6 media_ref path; the reference keeps per-tile point-cloud
+    paths in its labels CSV, store_data_structures.py:174-183)."""
     attr_csv = _attr_csv("lidar")
     return tiles.select(
         F.concat(F.lit("laz-"), F.col("tile_id")).alias("doc_id"),
@@ -254,4 +212,3 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
             ),
         ).alias("spans"),
     )
-

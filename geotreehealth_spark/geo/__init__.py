@@ -1,7 +1,7 @@
 """Pure-numpy geometry layer: WKB codec and vectorized kernels.
 
 No shapely / GEOS dependency — the sandbox has none, and the kernels the
-reference needs (PIP, area, centroid, polygon clip IoU, distance) are small
+reference needs (PIP, area, polygon clip overlap, distance) are small
 enough to implement vectorized from scratch. All functions operate on numpy
 arrays so they stay Arrow-batch-friendly inside pandas UDFs. Spatial cell
 keys are Catalyst expressions, not numpy: see ``geo/cellexprs.py``.
@@ -10,19 +10,14 @@ keys are Catalyst expressions, not numpy: see ``geo/cellexprs.py``.
 from geotreehealth_spark.geo.wkb import (  # noqa: F401
     decode_points,
     decode_polygon,
-    encode_point,
     encode_points,
     encode_polygon,
-    polygon_bounds,
 )
 from geotreehealth_spark.geo.kernels import (  # noqa: F401
     clip_area,
     is_convex,
     points_in_polygon,
     polygon_area,
-    polygon_centroid,
-    polygon_iou,
     polygon_overlap_ratio,
-    repair_ring,
     triangulate_ring,
 )

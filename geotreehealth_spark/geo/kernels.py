@@ -1,10 +1,9 @@
 """Vectorized geometry kernels (numpy only).
 
 Replaces the reference's shapely calls — `contains`/`within`
-(get_polygons.py:101, batch_sam.py:405), `intersection.area` / IoU
-(batch_sam.py:150-151, from_mask_to_polygons.py:23), area/centroid
-(batch_sam.py:784, tree_health_detection/utils.py:317) — with numpy
-array kernels suitable for Arrow batches.
+(get_polygons.py:101, batch_sam.py:405), `intersection.area`
+(batch_sam.py:150-151, from_mask_to_polygons.py:23), area
+(batch_sam.py:784) — with numpy array kernels suitable for Arrow batches.
 
 Conventions: a polygon is its exterior ring as an (k,2) float64 array with the
 closing vertex repeated (as produced by wkb.decode_polygon).
@@ -20,19 +19,6 @@ def polygon_area(ring: np.ndarray) -> float:
     x, y = ring[:-1, 0], ring[:-1, 1]
     x1, y1 = ring[1:, 0], ring[1:, 1]
     return float(abs(np.sum(x * y1 - x1 * y)) / 2.0)
-
-
-def polygon_centroid(ring: np.ndarray) -> tuple[float, float]:
-    """Area-weighted centroid (matches shapely's `.centroid` for polygons)."""
-    x, y = ring[:-1, 0], ring[:-1, 1]
-    x1, y1 = ring[1:, 0], ring[1:, 1]
-    cross = x * y1 - x1 * y
-    a = np.sum(cross) / 2.0
-    if abs(a) < 1e-12:  # degenerate: fall back to vertex mean
-        return float(x.mean()), float(y.mean())
-    cx = np.sum((x + x1) * cross) / (6.0 * a)
-    cy = np.sum((y + y1) * cross) / (6.0 * a)
-    return float(cx), float(cy)
 
 
 def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
@@ -151,27 +137,6 @@ def _clip_pieces(subject: np.ndarray, clip: np.ndarray) -> list[np.ndarray]:
     return [_sh_clip_ring(sub, tri) for tri in triangulate_ring(clp)]
 
 
-def polygon_intersection_parts(subject: np.ndarray, clip: np.ndarray) -> list[np.ndarray]:
-    """Exact intersection GEOMETRY of two arbitrary simple polygons, as a
-    list of closed CCW rings whose disjoint union is subject ∩ clip (J10
-    overlay; reference gpd.overlay(how='intersection'),
-    delineation_utils.py:108-109,161-163).
-
-    Representation: when a convex side exists the result is a single
-    (possibly bridge-seamed) ring; otherwise the clip is ear-clipped and one
-    ring per non-empty triangle piece is emitted — pieces partition the
-    intersection region, so their areas sum to clip_area exactly and
-    containment tests against the piece set are exact. Zero-area pieces are
-    dropped."""
-    out = []
-    for p in _clip_pieces(subject, clip):
-        if len(p) < 3 or _signed_area(p) == 0.0:
-            continue
-        p = _ccw(p)
-        out.append(np.vstack([p, p[:1]]))
-    return out
-
-
 def triangulate_ring(ring: np.ndarray) -> list[np.ndarray]:
     """Ear-clipping triangulation of a simple polygon → list of (3,2) CCW
     triangles partitioning its interior. O(n^2) python, fine for crown rings
@@ -253,16 +218,6 @@ def clip_area(subject: np.ndarray, clip: np.ndarray) -> float:
     return total
 
 
-def polygon_iou(a: np.ndarray, b: np.ndarray) -> float:
-    """Intersection-over-union (batch_sam.py:150-151 `calculate_overlap`).
-    Exact for arbitrary simple polygons (clip_area)."""
-    inter = clip_area(a, b)
-    if inter == 0.0:
-        return 0.0
-    union = polygon_area(a) + polygon_area(b) - inter
-    return inter / union if union > 0 else 0.0
-
-
 def polygon_overlap_ratio(a: np.ndarray, b: np.ndarray) -> float:
     """inter / max(areaA, areaB) — the greedy-NMS criterion
     (get_polygons.py:806-816 uses intersection over the larger area).
@@ -272,163 +227,6 @@ def polygon_overlap_ratio(a: np.ndarray, b: np.ndarray) -> float:
         return 0.0
     m = max(polygon_area(a), polygon_area(b))
     return inter / m if m > 0 else 0.0
-
-
-def affine_transform(
-    ring: np.ndarray,
-    dx: float = 0.0,
-    dy: float = 0.0,
-    sx: float = 1.0,
-    sy: float = 1.0,
-    origin: tuple[float, float] = (0.0, 0.0),
-) -> np.ndarray:
-    """Translate + scale about an origin (shapely.affinity translate/scale,
-    delineation_pipeline.py:92, delineation_utils.py:129-143). Pure column
-    math on the ring array."""
-    ox, oy = origin
-    out = np.empty_like(ring)
-    out[:, 0] = (ring[:, 0] - ox) * sx + ox + dx
-    out[:, 1] = (ring[:, 1] - oy) * sy + oy + dy
-    return out
-
-
-def _dp_keep(arr: np.ndarray, i0: int, i1: int, tolerance: float, acc: set) -> None:
-    """Douglas–Peucker recursion: mark interior points farther than tolerance
-    from the chord (i0, i1)."""
-    if i1 <= i0 + 1:
-        return
-    a, b = arr[i0], arr[i1]
-    ab = b - a
-    norm = np.hypot(ab[0], ab[1])
-    seg = arr[i0 + 1 : i1]
-    if norm == 0.0:
-        d = np.hypot(seg[:, 0] - a[0], seg[:, 1] - a[1])
-    else:
-        d = np.abs(ab[0] * (a[1] - seg[:, 1]) - ab[1] * (a[0] - seg[:, 0])) / norm
-    i = int(np.argmax(d))
-    if d[i] > tolerance:
-        j = i0 + 1 + i
-        acc.add(j)
-        _dp_keep(arr, i0, j, tolerance, acc)
-        _dp_keep(arr, j, i1, tolerance, acc)
-
-
-def simplify_ring(ring: np.ndarray, tolerance: float) -> np.ndarray:
-    """Douglas–Peucker simplification of a closed ring (shapely
-    simplify(0.1), delineation_pipeline.py:169). The ring is split at its
-    first vertex and the vertex farthest from it (the standard closed-ring
-    anchoring), each open chain simplified, then re-closed."""
-    pts = ring[:-1] if np.array_equal(ring[0], ring[-1]) else ring
-    if len(pts) <= 3:
-        return np.vstack([pts, pts[:1]])
-    d0 = np.hypot(pts[:, 0] - pts[0, 0], pts[:, 1] - pts[0, 1])
-    far = int(np.argmax(d0))
-    half1 = pts[: far + 1]
-    half2 = np.vstack([pts[far:], pts[:1]])
-    keep1: set = {0, len(half1) - 1}
-    keep2: set = {0, len(half2) - 1}
-    _dp_keep(half1, 0, len(half1) - 1, tolerance, keep1)
-    _dp_keep(half2, 0, len(half2) - 1, tolerance, keep2)
-    out = np.vstack([half1[sorted(keep1)], half2[sorted(keep2)][1:-1]])
-    return np.vstack([out, out[:1]])
-
-
-def repair_ring(ring: np.ndarray) -> list[np.ndarray]:
-    """shapely ``buffer(0)``-equivalent repair of a self-intersecting ring
-    (delineation_pipeline.py:170 fixes post-simplify invalid rings with it).
-
-    Splits the ring at proper edge crossings (intersection vertices inserted,
-    loops extracted with the classic stack walk) and keeps the sub-rings whose
-    orientation matches the ring's dominant winding — the nonzero-rule fill
-    that buffer(0) produces for a figure-eight: the counter-wound lobe
-    vanishes, the positive lobe(s) survive. Returns a list of closed simple
-    rings (one entry for an already-valid ring; >1 when repair yields a
-    multipolygon). Vertex-on-edge touches (t or u exactly 0/1) are treated as
-    already-valid topology, like GEOS does for boundary-touching rings.
-
-    Documented deviation: for rings that wind over a region MORE than once
-    (pentagram-style), the kept lobes can overlap instead of dissolving to
-    their union — the reference's post-simplify invalids are single
-    crossings (bowties), where the repair is exact.
-    """
-    pts = _open_ring(np.asarray(ring, dtype=np.float64))
-    n = len(pts)
-    if n < 3:
-        return []
-    # 1) proper pairwise edge intersections (non-adjacent edges only)
-    per_edge: list[list[tuple[float, tuple[float, float]]]] = [[] for _ in range(n)]
-    found = False
-    for i in range(n):
-        p = pts[i]
-        r = pts[(i + 1) % n] - p
-        for j in range(i + 2, n):
-            if i == 0 and j == n - 1:
-                continue  # adjacent through the closure
-            q = pts[j]
-            s = pts[(j + 1) % n] - q
-            denom = r[0] * s[1] - r[1] * s[0]
-            if denom == 0.0:
-                continue  # parallel; collinear overlaps treated as valid
-            qp = q - p
-            t = (qp[0] * s[1] - qp[1] * s[0]) / denom
-            u = (qp[0] * r[1] - qp[1] * r[0]) / denom
-            if 0.0 < t < 1.0 and 0.0 < u < 1.0:
-                x = (float(p[0] + t * r[0]), float(p[1] + t * r[1]))
-                per_edge[i].append((t, x))
-                per_edge[j].append((u, x))
-                found = True
-    if not found:
-        # No proper crossing — but a REPEATED interior vertex is a
-        # figure-eight through a shared vertex (ADVICE r3: previously passed
-        # through unchanged as a self-cancelling zero-area ring, poisoning
-        # downstream area math). The stack walk below splits such loops too,
-        # so fall through whenever any vertex coordinate repeats.
-        seen: set[tuple[float, float]] = set()
-        repeated = False
-        for v in map(tuple, pts):
-            if v in seen:
-                repeated = True
-                break
-            seen.add(v)
-        if not repeated:
-            return [np.vstack([pts, pts[:1]])]
-    # 2) augmented vertex sequence with crossing points inserted in order;
-    #    the SAME coordinate tuple object is inserted on both edges, so the
-    #    stack walk below matches crossings by exact equality
-    aug: list[tuple[float, float]] = []
-    for i in range(n):
-        aug.append((float(pts[i][0]), float(pts[i][1])))
-        for _, x in sorted(per_edge[i], key=lambda e: e[0]):
-            aug.append(x)
-    # 3) stack walk: revisiting a point closes the loop opened at its first
-    #    visit; the remainder (stack) closes as the final loop
-    loops: list[list[tuple[float, float]]] = []
-    stack: list[tuple[float, float]] = []
-    pos: dict[tuple[float, float], int] = {}
-    for pnt in aug:
-        if pnt in pos:
-            k = pos[pnt]
-            loop = stack[k:]
-            for q in loop[1:]:
-                pos.pop(q, None)
-            if len(loop) >= 3:
-                loops.append(loop)
-            del stack[k + 1:]
-        else:
-            pos[pnt] = len(stack)
-            stack.append(pnt)
-    if len(stack) >= 3:
-        loops.append(stack)
-    # 4) keep lobes wound with the dominant orientation (nonzero-rule fill)
-    areas = [_signed_area(np.asarray(lp)) for lp in loops]
-    total = sum(areas)
-    sign = 1.0 if total >= 0 else -1.0
-    out = []
-    for lp, a in zip(loops, areas):
-        if a * sign > 0:
-            arr = np.asarray(lp)
-            out.append(np.vstack([arr, arr[:1]]))
-    return out
 
 
 def convex_hull(points: np.ndarray) -> np.ndarray:

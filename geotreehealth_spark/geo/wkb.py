@@ -180,17 +180,3 @@ def encode_linestring(coords: np.ndarray) -> bytes:
     coords = np.asarray(coords, dtype=np.float64)
     header = struct.pack("<bII", _LE, _LINESTRING, len(coords))
     return header + coords.astype("<f8").tobytes()
-
-
-def polygon_bounds(wkbs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(xmin, ymin, xmax, ymax) arrays for a column of WKB Polygons."""
-    n = len(wkbs)
-    xmin = np.empty(n)
-    ymin = np.empty(n)
-    xmax = np.empty(n)
-    ymax = np.empty(n)
-    for i, w in enumerate(wkbs):
-        ring = decode_polygon(w)
-        xmin[i], ymin[i] = ring.min(axis=0)
-        xmax[i], ymax[i] = ring.max(axis=0)
-    return xmin, ymin, xmax, ymax

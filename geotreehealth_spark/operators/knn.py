@@ -155,13 +155,14 @@ def _ring_knn(
     right_id: str,
     quadrants: bool,
     cell_size: float | None,
-    cell_factor: float,
     min_dist: float | None,
 ) -> DataFrame:
     """Exact top-k `right` rows (cx, cy) per (left row (x, y), group) — J5
     when ``quadrants`` is False (one group; tag column ``knn_rank``), J6 when
     True (one group per quadrant; tag column ``quadrant``). Output: left
-    columns + right columns + ``dist`` + the tag column."""
+    columns + right columns + ``dist`` + the tag column. A None
+    ``cell_size`` is 1.25x (J5) or 6x (J6) the uniform-density k-th
+    neighbour radius (_cell_size); the public joins' docstrings say why."""
     lx, ly = "x", "y"
     rx, ry = "cx", "cy"
     tag, tag_type = ("quadrant", "string") if quadrants else ("knn_rank", "int")
@@ -183,7 +184,7 @@ def _ring_knn(
             )
         bx0, bx1, by0, by1, n_right = bounds
         if cell_size is None:
-            cell_size = _cell_size(bounds[:4], n_right, k, cell_factor)
+            cell_size = _cell_size(bounds[:4], n_right, k, 6.0 if quadrants else 1.25)
         s = float(cell_size)
         g_max = cellexprs.grid_max(bounds[:4], s)
         origin = (bx0, by0)
@@ -390,7 +391,7 @@ def knn_join(
     """
     return _ring_knn(
         left, right, k, left_id, right_id,
-        quadrants=False, cell_size=cell_size, cell_factor=1.25, min_dist=None,
+        quadrants=False, cell_size=cell_size, min_dist=None,
     )
 
 
@@ -423,5 +424,5 @@ def quadrant_knn_join(
     """
     return _ring_knn(
         left, right, 1, left_id, right_id,
-        quadrants=True, cell_size=cell_size, cell_factor=6.0, min_dist=min_dist,
+        quadrants=True, cell_size=cell_size, min_dist=min_dist,
     )

@@ -3,8 +3,8 @@
 These are the scalar pandas UDFs of the spatial operators (pip_join, nms and
 the explode fixtures). They are not the engine's only Python boundary: docs/
 (WKB encode/decode), operators/vectorize.py and zonal.py (mapInPandas /
-applyInPandas), media.py, media_features.py and alignment.py cross it too,
-all Arrow-batched (north_star: "no per-row Python"). The PIP
+applyInPandas), media.py and media_features.py cross it too, all
+Arrow-batched (north_star: "no per-row Python"). The PIP
 refine UDF additionally amortizes polygon decoding by factorizing on the WKB
 bytes within a batch (many rows share a polygon after a cell join).
 """

@@ -65,13 +65,6 @@ def _grid(mn: np.ndarray, mx: np.ndarray, res: float):
     return gx0, gy1, np.zeros((h, w), dtype=bool)
 
 
-def _burn(mask: np.ndarray, ring: np.ndarray, gx0, gy1, res: float, value: bool) -> None:
-    """Set the mask pixels whose centers the ring contains to `value`."""
-    rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, res, res)
-    if ok:
-        mask[rr, cc] = value
-
-
 def polygonize_masks(masks: DataFrame) -> DataFrame:
     """One row per 4-connected mask component: (mask_id, part_idx, n_px,
     area, geometry_wkb). mask_bits carries np.packbits bytes of the
@@ -131,64 +124,15 @@ def geometric_union(
         mx = np.array([r.max(axis=0) for r in rings]).max(axis=0)
         gx0, gy1, mask = _grid(mn, mx, res)
         for ring in rings:
-            _burn(mask, ring, gx0, gy1, res, True)
+            rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, res, res)
+            if ok:
+                mask[rr, cc] = True
         return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1, res)])
 
     cols = [group_col, *bounds_cols] if wkb_col is None else [group_col, wkb_col]
     return polys.select(*cols).groupBy(group_col).applyInPandas(
         per_group, _parts_schema(group_col)
     )
-
-
-def geometric_difference(pairs: DataFrame, id_col: str) -> DataFrame:
-    """Per row, a_wkb \\ b_wkb on the unit pixel grid (shapely difference,
-    delineation_utils.py cleanup/batch_sam.py:534-537): rasterize both,
-    AND-NOT the masks, polygonize the remainder. Output one row per
-    connected part: (id, part_idx, n_px, area, geometry_wkb); rows whose
-    difference is empty produce no output."""
-
-    def diff(row):
-        ra = wkb.decode_polygon(row.a_wkb)
-        rb = wkb.decode_polygon(row.b_wkb)
-        mn = np.minimum(ra.min(axis=0), rb.min(axis=0))
-        mx = np.maximum(ra.max(axis=0), rb.max(axis=0))
-        gx0, gy1, mask = _grid(mn, mx, 1.0)
-        _burn(mask, ra, gx0, gy1, 1.0, True)
-        _burn(mask, rb, gx0, gy1, 1.0, False)
-        return getattr(row, id_col), mask, gx0, gy1, 1.0
-
-    def per_batch(it):
-        for pdf in it:
-            yield _parts(id_col, (diff(row) for row in pdf.itertuples()))
-
-    return pairs.select(id_col, "a_wkb", "b_wkb").mapInPandas(per_batch, _parts_schema(id_col))
-
-
-def overlay_intersection(pairs: DataFrame, id_col: str) -> DataFrame:
-    """J10 exact overlay: per row, the intersection GEOMETRY of two arbitrary
-    simple polygons (reference gpd.overlay(how='intersection') over
-    partitions, delineation_utils.py:108-109,161-163). Output one row per
-    intersection piece: (id, part_idx, area, geometry_wkb); empty
-    intersections emit nothing. Pieces partition the intersection region
-    (kernels.polygon_intersection_parts), so SUM(area) per id is the exact
-    intersection area. Runs as mapInPandas — geometry never leaves the Arrow
-    batch, output rows are slim."""
-    schema = f"{id_col} string, part_idx int, area double, geometry_wkb binary"
-
-    def per_batch(it):
-        for pdf in it:
-            out = {id_col: [], "part_idx": [], "area": [], "geometry_wkb": []}
-            for row in pdf.itertuples():
-                ra = wkb.decode_polygon(row.a_wkb)
-                rb = wkb.decode_polygon(row.b_wkb)
-                for i, ring in enumerate(kernels.polygon_intersection_parts(ra, rb)):
-                    out[id_col].append(getattr(row, id_col))
-                    out["part_idx"].append(i)
-                    out["area"].append(kernels.polygon_area(ring))
-                    out["geometry_wkb"].append(wkb.encode_polygon(ring))
-            yield pd.DataFrame(out)
-
-    return pairs.select(id_col, "a_wkb", "b_wkb").mapInPandas(per_batch, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -216,7 +216,7 @@ def plots(spark: SparkSession) -> DataFrame:
     return spark.sql(PLOTS_SQL_SPARK)
 
 
-def tiles(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
+def tiles(spark: SparkSession) -> DataFrame:
     return spark.sql(TILES_SQL_SPARK)
 
 

@@ -5,8 +5,8 @@
   classic explode → token-join → |A∩B| / (|A|+|B|-|A∩B|) plan. Scales as the
   sum of squared posting-list lengths; stop-token removal (max_df cap) bounds
   the hot lists.
-- minhash_signatures / minhash_lsh_pairs: n-permutation MinHash with banding;
-  candidate pairs join on (band, band-hash) buckets.
+- minhash_lsh_pairs: n-permutation MinHash with banding; candidate pairs
+  join on (band, band-hash) buckets.
 - simhash_signatures / simhash_dedup_pairs: 60-bit SimHash (majority bit vote)
   with pigeonhole chunk blocking derived from max_hamming.
 
@@ -197,14 +197,6 @@ def _minhash_agg(docs: DataFrame, n_perm: int) -> DataFrame:
         for i in range(n_perm)
     ]
     return toks.groupBy("doc_id").agg(*aggs)
-
-
-def minhash_signatures(docs: DataFrame, n_perm: int = 64) -> DataFrame:
-    """(doc_id, signature: array<long>) — docs with zero tokens are absent."""
-    sig = _minhash_agg(docs, n_perm)
-    return sig.select(
-        "doc_id", F.array(*[F.col(f"__m{i}") for i in range(n_perm)]).alias("signature")
-    )
 
 
 def minhash_lsh_pairs(

@@ -71,12 +71,12 @@ def _fmt_d(x: float) -> str:
     return s if ("e" in s or "E" in s) else s + "e0"
 
 
-def _dot_lits_sql(vec: str, coeffs) -> str:
-    """SQL text of _dot(transform(vec, cast-to-double), array(<coeffs>)) —
-    the same fold tree _dot builds, parsed in one call."""
+def _dot_lits_sql(coeffs) -> str:
+    """SQL text of _dot(transform(embedding, cast-to-double), array(<coeffs>))
+    — the same fold tree _dot builds, parsed in one call."""
     lits = ", ".join(_fmt_d(c) for c in coeffs)
     return (
-        f"aggregate(zip_with(transform(`{vec}`, x -> CAST(x AS DOUBLE)), "
+        "aggregate(zip_with(transform(`embedding`, x -> CAST(x AS DOUBLE)), "
         f"array({lits}), (x, y) -> x * y), 0.0e0, (acc, v) -> acc + v)"
     )
 
@@ -123,7 +123,7 @@ def _bucket_sql(table_planes: np.ndarray) -> str:
     """Sign-bit bucket of one table: Σ 2^j · [dot(embedding, plane_j) >= 0]
     (left-associated dot chains; a NULL dot takes the CASE's ELSE 0)."""
     bits = " + ".join(
-        f"(CASE WHEN ({_dot_lits_sql('embedding', table_planes[j])}) >= 0 "
+        f"(CASE WHEN ({_dot_lits_sql(table_planes[j])}) >= 0 "
         f"THEN {1 << j} ELSE 0 END)"
         for j in range(table_planes.shape[0])
     )
@@ -222,49 +222,6 @@ def ivf_centroids(dim: int, n_lists: int) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
-def train_ivf_centroids(
-    embeddings: DataFrame,
-    dim: int = 64,
-    n_lists: int = 16,
-    iters: int = 5,
-) -> np.ndarray:
-    """Spherical k-means (Lloyd's) coarse quantizer, trained distributedly.
-
-    Fills the r4 seam: `ivf_centroids` documented that production IVF trains
-    its lists with k-means; this is that trainer, expressed Spark-first —
-    each round is ONE map-side job: coarse-assign every vector with the same
-    zero-shuffle sort_array argmax used at query time (`_ivf_listed`), then
-    a single groupBy(list_id) with per-dimension F.sum columns (map-side
-    combinable, no explode — n_lists x (dim+1) doubles cross the shuffle,
-    nothing else) and an n_lists-row collect. Update = per-list mean
-    re-normalized to the unit sphere (cosine IVF); empty lists keep their
-    previous centroid. Init is the seeded `ivf_centroids` draw so
-    training is reproducible run-to-run (up to float-sum association order
-    across partitions — why the ORACLE-gated path keeps the seeded literals
-    and the trained path is pytest-gated on recall instead).
-    """
-    cents = ivf_centroids(dim, n_lists)
-    for _ in range(iters):
-        assigned = _ivf_listed(embeddings, cents, 1, "__id", "__v")
-        rows = (
-            assigned.groupBy("list_id")
-            .agg(
-                F.count("*").alias("__n"),
-                *[
-                    F.sum(F.col("__v")[i].cast("double")).alias(f"__s{i}")
-                    for i in range(dim)
-                ],
-            )
-            .collect()
-        )
-        for row in rows:
-            mean = np.array([row[f"__s{i}"] for i in range(dim)]) / row["__n"]
-            norm = float(np.linalg.norm(mean))
-            if norm > 0.0:
-                cents[row["list_id"]] = mean / norm
-    return cents
-
-
 def _ivf_listed(
     df: DataFrame,
     cents: np.ndarray,
@@ -279,7 +236,7 @@ def _ivf_listed(
     array is ONE parsed SQL expression (r6): the per-literal builder cost
     ~1 s of driver time per call for the 16x64 centroid constants."""
     entries = "array(" + ", ".join(
-        f"named_struct('ns', -({_dot_lits_sql('embedding', cents[j])}), 'list_id', {j})"
+        f"named_struct('ns', -({_dot_lits_sql(cents[j])}), 'list_id', {j})"
         for j in range(cents.shape[0])
     ) + ")"
     top = F.expr(f"slice(sort_array({entries}), 1, {int(n_keep)})")
@@ -297,7 +254,6 @@ def ann_ivf_topk(
     dim: int = 64,
     n_lists: int = 16,
     nprobe: int = 4,
-    centroids: np.ndarray | None = None,
 ) -> DataFrame:
     """IVF ANN: inverted-file candidate generation + exact cosine re-rank.
 
@@ -306,11 +262,9 @@ def ann_ivf_topk(
     literals), probes fan out to their nprobe best lists, and the candidate
     join is a plain equi-join on list_id — work is the probed lists'
     occupancy, not |emb| x |probes|. Exact top-k OF THE CANDIDATE SET (ANN
-    semantics), identical output shape to ann_lsh_topk.
-
-    ``centroids``: trained coarse quantizer (train_ivf_centroids); defaults
-    to the seeded deterministic draw so the SQL oracle's literals match."""
-    cents = centroids if centroids is not None else ivf_centroids(dim, n_lists)
+    semantics), identical output shape to ann_lsh_topk. The centroids are
+    the seeded ivf_centroids draw, so the SQL oracle's literals match."""
+    cents = ivf_centroids(dim, n_lists)
     e = _ivf_listed(embeddings, cents, 1, "neighbor_id", "__v")
     p = _ivf_listed(probes, cents, nprobe, "probe_id", "__pv")
     # No broadcast hint on the probe side: probes fan out nprobe-x with full

@@ -19,18 +19,11 @@ def test_stems_roundtrip(spark):
     pd.testing.assert_frame_equal(a, b, check_exact=True)
 
 
-def test_crowns_roundtrip_and_bounds(spark):
+def test_crown_geometry_bounds(spark):
     # deterministic sample: limit() would pick different rows per evaluation
     # now that ingest repartitions round-robin (synth.register_tpch_views)
     crowns = synth.crowns(spark, SF_DIR).where(F.col("crown_key") % 37 == 0)
     geo = generator.crowns_with_geometry(crowns)
-    docs = generator.crowns_to_docs(geo)
-    decoded = decode.decode_crowns(docs)
-    # ids and WKB bytes survive the hex roundtrip
-    a = geo.select("crown_id", "geometry_wkb").orderBy("crown_id").toPandas()
-    b = decoded.select("crown_id", "geometry_wkb").orderBy("crown_id").toPandas()
-    assert list(a.crown_id) == list(b.crown_id)
-    assert all(x == y for x, y in zip(a.geometry_wkb, b.geometry_wkb))
     # polygon bounds stay inside the generator's radius envelope
     chk = (
         geo.where(
@@ -39,17 +32,6 @@ def test_crowns_roundtrip_and_bounds(spark):
         ).count()
     )
     assert chk == 0
-
-
-def test_tiles_roundtrip(spark):
-    tiles = synth.tiles(spark)
-    docs = generator.tiles_to_docs(tiles)
-    decoded = decode.decode_tiles(docs)
-    assert decoded.count() == 100
-    row = decoded.where(F.col("tile_id") == "37").collect()[0]
-    assert row.media_ref == "hsi://tile/37"
-    assert (row.bands, row.height, row.width) == (12, 100, 100)
-    assert row.txmin == 690.0 and row.tymin == 290.0
 
 
 def test_span_parity_and_offsets(spark):
@@ -89,11 +71,9 @@ def test_lidar_docs_roundtrip(spark):
     """S6 media_ref path: tiles → lidar docs → decode → point-cloud load;
     deterministic across calls, coordinates within tile bounds, z
     milli-quantized in [0, 35)."""
-    from geotreehealth_spark import media, synth
-    from geotreehealth_spark.docs import decode, generator
-    from tests.conftest import SF_DIR
+    from geotreehealth_spark import media
 
-    tiles = synth.tiles(spark, SF_DIR).where(F.col("tile_key") < 4)
+    tiles = synth.tiles(spark).where(F.col("tile_key") < 4)
     docs = generator.lidar_to_docs(tiles, n_points=50)
     manifest = decode.decode_lidar(docs)
     assert manifest.count() == 4
@@ -131,8 +111,5 @@ def test_null_fields_roundtrip(spark):
         "tile_id string, tile_key int, txmin double, tymin double, txmax double, tymax double",
     )
     cols = ["tile_id", "txmin", "tymin", "txmax", "tymax"]
-    for decoded in (
-        decode.decode_tiles(generator.tiles_to_docs(tiles)),
-        decode.decode_lidar(generator.lidar_to_docs(tiles)),
-    ):
-        assert sorted(decoded.select(cols).collect()) == sorted(tiles.select(cols).collect())
+    decoded = decode.decode_lidar(generator.lidar_to_docs(tiles))
+    assert sorted(decoded.select(cols).collect()) == sorted(tiles.select(cols).collect())

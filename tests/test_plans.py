@@ -10,7 +10,7 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
 import __spark_entry__ as entry
-from plan_audit import audit
+from plan_audit import audit, normalize
 from tests.conftest import SF_DIR
 
 # pure-Catalyst queries: zero Python of any kind, codegen present
@@ -86,3 +86,24 @@ def test_picks_plan_a_window_group_limit(spark):
         if a["window_group_limit"] == 0 or a["struct_min_max"] > 0:
             offenders[name] = (a["window_group_limit"], a["struct_min_max"])
     assert offenders == {}, f"(WindowGroupLimit, min/max(struct) aggs) per query: {offenders}"
+
+
+def test_normalize_keeps_only_the_plan():
+    """Two sessions' texts of one plan normalize equal; a changed node or
+    expression still shows."""
+    a = (
+        "AdaptiveSparkPlan (3)\n+- Exchange (2)\n   +- Scan parquet  (1)\n\n"
+        "(1) Scan parquet \nOutput [1]: [vec_id#57L]\n"
+        "Location: InMemoryFileIndex [file:/data/sf0.1/embeddings.parquet]\n"
+        "(2) Exchange\nArguments: hashpartitioning(vec_id#57L, 8), [plan_id=10516]\n"
+        "Project [transform(e#58, lambdafunction(lambda x_4#9731, lambda x_4#9731, false))]\n"
+        "Scan ExistingRDD MapPartitionsRDD[17] Statistics(sizeInBytes=1.2 MiB, rowCount=30)\n"
+    )
+    b = (
+        a.replace("#57L", "#9L").replace("#58", "#3").replace("x_4#9731", "x_12#40")
+        .replace("10516", "7").replace("[17]", "[2]").replace("1.2 MiB", "3.0 KiB")
+        .replace("/data/sf0.1/", "/tmp/sf0.001/").replace("(1)", "(4)")
+    )
+    assert a != b and normalize(a) == normalize(b)
+    assert "hashpartitioning(vec_id#L, 8)" in normalize(a)
+    assert normalize(a) != normalize(a.replace("hashpartitioning", "rangepartitioning"))

@@ -45,10 +45,10 @@ def py_simhash(text: str) -> int:
 
 
 def test_minhash_matches_oracle_and_estimates_jaccard(spark, docs):
-    sigs = tdedup.minhash_signatures(docs.limit(50), n_perm=64).toPandas()
+    sigs = tdedup._minhash_agg(docs.limit(50), 64).toPandas().set_index("doc_id")
     texts = docs.limit(50).toPandas().set_index("doc_id").text
-    for row in sigs.itertuples():
-        assert list(row.signature) == py_minhash(texts[row.doc_id], 64)
+    for doc_id, row in sigs.iterrows():
+        assert [row[f"__m{i}"] for i in range(64)] == py_minhash(texts[doc_id], 64)
     # signature agreement ~ true word-set jaccard
     t = texts.iloc[0], texts.iloc[1]
     s0, s1 = py_minhash(t[0], 64), py_minhash(t[1], 64)

@@ -107,50 +107,6 @@ def test_multipolygon_roundtrip_and_explode(spark):
     assert areas == {("a", 0): 16.0, ("a", 1): 6.0, ("b", 0): 16.0}
 
 
-def test_geometric_difference(spark):
-    """A \\ B for integer-aligned boxes is exact on the pixel grid."""
-    def box_ring(x0, y0, x1, y1):
-        return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]], float)
-
-    rows = [
-        # B eats a corner: area 100 - 25 = 75, one L-shaped part
-        ("p1", wkb.encode_polygon(box_ring(0, 0, 10, 10)),
-               wkb.encode_polygon(box_ring(5, 5, 10, 10))),
-        # B splits A into two parts: 2 x (10x4) = two 40-px parts
-        ("p2", wkb.encode_polygon(box_ring(0, 0, 10, 10)),
-               wkb.encode_polygon(box_ring(0, 4, 10, 6))),
-        # B covers A entirely: empty difference, no rows
-        ("p3", wkb.encode_polygon(box_ring(2, 2, 4, 4)),
-               wkb.encode_polygon(box_ring(0, 0, 6, 6))),
-    ]
-    df = spark.createDataFrame(rows, "pid string, a_wkb binary, b_wkb binary")
-    out = vectorize.geometric_difference(df, id_col="pid").collect()
-    got = {}
-    for r in out:
-        got.setdefault(r.pid, []).append(r.area)
-    assert got["p1"] == [75.0]
-    assert sorted(got["p2"]) == [40.0, 40.0]
-    assert "p3" not in got
-
-
-def test_affine_and_simplify_kernels():
-    sq = np.array([[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]], float)
-    moved = kernels.affine_transform(sq, dx=2, dy=-1, sx=2.0, sy=1.0, origin=(0, 0))
-    assert kernels.polygon_area(moved) == 32.0  # x-scale doubles area
-    assert moved[:, 0].min() == 2.0 and moved[:, 1].min() == -1.0
-    # simplify: a square with redundant midpoints collapses back to 4 corners
-    dense = np.array(
-        [[0, 0], [2, 0.001], [4, 0], [4, 2], [4, 4], [2, 4], [0, 4], [0, 2], [0, 0]],
-        float,
-    )
-    simp = kernels.simplify_ring(dense, tolerance=0.01)
-    assert len(simp) == 5  # 4 corners + closing vertex
-    assert kernels.polygon_area(simp) == 16.0
-    # tolerance below the bump keeps it
-    keep = kernels.simplify_ring(dense, tolerance=0.0001)
-    assert len(keep) > 5
-
-
 def test_polygonize_roundtrip_rasterize():
     """polygonize(rasterize(convex poly)) reproduces the pixel mask exactly."""
     from geotreehealth_spark import media
@@ -274,80 +230,3 @@ class TestGeometryCollections:
         bad = spark.createDataFrame([("c", be)], "gid string, g binary")
         with pytest.raises(Exception, match="big-endian"):
             bad.select(vectorize.geometry_type_col("g").alias("t")).collect()
-
-
-class TestOverlayIntersection:
-    """J10 exact overlay geometry: pieces partition subject∩clip."""
-
-    @staticmethod
-    def _star(cx, cy, r_out, n, seed):
-        rng = np.random.RandomState(seed)
-        # evenly-spaced base angles + bounded jitter: guarantees a SIMPLE
-        # radial polygon (pure sorted-uniform angles can cluster in one
-        # sector, making the closing chord cut the ring — hit at seed 64)
-        base = np.arange(2 * n) * (np.pi / n)
-        th = base + rng.uniform(-0.3, 0.3, 2 * n) * (np.pi / n)
-        rr = np.where(np.arange(2 * n) % 2 == 0, r_out, 0.45 * r_out) * rng.uniform(
-            0.75, 1.0, 2 * n
-        )
-        pts = np.c_[cx + rr * np.cos(th), cy + rr * np.sin(th)]
-        return np.vstack([pts, pts[:1]])
-
-    def test_pieces_partition_intersection(self):
-        from geotreehealth_spark.geo.kernels import (
-            clip_area, points_in_polygon, polygon_area, polygon_intersection_parts,
-        )
-
-        rng = np.random.RandomState(5)
-        for t in range(15):
-            a = self._star(0, 0, 2.0, 6, seed=t)
-            b = self._star(rng.uniform(-1, 1), rng.uniform(-1, 1), 1.8, 5, seed=50 + t)
-            parts = polygon_intersection_parts(a, b)
-            total = sum(polygon_area(p) for p in parts)
-            assert total == pytest.approx(clip_area(a, b), abs=1e-9)
-            # containment: a point interior to a piece is in both polygons,
-            # up to fp wobble at clip seams (intersection vertices round to
-            # ~1e-16 outside an edge) — accept inside OR on-boundary
-            def _in_or_on(px, py, ring, tol=1e-9):
-                if points_in_polygon(np.r_[px], np.r_[py], ring)[0]:
-                    return True
-                e0, e1 = ring[:-1], ring[1:]
-                d = e1 - e0
-                L2 = (d * d).sum(axis=1)
-                tpar = np.clip(
-                    ((px - e0[:, 0]) * d[:, 0] + (py - e0[:, 1]) * d[:, 1])
-                    / np.where(L2 == 0, 1, L2), 0, 1,
-                )
-                cx = e0[:, 0] + tpar * d[:, 0]
-                cy = e0[:, 1] + tpar * d[:, 1]
-                return bool(np.min(np.hypot(px - cx, py - cy)) <= tol)
-
-            for p in parts[:3]:
-                c = p[:-1].mean(axis=0)
-                if points_in_polygon(np.r_[c[0]], np.r_[c[1]], p)[0]:
-                    assert _in_or_on(c[0], c[1], a)
-                    assert _in_or_on(c[0], c[1], b)
-
-    def test_overlay_operator(self, spark):
-        from geotreehealth_spark.geo.kernels import clip_area
-
-        L = np.array([[0, 0], [2, 0], [2, 1], [1, 1], [1, 2], [0, 2], [0, 0]], float)
-        sq = np.array([[0.5, 0.5], [1.5, 0.5], [1.5, 1.5], [0.5, 1.5], [0.5, 0.5]])
-        far = sq + 100.0
-        df = spark.createDataFrame(
-            [
-                ("p1", wkb.encode_polygon(L), wkb.encode_polygon(sq)),
-                ("p2", wkb.encode_polygon(L), wkb.encode_polygon(far)),
-                ("p3", wkb.encode_polygon(L), wkb.encode_polygon(L + 0.5)),
-            ],
-            "pid string, a_wkb binary, b_wkb binary",
-        )
-        out = vectorize.overlay_intersection(df, id_col="pid").toPandas()
-        assert set(out.pid) == {"p1", "p3"}  # p2 disjoint -> no rows
-        got1 = out[out.pid == "p1"].area.sum()
-        assert got1 == pytest.approx(0.75)
-        got3 = out[out.pid == "p3"].area.sum()
-        assert got3 == pytest.approx(clip_area(L, L + 0.5), abs=1e-9)
-        for b in out.geometry_wkb:
-            ring = wkb.decode_polygon(b)
-            assert np.array_equal(ring[0], ring[-1])

@@ -5,10 +5,12 @@ Usage: python tools/dump_plans.py <tag> [suffix] [query ...]
   suffix  'before' or 'after' (default 'before')
   query   subset of query names (default: all registered queries)
 
-Judge evidence for OPTIMIZATION_r*.md: each file is the formatted physical
-plan of the query as built (pre-execution, AQE isFinalPlan=false) at the
-bench sf dir — enough to verify Exchange counts, join strategies, scan
-pushdown, and Python-boundary nodes without running Spark.
+Each file is the formatted physical plan of the query as built
+(pre-execution, AQE isFinalPlan=false) at the bench sf dir, normalized by
+plan_audit.normalize — enough to verify Exchange counts, join strategies,
+scan pushdown, and Python-boundary nodes without running Spark, and to diff
+two commits' plans: `diff -r plans/<a> plans/<b>` shows only real changes.
+An absolute tag writes outside plans/.
 """
 
 from __future__ import annotations
@@ -20,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from geotreehealth_spark.session import get_spark  # noqa: E402
-from tools.plan_audit import plan_string  # noqa: E402
+from tools.plan_audit import normalize, plan_string  # noqa: E402
 
 
 def main() -> None:
@@ -36,7 +38,7 @@ def main() -> None:
         names = list(queries)
     for name in names:
         try:
-            p = plan_string(queries[name](spark, sf_dir))
+            p = normalize(plan_string(queries[name](spark, sf_dir)))
         except Exception as e:  # noqa: BLE001
             p = f"ERROR {type(e).__name__}: {e}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")

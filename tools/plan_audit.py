@@ -28,6 +28,29 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+# run-specific tokens of a formatted plan -> their stable spelling: two
+# builds of the same plan in different sessions differ only in these
+_VOLATILE = [
+    (re.compile(r"#\d+"), "#"),  # expression ids
+    (re.compile(r"\blambda (\w+?)_\d+\b"), r"lambda \1_"),  # lambda variable suffixes
+    (re.compile(r"^\(\d+\)", re.M), "(n)"),  # node numbers, detail headers
+    (re.compile(r" \(\d+\)$", re.M), " (n)"),  # node numbers, tree lines
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[]"),
+    (re.compile(r"Statistics\([^)]*\)"), "Statistics(...)"),
+    (re.compile(r"(?:file:|(?<=[\s\[,]))/(?:[^\s/,\[\]()]+/)+"), "<dir>/"),  # file paths
+]
+
+
+def normalize(plan: str) -> str:
+    """The plan text with expression ids, lambda suffixes, node numbers,
+    plan ids, RDD ids, statistics and directories rewritten, so that plans
+    of the same query from different sessions or inputs compare equal."""
+    for pattern, repl in _VOLATILE:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
 def plan_string(df) -> str:
     jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode
     return df._jdf.queryExecution().explainString(jmode.fromString("formatted"))
