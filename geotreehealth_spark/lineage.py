@@ -100,12 +100,18 @@ def run_stage(
             F.broadcast(fresh.select(part_key)), part_key, "left_semi"
         )
         counts = out_now.groupBy(part_key).agg(F.count("*").alias("row_count"))
+        # the per-call values ride a one-row inline table (a local relation:
+        # rows, not code), not F.lit: a numeric literal is inlined into the
+        # generated class, so every call would compile a new one. An inline
+        # table, unlike createDataFrame(list), starts no Python worker.
+        run = spark.sql(
+            f"SELECT * FROM VALUES ({wall_ms}, {time.time_ns()}L) AS run(wall_ms, completed_at_ns)"
+        )
         lineage_rows = (
             fresh.join(counts, part_key, "left")
             .withColumn("row_count", F.coalesce(F.col("row_count"), F.lit(0)))
             .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ms", F.lit(wall_ms))
-            .withColumn("completed_at_ns", F.lit(time.time_ns()))
+            .crossJoin(run)
         )
         cat.append(lineage_rows, _lineage_table(stage))
     return cat.read(spark, stage)

@@ -4,7 +4,15 @@ Every entry point (tests, bench, driver contract) builds its session here so the
 whole engine runs with one consistent config: Arrow transport across the
 Python boundary (pandas UDFs, mapInPandas, applyInPandas, toPandas), AQE
 with skew-join splitting (north_rule: "salted repartitioning on H3 cell keys
-plus AQE skew-join splitting"), and shuffle parallelism tied to core count.
+plus AQE skew-join splitting"), shuffle parallelism tied to core count, and a
+generated-code class cache that holds the engine's whole working set.
+
+Spark compiles each whole-stage-codegen pipeline and generated projection to a
+Java class and keeps the classes in one JVM-wide cache, keyed on the code text
+(and the loading thread's class loader, so a stage compiled on the driver is
+compiled again for the executor's tasks). The default of 100 entries is far
+below what the engine reuses: with it, a warm call recompiles most of its
+code. CODEGEN_CACHE_ENTRIES says how the size was measured.
 """
 
 from __future__ import annotations
@@ -12,6 +20,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# spark.sql.codegen.cache.maxEntries, a static conf: the JVM-wide
+# CodeGenerator cache reads it once, when it is built. Measured with an
+# unbounded cache (CodegenMetrics' compilation count, local[4]): one sweep of
+# all 54 queries() compiles 708-715 classes at sf0.001 and 697 at sf0.01; the
+# warm-up pass of perfbench's `docs_zonal` compiles about 200 and that of
+# `spatial_join` about 160. With Spark's default of 100, every warm pass
+# compiled again: 193 classes per `docs_zonal` pass and 216-226 per
+# `spatial_join` pass; with 2048, 0 from the second timed pass on. 2048 is
+# about 2.9x a full sweep: headroom for AQE's plan variants (a repeat call
+# whose stages AQE created in another order compiles a renumbered copy once)
+# and for queries to come.
+CODEGEN_CACHE_ENTRIES = 2048
 
 
 def get_spark(
@@ -58,6 +79,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

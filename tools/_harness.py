@@ -66,6 +66,13 @@ def start_session(
     return spark
 
 
+def compiles(spark) -> int:
+    """Classes Spark's code generator has compiled in this JVM so far. A call
+    whose generated code is already in the JVM-wide class cache adds 0."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def release_caches(spark) -> None:
     """Drop persisted DataFrames AND localCheckpoint RDDs between runs so one
     query's working set doesn't GC-pressure the next."""

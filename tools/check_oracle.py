@@ -6,6 +6,9 @@ column names, and order-insensitive values (sorted rows, exact match for
 ints/strings, exact for doubles since both sides do identical IEEE math).
 
 Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+
+A query name that ``queries()`` does not have is an error (exit 2), raised
+before any query runs, so a mistyped name cannot pass by checking nothing.
 """
 
 from __future__ import annotations
@@ -35,12 +38,16 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entrymod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print("unknown query names:", ", ".join(unknown))
+        return 2
     spark = get_spark(cores=16)
     con = duckdb.connect()
     for name in TPCH_TABLES:
         con.sql(f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM '{sf_dir}/{name}.parquet'")
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in queries.items():

@@ -6,6 +6,8 @@ For each pass prints:
   build   - python-side DataFrame construction (lazy)
   explain - analysis + optimization + physical planning (explainString cost)
   count   - full execution via .count() (bench protocol)
+  compiles - classes Spark compiled during the pass; a warm pass reuses the
+             cached classes and shows 0 unless its generated code changed
 Helps decide whether a slow bench entry is driver/planning-bound or
 execution-bound before touching the operator (guide §1 / §7.3).
 """
@@ -28,6 +30,7 @@ def main() -> None:
 
     for p in range(passes):
         for name in names:
+            c0 = _harness.compiles(spark)
             t0 = time.time()
             df = queries[name](spark, sf_dir)
             t_build = time.time() - t0
@@ -39,7 +42,7 @@ def main() -> None:
             t_count = time.time() - t0
             print(
                 f"pass{p} {name}: build={t_build:.2f}s explain={t_explain:.2f}s "
-                f"count={t_count:.2f}s rows={n}",
+                f"count={t_count:.2f}s compiles={_harness.compiles(spark) - c0} rows={n}",
                 flush=True,
             )
             _harness.release_caches(spark)
