@@ -60,8 +60,7 @@ def q_pip_assign_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     stems = synth.stems(spark, sf_dir)
     crowns = synth.crowns(spark, sf_dir).drop("stem_tag")  # avoid name collision
     out = pip_join.pip_assign_best(
-        stems, crowns, poly_id="crown_id", point_id="stem_tag",
-        cell_size=25.0, poly_wkb=None,
+        stems, crowns, poly_id="crown_id", point_id="stem_tag", cell_size=25.0
     )
     return out.select("crown_id", "stem_tag", "dist")
 
@@ -108,7 +107,7 @@ def q_boundary_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     crowns = synth.crowns(spark, sf_dir)
     tiles = synth.tiles(spark)
     assigned = tiling.assign_tiles(crowns, tiles)
-    return tiling.boundary_filter(assigned, margin=0.5).select("crown_id", "tile_id")
+    return tiling.boundary_filter(assigned).select("crown_id", "tile_id")
 
 
 def q_dedup_keep_max_dbh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,7 +140,7 @@ def q_class_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/A4: drop rare classes, downsample all survivors to the min size."""
     s = _recoded_stems(spark, sf_dir)
     out = rebalance.class_filter_rebalance(
-        s, group_cols=["site_id", "status_r"], order_col="stem_key", min_count=10
+        s, group_cols=["site_id", "status_r"], order_col="stem_key"
     )
     return out.select("site_id", "status_r", "stem_tag")
 
@@ -149,7 +148,7 @@ def q_class_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_factorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P12: deterministic label encode of status values."""
     s = _recoded_stems(spark, sf_dir)
-    return aggregates.factorize(s, "status_r", "label_id")
+    return aggregates.factorize(s, "status_r")
 
 
 def q_median_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,8 +226,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )))
         # stage 2: containing-else-nearest (PIP, kNN fallback for the residue)
         matched = matching.containing_else_nearest(
-            probes, crowns, point_id="stem_tag", poly_id="crown_id", area_col="ca",
-            cell_size=25.0, poly_wkb=None,
+            probes, crowns, point_id="stem_tag", poly_id="crown_id", area_col="ca"
         ).select("stem_tag", "crown_id", "method")
         # stage 3: raster-tile fan-out per crown (J12 broadcast range join)
         tiles = synth.tiles(spark)
@@ -320,7 +318,6 @@ def q_containing_else_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = matching.containing_else_nearest(
         stems.select("stem_tag", "x", "y"), crowns,
         point_id="stem_tag", poly_id="crown_id", area_col="ca",
-        cell_size=25.0, poly_wkb=None,
     )
     return out.select("stem_tag", "crown_id", "method")
 
@@ -344,7 +341,7 @@ def q_feature_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = matching.feature_nn_match(
         stems, crowns, tag_col="stem_tag", left_id="stem_key", right_id="crown_id",
-        feature_pairs=[("lf1", "rf1"), ("lf2", "rf2")], threshold=1.5,
+        feature_pairs=[("lf1", "rf1"), ("lf2", "rf2")],
     )
     return out.select(F.col("stem_key").cast("long").alias("stem_key"), "crown_id", "fdist")
 
@@ -355,10 +352,7 @@ def q_pair_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     from geotreehealth_spark.operators import matching
 
     stems = synth.stems(spark, sf_dir)
-    return matching.same_tag_pair_distances(
-        stems, stems, tag_col="dup_tag", left_id="stem_tag", right_id="stem_tag",
-        dedup_self=True,
-    )
+    return matching.same_tag_pair_distances(stems, tag_col="dup_tag", id_col="stem_tag")
 
 
 def q_random_k_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,7 +385,7 @@ def q_percentile_stretch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: rank-based 2-98 percentile stretch of lidar z and red channels
     (main.py:53-61, store_data_structures.py:84-88)."""
     lidar = synth.lidar(spark, sf_dir).where(F.col("point_id") % 20 == 0)
-    out = aggregates.percentile_stretch(lidar, ["z", "red"], lo=0.02, hi=0.98)
+    out = aggregates.percentile_stretch(lidar, ["z", "red"])
     return out.select("point_id", "z_stretch", "red_stretch")
 
 
@@ -412,7 +406,7 @@ def q_distinct_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_drop_smallest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6: drop the smallest 10% of stems by DBH per site (percent_rank)."""
     stems = synth.stems(spark, sf_dir)
-    out = aggregates.drop_smallest_fraction(stems, key="site_id", value="dbh", frac=0.1)
+    out = aggregates.drop_smallest_fraction(stems, key="site_id", value="dbh")
     return out.select("site_id", "stem_tag", "dbh")
 
 
@@ -475,7 +469,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _documents(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
     max_df = (85 * docs.count()) // 100
-    return tdedup.ngram_jaccard_pairs(docs, n=4, threshold=0.35, max_df=max_df)
+    return tdedup.ngram_jaccard_pairs(docs, threshold=0.35, max_df=max_df)
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,7 +486,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-derived token hashing + identical int64 permutation arithmetic)."""
     from geotreehealth_spark.text import dedup as tdedup
 
-    return tdedup.minhash_lsh_pairs(_documents(spark, sf_dir), n_perm=64, bands=16)
+    return tdedup.minhash_lsh_pairs(_documents(spark, sf_dir))
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,7 +495,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-1 shipped max_hamming=12 on 4 chunks — guaranteed only to 3)."""
     from geotreehealth_spark.text import dedup as tdedup
 
-    return tdedup.simhash_dedup_pairs(_documents(spark, sf_dir), max_hamming=3)
+    return tdedup.simhash_dedup_pairs(_documents(spark, sf_dir))
 
 
 def q_rp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -512,9 +506,7 @@ def q_rp_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     synth.register_tpch_views(spark, sf_dir)
     emb = spark.table("embeddings")
-    return similarity.rp_lsh_pairs(
-        emb, dim=64, n_tables=8, n_planes=6, min_sim=0.25
-    )
+    return similarity.rp_lsh_pairs(emb)
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,7 +517,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth.register_tpch_views(spark, sf_dir)
     emb = spark.table("embeddings")
     probes = emb.where(F.col("vec_id") % 50 == 0)
-    return similarity.ann_lsh_topk(emb, probes, k=10, dim=64, n_tables=8, n_planes=6)
+    return similarity.ann_lsh_topk(emb, probes, k=similarity.ANN_K)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -537,7 +529,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth.register_tpch_views(spark, sf_dir)
     emb = spark.table("embeddings")
     probes = emb.where(F.col("vec_id") % 50 == 0)
-    return similarity.ann_ivf_topk(emb, probes, k=10, dim=64, n_lists=16, nprobe=4)
+    return similarity.ann_ivf_topk(emb, probes)
 
 
 NMS_SUBSET_SQL = (
@@ -608,7 +600,7 @@ def q_zonal_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor("xmax") + 0.25).alias("bxmax"),
         (F.floor("ymax") + 0.25).alias("bymax"),
     )
-    tiles = tiling.tile_grid(spark, extent=1000.0, tile_size=100.0, overlap=0.0).selectExpr(
+    tiles = tiling.tile_grid(spark, overlap=0.0).selectExpr(
         "tile_id", "txmin", "tymin", "txmax", "tymax",
         "concat('hsic://tile/', CAST(tile_key AS STRING)) AS media_ref",
         "8 AS bands", "100 AS height", "100 AS width", "tile_key",
@@ -638,7 +630,7 @@ def q_band_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     sliced = arrays.band_slice(v, 1, 8)
     dropped = arrays.band_drop(sliced, 3)
-    padded = arrays.band_pad(dropped, 10, -1.0)
+    padded = arrays.band_pad(dropped, 10)
     return emb.select(
         "vec_id",
         F.size(padded).alias("n_bands"),
@@ -748,8 +740,7 @@ def q_geometric_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bound columns (vertex-identical to the encoded boxes), skipping the WKB
     # encode UDF and per-row decode
     parts = vectorize.geometric_union(
-        boxed, group_col="gid", wkb_col=None, res=1.0,
-        bounds_cols=("x0", "y0", "x1", "y1"),
+        boxed, group_col="gid", wkb_col=None, bounds_cols=("x0", "y0", "x1", "y1"),
     )
     return parts.groupBy("gid").agg(
         F.count("*").cast("long").alias("n_parts"),
@@ -834,7 +825,7 @@ def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = tdedup.jaccard_pairs(docs, threshold=0.5, max_df=max_df).select(
         "id_a", "id_b"
     )
-    out = components.connected_components(pairs, "id_a", "id_b")
+    out = components.connected_components(pairs)
     return out.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
     )
@@ -909,6 +900,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    from geotreehealth_spark.text import dedup as tdedup
+    from geotreehealth_spark.text import similarity
+
     W = synth.oracle_with
     stems = ("stems", V["stems"])
     crowns = ("crowns", V["crowns"])
@@ -1472,11 +1466,11 @@ def oracle_sql() -> dict[str, str]:
         "zonal_raster": _zonal_raster_oracle(),
         "nms_greedy": _nms_oracle(),
         "weighted_nms": _weighted_nms_oracle(),
-        "minhash_lsh_pairs": _minhash_oracle(),
-        "simhash_pairs": _simhash_oracle(),
-        "rp_lsh_pairs": _rp_lsh_oracle(),
-        "ann_lsh_topk": _ann_lsh_oracle(),
-        "ann_ivf_topk": _ann_ivf_oracle(),
+        "minhash_lsh_pairs": tdedup.minhash_lsh_pairs_oracle_sql(),
+        "simhash_pairs": tdedup.simhash_pairs_oracle_sql(),
+        "rp_lsh_pairs": similarity.rp_lsh_pairs_oracle_sql(),
+        "ann_lsh_topk": similarity.ann_lsh_topk_oracle_sql(),
+        "ann_ivf_topk": similarity.ann_ivf_topk_oracle_sql(),
         # constant-media oracles regenerate media.resolve_* closed forms
         # (key = doc_id % 997; see _const_media_refs)
         "image_features": """
@@ -1647,10 +1641,7 @@ def _nms_oracle() -> str:
     from geotreehealth_spark.operators.nms import greedy_nms_box_oracle_sql
 
     polys = synth.oracle_with(("crowns", V["crowns"])) + NMS_SUBSET_SQL
-    return greedy_nms_box_oracle_sql(
-        polys, id_col="crown_id", score_col="score", threshold=0.3,
-        criterion="overlap_ratio", rounds=40,
-    )
+    return greedy_nms_box_oracle_sql(polys, id_col="crown_id", score_col="score", threshold=0.3)
 
 
 def _weighted_nms_oracle() -> str:
@@ -1661,40 +1652,8 @@ def _weighted_nms_oracle() -> str:
         + WNMS_SUBSET_SQL
     )
     return weighted_nms_box_oracle_sql(
-        polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-        criterion="iou", rounds=40,
+        polys, id_col="crown_id", priority_col="priority", threshold=0.5
     )
-
-
-def _minhash_oracle() -> str:
-    from geotreehealth_spark.text.dedup import minhash_lsh_pairs_oracle_sql
-
-    return minhash_lsh_pairs_oracle_sql(n_perm=64, bands=16)
-
-
-def _simhash_oracle() -> str:
-    from geotreehealth_spark.text.dedup import simhash_pairs_oracle_sql
-
-    return simhash_pairs_oracle_sql(max_hamming=3)
-
-
-def _rp_lsh_oracle() -> str:
-    from geotreehealth_spark.text.similarity import rp_lsh_pairs_oracle_sql
-
-    return rp_lsh_pairs_oracle_sql(dim=64, n_tables=8, n_planes=6, min_sim=0.25)
-
-
-def _ann_lsh_oracle() -> str:
-    from geotreehealth_spark.text.similarity import ann_lsh_topk_oracle_sql
-
-    return ann_lsh_topk_oracle_sql(probe_pred="vec_id % 50 = 0", k=10, dim=64, n_tables=8, n_planes=6)
-
-
-def _ann_ivf_oracle() -> str:
-    from geotreehealth_spark.text.similarity import ann_ivf_topk_oracle_sql
-
-    return ann_ivf_topk_oracle_sql(probe_pred="vec_id % 50 = 0", k=10, dim=64,
-                                   n_lists=16, nprobe=4)
 
 
 def _lang_id_oracle() -> str:

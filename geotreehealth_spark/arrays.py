@@ -29,11 +29,12 @@ def band_drop(col: Column, idx: int) -> Column:
     return F.concat(head, tail)
 
 
-def band_pad(col: Column, target_len: int, value: float = 0.0) -> Column:
-    """Right-pad with `value` to target_len (no-op when already >= target).
+def band_pad(col: Column, target_len: int) -> Column:
+    """Right-pad with -1.0 (a no-data band) to target_len (no-op when already
+    >= target).
 
-    DuckDB twin: list_concat(x, [value for _ in range(target - len(x))]) via
+    DuckDB twin: list_concat(x, [-1.0 for _ in range(target - len(x))]) via
     list_transform(range(...)).
     """
     n_missing = F.greatest(F.lit(target_len) - F.size(col), F.lit(0))
-    return F.concat(col, F.array_repeat(F.lit(value), n_missing))
+    return F.concat(col, F.array_repeat(F.lit(-1.0), n_missing))

@@ -113,14 +113,9 @@ def _kth_smallest(df: DataFrame, col: str, k: int) -> DataFrame:
     )
 
 
-def percentile_stretch(
-    df: DataFrame,
-    cols: list[str],
-    lo: float = 0.02,
-    hi: float = 0.98,
-) -> DataFrame:
+def percentile_stretch(df: DataFrame, cols: list[str]) -> DataFrame:
     """A8 percentile stretch (main.py:53-61, store_data_structures.py:84-88):
-    per column, clip-scale values to [0,1] between the rank-based lo/hi
+    per column, clip-scale values to [0,1] between the rank-based 2nd/98th
     percentiles (value at max(1, ceil(q*n)) of the sorted multiset — exact,
     interpolation-free, so the SQL oracle reproduces it bit-for-bit).
 
@@ -131,8 +126,8 @@ def percentile_stretch(
     n = df.count()
     out = df
     for c in cols:
-        k_lo = max(1, math.ceil(lo * n))
-        k_hi = max(1, math.ceil(hi * n))
+        k_lo = max(1, math.ceil(0.02 * n))
+        k_hi = max(1, math.ceil(0.98 * n))
         bounds = (
             _kth_smallest(df, c, k_lo)
             .withColumnRenamed("__kth", "__lo")
@@ -153,17 +148,15 @@ def percentile_stretch(
     return out
 
 
-def drop_smallest_fraction(
-    df: DataFrame, key: str, value: str, frac: float = 0.1
-) -> DataFrame:
-    """§2.6 percent-rank filter: per key, drop rows in the smallest `frac` of
-    `value` (reference drops the smallest-10% crown areas). Keeps rows with
-    percent_rank >= frac; rank ties share a percent_rank, exactly like SQL
+def drop_smallest_fraction(df: DataFrame, key: str, value: str) -> DataFrame:
+    """§2.6 percent-rank filter: per key, drop rows in the smallest 10% of
+    `value` (as the reference drops the smallest-10% crown areas). Keeps rows
+    with percent_rank >= 0.1; rank ties share a percent_rank, exactly like SQL
     PERCENT_RANK in both engines."""
     w = Window.partitionBy(key).orderBy(F.col(value).asc())
     return (
         df.withColumn("__pr", F.percent_rank().over(w))
-        .where(F.col("__pr") >= frac)
+        .where(F.col("__pr") >= 0.1)
         .drop("__pr")
     )
 
@@ -173,12 +166,12 @@ def distinct_count(df: DataFrame, key: str, value: str) -> DataFrame:
     return df.groupBy(key).agg(F.countDistinct(value).alias("n_distinct"))
 
 
-def factorize(df: DataFrame, col: str, out_col: str = "label_id") -> DataFrame:
+def factorize(df: DataFrame, col: str) -> DataFrame:
     """P12: deterministic label encode — distinct values sorted → dense
-    0..n-1 ids."""
+    0..n-1 ids in `label_id`."""
     w = Window.orderBy(F.col(col).asc())
     return (
         df.select(col)
         .distinct()
-        .withColumn(out_col, F.dense_rank().over(w) - 1)
+        .withColumn("label_id", F.dense_rank().over(w) - 1)
     )

@@ -29,32 +29,27 @@ from geotreehealth_spark.operators.caching import Owner, owned
 _MAX_ITERS = 50
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    nodes: DataFrame | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
     """(node, comp) for every node, comp = MIN node id in its component.
 
-    edges: undirected pair list (each pair listed once is enough).
+    edges: undirected pair list (id_a, id_b); each pair listed once is enough.
     nodes: optional (single-column) node universe; nodes without edges become
            singleton components. Defaults to the edge endpoints.
     Raises RuntimeError if the propagation has not converged after
     ``_MAX_ITERS`` rounds (diameter > _MAX_ITERS — never for dedup graphs).
     """
     with owned() as o:
-        return _run(o, edges, src, dst, nodes)
+        return _run(o, edges, nodes)
 
 
-def _run(o: Owner, edges, src, dst, nodes) -> DataFrame:
+def _run(o: Owner, edges, nodes) -> DataFrame:
     # materialize the symmetric edge list ONCE — every propagation round
     # re-reads it, and the upstream pair generation (e.g. the full Jaccard
     # inverted-index join) must not re-execute per round (measured 44 s -> a
     # few s at sf0.1 for the dup_components query)
     sym = o.checkpoint(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+        edges.select(F.col("id_a").alias("a"), F.col("id_b").alias("b")).unionByName(
+            edges.select(F.col("id_b").alias("a"), F.col("id_a").alias("b"))
         )
     )
     if nodes is None:

@@ -40,14 +40,12 @@ def containing_else_nearest(
     point_id: str,
     poly_id: str,
     area_col: str,
-    cell_size: float = 50.0,
-    poly_wkb: str | None = "geometry_wkb",
 ) -> DataFrame:
     """W1: (point_id, poly_id, method) — method 'contained'|'nearest'.
-    Points carry (x, y); polygons carry bbox columns (xmin, ymin, xmax, ymax)
-    and a center (cx, cy).
+    Points carry (x, y); polygons carry bbox columns (xmin, ymin, xmax, ymax),
+    which are their footprints, and a center (cx, cy).
 
-    Physical plan: the containing arm is the PIP filter-refine join followed
+    Physical plan: the containing arm is the box PIP join (25 m cells) followed
     by ``best_per_key`` on (area desc, NULLs first; poly_id asc) — shuffle
     O(points), not O(pairs);
     the fallback arm is the exact cell-pruned kNN (k=1) on the RESIDUE only
@@ -61,7 +59,7 @@ def containing_else_nearest(
     with owned() as o:
         points = o.keep(o.persist(points))
         polygons = o.keep(o.persist(polygons))
-        contained = pip_join(points.select(point_id, "x", "y"), polygons, cell_size, poly_wkb)
+        contained = pip_join(points.select(point_id, "x", "y"), polygons, 25.0, None)
         best = o.keep(o.persist(best_per_key(
             contained.select(point_id, poly_id, area_col),
             point_id,
@@ -91,11 +89,11 @@ def feature_nn_match(
     left_id: str,
     right_id: str,
     feature_pairs: list[tuple[str, str]],
-    threshold: float = 0.1,
 ) -> DataFrame:
     """J11: per left row, the equal-tag right row nearest in feature space,
-    kept only if the euclidean distance is strictly below `threshold`
-    (align_data, delineation_utils.py:381-396).
+    kept only if the euclidean distance is strictly below 1.5 (align_data,
+    delineation_utils.py:381-396, whose threshold suits its own feature
+    scale).
 
     Output: (left_id, right_id, fdist). The equi-join on tag keeps the pair
     stream linear in the tag-group sizes; the argmin is ``best_per_key`` on
@@ -117,41 +115,28 @@ def feature_nn_match(
     best = best_per_key(
         j.select(left_id, right_id, fdist.alias("fdist")), left_id, ["fdist", right_id]
     )
-    return best.where(F.col("fdist") < threshold)
+    return best.where(F.col("fdist") < 1.5)
 
 
-def same_tag_pair_distances(
-    left: DataFrame,
-    right: DataFrame,
-    tag_col: str,
-    left_id: str,
-    right_id: str,
-    dedup_self: bool = False,
-) -> DataFrame:
-    """J8: (tag, left_id, right_id, distance) for every equal-tag pair of
-    points (x, y).
+def same_tag_pair_distances(points: DataFrame, tag_col: str, id_col: str) -> DataFrame:
+    """J8: (tag, <id_col>_a, <id_col>_b, distance) for every unordered pair
+    of points (x, y) sharing a tag, each once (id_a < id_b).
 
-    dedup_self=True treats left/right as the SAME table and emits each
-    unordered pair once (left_id < right_id). Plain equi-join on the tag:
-    output is Σ |tag group|² — the reference's double iterrows loop
-    (delineation_utils.py:66-82) collapsed into one shuffle.
+    A self-join on the tag: output is Σ |tag group|² / 2 — the reference's
+    double iterrows loop (delineation_utils.py:66-82) collapsed into one
+    shuffle.
     """
-    a = left.select(
-        tag_col, F.col(left_id).alias("__lid"), F.col("x").alias("__lx"), F.col("y").alias("__ly")
+    a = points.select(
+        tag_col, F.col(id_col).alias("__lid"), F.col("x").alias("__lx"), F.col("y").alias("__ly")
     )
-    b = right.select(
-        tag_col, F.col(right_id).alias("__rid"), F.col("x").alias("__rx"), F.col("y").alias("__ry")
+    b = points.select(
+        tag_col, F.col(id_col).alias("__rid"), F.col("x").alias("__rx"), F.col("y").alias("__ry")
     )
-    j = a.join(b, tag_col)
-    if dedup_self:
-        j = j.where(F.col("__lid") < F.col("__rid"))
-    out_l, out_r = (left_id, right_id) if left_id != right_id else (
-        f"{left_id}_a", f"{right_id}_b"
-    )
+    j = a.join(b, tag_col).where(F.col("__lid") < F.col("__rid"))
     return j.select(
         tag_col,
-        F.col("__lid").alias(out_l),
-        F.col("__rid").alias(out_r),
+        F.col("__lid").alias(f"{id_col}_a"),
+        F.col("__rid").alias(f"{id_col}_b"),
         distance_expr(F.col("__lx"), F.col("__ly"), F.col("__rx"), F.col("__ry")).alias(
             "distance"
         ),

@@ -85,8 +85,9 @@ def audio_features(refs: DataFrame, n_samples: int = 16000) -> DataFrame:
     return refs.select("doc_id", "media_ref").mapInPandas(per_batch, schema)
 
 
-def frame_sample_features(refs: DataFrame, n_frames: int = 32, stride: int = 8) -> DataFrame:
-    """Per clip: sample every `stride`-th 32x32 frame, per-frame channel means.
+def frame_sample_features(refs: DataFrame) -> DataFrame:
+    """Per clip of 32 frames: sample every 8th 32x32 frame, per-frame channel
+    means.
 
     Output: (doc_id, frame_idx int, feat array<double> of 3). One row per
     sampled frame — the exploded layout downstream dedup/similarity ops expect.
@@ -98,7 +99,7 @@ def frame_sample_features(refs: DataFrame, n_frames: int = 32, stride: int = 8) 
         for pdf in it:
             ids, fidx, feats = [], [], []
             for row in pdf.itertuples():
-                frames = media.resolve_frames(row.media_ref, n_frames, stride, h, w)
+                frames = media.resolve_frames(row.media_ref, 32, 8, h, w)
                 for i, fr in enumerate(frames):
                     ids.append(str(row.doc_id))
                     fidx.append(i)

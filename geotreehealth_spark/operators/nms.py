@@ -58,70 +58,6 @@ def _oriented(df: DataFrame, id_a, id_b, score_a, score_b) -> DataFrame:
     )
 
 
-def nms_conflict_edges(
-    polys: DataFrame,
-    id_col: str,
-    score_col: str,
-    threshold: float,
-    cell_size: float = 50.0,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    wkb_col: str | None = None,
-    area_col: str | None = None,
-) -> DataFrame:
-    """Directed conflict edges (winner, loser) under the global greedy order.
-
-    Criterion: overlap ratio, inter / max(areaA, areaB)
-    (get_polygons.py:806-816). With wkb_col=None boxes are exact geometry;
-    otherwise the polygon kernel refines the bbox candidates.
-
-    area_col: optional TRUE polygon area column. When present, the JVM prune
-    keeps only pairs with box_inter / max(poly_area) > threshold — sound for
-    ANY polygons (poly_inter <= box_inter). Without it the prune is just
-    box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim that
-    thin diagonal slivers violate — ADVICE.md round 1).
-
-    Plan note: the cell self-join runs on SLIM columns (id, score, bbox) so
-    the quadratic candidate stream never carries WKB blobs; polygon payloads
-    are joined back only for the bbox-surviving pairs (orders of magnitude
-    fewer) before the exact-geometry refine.
-    """
-    slim_cols = [id_col, score_col, *bounds] + ([area_col] if area_col else [])
-    slim = polys.select(*slim_cols)
-    pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
-    if wkb_col is not None:
-        box_inter = box_inter_cols(bounds=bounds)
-        if area_col is not None:
-            sound_bound = box_inter / F.greatest(
-                F.col(f"a_{area_col}"), F.col(f"b_{area_col}")
-            )
-            pairs = pairs.where(sound_bound > threshold)
-        else:
-            pairs = pairs.where(box_inter > 0.0)
-        geoms = polys.select(id_col, wkb_col)
-        pairs = pairs.join(
-            geoms.select(
-                F.col(id_col).alias(f"a_{id_col}"), F.col(wkb_col).alias(f"a_{wkb_col}")
-            ),
-            f"a_{id_col}",
-        ).join(
-            geoms.select(
-                F.col(id_col).alias(f"b_{id_col}"), F.col(wkb_col).alias(f"b_{wkb_col}")
-            ),
-            f"b_{id_col}",
-        )
-        measure = overlap_ratio_udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
-    else:
-        measure = box_overlap_ratio_cols(bounds=bounds)
-
-    # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
-    # each unordered pair exactly once
-    return _oriented(
-        pairs.where(measure > threshold),
-        F.col(f"a_{id_col}"), F.col(f"b_{id_col}"),
-        F.col(f"a_{score_col}"), F.col(f"b_{score_col}"),
-    )
-
-
 def greedy_nms(
     polys: DataFrame,
     id_col: str,
@@ -135,15 +71,61 @@ def greedy_nms(
     """polys + `selected` boolean, exactly matching sequential greedy NMS.
 
     The conflict-edge DISCOVERY is always fully distributed (the quadratic
-    part); ``_suppress`` then runs the fixpoint over the edge list.
+    part): directed edges (winner, loser) under the global greedy order, for
+    every pair whose overlap ratio inter / max(areaA, areaB) exceeds the
+    threshold (get_polygons.py:806-816). With wkb_col=None boxes are exact
+    geometry; otherwise the polygon kernel refines the bbox candidates.
+    ``_suppress`` then runs the fixpoint over the edge list.
+
+    area_col: optional TRUE polygon area column. When present, the JVM prune
+    keeps only pairs with box_inter / max(poly_area) > threshold — sound for
+    ANY polygons (poly_inter <= box_inter). Without it the prune is just
+    box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim that
+    thin diagonal slivers violate — ADVICE.md round 1).
+
+    Plan note: the cell self-join runs on SLIM columns (id, score, bbox) so
+    the quadratic candidate stream never carries WKB blobs; polygon payloads
+    are joined back only for the bbox-surviving pairs (orders of magnitude
+    fewer) before the exact-geometry refine.
     """
     with owned() as o:
         # r6: the polys lineage is read at least twice per call (conflict-edge
         # discovery + the final selected join) — persist it once instead of
         # re-deriving the upstream joins/aggregations per use
         polys = o.keep(o.persist(polys))
-        edges = o.checkpoint(nms_conflict_edges(
-            polys, id_col, score_col, threshold, cell_size, bounds, wkb_col, area_col,
+        slim_cols = [id_col, score_col, *bounds] + ([area_col] if area_col else [])
+        slim = polys.select(*slim_cols)
+        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
+        if wkb_col is not None:
+            box_inter = box_inter_cols(bounds=bounds)
+            if area_col is not None:
+                sound_bound = box_inter / F.greatest(
+                    F.col(f"a_{area_col}"), F.col(f"b_{area_col}")
+                )
+                pairs = pairs.where(sound_bound > threshold)
+            else:
+                pairs = pairs.where(box_inter > 0.0)
+            geoms = polys.select(id_col, wkb_col)
+            pairs = pairs.join(
+                geoms.select(
+                    F.col(id_col).alias(f"a_{id_col}"), F.col(wkb_col).alias(f"a_{wkb_col}")
+                ),
+                f"a_{id_col}",
+            ).join(
+                geoms.select(
+                    F.col(id_col).alias(f"b_{id_col}"), F.col(wkb_col).alias(f"b_{wkb_col}")
+                ),
+                f"b_{id_col}",
+            )
+            measure = overlap_ratio_udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
+        else:
+            measure = box_overlap_ratio_cols(bounds=bounds)
+        # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
+        # each unordered pair exactly once
+        edges = o.checkpoint(_oriented(
+            pairs.where(measure > threshold),
+            F.col(f"a_{id_col}"), F.col(f"b_{id_col}"),
+            F.col(f"a_{score_col}"), F.col(f"b_{score_col}"),
         ))
         return _suppress(o, polys, id_col, edges)
 
@@ -314,34 +296,40 @@ def weighted_nms(
 # Greedy NMS is order-sequential, so plain SQL can't express it directly; but
 # the engine's fixpoint reformulation ("round k suppresses the losers of all
 # current source nodes") terminates in rounds = longest suppression chain.
-# The oracle UNROLLS that loop to a fixed depth as chained materialized CTEs —
-# exact as long as depth >= the true chain length, which the builder takes as
-# a parameter (verified empirically at the gate's sf; a too-small depth shows
-# up as a value mismatch, never a silent false-pass on the suppressed side,
-# because missing rounds only UNDER-suppress the oracle while the engine
-# raises on its own non-convergence).
+# The oracle UNROLLS that loop to ORACLE_ROUNDS chained materialized CTEs —
+# exact as long as that depth >= the true chain length (verified empirically
+# at the gate's sf; a too-small depth shows up as a value mismatch, never a
+# silent false-pass on the suppressed side, because missing rounds only
+# UNDER-suppress the oracle while the engine raises on its own
+# non-convergence). The oracles read boxes from xmin, ymin, xmax, ymax.
+ORACLE_ROUNDS = 40
 
-def _measure_duck(criterion: str, bounds) -> str:
+# strict bbox overlap of the pair (a, b), as the oracles' join condition
+_BOX_OVERLAP_SQL = (
+    "a.xmin < b.xmax AND a.xmax > b.xmin\n     AND a.ymin < b.ymax AND a.ymax > b.ymin"
+)
+
+
+def _measure_duck(criterion: str) -> str:
     """Box measure SQL mirroring the Spark expression tree term-for-term."""
-    x0, y0, x1, y1 = bounds
-    iw = f"GREATEST(LEAST(a.{x1}, b.{x1}) - GREATEST(a.{x0}, b.{x0}), 0e0)"
-    ih = f"GREATEST(LEAST(a.{y1}, b.{y1}) - GREATEST(a.{y0}, b.{y0}), 0e0)"
-    area_a = f"(a.{x1} - a.{x0}) * (a.{y1} - a.{y0})"
-    area_b = f"(b.{x1} - b.{x0}) * (b.{y1} - b.{y0})"
+    iw = "GREATEST(LEAST(a.xmax, b.xmax) - GREATEST(a.xmin, b.xmin), 0e0)"
+    ih = "GREATEST(LEAST(a.ymax, b.ymax) - GREATEST(a.ymin, b.ymin), 0e0)"
+    area_a = "(a.xmax - a.xmin) * (a.ymax - a.ymin)"
+    area_b = "(b.xmax - b.xmin) * (b.ymax - b.ymin)"
     if criterion == "iou":
         # box_iou_cols clamps iw/ih AFTER the subtraction products
-        iw_r = f"LEAST(a.{x1}, b.{x1}) - GREATEST(a.{x0}, b.{x0})"
-        ih_r = f"LEAST(a.{y1}, b.{y1}) - GREATEST(a.{y0}, b.{y0})"
+        iw_r = "LEAST(a.xmax, b.xmax) - GREATEST(a.xmin, b.xmin)"
+        ih_r = "LEAST(a.ymax, b.ymax) - GREATEST(a.ymin, b.ymin)"
         inter = f"GREATEST({iw_r}, 0e0) * GREATEST({ih_r}, 0e0)"
         return f"({inter}) / ({area_a} + {area_b} - ({inter}))"
     return f"({iw} * {ih}) / GREATEST({area_a}, {area_b})"
 
 
-def nms_fixpoint_rounds_sql(conflicts_cte: str, rounds: int) -> str:
+def _fixpoint_rounds_sql() -> str:
     """Chained CTE rounds over a ``conflicts(winner, loser)`` CTE; ends with
     ``supp(id)`` = all suppressed nodes. Caller appends the final SELECT."""
-    parts = [f"e0 AS MATERIALIZED (SELECT winner, loser FROM {conflicts_cte})"]
-    for k in range(1, rounds + 1):
+    parts = ["e0 AS MATERIALIZED (SELECT winner, loser FROM conflicts)"]
+    for k in range(1, ORACLE_ROUNDS + 1):
         parts.append(
             f"s{k} AS MATERIALIZED (SELECT DISTINCT loser AS id FROM e{k-1} "
             f"WHERE winner NOT IN (SELECT loser FROM e{k-1}))"
@@ -351,23 +339,16 @@ def nms_fixpoint_rounds_sql(conflicts_cte: str, rounds: int) -> str:
             f"WHERE winner NOT IN (SELECT id FROM s{k}) "
             f"AND loser NOT IN (SELECT id FROM s{k}))"
         )
-    union = "\nUNION\n".join(f"SELECT id FROM s{k}" for k in range(1, rounds + 1))
+    union = "\nUNION\n".join(f"SELECT id FROM s{k}" for k in range(1, ORACLE_ROUNDS + 1))
     parts.append(f"supp AS ({union})")
     return ",\n".join(parts)
 
 
 def greedy_nms_box_oracle_sql(
-    polys_sql: str,
-    id_col: str,
-    score_col: str,
-    threshold: float,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    criterion: str = "overlap_ratio",
-    rounds: int = 24,
+    polys_sql: str, id_col: str, score_col: str, threshold: float
 ) -> str:
     """DuckDB twin of greedy_nms over BOX geometry: (id, selected)."""
-    x0, y0, x1, y1 = bounds
-    measure = _measure_duck(criterion, bounds)
+    measure = _measure_duck("overlap_ratio")
     a_wins = (
         f"(a.{score_col} > b.{score_col} OR "
         f"(a.{score_col} = b.{score_col} AND a.{id_col} < b.{id_col}))"
@@ -379,27 +360,19 @@ conflicts AS MATERIALIZED (
            CASE WHEN {a_wins} THEN b.{id_col} ELSE a.{id_col} END AS loser
     FROM polys a JOIN polys b
       ON a.{id_col} < b.{id_col}
-     AND a.{x0} < b.{x1} AND a.{x1} > b.{x0}
-     AND a.{y0} < b.{y1} AND a.{y1} > b.{y0}
+     AND {_BOX_OVERLAP_SQL}
     WHERE {measure} > {threshold!r}
 ),
-{nms_fixpoint_rounds_sql('conflicts', rounds)}
+{_fixpoint_rounds_sql()}
 SELECT {id_col}, {id_col} NOT IN (SELECT id FROM supp) AS selected FROM polys
 """
 
 
 def weighted_nms_box_oracle_sql(
-    polys_sql: str,
-    id_col: str,
-    priority_col: str,
-    threshold: float,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    criterion: str = "iou",
-    rounds: int = 24,
+    polys_sql: str, id_col: str, priority_col: str, threshold: float
 ) -> str:
     """DuckDB twin of weighted_nms: quantized penalty, then the fixpoint."""
-    x0, y0, x1, y1 = bounds
-    measure = _measure_duck(criterion, bounds)
+    measure = _measure_duck("iou")
     score = f"{priority_col} - CAST(COALESCE(pen.pen_micro, 0) AS DOUBLE) / 1e6"
     a_wins = "(a.wscore > b.wscore OR (a.wscore = b.wscore AND a.{i} < b.{i}))".format(
         i=id_col
@@ -410,8 +383,7 @@ ovl AS MATERIALIZED (
     SELECT a.{id_col} AS id_a, b.{id_col} AS id_b, {measure} AS m
     FROM rawpolys a JOIN rawpolys b
       ON a.{id_col} < b.{id_col}
-     AND a.{x0} < b.{x1} AND a.{x1} > b.{x0}
-     AND a.{y0} < b.{y1} AND a.{y1} > b.{y0}
+     AND {_BOX_OVERLAP_SQL}
     WHERE {measure} > {threshold!r}
 ),
 both_sides AS (
@@ -430,11 +402,10 @@ conflicts AS MATERIALIZED (
            CASE WHEN {a_wins} THEN b.{id_col} ELSE a.{id_col} END AS loser
     FROM polys a JOIN polys b
       ON a.{id_col} < b.{id_col}
-     AND a.{x0} < b.{x1} AND a.{x1} > b.{x0}
-     AND a.{y0} < b.{y1} AND a.{y1} > b.{y0}
+     AND {_BOX_OVERLAP_SQL}
     WHERE {measure} > {threshold!r}
 ),
-{nms_fixpoint_rounds_sql('conflicts', rounds)}
+{_fixpoint_rounds_sql()}
 SELECT {id_col}, wscore, {id_col} NOT IN (SELECT id FROM supp) AS selected FROM polys
 """
 

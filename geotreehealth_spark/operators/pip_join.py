@@ -71,10 +71,11 @@ def pip_assign_best(
     poly_id: str,
     point_id: str,
     cell_size: float = 50.0,
-    poly_wkb: str | None = "geometry_wkb",
 ) -> DataFrame:
     """J4: per polygon, the single contained point (x, y) nearest the polygon
-    center (cx, cy); polygons carry bbox columns (xmin, ymin, xmax, ymax).
+    center (cx, cy); polygons carry bbox columns (xmin, ymin, xmax, ymax),
+    which are their footprints (polygon containment is ``pip_join`` with
+    ``poly_wkb``).
 
     Reproduces assign_polygon_to_crown's selection semantics
     (tree_health_detection/utils.py:317: distance to crown centroid), with the
@@ -90,11 +91,8 @@ def pip_assign_best(
     # shuffle for nothing — at dense-forest pair counts that traffic is the
     # join's bottleneck, not the hash probe
     pts_slim = points.select(point_id, "x", "y")
-    poly_cols = [poly_id, "xmin", "ymin", "xmax", "ymax", "cx", "cy"]
-    if poly_wkb is not None:
-        poly_cols.append(poly_wkb)
-    polys_slim = polygons.select(*poly_cols)
-    cands = pip_join(pts_slim, polys_slim, cell_size, poly_wkb).withColumn(
+    polys_slim = polygons.select(poly_id, "xmin", "ymin", "xmax", "ymax", "cx", "cy")
+    cands = pip_join(pts_slim, polys_slim, cell_size, None).withColumn(
         "dist", distance_expr(F.col("x"), F.col("y"), F.col("cx"), F.col("cy"))
     )
     return best_per_key(cands.select(poly_id, point_id, "dist"), poly_id, ["dist", point_id])

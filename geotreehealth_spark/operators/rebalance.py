@@ -20,15 +20,14 @@ def class_filter_rebalance(
     df: DataFrame,
     group_cols: list[str],
     order_col: str,
-    min_count: int = 10,
 ) -> DataFrame:
-    """Filter classes with count <= min_count, then downsample all to the min.
+    """Filter classes with count <= 10, then downsample all to the min.
 
     Single-pass plan: one shuffle on group_cols computes counts (broadcast back
     — the class dimension is tiny), one window ranks rows within classes.
     """
     counts = df.groupBy(*group_cols).agg(F.count("*").alias("__cnt")).where(
-        F.col("__cnt") > min_count
+        F.col("__cnt") > 10
     )
     # min surviving class size: scalar, computed on the tiny counts table
     target = counts.agg(F.min("__cnt").alias("__target"))

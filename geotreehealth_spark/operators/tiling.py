@@ -4,8 +4,8 @@ Reference semantics:
 - split_raster produces overlapping windows (batch_sam.py:359, buffer
   get_polygons.py:603-615, config.py:42); a crown belongs to every tile whose
   window its bbox overlaps (get_polygons.py:625-639).
-- boundary filter: drop polygons whose bbox comes within `margin` of the tile
-  core edge (batch_sam.py:563-568, 645-648) — dedups the overlap zone when
+- boundary filter: drop polygons whose bbox comes within 0.5 m of the tile
+  window edge (batch_sam.py:563-568, 645-648) — dedups the overlap zone when
   compositing per-tile outputs (batch_sam.py:629-662).
 
 Physical plan: the tile manifest is tiny (grid rows) → broadcast nested-loop
@@ -19,17 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geotreehealth_spark.synth import EXTENT
 
-def tile_grid(
-    spark,
-    extent: float = 1000.0,
-    tile_size: float = 100.0,
-    overlap: float = 10.0,
-) -> DataFrame:
-    """Deterministic tile manifest: row-major ids, overlap-buffered windows
-    (txmin..tymax) plus the OWNED core window (cxmin..cymax) that zonal ops
-    use for exactly-once pixel coverage when overlap > 0."""
-    n = int(extent / tile_size)
+
+def tile_grid(spark, overlap: float = 10.0) -> DataFrame:
+    """Deterministic manifest of the site frame's 100 m tiles: row-major ids,
+    overlap-buffered windows (txmin..tymax) plus the OWNED core window
+    (cxmin..cymax) that zonal ops use for exactly-once pixel coverage when
+    overlap > 0."""
+    tile_size = 100.0
+    n = int(EXTENT / tile_size)
     return spark.sql(
         f"""
         SELECT CAST(i AS STRING) AS tile_id,
@@ -79,9 +78,10 @@ def translate_to_window(
     )
 
 
-def boundary_filter(assigned: DataFrame, margin: float = 0.5) -> DataFrame:
-    """P7: keep rows whose bbox (xmin..ymax) stays `margin` inside the tile
+def boundary_filter(assigned: DataFrame) -> DataFrame:
+    """P7: keep rows whose bbox (xmin..ymax) stays 0.5 m inside the tile
     window (txmin..tymax)."""
+    margin = 0.5
     return assigned.where(
         (F.col("xmin") >= F.col("txmin") + margin)
         & (F.col("ymin") >= F.col("tymin") + margin)

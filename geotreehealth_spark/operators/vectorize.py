@@ -52,16 +52,16 @@ def _parts(key_col: str, items) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _grid(mn: np.ndarray, mx: np.ndarray, res: float):
-    """(gx0, gy1, empty mask) of the pixel grid covering the (x, y) bounds
-    mn..mx padded by one unit, its origin snapped to res-multiples (so
+def _grid(mn: np.ndarray, mx: np.ndarray):
+    """(gx0, gy1, empty mask) of the unit pixel grid covering the (x, y)
+    bounds mn..mx padded by one unit, its origin snapped to integers (so
     integer-aligned inputs rasterize exactly)."""
     lo = mn - 1.0
     hi = mx + 1.0
-    gx0 = np.floor(lo[0] / res) * res
-    gy1 = np.ceil(hi[1] / res) * res
-    w = int(np.ceil((hi[0] - gx0) / res))
-    h = int(np.ceil((gy1 - lo[1]) / res))
+    gx0 = np.floor(lo[0])
+    gy1 = np.ceil(hi[1])
+    w = int(np.ceil(hi[0] - gx0))
+    h = int(np.ceil(gy1 - lo[1]))
     return gx0, gy1, np.zeros((h, w), dtype=bool)
 
 
@@ -96,13 +96,13 @@ def geometric_union(
     polys: DataFrame,
     group_col: str,
     wkb_col: str | None = "geometry_wkb",
-    res: float = 1.0,
     bounds_cols: tuple[str, str, str, str] | None = None,
 ) -> DataFrame:
-    """A5: per group, the union of member polygons on the group's pixel grid.
+    """A5: per group, the union of member polygons on the group's unit pixel
+    grid.
 
     Output: (group_col, part_idx, n_px, area, geometry_wkb) — one row per
-    connected part of the union. The grid origin snaps to res-multiples of
+    connected part of the union. The grid origin snaps to integers around
     the group bbox (so integer-aligned inputs are unioned EXACTLY), padded by
     one unit on each side.
 
@@ -122,12 +122,12 @@ def geometric_union(
             rings = [wkb.decode_polygon(b) for b in pdf[wkb_col]]
         mn = np.array([r.min(axis=0) for r in rings]).min(axis=0)
         mx = np.array([r.max(axis=0) for r in rings]).max(axis=0)
-        gx0, gy1, mask = _grid(mn, mx, res)
+        gx0, gy1, mask = _grid(mn, mx)
         for ring in rings:
-            rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, res, res)
+            rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, 1.0, 1.0)
             if ok:
                 mask[rr, cc] = True
-        return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1, res)])
+        return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1, 1.0)])
 
     cols = [group_col, *bounds_cols] if wkb_col is None else [group_col, wkb_col]
     return polys.select(*cols).groupBy(group_col).applyInPandas(

@@ -5,7 +5,7 @@
   classic explode → token-join → |A∩B| / (|A|+|B|-|A∩B|) plan. Scales as the
   sum of squared posting-list lengths; stop-token removal (max_df cap) bounds
   the hot lists.
-- minhash_lsh_pairs: n-permutation MinHash with banding; candidate pairs
+- minhash_lsh_pairs: 64-permutation MinHash with 16 bands; candidate pairs
   join on (band, band-hash) buckets.
 - simhash_signatures / simhash_dedup_pairs: 60-bit SimHash (majority bit vote)
   with pigeonhole chunk blocking derived from max_hamming.
@@ -37,6 +37,11 @@ from geotreehealth_spark.operators.caching import owned
 
 P31 = (1 << 31) - 1  # modulus for MinHash permutations (31-bit Mersenne prime)
 SIMHASH_BITS = 60  # md5-derived hash width that fits BIGINT in both dialects
+# shared by the operators and their DuckDB oracles
+MINHASH_PERMS = 64
+MINHASH_BANDS = 16  # 4 signature rows per band
+SIMHASH_MAX_HAMMING = 3  # the simhash_pairs query's bound
+DOCS_SQL = "SELECT doc_id, text FROM documents"
 
 _TOKS_DUCK = (
     "SELECT DISTINCT doc_id, t.tok AS token\n"
@@ -70,10 +75,11 @@ def tokens_df(docs: DataFrame) -> DataFrame:
     )
 
 
-def shingles_df(docs: DataFrame, n: int) -> DataFrame:
-    """Distinct (doc_id, shingle) pairs: overlapping character n-grams of the
+def shingles_df(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, shingle) pairs: overlapping character 4-grams of the
     lowercased text — pure Catalyst (sequence + transform + explode), no
-    Python. Texts shorter than n yield no shingles."""
+    Python. Texts shorter than 4 characters yield no shingles."""
+    n = 4
     grams = F.expr(
         f"transform(sequence(1, greatest(length(lower(text)) - {n - 1}, 0)), "
         f"i -> substr(lower(text), i, {n}))"
@@ -141,17 +147,16 @@ def _set_jaccard(
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
-    n: int = 4,
     threshold: float = 0.5,
     max_df: int | None = None,
 ) -> DataFrame:
-    """Pairs (id_a < id_b, jaccard) with character-n-gram-set Jaccard >=
+    """Pairs (id_a < id_b, jaccard) with character-4-gram-set Jaccard >=
     threshold — the shingle-level near-dup detector (robust to tokenization
     differences, the standard n-gram variant of jaccard_pairs). Same
     inverted-index plan: shingle posting lists drive a bucketed self-join,
     max_df caps stop-shingles, Jaccard computed over the post-filter shingle
     universe (mirrored by the SQL oracle)."""
-    return _set_jaccard(shingles_df(docs, n), "shingle", threshold, max_df)
+    return _set_jaccard(shingles_df(docs), "shingle", threshold, max_df)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -173,20 +178,20 @@ def jaccard_pairs(
     return _set_jaccard(tokens_df(docs), "token", threshold, max_df)
 
 
-def _perm_params(n_perm: int) -> tuple[np.ndarray, np.ndarray]:
+def _perm_params() -> tuple[np.ndarray, np.ndarray]:
     """Deterministic (a, b) for h_i(x) = (a_i * x + b_i) mod P31.
 
     a, b < 2^31 and x < 2^31, so a*x + b < 2^62 — exact in int64 in BOTH
     engines (no wraparound, no HUGEINT needed)."""
     rng = np.random.default_rng(42)
-    a = rng.integers(1, P31 - 1, n_perm, dtype=np.int64)
-    b = rng.integers(0, P31 - 1, n_perm, dtype=np.int64)
+    a = rng.integers(1, P31 - 1, MINHASH_PERMS, dtype=np.int64)
+    b = rng.integers(0, P31 - 1, MINHASH_PERMS, dtype=np.int64)
     return a, b
 
 
-def _minhash_agg(docs: DataFrame, n_perm: int) -> DataFrame:
-    """(doc_id, __m0..__m{n-1}) min-hash columns: one shuffle, all JVM codegen."""
-    a, b = _perm_params(n_perm)
+def _minhash_agg(docs: DataFrame) -> DataFrame:
+    """(doc_id, __m0..__m63) min-hash columns: one shuffle, all JVM codegen."""
+    a, b = _perm_params()
     toks = tokens_df(docs).select(
         "doc_id", (token_hash60(F.col("token")) % F.lit(P31)).alias("__h")
     )
@@ -194,28 +199,24 @@ def _minhash_agg(docs: DataFrame, n_perm: int) -> DataFrame:
         F.min((F.lit(int(a[i])) * F.col("__h") + F.lit(int(b[i]))) % F.lit(P31)).alias(
             f"__m{i}"
         )
-        for i in range(n_perm)
+        for i in range(MINHASH_PERMS)
     ]
     return toks.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n_perm: int = 64,
-    bands: int = 16,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs via banded LSH on MinHash signatures.
 
-    rows_per_band = n_perm // bands; a pair is a candidate iff some band's
+    rows_per_band = MINHASH_PERMS // MINHASH_BANDS; a pair is a candidate iff some band's
     sub-signature matches exactly — the shuffle key is (band_idx, band_hash),
     so collisions drive the join, never the cross product. The signature is an
     aggregate output (not a UDF), so band extraction re-reads agg columns
     instead of re-running any kernel — no checkpoint needed."""
-    rows = n_perm // bands
-    sig = _minhash_agg(docs, n_perm)
+    rows = MINHASH_PERMS // MINHASH_BANDS
+    sig = _minhash_agg(docs)
     band_exprs = [
         F.md5(F.concat_ws(",", *[F.col(f"__m{bi * rows + j}") for j in range(rows)]))
-        for bi in range(bands)
+        for bi in range(MINHASH_BANDS)
     ]
     banded = sig.select(
         F.col("doc_id"),
@@ -228,25 +229,21 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_lsh_pairs_oracle_sql(
-    docs_sql: str = "SELECT doc_id, text FROM documents",
-    n_perm: int = 64,
-    bands: int = 16,
-) -> str:
+def minhash_lsh_pairs_oracle_sql() -> str:
     """DuckDB twin of minhash_lsh_pairs — same constants, same arithmetic."""
-    a, b = _perm_params(n_perm)
-    rows = n_perm // bands
+    a, b = _perm_params()
+    rows = MINHASH_PERMS // MINHASH_BANDS
     mins = ",\n       ".join(
-        f"MIN(({int(a[i])} * h + {int(b[i])}) % {P31}) AS m{i}" for i in range(n_perm)
+        f"MIN(({int(a[i])} * h + {int(b[i])}) % {P31}) AS m{i}" for i in range(MINHASH_PERMS)
     )
     band_selects = "\nUNION ALL\n".join(
         f"SELECT doc_id, {bi} AS band_idx, md5(concat_ws(','"
         + "".join(f", m{bi * rows + j}" for j in range(rows))
         + ")) AS band_hash FROM sig"
-        for bi in range(bands)
+        for bi in range(MINHASH_BANDS)
     )
     return f"""
-WITH __docs__ AS ({docs_sql}),
+WITH __docs__ AS ({DOCS_SQL}),
 toks AS ({_TOKS_DUCK}),
 hs AS (SELECT doc_id, {_hash60_duck('token')} % {P31} AS h FROM toks),
 sig AS (SELECT doc_id, {mins} FROM hs GROUP BY doc_id),
@@ -303,7 +300,7 @@ def _simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
     return layout
 
 
-def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance <= max_hamming — EXACT
     recall: blocked on max_hamming+1 chunks (pigeonhole), refined by
     bit_count(xor) JVM-side. Output: (id_a, id_b, hamming:int)."""
@@ -327,7 +324,7 @@ def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     return pairs.select("id_a", "id_b", "hamming")
 
 
-def simhash_signature_duck_cte(docs_sql: str = "SELECT doc_id, text FROM documents") -> str:
+def simhash_signature_duck_cte() -> str:
     """DuckDB CTE chain ending in ``sig(doc_id, s)`` — the SimHash twin."""
     votes = ",\n       ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
@@ -337,7 +334,7 @@ def simhash_signature_duck_cte(docs_sql: str = "SELECT doc_id, text FROM documen
         f"(CASE WHEN v{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(SIMHASH_BITS)
     )
     return f"""
-WITH __docs__ AS ({docs_sql}),
+WITH __docs__ AS ({DOCS_SQL}),
 toks AS ({_TOKS_DUCK}),
 hs AS (SELECT doc_id, {_hash60_duck('token')} AS h FROM toks),
 votes AS (SELECT doc_id, {votes} FROM hs GROUP BY doc_id),
@@ -345,14 +342,13 @@ sig AS (SELECT doc_id, CAST({assemble} AS BIGINT) AS s FROM votes)
 """
 
 
-def simhash_pairs_oracle_sql(
-    docs_sql: str = "SELECT doc_id, text FROM documents", max_hamming: int = 3
-) -> str:
-    """Brute-force DuckDB twin: EVERY pair with hamming <= max_hamming — so a
-    green oracle row also certifies the engine's pigeonhole blocking recall."""
-    return simhash_signature_duck_cte(docs_sql) + f"""
+def simhash_pairs_oracle_sql() -> str:
+    """Brute-force DuckDB twin: EVERY pair with hamming <= SIMHASH_MAX_HAMMING —
+    so a green oracle row also certifies the engine's pigeonhole blocking
+    recall."""
+    return simhash_signature_duck_cte() + f"""
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(bit_count(xor(a.s, b.s)) AS INT) AS hamming
 FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.s, b.s)) <= {max_hamming}
+WHERE bit_count(xor(a.s, b.s)) <= {SIMHASH_MAX_HAMMING}
 """

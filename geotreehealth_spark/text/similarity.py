@@ -27,6 +27,18 @@ from pyspark.sql import functions as F
 from geotreehealth_spark.operators.aggregates import best_per_key
 from geotreehealth_spark.text.dedup import _self_pairs
 
+# The configuration the operators and their DuckDB oracles share: both draw
+# the same seeded planes and centroids from it, so the gate is exact.
+DIM = 64  # embedding width
+LSH_TABLES = 8  # OR-amplified hyperplane tables
+LSH_PLANES = 6  # sign bits per table
+LSH_MIN_SIM = 0.25  # rp_lsh_pairs' cosine refine; random 64-d vectors top out near 0.5
+IVF_LISTS = 16
+IVF_NPROBE = 4
+ANN_K = 10  # neighbors per probe of the ANN queries
+EMB_SQL = "SELECT vec_id, embedding FROM embeddings"  # the oracles' input
+PROBE_PRED = "vec_id % 50 = 0"  # the ANN oracles' probe set
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -144,20 +156,15 @@ def _bucketed(df: DataFrame, planes: np.ndarray, id_alias: str) -> DataFrame:
     )
 
 
-def rp_lsh_pairs(
-    embeddings: DataFrame,
-    dim: int,
-    n_tables: int = 8,
-    n_planes: int = 6,
-    min_sim: float = 0.25,
-) -> DataFrame:
-    """Near-dup pairs: same bucket in ANY of the n_tables (OR-amplification),
-    then exact cosine >= min_sim. Vectors join back only for the deduped
-    candidate set, so the bucket join shuffles ids, not arrays.
+def rp_lsh_pairs(embeddings: DataFrame) -> DataFrame:
+    """Near-dup pairs: same bucket in ANY of the LSH_TABLES tables
+    (OR-amplification), then exact cosine >= LSH_MIN_SIM. Vectors join back
+    only for the deduped candidate set, so the bucket join shuffles ids, not
+    arrays.
 
     The bucket table is computed ONCE (dedup._self_pairs persists it): the
     48-dot bucket pipeline never re-runs per join side."""
-    planes = rp_planes(dim, n_tables, n_planes)
+    planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
     cand = (
         _self_pairs(_bucketed(embeddings, planes, "vec_id"), "vec_id", ["table_idx", "bucket"])
         .select("id_a", "id_b")
@@ -169,19 +176,12 @@ def rp_lsh_pairs(
         cand.join(ea, "id_a")
         .join(eb, "id_b")
         .withColumn("sim", cosine_expr(F.col("__va"), F.col("__vb")))
-        .where(F.col("sim") >= min_sim)
+        .where(F.col("sim") >= LSH_MIN_SIM)
         .select("id_a", "id_b", "sim")
     )
 
 
-def ann_lsh_topk(
-    embeddings: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    dim: int = 64,
-    n_tables: int = 8,
-    n_planes: int = 6,
-) -> DataFrame:
+def ann_lsh_topk(embeddings: DataFrame, probes: DataFrame, k: int = 10) -> DataFrame:
     """Bucketed ANN: LSH candidate generation + exact cosine re-rank.
 
     The scale path for similarity search (VERDICT.md "the composition that
@@ -189,7 +189,7 @@ def ann_lsh_topk(
     |collisions|, not |emb| x |probes| — then cosine_topk-style re-rank over
     the candidate set. Results are the exact top-k OF THE CANDIDATE SET (ANN
     semantics); the oracle replicates the buckets so the gate is exact."""
-    planes = rp_planes(dim, n_tables, n_planes)
+    planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
     eb = _bucketed(embeddings, planes, "neighbor_id")
     pb = _bucketed(probes, planes, "probe_id")
     cand = (
@@ -247,27 +247,20 @@ def _ivf_listed(
     ).select(id_alias, vec_alias, F.col("__e.list_id").alias("list_id"))
 
 
-def ann_ivf_topk(
-    embeddings: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-    dim: int = 64,
-    n_lists: int = 16,
-    nprobe: int = 4,
-) -> DataFrame:
+def ann_ivf_topk(embeddings: DataFrame, probes: DataFrame) -> DataFrame:
     """IVF ANN: inverted-file candidate generation + exact cosine re-rank.
 
     The brief's second scale path beside LSH: every vector is assigned to its
     best coarse list map-side (no shuffle — sort_array argmax over centroid
-    literals), probes fan out to their nprobe best lists, and the candidate
+    literals), probes fan out to their IVF_NPROBE best lists, and the candidate
     join is a plain equi-join on list_id — work is the probed lists'
-    occupancy, not |emb| x |probes|. Exact top-k OF THE CANDIDATE SET (ANN
+    occupancy, not |emb| x |probes|. Exact top-ANN_K OF THE CANDIDATE SET (ANN
     semantics), identical output shape to ann_lsh_topk. The centroids are
     the seeded ivf_centroids draw, so the SQL oracle's literals match."""
-    cents = ivf_centroids(dim, n_lists)
+    cents = ivf_centroids(DIM, IVF_LISTS)
     e = _ivf_listed(embeddings, cents, 1, "neighbor_id", "__v")
-    p = _ivf_listed(probes, cents, nprobe, "probe_id", "__pv")
-    # No broadcast hint on the probe side: probes fan out nprobe-x with full
+    p = _ivf_listed(probes, cents, IVF_NPROBE, "probe_id", "__pv")
+    # No broadcast hint on the probe side: probes fan out IVF_NPROBE-x with full
     # dim-wide vectors, so at north-star probe cardinality a forced broadcast
     # is a driver-OOM risk (same rationale that removed the matching.py hint,
     # r3 item 2). AQE broadcasts it at runtime when it is actually small.
@@ -277,7 +270,7 @@ def ann_ivf_topk(
     scored = cand.select(
         "probe_id", "neighbor_id", cosine_expr(F.col("__pv"), F.col("__v")).alias("sim")
     )
-    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
+    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], ANN_K, "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -309,16 +302,10 @@ def _buckets_duck_cte(
     return f"__src_{name}__ AS ({src_sql}),\n{name} AS ({selects})"
 
 
-def rp_lsh_pairs_oracle_sql(
-    src_sql: str = "SELECT vec_id, embedding FROM embeddings",
-    dim: int = 64,
-    n_tables: int = 8,
-    n_planes: int = 6,
-    min_sim: float = 0.25,
-) -> str:
-    planes = rp_planes(dim, n_tables, n_planes)
+def rp_lsh_pairs_oracle_sql() -> str:
+    planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
     return f"""
-WITH {_buckets_duck_cte(src_sql, planes, 'vec_id', 'embedding', 'bk')},
+WITH {_buckets_duck_cte(EMB_SQL, planes, 'vec_id', 'embedding', 'bk')},
 cand AS (
     SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
     FROM bk a JOIN bk b
@@ -331,7 +318,7 @@ SELECT id_a, id_b, sim FROM (
     FROM cand
     JOIN embeddings ea ON ea.vec_id = id_a
     JOIN embeddings eb ON eb.vec_id = id_b
-) WHERE sim >= {min_sim}
+) WHERE sim >= {LSH_MIN_SIM}
 """
 
 
@@ -344,22 +331,12 @@ def _ivf_scores_duck_cte(src_sql: str, cents: np.ndarray, name: str) -> str:
     return f"__srcivf_{name}__ AS ({src_sql}),\n{name} AS ({selects})"
 
 
-def ann_ivf_topk_oracle_sql(
-    probe_pred: str = "vec_id % 50 = 0",
-    k: int = 10,
-    dim: int = 64,
-    n_lists: int = 16,
-    nprobe: int = 4,
-) -> str:
+def ann_ivf_topk_oracle_sql() -> str:
     """Same centroid literals, same left-associated dot order, same
     (score DESC, list_id ASC) assignment tie-break as ann_ivf_topk."""
-    cents = ivf_centroids(dim, n_lists)
-    e_cte = _ivf_scores_duck_cte(
-        "SELECT vec_id, embedding FROM embeddings", cents, "escore"
-    )
-    p_cte = _ivf_scores_duck_cte(
-        f"SELECT vec_id, embedding FROM embeddings WHERE {probe_pred}", cents, "pscore"
-    )
+    cents = ivf_centroids(DIM, IVF_LISTS)
+    e_cte = _ivf_scores_duck_cte(EMB_SQL, cents, "escore")
+    p_cte = _ivf_scores_duck_cte(f"{EMB_SQL} WHERE {PROBE_PRED}", cents, "pscore")
     return f"""
 WITH {e_cte},
 {p_cte},
@@ -375,7 +352,7 @@ plists AS (
         SELECT vec_id, list_id, ROW_NUMBER() OVER (
             PARTITION BY vec_id ORDER BY score DESC, list_id) AS rn
         FROM pscore
-    ) WHERE rn <= {nprobe}
+    ) WHERE rn <= {IVF_NPROBE}
 ),
 cand AS (
     SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id
@@ -395,27 +372,15 @@ SELECT probe_id, neighbor_id, sim, rank FROM (
         JOIN embeddings ep ON ep.vec_id = probe_id
         JOIN embeddings en ON en.vec_id = neighbor_id
     )
-) WHERE rank <= {k}
+) WHERE rank <= {ANN_K}
 """
 
 
-def ann_lsh_topk_oracle_sql(
-    probe_pred: str = "vec_id % 50 = 0",
-    k: int = 10,
-    dim: int = 64,
-    n_tables: int = 8,
-    n_planes: int = 6,
-) -> str:
-    planes = rp_planes(dim, n_tables, n_planes)
-    emb_cte = _buckets_duck_cte(
-        "SELECT vec_id, embedding FROM embeddings", planes, "vec_id", "embedding", "ebk"
-    )
+def ann_lsh_topk_oracle_sql() -> str:
+    planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
+    emb_cte = _buckets_duck_cte(EMB_SQL, planes, "vec_id", "embedding", "ebk")
     probe_cte = _buckets_duck_cte(
-        f"SELECT vec_id, embedding FROM embeddings WHERE {probe_pred}",
-        planes,
-        "vec_id",
-        "embedding",
-        "pbk",
+        f"{EMB_SQL} WHERE {PROBE_PRED}", planes, "vec_id", "embedding", "pbk"
     )
     return f"""
 WITH {emb_cte},
@@ -438,5 +403,5 @@ SELECT probe_id, neighbor_id, sim, rank FROM (
         JOIN embeddings ep ON ep.vec_id = probe_id
         JOIN embeddings en ON en.vec_id = neighbor_id
     )
-) WHERE rank <= {k}
+) WHERE rank <= {ANN_K}
 """

@@ -35,7 +35,7 @@ def test_image_features_deterministic(spark):
 
 def test_frame_sample_features(spark):
     refs = spark.createDataFrame([("v1", "vid://clip")], "doc_id string, media_ref string")
-    out = media_features.frame_sample_features(refs, n_frames=32, stride=8).collect()
+    out = media_features.frame_sample_features(refs).collect()
     assert [r.frame_idx for r in sorted(out, key=lambda r: r.frame_idx)] == [0, 1, 2, 3]
     assert all(len(r.feat) == 3 for r in out)
 
@@ -52,8 +52,8 @@ def test_band_ops(spark):
     out = df.select(
         arrays.band_slice(F.col("v"), 2, 4).alias("s"),
         arrays.band_drop(F.col("v"), 3).alias("d"),
-        arrays.band_pad(F.col("v"), 12, -1.0).alias("p"),
-        arrays.band_pad(F.col("v"), 5, -1.0).alias("noop"),
+        arrays.band_pad(F.col("v"), 12).alias("p"),
+        arrays.band_pad(F.col("v"), 5).alias("noop"),
     ).collect()[0]
     assert out.s == [2.0, 3.0, 4.0, 5.0]
     assert out.d == [1.0, 2.0, 4.0, 5.0, 6.0, 7.0, 8.0, 9.0, 10.0]

@@ -1,17 +1,23 @@
 """Physical-plan regression guard (tools/plan_audit.py): the scale
 invariants — no row-at-a-time Python anywhere, no cartesian blowups outside
-documented bounded fallbacks, whole-stage codegen on JVM-side plans."""
+documented bounded fallbacks, whole-stage codegen on JVM-side plans — and
+every query's plan against its committed fingerprint."""
 
+import json
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import __spark_entry__ as entry
-from plan_audit import audit, normalize
+from _harness import release_caches
+from plan_audit import audit, fingerprint, normalize, plan_string
 from tests.conftest import SF_DIR
+
+FINGERPRINTS = os.path.join(REPO, "plans", "fingerprints.json")
 
 # pure-Catalyst queries: zero Python of any kind, codegen present
 PURE_JVM = [
@@ -43,14 +49,31 @@ def audits(spark):
     return {n: audit(qs[n](spark, SF_DIR), execute=(n in PURE_JVM)) for n in names}
 
 
-def test_no_row_python_anywhere(spark):
-    qs = entry.queries()
-    offenders = []
-    for name, fn in qs.items():
-        a = audit(fn(spark, SF_DIR))
-        if a["batch_eval_python"]:
-            offenders.append(name)
+@pytest.fixture(scope="module")
+def plans(spark):
+    """Every query's formatted plan as built (not executed). Caches are
+    released before each build: storage an earlier query kept would show up
+    in a later plan as an InMemoryRelation."""
+    out = {}
+    for name, fn in entry.queries().items():
+        release_caches(spark)
+        out[name] = plan_string(fn(spark, SF_DIR))
+    return out
+
+
+def test_no_row_python_anywhere(plans):
+    offenders = [name for name, p in plans.items() if "BatchEvalPython" in p]
     assert offenders == [], f"row-at-a-time Python UDFs in: {offenders}"
+
+
+def test_plans_match_fingerprints(plans):
+    """A plan change is deliberate: regenerate plans/fingerprints.json with
+    tools/dump_plans.py at sf0.001 and name the moved queries in CHANGES.md."""
+    with open(FINGERPRINTS) as f:
+        committed = json.load(f)
+    got = {name: fingerprint(normalize(p)) for name, p in plans.items()}
+    moved = sorted(n for n in set(got) | set(committed) if got.get(n) != committed.get(n))
+    assert moved == [], f"plans moved (or queries added/removed): {moved}"
 
 
 def test_pure_jvm_queries_have_no_python(audits):
@@ -98,11 +121,14 @@ def test_normalize_keeps_only_the_plan():
         "(2) Exchange\nArguments: hashpartitioning(vec_id#57L, 8), [plan_id=10516]\n"
         "Project [transform(e#58, lambdafunction(lambda x_4#9731, lambda x_4#9731, false))]\n"
         "Scan ExistingRDD MapPartitionsRDD[17] Statistics(sizeInBytes=1.2 MiB, rowCount=30)\n"
+        "Arguments: [id#5L], MapPartitionsRDD[21] at localCheckpoint at "
+        "NativeMethodAccessorImpl.java:0, ExistingRDD, UnknownPartitioning(0)\n"
     )
     b = (
         a.replace("#57L", "#9L").replace("#58", "#3").replace("x_4#9731", "x_12#40")
         .replace("10516", "7").replace("[17]", "[2]").replace("1.2 MiB", "3.0 KiB")
         .replace("/data/sf0.1/", "/tmp/sf0.001/").replace("(1)", "(4)")
+        .replace("[21]", "[3]").replace("NativeMethodAccessorImpl.java", "<unknown>")
     )
     assert a != b and normalize(a) == normalize(b)
     assert "hashpartitioning(vec_id#L, 8)" in normalize(a)

@@ -7,8 +7,10 @@ The scan is an AST source scan (no imports) that matches by name, as
 tests/test_options.py does: a reference to a name reaches every engine
 function of that name, wherever it is defined. A reference is an identifier,
 an attribute name or an identifier string (a dotted string names each part,
-so "Catalog.read" names both). A multi-line string that parses as Python is
-scanned as code, so a script run through `python -c` is a root too.
+so "Catalog.read" names both). Sources are read as tests/test_options.py
+reads them: a multi-line string that parses as Python is scanned as code, so
+a script run through `python -c` is a root too (and one in an engine module
+counts as module-level code).
 
 Roots are __spark_entry__.py, bench.py, tools/*.py, perfbench/*.py and the
 module-level code of every engine module (decorators and defaults included).
@@ -21,7 +23,7 @@ class.
 import ast
 import re
 
-from tests.test_options import ENGINE, ROOT, _module
+from tests.test_options import ROOT, engine_sources, trees
 
 _INVARIANT = "the BASELINE input_hint span invariant, run by test_docs on the live generator"
 _FIXTURE = "fixture encoder for the tests of the live WKB decoders"
@@ -50,11 +52,6 @@ def _names(node: ast.AST) -> set[str]:
         elif isinstance(n, ast.Constant) and isinstance(n.value, str):
             if _IDENT.fullmatch(n.value):
                 out.update(n.value.split("."))
-            elif "\n" in n.value:
-                try:
-                    out |= _names(ast.parse(n.value))
-                except SyntaxError:
-                    pass
     return out
 
 
@@ -91,10 +88,13 @@ def unreached(engine: dict[str, str], roots: list[str]) -> list[str]:
     {module: source} that no root source in `roots` reaches."""
     reached: set[str] = set()
     for src in roots:
-        reached |= _names(ast.parse(src))
+        for tree in trees(src):
+            reached |= _names(tree)
     pending = []
     for mod, src in engine.items():
-        top, defs = _split(ast.parse(src))
+        module, *scripts = trees(src)
+        top, defs = _split(module)
+        top += scripts
         for node in top:
             reached |= _names(node)
         pending += [(f"{mod}:{q}", name, cls, node) for q, name, cls, node in defs]
@@ -112,10 +112,9 @@ def unreached(engine: dict[str, str], roots: list[str]) -> list[str]:
 
 
 def _repo_unreached() -> list[str]:
-    engine = {_module(p): p.read_text() for p in sorted(ENGINE.rglob("*.py"))}
     roots = [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
     roots += sorted((ROOT / "tools").glob("*.py")) + sorted((ROOT / "perfbench").glob("*.py"))
-    return unreached(engine, [p.read_text() for p in roots])
+    return unreached(engine_sources(), [p.read_text() for p in roots])
 
 
 def test_every_engine_function_is_reached_from_a_root():

@@ -13,7 +13,7 @@ import pytest
 
 from geotreehealth_spark.text import dedup as tdedup
 from geotreehealth_spark.text import similarity
-from geotreehealth_spark.text.dedup import P31, SIMHASH_BITS, _perm_params
+from geotreehealth_spark.text.dedup import MINHASH_PERMS, P31, SIMHASH_BITS, _perm_params
 from tests.conftest import SF_DIR
 
 
@@ -26,8 +26,8 @@ def py_hash60(token: str) -> int:
     return int(hashlib.md5(token.encode("utf-8")).hexdigest()[:15], 16)
 
 
-def py_minhash(text: str, n_perm: int) -> list[int]:
-    a, b = _perm_params(n_perm)
+def py_minhash(text: str) -> list[int]:
+    a, b = _perm_params()
     toks = sorted({w for w in text.lower().split() if w})
     h = np.array([py_hash60(t) % P31 for t in toks], dtype=np.int64)
     sig = (a[:, None] * h[None, :] + b[:, None]) % P31
@@ -45,13 +45,13 @@ def py_simhash(text: str) -> int:
 
 
 def test_minhash_matches_oracle_and_estimates_jaccard(spark, docs):
-    sigs = tdedup._minhash_agg(docs.limit(50), 64).toPandas().set_index("doc_id")
+    sigs = tdedup._minhash_agg(docs.limit(50)).toPandas().set_index("doc_id")
     texts = docs.limit(50).toPandas().set_index("doc_id").text
     for doc_id, row in sigs.iterrows():
-        assert [row[f"__m{i}"] for i in range(64)] == py_minhash(texts[doc_id], 64)
+        assert [row[f"__m{i}"] for i in range(MINHASH_PERMS)] == py_minhash(texts[doc_id])
     # signature agreement ~ true word-set jaccard
     t = texts.iloc[0], texts.iloc[1]
-    s0, s1 = py_minhash(t[0], 64), py_minhash(t[1], 64)
+    s0, s1 = py_minhash(t[0]), py_minhash(t[1])
     est = np.mean(np.array(s0) == np.array(s1))
     a, b = set(t[0].lower().split()), set(t[1].lower().split())
     true_j = len(a & b) / len(a | b)
@@ -60,7 +60,7 @@ def test_minhash_matches_oracle_and_estimates_jaccard(spark, docs):
 
 def test_minhash_lsh_recall(spark, docs):
     """LSH candidates must contain every pair above the band threshold."""
-    pairs = tdedup.minhash_lsh_pairs(docs, n_perm=64, bands=16).toPandas()
+    pairs = tdedup.minhash_lsh_pairs(docs).toPandas()
     cand = set(zip(pairs.id_a, pairs.id_b))
     exact = tdedup.jaccard_pairs(docs, threshold=0.9).toPandas()
     for ia, ib in zip(exact.id_a, exact.id_b):
@@ -137,7 +137,7 @@ def test_ann_lsh_topk_subset_of_exact(spark):
     neighbor's sim is correct and ranks are consistent."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     probes = emb.where(F.col("vec_id") < 2)
-    got = similarity.ann_lsh_topk(emb, probes, k=5, dim=64).toPandas()
+    got = similarity.ann_lsh_topk(emb, probes, k=5).toPandas()
     pdf = emb.toPandas().set_index("vec_id")
     for row in got.itertuples():
         a = np.asarray(pdf.loc[row.probe_id].embedding, dtype=np.float64)
@@ -194,7 +194,7 @@ def test_set_jaccard_matches_brute_force(spark, max_df):
     grams = {i: {t.lower()[j:j + 4] for j in range(len(t) - 3)} for i, t in rows}
     for got, sets, threshold in (
         (tdedup.jaccard_pairs(docs, threshold=0.3, max_df=max_df), words, 0.3),
-        (tdedup.ngram_jaccard_pairs(docs, n=4, threshold=0.25, max_df=max_df), grams, 0.25),
+        (tdedup.ngram_jaccard_pairs(docs, threshold=0.25, max_df=max_df), grams, 0.25),
     ):
         expect = _brute_set_jaccard(sets, threshold, max_df)
         assert expect, "corpus must produce pairs"

@@ -24,7 +24,7 @@ def test_zonal_raster_parity(spark):
     # the multi-partition ingest): ~300 crowns
     crowns = synth.crowns(spark, SF_DIR).where(F.col("crown_key") % 15 == 0)
     geo = generator.crowns_with_geometry(crowns)
-    tiles = tiling.tile_grid(spark, extent=1000.0, tile_size=100.0, overlap=0.0).selectExpr(
+    tiles = tiling.tile_grid(spark, overlap=0.0).selectExpr(
         "tile_id", "txmin", "tymin", "txmax", "tymax",
         "concat('hsi://tile/', tile_id) AS media_ref",
         "12 AS bands", "100 AS height", "100 AS width",
@@ -67,9 +67,7 @@ def test_zonal_overlapping_tiles_exactly_once(spark):
     geo = generator.crowns_with_geometry(crowns)
 
     def manifest(overlap):
-        return tiling.tile_grid(
-            spark, extent=1000.0, tile_size=100.0, overlap=overlap
-        ).selectExpr(
+        return tiling.tile_grid(spark, overlap=overlap).selectExpr(
             "tile_id", "txmin", "tymin", "txmax", "tymax",
             "cxmin", "cymin", "cxmax", "cymax",
             "concat('hsic://tile/', CAST(tile_key AS STRING)) AS media_ref",
@@ -137,7 +135,7 @@ def test_zonal_box_batch_parity(spark):
     boxes = spark.createDataFrame(pdf)
     # random (hsi) cubes, NOT the constant hsic ones — exactness must not
     # depend on closed-form-friendly values
-    tiles = tiling.tile_grid(spark, extent=1000.0, tile_size=100.0, overlap=0.0).selectExpr(
+    tiles = tiling.tile_grid(spark, overlap=0.0).selectExpr(
         "tile_id", "txmin", "tymin", "txmax", "tymax",
         "concat('hsi://tile/', tile_id) AS media_ref",
         "6 AS bands", "100 AS height", "100 AS width",
@@ -190,7 +188,7 @@ def test_zonal_box_core_bounds_parity(spark, overlap):
     ]
     boxes = spark.createDataFrame(pdf)
     px = int(100 + 2 * overlap)  # 1 m pixels
-    tiles = tiling.tile_grid(spark, extent=1000.0, tile_size=100.0, overlap=overlap).selectExpr(
+    tiles = tiling.tile_grid(spark, overlap=overlap).selectExpr(
         "tile_id", "txmin", "tymin", "txmax", "tymax", "cxmin", "cymin", "cxmax", "cymax",
         "concat('hsi://tile/', tile_id) AS media_ref",
         "5 AS bands", f"{px} AS height", f"{px} AS width",

@@ -78,8 +78,7 @@ secs = []
 for trial in range(2):
     t0 = time.time()
     matches = pip_join.pip_assign_best(
-        stems, crowns_j, poly_id="crown_id", point_id="stem_tag",
-        cell_size=10.0, poly_wkb=None,
+        stems, crowns_j, poly_id="crown_id", point_id="stem_tag", cell_size=10.0
     ).select("crown_id", "stem_tag", "dist").localCheckpoint(eager=True)
     match_rows = matches.count()
     secs.append(time.time() - t0)
@@ -107,7 +106,7 @@ crowns = (crowns.withColumn("cy", F.col("cy") + off)
 geo = generator.crowns_with_geometry(
     crowns.withColumn("crown_key", F.col("crown_key") * 100 + F.col("rep"))
 ).repartition(64).localCheckpoint(eager=True)
-base_tiles = tiling.tile_grid(spark, extent=1000.0, tile_size=100.0, overlap=0.0)
+base_tiles = tiling.tile_grid(spark, overlap=0.0)
 tiles = (base_tiles.crossJoin(F.broadcast(reps))
          .withColumn("tymin", F.col("tymin") + off)
          .withColumn("tymax", F.col("tymax") + off)

@@ -10,11 +10,16 @@ Each file is the formatted physical plan of the query as built
 plan_audit.normalize — enough to verify Exchange counts, join strategies,
 scan pushdown, and Python-boundary nodes without running Spark, and to diff
 two commits' plans: `diff -r plans/<a> plans/<b>` shows only real changes.
-An absolute tag writes outside plans/.
+Caches are released before each build, so storage an earlier query kept
+never shows up in a later query's plan. fingerprints.json beside the texts
+holds the sha256 of each text; at sf0.001 it is the file
+tests/test_plans.py checks, plans/fingerprints.json. An absolute tag writes
+outside plans/.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -22,7 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from geotreehealth_spark.session import get_spark  # noqa: E402
-from tools.plan_audit import normalize, plan_string  # noqa: E402
+from tools._harness import release_caches  # noqa: E402
+from tools.plan_audit import fingerprint, normalize, plan_string  # noqa: E402
 
 
 def main() -> None:
@@ -36,7 +42,9 @@ def main() -> None:
     queries = entrymod.queries()
     if not names:
         names = list(queries)
+    hashes = {}
     for name in names:
+        release_caches(spark)
         try:
             p = normalize(plan_string(queries[name](spark, sf_dir)))
         except Exception as e:  # noqa: BLE001
@@ -44,7 +52,11 @@ def main() -> None:
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(p)
+        hashes[name] = fingerprint(p)
         print(f"wrote {path} ({len(p)} chars)")
+    with open(os.path.join(out_dir, "fingerprints.json"), "w") as f:
+        json.dump(hashes, f, indent=1, sort_keys=True)
+        f.write("\n")
     spark.stop()
 
 

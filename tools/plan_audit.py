@@ -21,6 +21,7 @@ tests/test_plans.py asserts the invariants per query class.
 """
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import sys
@@ -37,6 +38,9 @@ _VOLATILE = [
     (re.compile(r" \(\d+\)$", re.M), " (n)"),  # node numbers, tree lines
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"\b(\w*RDD)\[\d+\]"), r"\1[]"),
+    # an RDD's creation site, which depends on what ran before in the
+    # session: "NativeMethodAccessorImpl.java:0" or "<unknown>:0"
+    (re.compile(r"(\b\w*RDD\[\d*\] at \w+) at [^\s,]+:\d+"), r"\1"),
     (re.compile(r"Statistics\([^)]*\)"), "Statistics(...)"),
     (re.compile(r"(?:file:|(?<=[\s\[,]))/(?:[^\s/,\[\]()]+/)+"), "<dir>/"),  # file paths
 ]
@@ -44,11 +48,17 @@ _VOLATILE = [
 
 def normalize(plan: str) -> str:
     """The plan text with expression ids, lambda suffixes, node numbers,
-    plan ids, RDD ids, statistics and directories rewritten, so that plans
-    of the same query from different sessions or inputs compare equal."""
+    plan ids, RDD ids and creation sites, statistics and directories
+    rewritten, so that plans of the same query from different sessions or
+    inputs compare equal."""
     for pattern, repl in _VOLATILE:
         plan = pattern.sub(repl, plan)
     return plan
+
+
+def fingerprint(normalized: str) -> str:
+    """sha256 of a normalized plan text: what plans/fingerprints.json keeps."""
+    return hashlib.sha256(normalized.encode()).hexdigest()
 
 
 def plan_string(df) -> str:

@@ -32,8 +32,7 @@ def main() -> None:
     stems = synth.stems(spark, args.sf_dir)
     crowns = synth.crowns(spark, args.sf_dir)
     matches = pip_join.pip_assign_best(
-        stems, crowns, poly_id="crown_id", point_id="stem_tag",
-        cell_size=25.0, poly_wkb=None,
+        stems, crowns, poly_id="crown_id", point_id="stem_tag", cell_size=25.0
     )
     h = matches.select(
         F.expr("bit_xor(xxhash64(crown_id, stem_tag, dist))").alias("h")
