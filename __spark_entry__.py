@@ -557,7 +557,7 @@ def q_nms_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cell ~ crown diameter: in the dense strip a 50 m cell holds thousands of
     # crowns; 10 m keeps the candidate count near the true bbox-overlap count
     out = nms.greedy_nms(
-        crowns, id_col="crown_id", score_col="score", threshold=0.3,
+        crowns, id_col="crown_id", score_col="score",
         cell_size=10.0, bounds=("xmin", "ymin", "xmax", "ymax"), wkb_col=None,
     )
     return out.select("crown_id", "selected")
@@ -575,10 +575,7 @@ def q_weighted_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = crowns.join(stems, "stem_tag").select(
         "crown_id", "xmin", "ymin", "xmax", "ymax", "priority"
     )
-    out = nms.weighted_nms(
-        polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-        cell_size=10.0,
-    )
+    out = nms.weighted_nms(polys, id_col="crown_id", priority_col="priority", cell_size=10.0)
     return out.select("crown_id", "wscore", "selected")
 
 
@@ -804,8 +801,8 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal video path under the oracle gate: vidc:// clips with
     constant frames (source frame j channel c = (key*31 + j*11 + c*7) % 256)
-    → mapInPandas frame sampling (every 8th of 32) → per-frame channel means,
-    closed-form in SQL (media.resolve_frames)."""
+    → mapInPandas frame sampling (media.resolve_frames) → per-frame channel
+    means, closed-form in SQL."""
     from geotreehealth_spark.operators import media_features
 
     refs = _const_media_refs(spark, sf_dir, "vidc://")
@@ -900,6 +897,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    from geotreehealth_spark import media
     from geotreehealth_spark.text import dedup as tdedup
     from geotreehealth_spark.text import similarity
 
@@ -1493,16 +1491,16 @@ def oracle_sql() -> dict[str, str]:
                   FROM documents WHERE doc_id % 4 = 0)
             CROSS JOIN range(0, 30) r
         """,
-        "frame_features": """
+        "frame_features": f"""
             SELECT CAST(doc_id AS VARCHAR) AS doc_id,
                    CAST(r.range AS INT) AS frame_idx,
-                   [CAST((k * 31 + r.range * 8 * 11) % 256 AS DOUBLE),
-                    CAST((k * 31 + r.range * 8 * 11 + 7) % 256 AS DOUBLE),
-                    CAST((k * 31 + r.range * 8 * 11 + 14) % 256 AS DOUBLE)]
+                   [CAST((k * 31 + r.range * {media.FRAME_STRIDE} * 11) % 256 AS DOUBLE),
+                    CAST((k * 31 + r.range * {media.FRAME_STRIDE} * 11 + 7) % 256 AS DOUBLE),
+                    CAST((k * 31 + r.range * {media.FRAME_STRIDE} * 11 + 14) % 256 AS DOUBLE)]
                        AS feat
             FROM (SELECT doc_id, doc_id % 997 AS k FROM documents
                   WHERE doc_id % 4 = 0)
-            CROSS JOIN range(0, 4) r
+            CROSS JOIN range(0, {media.CLIP_FRAMES // media.FRAME_STRIDE}) r
         """,
         # transitive closure of the (shared-dialect) jaccard pair graph:
         # recursive reachability, then MIN over reached labels per node
@@ -1641,7 +1639,7 @@ def _nms_oracle() -> str:
     from geotreehealth_spark.operators.nms import greedy_nms_box_oracle_sql
 
     polys = synth.oracle_with(("crowns", V["crowns"])) + NMS_SUBSET_SQL
-    return greedy_nms_box_oracle_sql(polys, id_col="crown_id", score_col="score", threshold=0.3)
+    return greedy_nms_box_oracle_sql(polys)
 
 
 def _weighted_nms_oracle() -> str:
@@ -1651,9 +1649,7 @@ def _weighted_nms_oracle() -> str:
         synth.oracle_with(("stems", V["stems"]), ("crowns", V["crowns"]))
         + WNMS_SUBSET_SQL
     )
-    return weighted_nms_box_oracle_sql(
-        polys, id_col="crown_id", priority_col="priority", threshold=0.5
-    )
+    return weighted_nms_box_oracle_sql(polys)
 
 
 def _lang_id_oracle() -> str:

@@ -14,8 +14,9 @@ This module reproduces that with numpy only:
   closed loops; walking them with a left-hand rule yields the exterior ring in
   pixel coordinates, converted to world coordinates via the window transform.
 
-Pixel (r, c) covers world square [txmin + c*res, txmin + (c+1)*res) x
-(tymax - (r+1)*res, tymax - r*res] — matching the rasterize_mask convention,
+Pixels are unit squares: pixel (r, c) covers world square [txmin + c,
+txmin + c + 1) x (tymax - r - 1, tymax - r] — matching the rasterize_mask
+convention at resolution 1,
 so polygonize(rasterize(poly)) == pixel-snapped poly.
 """
 
@@ -149,34 +150,32 @@ def polygonize(
     mask: np.ndarray,
     txmin: float = 0.0,
     tymax: float | None = None,
-    res_x: float = 1.0,
-    res_y: float = 1.0,
 ) -> list[dict]:
     """Binary mask → one polygon per 4-connected component.
 
     Returns a list of dicts: {ring: (k,2) world-coord array, area: float,
-    n_px: int, seed_rc: (r, c) of the component's first pixel}. World frame:
-    x = txmin + col*res_x, y = tymax - row*res_y (tymax defaults to h*res_y
-    so a bare mask maps to y-up math coordinates like the reference golden).
+    n_px: int, seed_rc: (r, c) of the component's first pixel}. World frame
+    of unit pixels: x = txmin + col, y = tymax - row (tymax defaults to h so
+    a bare mask maps to y-up math coordinates like the reference golden).
     """
     mask = np.asarray(mask, dtype=bool)
     h, w = mask.shape
     if tymax is None:
-        tymax = h * res_y
+        tymax = float(h)
     labels, n = label_components(mask)
     out = []
     for i in range(n):
         comp = labels == i
         ring_px = _component_ring(comp)
         ring = np.empty_like(ring_px)
-        ring[:, 0] = txmin + ring_px[:, 0] * res_x
-        ring[:, 1] = tymax - ring_px[:, 1] * res_y
+        ring[:, 0] = txmin + ring_px[:, 0]
+        ring[:, 1] = tymax - ring_px[:, 1]
         n_px = int(comp.sum())
         rs, cs = np.nonzero(comp)
         out.append(
             {
                 "ring": ring,
-                "area": float(n_px) * res_x * res_y,
+                "area": float(n_px),
                 "n_px": n_px,
                 "seed_rc": (int(rs[0]), int(cs[0])),
             }

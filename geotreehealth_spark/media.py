@@ -127,6 +127,11 @@ IMG_PREFIX = "img://"
 IMG_CONST_PREFIX = "imgc://"
 VID_PREFIX = "vid://"
 VID_CONST_PREFIX = "vidc://"
+# the synthetic clips: CLIP_FRAMES frames of FRAME_SIZE x FRAME_SIZE pixels,
+# of which resolve_frames samples every FRAME_STRIDE-th
+CLIP_FRAMES = 32
+FRAME_STRIDE = 8
+FRAME_SIZE = 32
 
 
 def resolve_image(media_ref: str, height: int, width: int) -> np.ndarray:
@@ -157,32 +162,30 @@ def resolve_image(media_ref: str, height: int, width: int) -> np.ndarray:
     return decode_external(media_ref)
 
 
-def resolve_frames(
-    media_ref: str, n_frames: int, stride: int, height: int, width: int
-) -> np.ndarray:
-    """vid:// media_ref → (k, h, w, 3) uint8 frames sampled every `stride`
-    from a deterministic synthetic clip of n_frames (frame-sampling plumbing;
-    real video decode is a decode_external concern).
+def resolve_frames(media_ref: str) -> np.ndarray:
+    """vid:// media_ref → (k, FRAME_SIZE, FRAME_SIZE, 3) uint8 frames, every
+    FRAME_STRIDE-th of a deterministic synthetic clip of CLIP_FRAMES
+    (frame-sampling plumbing; real video decode is a decode_external concern).
 
     vidc:// refs yield constant frames (channel c of source frame j =
     (key*31 + j*11 + c*7) % 256) so per-frame channel means are closed-form —
     the oracle gate for the frame-sampling path (VERDICT r3 missing 1)."""
+    idxs = range(0, CLIP_FRAMES, FRAME_STRIDE)
     if media_ref.startswith(VID_CONST_PREFIX):
         key = int(media_ref[len(VID_CONST_PREFIX):])
         frames = []
-        for j in range(0, n_frames, stride):
+        for j in idxs:
             vals = (key * 31 + j * 11 + np.arange(3) * 7) % 256
             frames.append(
                 np.broadcast_to(
-                    vals.astype(np.uint8)[None, None, :], (height, width, 3)
+                    vals.astype(np.uint8)[None, None, :], (FRAME_SIZE, FRAME_SIZE, 3)
                 ).copy()
             )
         return np.stack(frames)
     if not media_ref.startswith(VID_PREFIX):
         return decode_external(media_ref)
-    idxs = range(0, n_frames, stride)
     frames = [
-        resolve_image(f"{IMG_PREFIX}{hash_ref(media_ref)}-{i}", height, width)
+        resolve_image(f"{IMG_PREFIX}{hash_ref(media_ref)}-{i}", FRAME_SIZE, FRAME_SIZE)
         for i in idxs
     ]
     return np.stack(frames)

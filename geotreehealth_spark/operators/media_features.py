@@ -86,20 +86,18 @@ def audio_features(refs: DataFrame, n_samples: int = 16000) -> DataFrame:
 
 
 def frame_sample_features(refs: DataFrame) -> DataFrame:
-    """Per clip of 32 frames: sample every 8th 32x32 frame, per-frame channel
-    means.
+    """Per clip (media.resolve_frames): its sampled frames' channel means.
 
     Output: (doc_id, frame_idx int, feat array<double> of 3). One row per
     sampled frame — the exploded layout downstream dedup/similarity ops expect.
     """
     schema = "doc_id string, frame_idx int, feat array<double>"
-    h, w = 32, 32
 
     def per_batch(it):
         for pdf in it:
             ids, fidx, feats = [], [], []
             for row in pdf.itertuples():
-                frames = media.resolve_frames(row.media_ref, 32, 8, h, w)
+                frames = media.resolve_frames(row.media_ref)
                 for i, fr in enumerate(frames):
                     ids.append(str(row.doc_id))
                     fidx.append(i)

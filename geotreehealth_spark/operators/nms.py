@@ -41,6 +41,11 @@ from geotreehealth_spark.operators.overlap import (
 )
 from geotreehealth_spark.operators.udfs import overlap_ratio_udf
 
+# overlap criterion of greedy NMS (inter / max(areaA, areaB)) and of
+# weighted NMS (IoU) above which two polygons conflict; the oracles read the
+# same values
+GREEDY_THRESHOLD = 0.3
+WEIGHTED_THRESHOLD = 0.5
 # edge lists up to this many (winner, loser) pairs run the fixpoint on the
 # driver; larger ones take the distributed join-based fixpoint
 _DRIVER_FIXPOINT_MAX = 2_000_000
@@ -62,7 +67,6 @@ def greedy_nms(
     polys: DataFrame,
     id_col: str,
     score_col: str,
-    threshold: float = 0.3,
     cell_size: float = 50.0,
     bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
     wkb_col: str | None = None,
@@ -72,14 +76,14 @@ def greedy_nms(
 
     The conflict-edge DISCOVERY is always fully distributed (the quadratic
     part): directed edges (winner, loser) under the global greedy order, for
-    every pair whose overlap ratio inter / max(areaA, areaB) exceeds the
-    threshold (get_polygons.py:806-816). With wkb_col=None boxes are exact
-    geometry; otherwise the polygon kernel refines the bbox candidates.
+    every pair whose overlap ratio inter / max(areaA, areaB) exceeds
+    GREEDY_THRESHOLD (get_polygons.py:806-816). With wkb_col=None boxes are
+    exact geometry; otherwise the polygon kernel refines the bbox candidates.
     ``_suppress`` then runs the fixpoint over the edge list.
 
     area_col: optional TRUE polygon area column. When present, the JVM prune
-    keeps only pairs with box_inter / max(poly_area) > threshold — sound for
-    ANY polygons (poly_inter <= box_inter). Without it the prune is just
+    keeps only pairs with box_inter / max(poly_area) > GREEDY_THRESHOLD —
+    sound for ANY polygons (poly_inter <= box_inter). Without it the prune is just
     box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim that
     thin diagonal slivers violate — ADVICE.md round 1).
 
@@ -102,7 +106,7 @@ def greedy_nms(
                 sound_bound = box_inter / F.greatest(
                     F.col(f"a_{area_col}"), F.col(f"b_{area_col}")
                 )
-                pairs = pairs.where(sound_bound > threshold)
+                pairs = pairs.where(sound_bound > GREEDY_THRESHOLD)
             else:
                 pairs = pairs.where(box_inter > 0.0)
             geoms = polys.select(id_col, wkb_col)
@@ -123,7 +127,7 @@ def greedy_nms(
         # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
         # each unordered pair exactly once
         edges = o.checkpoint(_oriented(
-            pairs.where(measure > threshold),
+            pairs.where(measure > GREEDY_THRESHOLD),
             F.col(f"a_{id_col}"), F.col(f"b_{id_col}"),
             F.col(f"a_{score_col}"), F.col(f"b_{score_col}"),
         ))
@@ -223,7 +227,7 @@ def weighted_nms(
     polys: DataFrame,
     id_col: str,
     priority_col: str,
-    threshold: float = 0.5,
+    threshold: float = WEIGHTED_THRESHOLD,
     cell_size: float = 50.0,
 ) -> DataFrame:
     """W4 weighted NMS (batch_sam.py:692-731): score ``wscore`` = priority -
@@ -344,69 +348,62 @@ def _fixpoint_rounds_sql() -> str:
     return ",\n".join(parts)
 
 
-def greedy_nms_box_oracle_sql(
-    polys_sql: str, id_col: str, score_col: str, threshold: float
-) -> str:
-    """DuckDB twin of greedy_nms over BOX geometry: (id, selected)."""
+def greedy_nms_box_oracle_sql(polys_sql: str) -> str:
+    """DuckDB twin of greedy_nms over BOX geometry: (crown_id, selected)
+    from crown boxes ranked by ``score``."""
     measure = _measure_duck("overlap_ratio")
-    a_wins = (
-        f"(a.{score_col} > b.{score_col} OR "
-        f"(a.{score_col} = b.{score_col} AND a.{id_col} < b.{id_col}))"
-    )
+    a_wins = "(a.score > b.score OR (a.score = b.score AND a.crown_id < b.crown_id))"
     return f"""
 WITH polys AS MATERIALIZED ({polys_sql}),
 conflicts AS MATERIALIZED (
-    SELECT CASE WHEN {a_wins} THEN a.{id_col} ELSE b.{id_col} END AS winner,
-           CASE WHEN {a_wins} THEN b.{id_col} ELSE a.{id_col} END AS loser
+    SELECT CASE WHEN {a_wins} THEN a.crown_id ELSE b.crown_id END AS winner,
+           CASE WHEN {a_wins} THEN b.crown_id ELSE a.crown_id END AS loser
     FROM polys a JOIN polys b
-      ON a.{id_col} < b.{id_col}
+      ON a.crown_id < b.crown_id
      AND {_BOX_OVERLAP_SQL}
-    WHERE {measure} > {threshold!r}
+    WHERE {measure} > {GREEDY_THRESHOLD!r}
 ),
 {_fixpoint_rounds_sql()}
-SELECT {id_col}, {id_col} NOT IN (SELECT id FROM supp) AS selected FROM polys
+SELECT crown_id, crown_id NOT IN (SELECT id FROM supp) AS selected FROM polys
 """
 
 
-def weighted_nms_box_oracle_sql(
-    polys_sql: str, id_col: str, priority_col: str, threshold: float
-) -> str:
-    """DuckDB twin of weighted_nms: quantized penalty, then the fixpoint."""
+def weighted_nms_box_oracle_sql(polys_sql: str) -> str:
+    """DuckDB twin of weighted_nms over crown boxes with a ``priority``:
+    quantized penalty, then the fixpoint."""
     measure = _measure_duck("iou")
-    score = f"{priority_col} - CAST(COALESCE(pen.pen_micro, 0) AS DOUBLE) / 1e6"
-    a_wins = "(a.wscore > b.wscore OR (a.wscore = b.wscore AND a.{i} < b.{i}))".format(
-        i=id_col
-    )
+    score = "priority - CAST(COALESCE(pen.pen_micro, 0) AS DOUBLE) / 1e6"
+    a_wins = "(a.wscore > b.wscore OR (a.wscore = b.wscore AND a.crown_id < b.crown_id))"
     return f"""
 WITH rawpolys AS MATERIALIZED ({polys_sql}),
 ovl AS MATERIALIZED (
-    SELECT a.{id_col} AS id_a, b.{id_col} AS id_b, {measure} AS m
+    SELECT a.crown_id AS id_a, b.crown_id AS id_b, {measure} AS m
     FROM rawpolys a JOIN rawpolys b
-      ON a.{id_col} < b.{id_col}
+      ON a.crown_id < b.crown_id
      AND {_BOX_OVERLAP_SQL}
-    WHERE {measure} > {threshold!r}
+    WHERE {measure} > {WEIGHTED_THRESHOLD!r}
 ),
 both_sides AS (
-    SELECT id_a AS {id_col}, m FROM ovl UNION ALL SELECT id_b AS {id_col}, m FROM ovl
+    SELECT id_a AS crown_id, m FROM ovl UNION ALL SELECT id_b AS crown_id, m FROM ovl
 ),
 pen AS (
-    SELECT {id_col}, SUM(CAST(ROUND(m * 1e6) AS BIGINT)) AS pen_micro
-    FROM both_sides GROUP BY {id_col}
+    SELECT crown_id, SUM(CAST(ROUND(m * 1e6) AS BIGINT)) AS pen_micro
+    FROM both_sides GROUP BY crown_id
 ),
 polys AS MATERIALIZED (
     SELECT p.*, {score} AS wscore
-    FROM rawpolys p LEFT JOIN pen USING ({id_col})
+    FROM rawpolys p LEFT JOIN pen USING (crown_id)
 ),
 conflicts AS MATERIALIZED (
-    SELECT CASE WHEN {a_wins} THEN a.{id_col} ELSE b.{id_col} END AS winner,
-           CASE WHEN {a_wins} THEN b.{id_col} ELSE a.{id_col} END AS loser
+    SELECT CASE WHEN {a_wins} THEN a.crown_id ELSE b.crown_id END AS winner,
+           CASE WHEN {a_wins} THEN b.crown_id ELSE a.crown_id END AS loser
     FROM polys a JOIN polys b
-      ON a.{id_col} < b.{id_col}
+      ON a.crown_id < b.crown_id
      AND {_BOX_OVERLAP_SQL}
-    WHERE {measure} > {threshold!r}
+    WHERE {measure} > {WEIGHTED_THRESHOLD!r}
 ),
 {_fixpoint_rounds_sql()}
-SELECT {id_col}, wscore, {id_col} NOT IN (SELECT id FROM supp) AS selected FROM polys
+SELECT crown_id, wscore, crown_id NOT IN (SELECT id FROM supp) AS selected FROM polys
 """
 
 

@@ -37,12 +37,13 @@ def _parts_schema(key_col: str) -> str:
 
 
 def _parts(key_col: str, items) -> pd.DataFrame:
-    """Parts rows of (key, mask, txmin, tymax, res) items: one row per
-    4-connected mask component, part_idx in polygonize's first-pixel
-    (row-major) order — the one emitter behind every mask→parts operator."""
+    """Parts rows of (key, mask, txmin, tymax) items, masks of unit pixels:
+    one row per 4-connected mask component, part_idx in polygonize's
+    first-pixel (row-major) order — the one emitter behind every mask→parts
+    operator."""
     out = {key_col: [], "part_idx": [], "n_px": [], "area": [], "geometry_wkb": []}
-    for key, mask, txmin, tymax, res in items:
-        polys = pz.polygonize(mask, txmin=txmin, tymax=tymax, res_x=res, res_y=res)
+    for key, mask, txmin, tymax in items:
+        polys = pz.polygonize(mask, txmin=txmin, tymax=tymax)
         for i, p in enumerate(polys):
             out[key_col].append(key)
             out["part_idx"].append(i)
@@ -85,7 +86,7 @@ def polygonize_masks(masks: DataFrame) -> DataFrame:
     def per_batch(it):
         for pdf in it:
             yield _parts("mask_id", (
-                (row.mask_id, bits(row), float(row.txmin), float(row.tymax), 1.0)
+                (row.mask_id, bits(row), float(row.txmin), float(row.tymax))
                 for row in pdf.itertuples()
             ))
 
@@ -127,7 +128,7 @@ def geometric_union(
             rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, 1.0, 1.0)
             if ok:
                 mask[rr, cc] = True
-        return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1, 1.0)])
+        return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1)])
 
     cols = [group_col, *bounds_cols] if wkb_col is None else [group_col, wkb_col]
     return polys.select(*cols).groupBy(group_col).applyInPandas(

@@ -277,25 +277,24 @@ def ann_ivf_topk(embeddings: DataFrame, probes: DataFrame) -> DataFrame:
 # DuckDB oracle builders (same plane constants, same summation order)
 # ---------------------------------------------------------------------------
 
-def _dot_duck(vec: str, plane: np.ndarray) -> str:
-    """Left-associated explicit sum — matches the engine fold's IEEE order."""
+def _dot_duck(plane: np.ndarray) -> str:
+    """``embedding`` · plane as a left-associated explicit sum — matches the
+    engine fold's IEEE order."""
     return " + ".join(
-        f"CAST({vec}[{i + 1}] AS DOUBLE) * {float(p)!r}" for i, p in enumerate(plane)
+        f"CAST(embedding[{i + 1}] AS DOUBLE) * {float(p)!r}" for i, p in enumerate(plane)
     )
 
 
-def _bucket_duck(vec: str, table_planes: np.ndarray) -> str:
+def _bucket_duck(table_planes: np.ndarray) -> str:
     return " + ".join(
-        f"(CASE WHEN ({_dot_duck(vec, table_planes[j])}) >= 0 THEN {1 << j} ELSE 0 END)"
+        f"(CASE WHEN ({_dot_duck(table_planes[j])}) >= 0 THEN {1 << j} ELSE 0 END)"
         for j in range(table_planes.shape[0])
     )
 
 
-def _buckets_duck_cte(
-    src_sql: str, planes: np.ndarray, id_col: str, vec_col: str, name: str
-) -> str:
+def _buckets_duck_cte(src_sql: str, planes: np.ndarray, name: str) -> str:
     selects = "\nUNION ALL\n".join(
-        f"SELECT {id_col}, {t} AS table_idx, CAST({_bucket_duck(vec_col, planes[t])} AS BIGINT)"
+        f"SELECT vec_id, {t} AS table_idx, CAST({_bucket_duck(planes[t])} AS BIGINT)"
         f" AS bucket FROM __src_{name}__"
         for t in range(planes.shape[0])
     )
@@ -305,7 +304,7 @@ def _buckets_duck_cte(
 def rp_lsh_pairs_oracle_sql() -> str:
     planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
     return f"""
-WITH {_buckets_duck_cte(EMB_SQL, planes, 'vec_id', 'embedding', 'bk')},
+WITH {_buckets_duck_cte(EMB_SQL, planes, 'bk')},
 cand AS (
     SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
     FROM bk a JOIN bk b
@@ -324,7 +323,7 @@ SELECT id_a, id_b, sim FROM (
 
 def _ivf_scores_duck_cte(src_sql: str, cents: np.ndarray, name: str) -> str:
     selects = "\nUNION ALL\n".join(
-        f"SELECT vec_id, {j} AS list_id, ({_dot_duck('embedding', cents[j])}) AS score"
+        f"SELECT vec_id, {j} AS list_id, ({_dot_duck(cents[j])}) AS score"
         f" FROM __srcivf_{name}__"
         for j in range(cents.shape[0])
     )
@@ -378,10 +377,8 @@ SELECT probe_id, neighbor_id, sim, rank FROM (
 
 def ann_lsh_topk_oracle_sql() -> str:
     planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
-    emb_cte = _buckets_duck_cte(EMB_SQL, planes, "vec_id", "embedding", "ebk")
-    probe_cte = _buckets_duck_cte(
-        f"{EMB_SQL} WHERE {PROBE_PRED}", planes, "vec_id", "embedding", "pbk"
-    )
+    emb_cte = _buckets_duck_cte(EMB_SQL, planes, "ebk")
+    probe_cte = _buckets_duck_cte(f"{EMB_SQL} WHERE {PROBE_PRED}", planes, "pbk")
     return f"""
 WITH {emb_cte},
 {probe_cte},

@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 import _harness  # noqa: E402
 import __spark_entry__ as entry  # noqa: E402
 from geotreehealth_spark import lineage, synth  # noqa: E402
+from geotreehealth_spark.operators.caching import scope  # noqa: E402
 from tests.conftest import SF_DIR  # noqa: E402
 
 SEQUENCE = ("knn_quadrant", "weighted_nms", "zonal_raster", "pipeline_e2e")
@@ -33,9 +34,9 @@ def _round(spark, queries) -> dict[str, int]:
     compiled = {}
     for name in SEQUENCE:
         before = _harness.compiles(spark)
-        queries[name](spark, SF_DIR).count()
+        with scope():
+            queries[name](spark, SF_DIR).count()
         compiled[name] = _harness.compiles(spark) - before
-        _harness.release_caches(spark)
     return compiled
 
 

@@ -9,6 +9,7 @@ import pytest
 
 from geotreehealth_spark.operators import knn
 from test_knn_random import brute_knn, brute_quadrant
+from tests.conftest import new_rdds, registry
 
 
 def _points(spark, rows, xcol="x", ycol="y", idcol="pid"):
@@ -44,15 +45,13 @@ def test_knn_join_no_cache_leak(spark):
         [(f"c{i}", float(i) + 0.25, float(i) - 0.25) for i in range(50)],
         xcol="cx", ycol="cy", idcol="cid",
     )
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = registry(spark)
     out = knn.knn_join(
         left, right, k=3, left_id="pid", right_id="cid", cell_size=5.0
     )
     assert out.count() == 50 * 3
-    new = set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before
+    new = new_rdds(spark, before)
     # the returned prologue checkpoint is the only retained block set
-    # (compared by id: the context cleaner may drop older, unreferenced RDDs
-    # meanwhile, which would let a length compare hide a leaked one)
     assert len(new) <= 1, new
 
 
@@ -132,14 +131,13 @@ def test_null_id_raises(spark, side):
     left = _points(spark, rows if side == "left" else ok)
     right = _points(spark, rows if side == "right" else ok, "cx", "cy", "cid")
     col = "pid" if side == "left" else "cid"
-    before = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    before = registry(spark)
     with pytest.raises(ValueError, match=f"NULL values in {side} id column '{col}'"):
         knn.knn_join(left, right, k=1, left_id="pid", right_id="cid")
     with pytest.raises(ValueError, match=f"'{col}'"):
         knn.quadrant_knn_join(left, right, left_id="pid", right_id="cid", min_dist=0.0)
     # the failed calls released everything they stored, checkpoints included
-    # (compared by id: the context cleaner may drop older, unreferenced RDDs)
-    assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - before == set()
+    assert new_rdds(spark, before) == set()
 
 
 def test_cell_stride_guard(spark):

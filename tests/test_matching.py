@@ -12,6 +12,7 @@ round 1 and the escalation loop actually executes.
 from pyspark.sql import functions as F
 
 from geotreehealth_spark.operators import matching
+from tests.conftest import new_rdds, registry
 
 
 def _inputs(spark):
@@ -103,8 +104,7 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
         return orig(self, df)
 
     monkeypatch.setattr(caching.Owner, "checkpoint", boom)
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keys())
+    before = registry(spark)
     import pytest
 
     # _OVERSAMPLE=1 guarantees shortfall probes -> a second round
@@ -116,8 +116,7 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
             left_key="lkey", right_key="rkey",
         )
     assert calls["n"] >= 2, "escalation never reached a second round"
-    after = set(jsc.getPersistentRDDs().keys())
-    leaked = after - before
+    leaked = new_rdds(spark, before)
     assert not leaked, f"leaked persistent RDDs after failure: {leaked}"
 
 

@@ -12,8 +12,12 @@ engine function of the same name, wherever it is defined — so a name shared
 by two functions can hide a constant, never invent one. For each defaulted
 parameter it collects the value each call passes: the argument passed by
 keyword or by position, else the default. Equal literals are one value
-(`25` and `25.0`). A non-literal argument varies, and so do a `*args`
-argument at or before the parameter's position and any `**kw` argument.
+(`25` and `25.0`). A non-literal argument varies, and so does a `*args`
+argument at or before the parameter's position. A `**kw` argument passes the
+keywords of the dict display or `dict(...)` call that `kw` is bound to, when
+that is its one binding in the enclosing function body and the body reads
+`kw` only to unpack it; any other `**kw` argument, such as a `**` parameter
+passed on, varies every parameter.
 """
 
 import ast
@@ -99,6 +103,74 @@ def _passed(call: ast.Call, pos: list[str], param: str, default: ast.expr):
     return _value(default, True)
 
 
+def _own_nodes(fn: ast.AST):
+    """The nodes of a function, without those of the functions and lambdas
+    nested in it."""
+    todo = list(ast.iter_child_nodes(fn))
+    while todo:
+        n = todo.pop()
+        yield n
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            todo.extend(ast.iter_child_nodes(n))
+
+
+def _dict_keywords(value: ast.expr) -> list[ast.keyword] | None:
+    """The keywords a dict display with string keys, or a `dict(k=v, ...)`
+    call, passes as a `**` argument; None for any other value."""
+    if isinstance(value, ast.Dict) and all(
+        isinstance(k, ast.Constant) and isinstance(k.value, str) for k in value.keys
+    ):
+        return [ast.keyword(arg=k.value, value=v) for k, v in zip(value.keys, value.values)]
+    if (
+        isinstance(value, ast.Call)
+        and getattr(value.func, "id", None) == "dict"
+        and not value.args
+        and all(k.arg is not None for k in value.keywords)
+    ):
+        return value.keywords
+    return None
+
+
+def _calls(tree: ast.Module) -> list[ast.Call]:
+    """Every call in the tree; in a function body, a `**name` argument is
+    replaced by its keywords when `name` is bound there once, to a dict, and
+    read only as `**name` arguments."""
+    out = [n for n in ast.walk(tree) if isinstance(n, ast.Call)]
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        own = list(_own_nodes(fn))
+        params = {a.arg for a in ast.walk(fn.args) if isinstance(a, ast.arg)}
+        stores: dict[str, int] = {}
+        reads: dict[str, int] = {}
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Name):
+                count = reads if isinstance(n.ctx, ast.Load) else stores
+                count[n.id] = count.get(n.id, 0) + 1
+            elif isinstance(n, ast.keyword) and n.arg is None and isinstance(n.value, ast.Name):
+                reads[n.value.id] = reads.get(n.value.id, 0) - 1
+        dicts = {
+            n.targets[0].id: kws
+            for n in own
+            if isinstance(n, ast.Assign)
+            and len(n.targets) == 1
+            and isinstance(n.targets[0], ast.Name)
+            and n.targets[0].id not in params
+            and stores[n.targets[0].id] == 1
+            and not reads.get(n.targets[0].id)
+            and (kws := _dict_keywords(n.value)) is not None
+        }
+        for call in own:
+            if not isinstance(call, ast.Call):
+                continue
+            kws = []
+            for k in call.keywords:
+                name = getattr(k.value, "id", None) if k.arg is None else None
+                kws += dicts.get(name, [k])
+            call.keywords = kws
+    return out
+
+
 def single_valued(engine: dict[str, str], callers: list[str]) -> list[str]:
     """``module:function(param)`` of every defaulted parameter of a function
     in the engine sources {module: source} that takes fewer than two values
@@ -107,8 +179,8 @@ def single_valued(engine: dict[str, str], callers: list[str]) -> list[str]:
     by_name: dict[str, list] = {}
     for src in callers:
         for tree in trees(src):
-            for call in ast.walk(tree):
-                if isinstance(call, ast.Call) and _callee(call):
+            for call in _calls(tree):
+                if _callee(call):
                     by_name.setdefault(_callee(call), []).append(call)
     found = []
     for mod, src in engine.items():
@@ -187,8 +259,22 @@ def test_scan_self_check():
     assert scan("def w(*xs):\n    h(*xs)\n    f(0, 1, *xs)\n") == [
         "m:f(b)", "m:f(d)", "m:f(e)", "m:g(x)", "m:g(y)", "m:never(z)", "m:u(s)", "m:u(t)",
     ]
-    # a `**kw` argument varies every parameter, even a dict display's
-    assert [o for o in scan("kw = dict(s=9)\nu(**kw)\n") if o.startswith("m:u")] == []
+    # in a function body, `**kw` passes the keywords of the dict it is bound
+    # to once: s takes only 9 here, t its default and 5
+    def u_opts(src: str) -> list[str]:
+        return [o for o in scan(src, "u(s=9, t=5)\n") if o.startswith("m:u")]
+
+    assert u_opts("def w():\n    kw = dict(s=9)\n    u(**kw)\n") == ["m:u(s)"]
+    assert u_opts("def w():\n    kw = {'s': 9}\n    u(**kw)\n") == ["m:u(s)"]
+    # ...but a `**` parameter passed on varies every parameter, even where the
+    # caller's dict is known (a module-wide resolution would list s here)
+    fwd = "def w():\n    kw = dict(s=9)\n    fwd(**kw)\ndef fwd(**kw):\n    u(**kw)\n"
+    assert u_opts(fwd) == []
+    # ...and so does a dict bound twice, changed after binding, or bound at
+    # module level
+    assert u_opts("def w():\n    kw = dict(s=9)\n    kw = dict(s=8)\n    u(**kw)\n") == []
+    assert u_opts("def w():\n    kw = dict(s=9)\n    kw['s'] = 8\n    u(**kw)\n") == []
+    assert u_opts("kw = dict(s=9)\nu(**kw)\n") == []
     # a call inside an embedded `python -c` script counts
     script = 'WORKER = r"""\nimport m\nm.h(p=7)\n"""\n'
     assert "m:h(p)" not in scan(script, "h()\n")

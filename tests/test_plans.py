@@ -13,7 +13,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import __spark_entry__ as entry
-from _harness import release_caches
+from geotreehealth_spark.operators.caching import scope
 from plan_audit import audit, fingerprint, normalize, plan_string
 from tests.conftest import SF_DIR
 
@@ -51,13 +51,13 @@ def audits(spark):
 
 @pytest.fixture(scope="module")
 def plans(spark):
-    """Every query's formatted plan as built (not executed). Caches are
-    released before each build: storage an earlier query kept would show up
-    in a later plan as an InMemoryRelation."""
+    """Every query's formatted plan as built (not executed). Each build has
+    its own scope: storage an earlier query kept would show up in a later
+    plan as an InMemoryRelation."""
     out = {}
     for name, fn in entry.queries().items():
-        release_caches(spark)
-        out[name] = plan_string(fn(spark, SF_DIR))
+        with scope():
+            out[name] = plan_string(fn(spark, SF_DIR))
     return out
 
 

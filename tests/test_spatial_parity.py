@@ -94,7 +94,7 @@ def test_greedy_nms_parity(spark, crowns_geo_pd):
     # subset dense enough for long suppression chains but tractable oracle
     pdf = crowns_geo_pd[crowns_geo_pd.gxmin < 200.0].reset_index(drop=True)
     assert len(pdf) > 1500
-    expected = sequential_nms(pdf, threshold=0.3)
+    expected = sequential_nms(pdf, threshold=nms.GREEDY_THRESHOLD)
 
     geo = spark.createDataFrame(pdf)
     got = (
@@ -102,7 +102,6 @@ def test_greedy_nms_parity(spark, crowns_geo_pd):
             geo,
             id_col="crown_id",
             score_col="score",
-            threshold=0.3,
             cell_size=50.0,
             bounds=("gxmin", "gymin", "gxmax", "gymax"),
             wkb_col="geometry_wkb",
@@ -130,7 +129,7 @@ def test_greedy_nms_distributed_fixpoint_matches_driver_path(
     ].reset_index(drop=True)
     geo = spark.createDataFrame(pdf)
     kwargs = dict(
-        id_col="crown_id", score_col="score", threshold=0.3, cell_size=50.0,
+        id_col="crown_id", score_col="score", cell_size=50.0,
         bounds=("gxmin", "gymin", "gxmax", "gymax"), wkb_col="geometry_wkb",
         area_col="garea",
     )
@@ -238,14 +237,13 @@ def test_greedy_nms_parity_concave_crowns(spark, crowns_geo_pd):
     pdf["garea"] = [kernels.polygon_area(r) for r in rings]
     assert sum(1 for r in rings if not kernels.is_convex(r)) > 350
 
-    expected = sequential_nms(pdf, threshold=0.3)
+    expected = sequential_nms(pdf, threshold=nms.GREEDY_THRESHOLD)
     geo = spark.createDataFrame(pdf)
     got = (
         nms.greedy_nms(
             geo,
             id_col="crown_id",
             score_col="score",
-            threshold=0.3,
             cell_size=50.0,
             bounds=("gxmin", "gymin", "gxmax", "gymax"),
             wkb_col="geometry_wkb",

@@ -1,9 +1,11 @@
 """Shared scaffolding for the timing tools in tools/.
 
-One copy of bench.py's session, warm-up and cache-release protocol, plus the
-tools' common ``q1 [q2 ...] [--passes N] [--sf DIR]`` command line. bench.py
-keeps its own frozen copy of the same protocol, so numbers from these tools
-are comparable to its records.
+One copy of bench.py's session and warm-up protocol, plus the tools' common
+``q1 [q2 ...] [--passes N] [--sf DIR]`` command line. bench.py keeps its own
+frozen copy of the same protocol, so numbers from these tools are comparable
+to its records. Where bench.py sweeps the session's caches between queries,
+the tools build and run each query inside ``caching.scope()``, which frees
+the storage that query kept.
 
 Importing this module puts the repository root on ``sys.path``.
 """
@@ -71,11 +73,3 @@ def compiles(spark) -> int:
     whose generated code is already in the JVM-wide class cache adds 0."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
-
-
-def release_caches(spark) -> None:
-    """Drop persisted DataFrames AND localCheckpoint RDDs between runs so one
-    query's working set doesn't GC-pressure the next."""
-    spark.catalog.clearCache()
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()

@@ -26,11 +26,12 @@ import sys
 WORKER = r"""
 import json, sys, time
 sys.path.insert(0, "tools")
-from _harness import release_caches, start_session
+from _harness import start_session
 from pyspark.sql import functions as F
 from geotreehealth_spark import synth
 from geotreehealth_spark.docs import generator
 from geotreehealth_spark.operators import pip_join, tiling, zonal
+from geotreehealth_spark.operators.caching import owned, scope
 
 cores = int(sys.argv[1])
 sf_dir = sys.argv[2]
@@ -63,38 +64,41 @@ crowns_j = (crowns_j.withColumn("cy", F.col("cy") + off)
                     .withColumn("ymax", F.col("ymax") + off)
                     .withColumn("crown_id", F.concat("crown_id", F.lit("_"), "rep"))
                     .drop("rep"))
-# FIXED partition count at every level: both levels read identical layouts,
-# only executor parallelism differs (the fixture parquet is one row group —
-# without this the join's map side ran 1-2 tasks at ANY core count, which is
-# what produced the round-2 0.45-0.46 "scaling wall", not memory bandwidth)
-stems = stems.repartition(64).localCheckpoint(eager=True)
-crowns_j = crowns_j.repartition(64).localCheckpoint(eager=True)
-
 out = {}
-# min-of-2 trials per job: the sandbox host shows multi-x run-to-run noise
-# (same code, same session: 76s then 41s) — the MIN is the least-interfered
-# estimate of the job's true cost at each parallelism level
-secs = []
-for trial in range(2):
-    t0 = time.time()
-    matches = pip_join.pip_assign_best(
-        stems, crowns_j, poly_id="crown_id", point_id="stem_tag", cell_size=10.0
-    ).select("crown_id", "stem_tag", "dist").localCheckpoint(eager=True)
-    match_rows = matches.count()
-    secs.append(time.time() - t0)
-    if trial == 0:
-        matches_keep = matches
-    else:
-        matches = matches_keep
-out["crown_stem_join"] = {"rows": match_rows, "sec": min(secs)}
+# one scope per phase: its exit frees the phase's checkpoints and whatever
+# the engine calls in it kept, so the zonal measurement isn't contaminated
+# by the join job's working set
+with scope(), owned() as o:
+    # FIXED partition count at every level: both levels read identical
+    # layouts, only executor parallelism differs (the fixture parquet is one
+    # row group — without this the join's map side ran 1-2 tasks at ANY core
+    # count, which is what produced the round-2 0.45-0.46 "scaling wall", not
+    # memory bandwidth)
+    stems = o.checkpoint(stems.repartition(64))
+    crowns_j = o.checkpoint(crowns_j.repartition(64))
 
-# parity hash NOW (while matches' checkpoint is alive), then release the join
-# job's working set so the zonal measurement isn't contaminated
-h = matches.select(
-    F.expr("bit_xor(xxhash64(crown_id, stem_tag, dist))").alias("h")
-).collect()[0].h
-out["join_hash"] = int(h)
-release_caches(spark)
+    # min-of-2 trials per job: the sandbox host shows multi-x run-to-run
+    # noise (same code, same session: 76s then 41s) — the MIN is the
+    # least-interfered estimate of the job's true cost at each level
+    secs = []
+    for trial in range(2):
+        t0 = time.time()
+        matches = o.checkpoint(pip_join.pip_assign_best(
+            stems, crowns_j, poly_id="crown_id", point_id="stem_tag", cell_size=10.0
+        ).select("crown_id", "stem_tag", "dist"))
+        match_rows = matches.count()
+        secs.append(time.time() - t0)
+        if trial == 0:
+            matches_keep = matches
+        else:
+            matches = matches_keep
+    out["crown_stem_join"] = {"rows": match_rows, "sec": min(secs)}
+
+    # parity hash while matches' checkpoint is alive
+    h = matches.select(
+        F.expr("bit_xor(xxhash64(crown_id, stem_tag, dist))").alias("h")
+    ).collect()[0].h
+    out["join_hash"] = int(h)
 
 crowns = synth.crowns(spark, sf_dir).drop("stem_tag").crossJoin(F.broadcast(reps))
 crowns = (crowns.withColumn("cy", F.col("cy") + off)
@@ -102,24 +106,25 @@ crowns = (crowns.withColumn("cy", F.col("cy") + off)
                 .withColumn("ymax", F.col("ymax") + off)
                 .withColumn("crown_id", F.concat("crown_id", F.lit("_"), "rep")))
 
-# zonal: shifted tile grid per replica; crown polygons from the generator
-geo = generator.crowns_with_geometry(
-    crowns.withColumn("crown_key", F.col("crown_key") * 100 + F.col("rep"))
-).repartition(64).localCheckpoint(eager=True)
-base_tiles = tiling.tile_grid(spark, overlap=0.0)
-tiles = (base_tiles.crossJoin(F.broadcast(reps))
-         .withColumn("tymin", F.col("tymin") + off)
-         .withColumn("tymax", F.col("tymax") + off)
-         .withColumn("tile_id", F.concat("tile_id", F.lit("_"), "rep"))
-         .selectExpr("tile_id", "txmin", "tymin", "txmax", "tymax",
-                     "concat('hsi://tile/', CAST(tile_key AS STRING)) AS media_ref",
-                     "12 AS bands", "100 AS height", "100 AS width"))
-zsecs = []
-for trial in range(2):
-    t0 = time.time()
-    feat_rows = zonal.zonal_raster_stats(geo, tiles).count()
-    zsecs.append(time.time() - t0)
-out["tile_zonal"] = {"rows": feat_rows, "tiles": 100 * R, "sec": min(zsecs)}
+with scope(), owned() as o:
+    # zonal: shifted tile grid per replica; crown polygons from the generator
+    geo = o.checkpoint(generator.crowns_with_geometry(
+        crowns.withColumn("crown_key", F.col("crown_key") * 100 + F.col("rep"))
+    ).repartition(64))
+    base_tiles = tiling.tile_grid(spark, overlap=0.0)
+    tiles = (base_tiles.crossJoin(F.broadcast(reps))
+             .withColumn("tymin", F.col("tymin") + off)
+             .withColumn("tymax", F.col("tymax") + off)
+             .withColumn("tile_id", F.concat("tile_id", F.lit("_"), "rep"))
+             .selectExpr("tile_id", "txmin", "tymin", "txmax", "tymax",
+                         "concat('hsi://tile/', CAST(tile_key AS STRING)) AS media_ref",
+                         "12 AS bands", "100 AS height", "100 AS width"))
+    zsecs = []
+    for trial in range(2):
+        t0 = time.time()
+        feat_rows = zonal.zonal_raster_stats(geo, tiles).count()
+        zsecs.append(time.time() - t0)
+    out["tile_zonal"] = {"rows": feat_rows, "tiles": 100 * R, "sec": min(zsecs)}
 
 print("RESULT " + json.dumps(out))
 spark.stop()

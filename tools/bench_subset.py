@@ -2,9 +2,9 @@
 
 Usage: python tools/bench_subset.py q1 [q2 ...] [--passes N] [--sf DIR]
 
-Same session config, warmup, interleaved min-of-N passes, and cache release
-as bench.py (tools/_harness.py) — produced numbers are comparable to
-BENCH_r*.json entries. Used for the idle-host spot-reruns of individual
+Same session config, warmup and interleaved min-of-N passes as bench.py
+(tools/_harness.py), each query's storage freed after it — produced numbers
+are comparable to BENCH_r*.json entries. Used for the idle-host spot-reruns of individual
 queries (VERDICT r4 "What's wrong" 4) and for A/B timing of operator variants
 without paying the full 35-query headline sweep.
 """
@@ -18,6 +18,7 @@ import time
 import _harness  # puts the repository root on sys.path
 
 import __spark_entry__ as entrymod
+from geotreehealth_spark.operators.caching import scope
 
 
 def main() -> None:
@@ -30,13 +31,13 @@ def main() -> None:
     per_query: dict[str, float] = {}
     for p in range(passes):
         for name in names:
-            t0 = time.time()
-            n = queries[name](spark, sf_dir).count()
-            dt = time.time() - t0
+            with scope():
+                t0 = time.time()
+                n = queries[name](spark, sf_dir).count()
+                dt = time.time() - t0
             prev = per_query.get(name)
             per_query[name] = round(dt if prev is None else min(prev, dt), 3)
             print(f"# pass{p} {name}: {dt:.2f}s rows={n}", file=sys.stderr)
-            _harness.release_caches(spark)
 
     cpus = spark.sparkContext.defaultParallelism
     print(json.dumps({"queries": per_query, "sf_dir": sf_dir, "cpus": cpus,

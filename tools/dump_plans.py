@@ -10,8 +10,8 @@ Each file is the formatted physical plan of the query as built
 plan_audit.normalize — enough to verify Exchange counts, join strategies,
 scan pushdown, and Python-boundary nodes without running Spark, and to diff
 two commits' plans: `diff -r plans/<a> plans/<b>` shows only real changes.
-Caches are released before each build, so storage an earlier query kept
-never shows up in a later query's plan. fingerprints.json beside the texts
+Each query is built inside its own caching.scope(), which frees the storage
+it kept, so that storage never shows up in a later query's plan. fingerprints.json beside the texts
 holds the sha256 of each text; at sf0.001 it is the file
 tests/test_plans.py checks, plans/fingerprints.json. An absolute tag writes
 outside plans/.
@@ -26,8 +26,8 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from geotreehealth_spark.operators.caching import scope  # noqa: E402
 from geotreehealth_spark.session import get_spark  # noqa: E402
-from tools._harness import release_caches  # noqa: E402
 from tools.plan_audit import fingerprint, normalize, plan_string  # noqa: E402
 
 
@@ -44,9 +44,9 @@ def main() -> None:
         names = list(queries)
     hashes = {}
     for name in names:
-        release_caches(spark)
         try:
-            p = normalize(plan_string(queries[name](spark, sf_dir)))
+            with scope():
+                p = normalize(plan_string(queries[name](spark, sf_dir)))
         except Exception as e:  # noqa: BLE001
             p = f"ERROR {type(e).__name__}: {e}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")

@@ -20,6 +20,7 @@ import time
 import _harness  # puts the repository root on sys.path
 
 import __spark_entry__ as entrymod
+from geotreehealth_spark.operators.caching import scope
 from plan_audit import plan_string
 
 
@@ -31,21 +32,21 @@ def main() -> None:
     for p in range(passes):
         for name in names:
             c0 = _harness.compiles(spark)
-            t0 = time.time()
-            df = queries[name](spark, sf_dir)
-            t_build = time.time() - t0
-            t0 = time.time()
-            plan_string(df)
-            t_explain = time.time() - t0
-            t0 = time.time()
-            n = df.count()
-            t_count = time.time() - t0
+            with scope():
+                t0 = time.time()
+                df = queries[name](spark, sf_dir)
+                t_build = time.time() - t0
+                t0 = time.time()
+                plan_string(df)
+                t_explain = time.time() - t0
+                t0 = time.time()
+                n = df.count()
+                t_count = time.time() - t0
             print(
                 f"pass{p} {name}: build={t_build:.2f}s explain={t_explain:.2f}s "
                 f"count={t_count:.2f}s compiles={_harness.compiles(spark) - c0} rows={n}",
                 flush=True,
             )
-            _harness.release_caches(spark)
     spark.stop()
 
 
