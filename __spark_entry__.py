@@ -67,11 +67,8 @@ def q_pip_assign_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5: exact k=6 nearest crowns per probe stem via cell-ring pruning.
-
-    r6: inputs are projected to the join/output columns BEFORE the call —
-    knn_join caches, enriches, and checkpoints every input column (the
-    checkpoint defeats Catalyst's pruning of the final select), so the full
-    13-column crown table rode the whole pipeline for a 4-column result."""
+    knn_join carries only each side's id and coordinates, so the inputs are
+    passed as just those columns."""
     stems = synth.stems(spark, sf_dir).where(F.col("stem_key") % 50 == 0)
     crowns = synth.crowns(spark, sf_dir).drop("stem_tag")
     out = knn.knn_join(
@@ -83,14 +80,14 @@ def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_knn_quadrant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6: nearest crown per cardinal quadrant, remove_too_close=3 m.
-    Inputs slimmed to the join/output columns before the call (see q_knn)."""
+    """J6: nearest crown per cardinal quadrant, remove_too_close=3 m
+    (knn.MIN_DIST); inputs as in q_knn."""
     stems = synth.stems(spark, sf_dir).where(F.col("stem_key") % 50 == 0)
     crowns = synth.crowns(spark, sf_dir).drop("stem_tag")
     out = knn.quadrant_knn_join(
         stems.select("stem_tag", "x", "y"),
         crowns.select("crown_id", "cx", "cy"),
-        left_id="stem_tag", right_id="crown_id", min_dist=3.0,
+        left_id="stem_tag", right_id="crown_id",
     )
     return out.select("stem_tag", "quadrant", "crown_id", "dist")
 
@@ -199,7 +196,7 @@ def q_zonal_lidar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     crowns = synth.crowns(spark, sf_dir).select(
         "crown_id", "xmin", "ymin", "xmax", "ymax"
     )
-    docs = generator.lidar_to_docs(synth.tiles(spark), n_points=1000)
+    docs = generator.lidar_to_docs(synth.tiles(spark))
     pts = media.load_lidar_points(decode.decode_lidar(docs))
     return _z_stats(pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None))
 
@@ -236,7 +233,7 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n_tiles"))
         )
         # stage 4: zonal LiDAR stats via the laz:// media_ref docs path (S6/A7)
-        docs = generator.lidar_to_docs(synth.tiles(spark), n_points=1000)
+        docs = generator.lidar_to_docs(synth.tiles(spark))
         pts = media.load_lidar_points(decode.decode_lidar(docs))
         # (the final select keeps n_pts and z_mean; Catalyst prunes z_min/z_max)
         zl = _z_stats(pip_join.pip_join(pts, crowns, cell_size=25.0, poly_wkb=None))
@@ -459,7 +456,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench measured an empty join. Integer arithmetic ((85*n)//100) keeps
     # the Spark and DuckDB thresholds bit-identical.
     max_df = (85 * docs.count()) // 100
-    return tdedup.jaccard_pairs(docs, threshold=0.5, max_df=max_df)
+    return tdedup.jaccard_pairs(docs, max_df=max_df)
 
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -469,7 +466,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _documents(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
     max_df = (85 * docs.count()) // 100
-    return tdedup.ngram_jaccard_pairs(docs, threshold=0.35, max_df=max_df)
+    return tdedup.ngram_jaccard_pairs(docs, max_df=max_df)
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,7 +475,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth.register_tpch_views(spark, sf_dir)
     emb = spark.table("embeddings")
     probes = emb.where(F.col("vec_id") % 50 == 0)
-    return similarity.cosine_topk(emb, probes, k=10)
+    return similarity.cosine_topk(emb, probes)
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,7 +514,7 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     synth.register_tpch_views(spark, sf_dir)
     emb = spark.table("embeddings")
     probes = emb.where(F.col("vec_id") % 50 == 0)
-    return similarity.ann_lsh_topk(emb, probes, k=similarity.ANN_K)
+    return similarity.ann_lsh_topk(emb, probes)
 
 
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -554,12 +551,7 @@ def q_nms_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # strip (every crown overlapping ~200 others) — an adversarial density no
     # real delineation produces and inherently Θ(n·k) ≈ 10^9 exact pairs.
     crowns = synth.crowns(spark, sf_dir).where(F.col("crown_key") % 5 == 0)
-    # cell ~ crown diameter: in the dense strip a 50 m cell holds thousands of
-    # crowns; 10 m keeps the candidate count near the true bbox-overlap count
-    out = nms.greedy_nms(
-        crowns, id_col="crown_id", score_col="score",
-        cell_size=10.0, bounds=("xmin", "ymin", "xmax", "ymax"), wkb_col=None,
-    )
+    out = nms.greedy_nms(crowns, id_col="crown_id", score_col="score", wkb_col=None)
     return out.select("crown_id", "selected")
 
 
@@ -575,7 +567,7 @@ def q_weighted_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
     polys = crowns.join(stems, "stem_tag").select(
         "crown_id", "xmin", "ymin", "xmax", "ymax", "priority"
     )
-    out = nms.weighted_nms(polys, id_col="crown_id", priority_col="priority", cell_size=10.0)
+    out = nms.weighted_nms(polys, id_col="crown_id", priority_col="priority")
     return out.select("crown_id", "wscore", "selected")
 
 
@@ -733,12 +725,10 @@ def q_geometric_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor("xmax") + 1).cast("double").alias("x1"),
         (F.floor("ymax") + 1).cast("double").alias("y1"),
     )
-    # r6: bounds_cols box convention — rings are built in-batch from the four
-    # bound columns (vertex-identical to the encoded boxes), skipping the WKB
+    # r6: box convention — rings are built in-batch from the four bound
+    # columns (vertex-identical to the encoded boxes), skipping the WKB
     # encode UDF and per-row decode
-    parts = vectorize.geometric_union(
-        boxed, group_col="gid", wkb_col=None, bounds_cols=("x0", "y0", "x1", "y1"),
-    )
+    parts = vectorize.geometric_union(boxed, group_col="gid", wkb_col=None)
     return parts.groupBy("gid").agg(
         F.count("*").cast("long").alias("n_parts"),
         F.sum("n_px").alias("union_px"),
@@ -819,7 +809,7 @@ def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _documents(spark, sf_dir).where(F.col("doc_id") % 5 == 0)
     max_df = (85 * docs.count()) // 100
-    pairs = tdedup.jaccard_pairs(docs, threshold=0.5, max_df=max_df).select(
+    pairs = tdedup.jaccard_pairs(docs, max_df=max_df).select(
         "id_a", "id_b"
     )
     out = components.connected_components(pairs)

@@ -194,10 +194,10 @@ def stems_to_docs(stems: DataFrame) -> DataFrame:
     )
 
 
-def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
-    """One doc per LiDAR tile: meta + attr(bounds CSV) + lidar(laz:// ref)
-    span (the S6 media_ref path; the reference keeps per-tile point-cloud
-    paths in its labels CSV, store_data_structures.py:174-183)."""
+def lidar_to_docs(tiles: DataFrame) -> DataFrame:
+    """One doc per LiDAR tile: meta + attr(bounds CSV) + lidar(laz:// ref,
+    1000 points) span (the S6 media_ref path; the reference keeps per-tile
+    point-cloud paths in its labels CSV, store_data_structures.py:174-183)."""
     attr_csv = _attr_csv("lidar")
     return tiles.select(
         F.concat(F.lit("laz-"), F.col("tile_id")).alias("doc_id"),
@@ -206,7 +206,7 @@ def lidar_to_docs(tiles: DataFrame, n_points: int = 1000) -> DataFrame:
             _span(F.lit("attr"), attr_csv, "", 1),
             _span(
                 F.lit("lidar"),
-                F.lit(f"n={n_points};fmt=xyz"),
+                F.lit("n=1000;fmt=xyz"),
                 F.concat(F.lit(media.LAZ_PREFIX), F.col("tile_key").cast("string")),
                 2,
             ),

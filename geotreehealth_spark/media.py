@@ -196,8 +196,9 @@ AUD_CONST_PREFIX = "audc://"
 SAMPLE_RATE = 16000  # synthetic clips' rate (Hz)
 
 
-def resolve_audio(media_ref: str, n_samples: int) -> np.ndarray:
-    """aud:// media_ref → float32 PCM waveform in [-1, 1].
+def resolve_audio(media_ref: str) -> np.ndarray:
+    """aud:// media_ref → one second (SAMPLE_RATE samples) of float32 PCM
+    waveform in [-1, 1].
 
     Deterministic synthetic clip (two seeded sinusoids + seeded noise) — the
     sandbox stand-in for an audio decoder (soundfile/ffmpeg absent);
@@ -211,18 +212,18 @@ def resolve_audio(media_ref: str, n_samples: int) -> np.ndarray:
     if media_ref.startswith(AUD_CONST_PREFIX):
         key = int(media_ref[len(AUD_CONST_PREFIX):])
         a = ((key * 13) % 999 + 1) / 1000.0
-        return np.full(n_samples, a, dtype=np.float32)
+        return np.full(SAMPLE_RATE, a, dtype=np.float32)
     if not media_ref.startswith(AUD_PREFIX):
         return decode_external(media_ref)
     seed = (hash_ref(media_ref) * 2654435761 + 97) & 0xFFFFFFFF
     rng = np.random.default_rng(seed)
     f1 = float(rng.integers(80, 2000))
     f2 = float(rng.integers(2000, 7000))
-    t = np.arange(n_samples, dtype=np.float64) / SAMPLE_RATE
+    t = np.arange(SAMPLE_RATE, dtype=np.float64) / SAMPLE_RATE
     wave = (
         0.6 * np.sin(2 * np.pi * f1 * t)
         + 0.25 * np.sin(2 * np.pi * f2 * t)
-        + 0.1 * rng.standard_normal(n_samples)
+        + 0.1 * rng.standard_normal(SAMPLE_RATE)
     )
     return np.clip(wave, -1.0, 1.0).astype(np.float32)
 

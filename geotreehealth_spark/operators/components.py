@@ -29,20 +29,19 @@ from geotreehealth_spark.operators.caching import Owner, owned
 _MAX_ITERS = 50
 
 
-def connected_components(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
-    """(node, comp) for every node, comp = MIN node id in its component.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(node, comp) for every edge endpoint, comp = MIN node id in its
+    component.
 
     edges: undirected pair list (id_a, id_b); each pair listed once is enough.
-    nodes: optional (single-column) node universe; nodes without edges become
-           singleton components. Defaults to the edge endpoints.
     Raises RuntimeError if the propagation has not converged after
     ``_MAX_ITERS`` rounds (diameter > _MAX_ITERS — never for dedup graphs).
     """
     with owned() as o:
-        return _run(o, edges, nodes)
+        return _run(o, edges)
 
 
-def _run(o: Owner, edges, nodes) -> DataFrame:
+def _run(o: Owner, edges) -> DataFrame:
     # materialize the symmetric edge list ONCE — every propagation round
     # re-reads it, and the upstream pair generation (e.g. the full Jaccard
     # inverted-index join) must not re-execute per round (measured 44 s -> a
@@ -52,11 +51,9 @@ def _run(o: Owner, edges, nodes) -> DataFrame:
             edges.select(F.col("id_b").alias("a"), F.col("id_a").alias("b"))
         )
     )
-    if nodes is None:
-        node_df = sym.select(F.col("a").alias("node")).distinct()
-    else:
-        node_df = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
-    prev = labels = o.checkpoint(node_df.withColumn("comp", F.col("node")))
+    prev = labels = o.checkpoint(
+        sym.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
+    )
     for _ in range(_MAX_ITERS):
         # (a) best neighbor label
         nbr = (

@@ -27,11 +27,10 @@ Physical plan:
 2. proof (``_dir_reach``): a group is complete when its k-th winner is
    strictly closer than the probe's search reach in every direction it could
    be displaced from; a direction the data bounds already cover is +inf.
-3. the ring-1 prologue — proven winners enriched to full rows, plus the
-   residue — is ONE localCheckpoint job, and the residue count reads its
-   blocks. A non-empty residue escalates with 4x rings through the same
-   step, or goes straight to an exact crossJoin when residue x candidates is
-   cheap.
+3. the ring-1 prologue — proven winners plus the residue — is ONE
+   localCheckpoint job, and the residue count reads its blocks. A
+   non-empty residue escalates with 4x rings through the same step, or goes
+   straight to an exact crossJoin when residue x candidates is cheap.
 
 Why this scales: the join is a plain shuffle equi-join on cell keys — AQE
 skew-splits hot cells — and the proofs make the result EXACT without ever
@@ -59,6 +58,9 @@ _MAX_ROUNDS = 4
 # 137 x 457k = 62M, just missed the switch and paid 2 extra rounds)
 _CROSS_ROWS = 500_000_000
 _QUADS = ("NE", "SE", "NW", "SW")
+# J6 drops candidates closer than this: the reference's remove_too_close
+# (config.py:34)
+MIN_DIST = 3.0
 _INF = float("inf")
 
 
@@ -67,9 +69,9 @@ def _data_bounds(
 ) -> tuple[float, float, float, float, int] | None:
     """(xmin, xmax, ymin, ymax, count) of the candidate side — one agg job
     shared by the grid, the density-based cell sizing and the proofs. The
-    same job counts ``right_id`` so a NULL id raises instead of being
-    silently dropped by enrich(). Returns None when the candidate side is
-    empty (callers short-circuit to an empty result)."""
+    same job counts ``right_id`` so a NULL id raises instead of producing
+    NULL-id winners. Returns None when the candidate side is empty (callers
+    short-circuit to an empty result)."""
     b = right.agg(
         F.min(rx).alias("x0"), F.max(rx).alias("x1"),
         F.min(ry).alias("y0"), F.max(ry).alias("y1"),
@@ -154,27 +156,29 @@ def _ring_knn(
     left_id: str,
     right_id: str,
     quadrants: bool,
-    cell_size: float | None,
-    min_dist: float | None,
 ) -> DataFrame:
     """Exact top-k `right` rows (cx, cy) per (left row (x, y), group) — J5
     when ``quadrants`` is False (one group; tag column ``knn_rank``), J6 when
-    True (one group per quadrant; tag column ``quadrant``). Output: left
-    columns + right columns + ``dist`` + the tag column. A None
-    ``cell_size`` is 1.25x (J5) or 6x (J6) the uniform-density k-th
+    True (one group per quadrant, candidates closer than MIN_DIST dropped;
+    tag column ``quadrant``). Both sides are projected to their id and
+    coordinates first; output: (left_id, x, y, right_id, cx, cy, dist, tag).
+    The cell size is 1.25x (J5) or 6x (J6) the uniform-density k-th
     neighbour radius (_cell_size); the public joins' docstrings say why."""
     lx, ly = "x", "y"
     rx, ry = "cx", "cy"
     tag, tag_type = ("quadrant", "string") if quadrants else ("knn_rank", "int")
     groups = _QUADS if quadrants else (None,)
-    out_cols = [*left.columns, *right.columns, "dist", tag]
+    out_cols = [left_id, lx, ly, right_id, rx, ry, "dist", tag]
     dist = distance_expr(F.col(lx), F.col(ly), F.col(rx), F.col(ry))
+    # the candidate explode/join/rank pipeline moves ONLY ids, coordinates
+    # and dist; the probe side is read once, so it needs no cache
+    left = left.select(left_id, lx, ly)
 
     with owned() as o:
         # ONE scan of the candidate side feeds the bounds/count agg, the
         # cell-keyed join input and the rare crossJoin (profiling at sf0.1:
         # each re-scan of a synthesized right side cost ~2.5 s)
-        right = o.persist(right)
+        right = o.persist(right.select(right_id, rx, ry))
         bounds = _data_bounds(right, right_id, rx, ry)
         if bounds is None:
             # empty candidate side: zero rows with the full output schema
@@ -183,24 +187,11 @@ def _ring_knn(
                 F.lit(None).cast(tag_type).alias(tag),
             )
         bx0, bx1, by0, by1, n_right = bounds
-        if cell_size is None:
-            cell_size = _cell_size(bounds[:4], n_right, k, 6.0 if quadrants else 1.25)
-        s = float(cell_size)
+        s = _cell_size(bounds[:4], n_right, k, 6.0 if quadrants else 1.25)
         g_max = cellexprs.grid_max(bounds[:4], s)
         origin = (bx0, by0)
         max_ring = max(g_max) + 1  # a ring this wide covers the whole grid
-        # slim projections: the candidate explode/join/rank pipeline moves
-        # ONLY ids, coordinates and dist. A side with more columns is
-        # re-attached to the winners by enrich(); a side that is just
-        # (id, x, y) needs no join, and the probe side then no cache either
-        # (it is read once)
-        wide_left = bool(set(left.columns) - {left_id, lx, ly})
-        wide_right = bool(set(right.columns) - {right_id, rx, ry})
-        if wide_left:
-            left = o.persist(left)
-        left_slim = left.select(left_id, lx, ly)
-        right_slim = right.select(right_id, rx, ry)
-        right_cells = right_slim.withColumn(
+        right_cells = right.withColumn(
             "__cell", cellexprs.point_cell(F.col(rx), F.col(ry), s, origin)
         )
 
@@ -233,7 +224,7 @@ def _ring_knn(
             ``__ok``. ``final`` takes the exact crossJoin, which proves every
             probe."""
             if final:
-                cands = rem.crossJoin(right_slim)
+                cands = rem.crossJoin(right)
             else:
                 cands = cellexprs.with_ring_cells(rem, lx, ly, s, ring, origin, g_max).join(
                     right_cells, "__cell"
@@ -243,8 +234,8 @@ def _ring_knn(
                 left_id, lx, ly, right_id, rx, ry, dist.alias("dist"),
                 *([_quadrant(lx, ly, rx, ry).alias("__g")] if quadrants else []),
             )
-            if min_dist is not None:
-                cands = cands.where(F.col("dist") >= min_dist)
+            if quadrants:
+                cands = cands.where(F.col("dist") >= MIN_DIST)
             if k == 1:
                 # two-phase exact argmin instead of a window: min(dist) is a
                 # fixed-width HashAggregate with map-side partial combine, so
@@ -289,8 +280,7 @@ def _ring_knn(
             return tagged.withColumn("__ok", ok)
 
         def winners(tagged: DataFrame) -> DataFrame:
-            # proven rows -> one (left_id, lx, ly, right_id, rx, ry, dist, tag)
-            # row per winner
+            # proven rows -> one out_cols row per winner
             def entry(g: str | None):
                 return lambda e, j: F.struct(
                     *[e[c].alias(c) for c in ("dist", right_id, rx, ry)],
@@ -300,26 +290,12 @@ def _ring_knn(
             arrs = [F.transform(F.col(f"__w{i}"), entry(g)) for i, g in enumerate(groups)]
             return tagged.where(F.col("__ok")).select(
                 left_id, lx, ly, F.explode(F.concat(*arrs) if quadrants else arrs[0]).alias("__e")
-            ).select(left_id, lx, ly, "__e.*")
-
-        def enrich(slim: DataFrame) -> DataFrame:
-            # winners -> full output rows: AQE broadcasts the slim winner set
-            # and streams the cached wide sides — no wide shuffles
-            if wide_left:
-                slim = slim.drop(lx, ly).join(left, left_id)
-            if wide_right:
-                slim = slim.drop(rx, ry).join(right, right_id)
-            return slim.select(*out_cols)
+            ).select(left_id, lx, ly, "__e.*").select(*out_cols)
 
         def residue_rows(tagged: DataFrame) -> DataFrame:
-            # unproven probes in the output schema: the slim probe columns,
-            # typed NULLs for the rest
-            keep = {left_id, lx, ly}
+            # unproven probes in the output schema: NULL winner columns
             return tagged.where(~F.col("__ok")).select(
-                *[
-                    F.col(f.name) if f.name in keep else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in left.schema.fields
-                ],
+                left_id, lx, ly,
                 *[F.lit(None).cast(f.dataType).alias(f.name) for f in right.schema.fields],
                 F.lit(None).cast("double").alias("dist"),
                 F.lit(None).cast(tag_type).alias(tag),
@@ -327,14 +303,14 @@ def _ring_knn(
             )
 
         # --- prologue: ONE ring-1 round and ONE job -----------------------
-        # The proven winners (enriched) and the residue are both projections
-        # of the persisted tagged table, checkpointed together: the
+        # The proven winners and the residue are both projections of the
+        # persisted tagged table, checkpointed together: the
         # checkpoint is the common case's only job barrier and the result's
         # flat lineage, and the residue count reads its blocks. The result
         # reads the checkpoint, so it is kept (caching.py's ownership rule).
-        tagged = o.persist(step(left_slim, 1, final=False))
+        tagged = o.persist(step(left, 1, final=False))
         chk = o.keep(o.checkpoint(
-            enrich(winners(tagged))
+            winners(tagged)
             .withColumn("__residue", F.lit(False))
             .unionByName(residue_rows(tagged))
         ))
@@ -352,10 +328,10 @@ def _ring_knn(
                 # probe side's partitioning and fans the crossJoin into ~96
                 # near-empty tasks; ~2M distance rows per task is < 1 s each
                 parts = max(1, min(n_rem * n_right // 2_000_000 + 1, 64))
-                results.append(enrich(winners(step(remaining.coalesce(parts), ring, True))))
+                results.append(winners(step(remaining.coalesce(parts), ring, True)))
                 break
             tagged = o.persist(step(remaining, ring, final=False))
-            results.append(enrich(winners(tagged)))
+            results.append(winners(tagged))
             remaining = tagged.where(~F.col("__ok")).select(left_id, lx, ly)
             n_rem = remaining.count()
             ring, rounds = ring * 4, rounds + 1
@@ -369,40 +345,25 @@ def _ring_knn(
         return results[0].unionByName(o.keep(o.checkpoint(extra)))
 
 
-def knn_join(
-    left: DataFrame,
-    right: DataFrame,
-    k: int,
-    left_id: str,
-    right_id: str,
-    cell_size: float | None = None,
-) -> DataFrame:
+def knn_join(left: DataFrame, right: DataFrame, k: int, left_id: str, right_id: str) -> DataFrame:
     """Exact k nearest `right` rows (cx, cy) per `left` row (x, y); ties
     broken by right_id.
 
-    Output: all left columns + right columns + `dist` + `knn_rank` (1..k).
-    CONTRACT: ``left_id`` / ``right_id`` must be non-null and unique per
-    side — winners are re-attached to their full rows via equi-joins on
-    these ids. A NULL id raises ValueError naming the column; a duplicated
-    id multiplies its matches.
-    ``cell_size``: default ~1.25x the expected k-th neighbour radius under
-    uniform density in the candidate bounds — tight enough to cut the
-    candidate fan-out, with escalation handling sparse regions exactly.
+    Output: (left_id, x, y, right_id, cx, cy, dist, knn_rank 1..k); other
+    input columns are not carried, so no row is joined back by id.
+    CONTRACT: ids must be non-null — a NULL id raises ValueError naming the
+    column. Right rows that share an id are separate candidates, each
+    reported with its own coordinates. Left ids must be unique: winners are
+    ranked per left id, so probe rows that share one compete for a single
+    top-k.
+    The cell size is ~1.25x the expected k-th neighbour radius under uniform
+    density in the candidate bounds — tight enough to cut the candidate
+    fan-out, with escalation handling sparse regions exactly.
     """
-    return _ring_knn(
-        left, right, k, left_id, right_id,
-        quadrants=False, cell_size=cell_size, min_dist=None,
-    )
+    return _ring_knn(left, right, k, left_id, right_id, quadrants=False)
 
 
-def quadrant_knn_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_id: str,
-    right_id: str,
-    cell_size: float | None = None,
-    min_dist: float = 3.0,
-) -> DataFrame:
+def quadrant_knn_join(left: DataFrame, right: DataFrame, left_id: str, right_id: str) -> DataFrame:
     """J6: nearest `right` (cx, cy) per cardinal quadrant around each `left`
     point (x, y).
 
@@ -410,19 +371,16 @@ def quadrant_knn_join(
     deviation from the reference's find_cardinal_direction
     (batch_sam.py:195-207), which maps (x2>x1, y2>y1) to 'SE' (its y axis is
     image-down) and keeps dist strictly > remove_too_close: the engine uses
-    math-up axes (NE = +x,+y) and an inclusive dist >= min_dist boundary; the
+    math-up axes (NE = +x,+y) and an inclusive dist >= MIN_DIST boundary; the
     SQL oracle encodes the engine's convention. Candidates with
-    dist < min_dist are dropped first (batch_sam.py:430-432, config.py:34).
-    Output: left/right columns + dist + quadrant (one row per non-empty
-    quadrant, <= 4 per left point). CONTRACT: as knn_join.
+    dist < MIN_DIST are dropped first (batch_sam.py:430-432, config.py:34).
+    Output: (left_id, x, y, right_id, cx, cy, dist, quadrant) — one row per
+    non-empty quadrant, <= 4 per left point. CONTRACT: as knn_join.
 
-    ``cell_size``: default 6x the mean candidate spacing. The binding
-    constraint is the per-quadrant proof, not fan-out: with the exact-reach
-    and empty-quadrant arms the ring-1 proof holds at 6x with ~0.56x the
-    fan-out of 8x, while at 5x the residue returns (interleaved min-of-3 A/B
-    at sf0.1: 6x 6.23 s vs 8x 7.39 vs 5x 7.29, identical rows).
+    The cell size is 6x the mean candidate spacing. The binding constraint
+    is the per-quadrant proof, not fan-out: with the exact-reach and
+    empty-quadrant arms the ring-1 proof holds at 6x with ~0.56x the fan-out
+    of 8x, while at 5x the residue returns (interleaved min-of-3 A/B at
+    sf0.1: 6x 6.23 s vs 8x 7.39 vs 5x 7.29, identical rows).
     """
-    return _ring_knn(
-        left, right, 1, left_id, right_id,
-        quadrants=True, cell_size=cell_size, min_dist=min_dist,
-    )
+    return _ring_knn(left, right, 1, left_id, right_id, quadrants=True)

@@ -23,6 +23,7 @@ hot path.
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
@@ -144,8 +145,6 @@ def same_tag_pair_distances(points: DataFrame, tag_col: str, id_col: str) -> Dat
 
 
 RANDOM_K_HASH_P = 1000003
-# |L|·|R| up to this many pairs takes random_k_sample's direct window plan
-_DIRECT_MAX_PAIRS = 2_000_000
 # the threshold plan sizes T so ~_OVERSAMPLE·k candidates survive per probe,
 # and escalates T by this factor (floored at 2) for shortfall probes
 _OVERSAMPLE = 8
@@ -159,66 +158,41 @@ def random_k_sample(
     right_id: str,
     left_key: str,
     right_key: str,
-    self_key: str | None = None,
 ) -> DataFrame:
     """J7: k deterministic pseudo-random candidates per probe.
 
     Mirrors np.random.choice over the full candidate set
     (get_polygons.py:331-332) with RNG replaced by a fixed integer hash
     h = (a·lk + b·rk) mod p, so the draw is the k smallest h per probe
-    (ties by right_id) — reproducible and SQL-expressible.
-    self_key: optional left column equal to right_key for self-exclusion.
+    (ties by right_id) — reproducible and SQL-expressible. A NULL key on
+    either side has no h and is never drawn.
 
-    Plans (identical output, cost-switched like nms/knn residues):
-    - |L|·|R| <= _DIRECT_MAX_PAIRS: window rank over the enumerated product.
-    - else: candidates with h < T survive into the shuffle + per-probe sort,
-      T sized so ~_OVERSAMPLE·k survive per probe (h is near-uniform mod p).
-      Probes with < k survivors (hash clumping) escalate T x _OVERSAMPLE and
-      re-scan only those probes; the last escalation is T = p (full
-      product), so the result is EXACTLY the global top-k draw regardless of
-      distribution — same completeness-proof-or-escalate shape as the kNN
-      rings. r6 (VERDICT r5 item 5): the h < T scan is no longer an
-      enumerated |L|·|R| product — the affine hash decomposes into
-      per-probe admissible rv-intervals, the right side is bucketed by
-      rv = (40503·rk) mod p once, and each round is an equi-join on the
-      bucket id touching only ~_OVERSAMPLE·k right rows per probe, with the
-      original h < T predicate re-applied after the join (the candidate set
-      is provably the enumerated plan's). Scan, shuffle and sort volumes
-      are all O(_OVERSAMPLE·k·|L|) per round.
+    Plan: candidates with h < T survive into the shuffle + per-probe sort,
+    T sized so ~_OVERSAMPLE·k survive per probe (h is near-uniform mod p).
+    Probes with < k survivors (hash clumping) escalate T x _OVERSAMPLE and
+    re-scan only those probes; the last escalation is T = p, a window rank
+    over the enumerated product, so the result is EXACTLY the global top-k
+    draw regardless of distribution — same completeness-proof-or-escalate
+    shape as the kNN rings. r6 (VERDICT r5 item 5): the h < T scan is not an
+    enumerated |L|·|R| product — the affine hash decomposes into per-probe
+    admissible rv-intervals, the right side is bucketed by
+    rv = (40503·rk) mod p once, and each round is an equi-join on the bucket
+    id touching only ~_OVERSAMPLE·k right rows per probe, with the original
+    h < T predicate re-applied after the join (the candidate set is provably
+    the enumerated plan's). Scan, shuffle and sort volumes are all
+    O(_OVERSAMPLE·k·|L|) per round.
     """
     lk = F.col(left_key)
     rk = F.col(right_key)
     h = F.pmod(lk * F.lit(48271) + rk * F.lit(40503), F.lit(RANDOM_K_HASH_P))
 
-    def enumerate_pairs(probes: DataFrame) -> DataFrame:
-        pairs = probes.crossJoin(right)
-        if self_key is not None:
-            pairs = pairs.where(F.col(self_key) != rk)
-        # NULL-keyed rows have no draw hash and can never be drawn — filtered
-        # in BOTH plans (without this the direct window ranked NULL h FIRST
-        # per Spark's NULLS FIRST asc ordering, while the threshold plan's
-        # `h < T` predicate dropped them: results flipped with input size)
-        return pairs.where(h.isNotNull())
-
-    # r6 (ADVICE r5): persist BEFORE counting — the counts then materialize
-    # the same caches every later branch reads, instead of computing the
-    # upstream lineage once for the cost-switch counts and again for the
-    # plans. The direct branch's returned plan reads the caches, so there
-    # they are kept; the threshold branch's result reads only its per-round
-    # draw checkpoints, so the input caches are released on return.
+    # the rounds re-read both inputs: persist them once (r6, ADVICE r5). The
+    # result reads only its per-round draw checkpoints, so the input caches
+    # are released on return.
     with owned() as o:
         left = o.persist(left)
-        right = o.persist(right)  # rebind: enumerate_pairs closes over this name
-        n_left = left.count()
+        right = o.persist(right)
         n_right = right.count()
-        if n_left * n_right <= _DIRECT_MAX_PAIRS:
-            o.keep(left)
-            o.keep(right)
-            return best_per_key(
-                enumerate_pairs(left), left_id, [h.asc(), right_id], k, "draw_rank"
-            ).select(left_id, right_id, "draw_rank")
-        import math
-
         frac = min(1.0, (_OVERSAMPLE * k) / max(n_right, 1))
         threshold = max(1, int(math.ceil(RANDOM_K_HASH_P * frac)))
 
@@ -268,13 +242,10 @@ def random_k_sample(
             buckets = F.array_distinct(
                 F.flatten(F.array(F.coalesce(seq1, empty), F.coalesce(seq2, empty)))
             )
-            # NULL-keyed probes yield a NULL bucket array → explode drops them,
-            # matching enumerate_pairs' h-notnull filter; NULL right keys get a
-            # NULL __rb and never join
-            pairs = probes.withColumn("__rb", F.explode(buckets)).join(right_b, "__rb")
-            if self_key is not None:
-                pairs = pairs.where(F.col(self_key) != rk)
-            return pairs.where(h.isNotNull())
+            # NULL-keyed probes yield a NULL bucket array → explode drops them;
+            # NULL right keys get a NULL __rb and never join (and a NULL h
+            # fails `h < T` in every round, the final crossJoin's included)
+            return probes.withColumn("__rb", F.explode(buckets)).join(right_b, "__rb")
 
         # the escalation loop is fully eager (checkpoint per round), so the
         # cached inputs serve its rounds and are released on return. The
@@ -283,11 +254,7 @@ def random_k_sample(
         parts: list[DataFrame] = []
         while True:
             final = threshold >= RANDOM_K_HASH_P
-            src = (
-                enumerate_pairs(remaining)
-                if final
-                else bucketed_pairs(remaining, threshold)
-            )
+            src = remaining.crossJoin(right) if final else bucketed_pairs(remaining, threshold)
             cand = o.keep(o.checkpoint(
                 src.withColumn("__h", h)
                 .where(F.col("__h") < F.lit(threshold))

@@ -43,8 +43,9 @@ def image_features(refs: DataFrame) -> DataFrame:
     return refs.select("doc_id", "media_ref").mapInPandas(per_batch, schema)
 
 
-def audio_features(refs: DataFrame, n_samples: int = 16000) -> DataFrame:
-    """Per clip: windowed audio features over the decoded waveform.
+def audio_features(refs: DataFrame) -> DataFrame:
+    """Per clip: windowed audio features over the decoded one-second
+    waveform.
 
     Output: (doc_id, frame_idx int, rms double, zcr double, centroid double) —
     one row per analysis window (the exploded layout downstream filters
@@ -61,7 +62,7 @@ def audio_features(refs: DataFrame, n_samples: int = 16000) -> DataFrame:
         for pdf in it:
             ids, fidx, rms, zcr, cent = [], [], [], [], []
             for row in pdf.itertuples():
-                wave = media.resolve_audio(row.media_ref, n_samples).astype(np.float64)
+                wave = media.resolve_audio(row.media_ref).astype(np.float64)
                 n_frames = max((len(wave) - frame) // hop + 1, 0)
                 if n_frames == 0:
                     continue

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from geotreehealth_spark.operators.caching import Owner, owned
 from geotreehealth_spark.operators.overlap import (
+    BOX_COLS,
     box_inter_cols,
     box_iou_cols,
     box_overlap_ratio_cols,
@@ -64,28 +65,21 @@ def _oriented(df: DataFrame, id_a, id_b, score_a, score_b) -> DataFrame:
 
 
 def greedy_nms(
-    polys: DataFrame,
-    id_col: str,
-    score_col: str,
-    cell_size: float = 50.0,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    wkb_col: str | None = None,
-    area_col: str | None = None,
+    polys: DataFrame, id_col: str, score_col: str, wkb_col: str | None = None
 ) -> DataFrame:
     """polys + `selected` boolean, exactly matching sequential greedy NMS.
 
     The conflict-edge DISCOVERY is always fully distributed (the quadratic
     part): directed edges (winner, loser) under the global greedy order, for
     every pair whose overlap ratio inter / max(areaA, areaB) exceeds
-    GREEDY_THRESHOLD (get_polygons.py:806-816). With wkb_col=None boxes are
-    exact geometry; otherwise the polygon kernel refines the bbox candidates.
-    ``_suppress`` then runs the fixpoint over the edge list.
-
-    area_col: optional TRUE polygon area column. When present, the JVM prune
-    keeps only pairs with box_inter / max(poly_area) > GREEDY_THRESHOLD —
-    sound for ANY polygons (poly_inter <= box_inter). Without it the prune is just
-    box_inter > 0 (previous rounds used a convex-area >= bbox/2 claim that
-    thin diagonal slivers violate — ADVICE.md round 1).
+    GREEDY_THRESHOLD (get_polygons.py:806-816), found by a 10 m cell
+    self-join on the (xmin, ymin, xmax, ymax) bboxes (a cell ~ a crown
+    diameter keeps the candidate count near the true bbox-overlap count).
+    With wkb_col=None boxes are exact geometry; otherwise the polygon kernel
+    refines the bbox candidates whose box intersection is non-empty (previous
+    rounds pruned on a convex-area >= bbox/2 claim that thin diagonal slivers
+    violate — ADVICE.md round 1). ``_suppress`` then runs the fixpoint over
+    the edge list.
 
     Plan note: the cell self-join runs on SLIM columns (id, score, bbox) so
     the quadratic candidate stream never carries WKB blobs; polygon payloads
@@ -97,18 +91,10 @@ def greedy_nms(
         # discovery + the final selected join) — persist it once instead of
         # re-deriving the upstream joins/aggregations per use
         polys = o.keep(o.persist(polys))
-        slim_cols = [id_col, score_col, *bounds] + ([area_col] if area_col else [])
-        slim = polys.select(*slim_cols)
-        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size, bounds=bounds)
+        slim = polys.select(id_col, score_col, *BOX_COLS)
+        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=10.0)
         if wkb_col is not None:
-            box_inter = box_inter_cols(bounds=bounds)
-            if area_col is not None:
-                sound_bound = box_inter / F.greatest(
-                    F.col(f"a_{area_col}"), F.col(f"b_{area_col}")
-                )
-                pairs = pairs.where(sound_bound > GREEDY_THRESHOLD)
-            else:
-                pairs = pairs.where(box_inter > 0.0)
+            pairs = pairs.where(box_inter_cols() > 0.0)
             geoms = polys.select(id_col, wkb_col)
             pairs = pairs.join(
                 geoms.select(
@@ -123,7 +109,7 @@ def greedy_nms(
             )
             measure = overlap_ratio_udf(F.col(f"a_{wkb_col}"), F.col(f"b_{wkb_col}"))
         else:
-            measure = box_overlap_ratio_cols(bounds=bounds)
+            measure = box_overlap_ratio_cols()
         # no .distinct(): overlap_selfjoin's reporting-cell rule already emits
         # each unordered pair exactly once
         edges = o.checkpoint(_oriented(
@@ -223,13 +209,7 @@ def _suppress(o: Owner, polys: DataFrame, id_col: str, edges: DataFrame) -> Data
     ).withColumn("selected", F.col("__supp").isNull()).drop("__supp")
 
 
-def weighted_nms(
-    polys: DataFrame,
-    id_col: str,
-    priority_col: str,
-    threshold: float = WEIGHTED_THRESHOLD,
-    cell_size: float = 50.0,
-) -> DataFrame:
+def weighted_nms(polys: DataFrame, id_col: str, priority_col: str) -> DataFrame:
     """W4 weighted NMS (batch_sam.py:692-731): score ``wscore`` = priority -
     Σ overlap, with IoU of the (xmin, ymin, xmax, ymax) boxes as the overlap
     (batch_sam.py:699).
@@ -250,14 +230,14 @@ def weighted_nms(
     with owned() as o:
         # read by the pair join AND the scored join (r6)
         polys = o.keep(o.persist(polys))
-        slim = polys.select(id_col, "xmin", "ymin", "xmax", "ymax")
-        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=cell_size)
+        slim = polys.select(id_col, *BOX_COLS)
+        pairs = overlap_selfjoin(slim, id_col=id_col, cell_size=10.0)
         # r6: ONE quadratic pair-discovery pass. The threshold-surviving pairs
         # feed BOTH the penalty aggregation and (with wscore attached per
         # endpoint by two slim id-joins) the greedy conflict edges.
         contrib = o.persist(
             pairs.withColumn("__m", box_iou_cols())
-            .where(F.col("__m") > threshold)
+            .where(F.col("__m") > WEIGHTED_THRESHOLD)
             .select(
                 F.col(f"a_{id_col}").alias("__ida"),
                 F.col(f"b_{id_col}").alias("__idb"),

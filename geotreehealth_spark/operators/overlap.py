@@ -19,22 +19,21 @@ from pyspark.sql import functions as F
 
 from geotreehealth_spark.geo import cellexprs
 
+# the bbox columns every overlap operator reads
+BOX_COLS = ("xmin", "ymin", "xmax", "ymax")
+
 
 def overlap_selfjoin(
-    df: DataFrame,
-    id_col: str,
-    cell_size: float = 50.0,
-    bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax"),
-    left_filter=None,
+    df: DataFrame, id_col: str, cell_size: float = 50.0, left_filter=None
 ) -> DataFrame:
-    """Pairs of rows with strictly-overlapping bboxes (a_id != b_id).
+    """Pairs of rows with strictly-overlapping BOX_COLS bboxes (a_id != b_id).
 
     Output columns: every input column twice, prefixed ``a_`` / ``b_``.
     ``left_filter``: optional Column predicate restricting the LEFT side (probe
     pattern); pairs are then (probe, any-other) and not symmetric-deduped.
     Without it, pairs are emitted once with a_id < b_id.
     """
-    x0, y0, x1, y1 = bounds
+    x0, y0, x1, y1 = BOX_COLS
 
     def prefixed(side: str, frame: DataFrame) -> DataFrame:
         sel = [F.col(c).alias(f"{side}_{c}") for c in frame.columns]
@@ -44,7 +43,7 @@ def overlap_selfjoin(
     # candidate pipeline — explode, equi-join, bbox predicate, reporting-cell
     # dedup — runs JVM-side with no Python boundary
     with_cells = cellexprs.with_covering_cells(
-        df, bounds, cell_size, gx_col="__gx", gy_col="__gy"
+        df, BOX_COLS, cell_size, gx_col="__gx", gy_col="__gy"
     )
     left = with_cells.drop("__gx", "__gy")
     if left_filter is not None:
@@ -81,10 +80,10 @@ def overlap_selfjoin(
     return joined.drop("__cell", "__gx", "__gy")
 
 
-def box_inter_cols(bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax")):
+def box_inter_cols():
     """Clamped intersection area of the a_/b_-prefixed boxes — the one term
     both box criteria (and NMS's polygon prune) are built from. Pure Catalyst."""
-    x0, y0, x1, y1 = bounds
+    x0, y0, x1, y1 = BOX_COLS
     iw = F.least(F.col(f"a_{x1}"), F.col(f"b_{x1}")) - F.greatest(
         F.col(f"a_{x0}"), F.col(f"b_{x0}")
     )
@@ -94,22 +93,20 @@ def box_inter_cols(bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", 
     return F.greatest(iw, F.lit(0.0)) * F.greatest(ih, F.lit(0.0))
 
 
-def _box_area(prefix: str, bounds: tuple[str, str, str, str]):
-    x0, y0, x1, y1 = bounds
+def _box_area(prefix: str):
+    x0, y0, x1, y1 = BOX_COLS
     return (F.col(f"{prefix}{x1}") - F.col(f"{prefix}{x0}")) * (
         F.col(f"{prefix}{y1}") - F.col(f"{prefix}{y0}")
     )
 
 
 def box_iou_cols():
-    """IoU of the a_/b_-prefixed (xmin, ymin, xmax, ymax) boxes as a pure
-    Catalyst expression."""
-    bounds = ("xmin", "ymin", "xmax", "ymax")
-    inter = box_inter_cols(bounds)
-    return inter / (_box_area("a_", bounds) + _box_area("b_", bounds) - inter)
+    """IoU of the a_/b_-prefixed boxes as a pure Catalyst expression."""
+    inter = box_inter_cols()
+    return inter / (_box_area("a_") + _box_area("b_") - inter)
 
 
-def box_overlap_ratio_cols(bounds: tuple[str, str, str, str] = ("xmin", "ymin", "xmax", "ymax")):
+def box_overlap_ratio_cols():
     """inter / max(area_a, area_b) of the a_/b_-prefixed axis-aligned boxes
     (get_polygons.py:806-816) as a pure Catalyst expression."""
-    return box_inter_cols(bounds) / F.greatest(_box_area("a_", bounds), _box_area("b_", bounds))
+    return box_inter_cols() / F.greatest(_box_area("a_"), _box_area("b_"))

@@ -94,10 +94,7 @@ def polygonize_masks(masks: DataFrame) -> DataFrame:
 
 
 def geometric_union(
-    polys: DataFrame,
-    group_col: str,
-    wkb_col: str | None = "geometry_wkb",
-    bounds_cols: tuple[str, str, str, str] | None = None,
+    polys: DataFrame, group_col: str, wkb_col: str | None = "geometry_wkb"
 ) -> DataFrame:
     """A5: per group, the union of member polygons on the group's unit pixel
     grid.
@@ -107,13 +104,12 @@ def geometric_union(
     the group bbox (so integer-aligned inputs are unioned EXACTLY), padded by
     one unit on each side.
 
-    wkb_col=None + bounds_cols (r6): box members are their bounds rectangles
-    — the rings are built from the four bound columns inside the batch
+    wkb_col=None (r6): box members are their (x0, y0, x1, y1) rectangles —
+    the rings are built from the four bound columns inside the batch
     (vertex-identical to the encoded boxes), skipping the WKB encode UDF and
     the per-row decode, like zonal_raster_stats/pip_join's box conventions.
     """
-    if (wkb_col is None) != (bounds_cols is not None):
-        raise ValueError("pass exactly one of wkb_col / bounds_cols")
+    bounds_cols = ("x0", "y0", "x1", "y1")
 
     def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
         if wkb_col is None:

@@ -8,7 +8,7 @@
 - minhash_lsh_pairs: 64-permutation MinHash with 16 bands; candidate pairs
   join on (band, band-hash) buckets.
 - simhash_signatures / simhash_dedup_pairs: 60-bit SimHash (majority bit vote)
-  with pigeonhole chunk blocking derived from max_hamming.
+  with pigeonhole chunk blocking derived from SIMHASH_MAX_HAMMING.
 
 Shared-dialect hashing (round-2 redesign): round 1 hashed tokens with a
 per-byte Python FNV loop inside pandas UDFs — the one row-at-a-time kernel in
@@ -41,6 +41,9 @@ SIMHASH_BITS = 60  # md5-derived hash width that fits BIGINT in both dialects
 MINHASH_PERMS = 64
 MINHASH_BANDS = 16  # 4 signature rows per band
 SIMHASH_MAX_HAMMING = 3  # the simhash_pairs query's bound
+# the Jaccard floors of the jaccard_pairs / ngram_jaccard_pairs queries
+JACCARD_THRESHOLD = 0.5
+NGRAM_JACCARD_THRESHOLD = 0.35
 DOCS_SQL = "SELECT doc_id, text FROM documents"
 
 _TOKS_DUCK = (
@@ -145,18 +148,14 @@ def _set_jaccard(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-) -> DataFrame:
+def ngram_jaccard_pairs(docs: DataFrame, max_df: int | None = None) -> DataFrame:
     """Pairs (id_a < id_b, jaccard) with character-4-gram-set Jaccard >=
-    threshold — the shingle-level near-dup detector (robust to tokenization
-    differences, the standard n-gram variant of jaccard_pairs). Same
-    inverted-index plan: shingle posting lists drive a bucketed self-join,
-    max_df caps stop-shingles, Jaccard computed over the post-filter shingle
-    universe (mirrored by the SQL oracle)."""
-    return _set_jaccard(shingles_df(docs), "shingle", threshold, max_df)
+    NGRAM_JACCARD_THRESHOLD — the shingle-level near-dup detector (robust to
+    tokenization differences, the standard n-gram variant of jaccard_pairs).
+    Same inverted-index plan: shingle posting lists drive a bucketed
+    self-join, max_df caps stop-shingles, Jaccard computed over the
+    post-filter shingle universe (mirrored by the SQL oracle)."""
+    return _set_jaccard(shingles_df(docs), "shingle", NGRAM_JACCARD_THRESHOLD, max_df)
 
 
 def exact_dedup(docs: DataFrame) -> DataFrame:
@@ -168,14 +167,10 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Pairs (id_a < id_b, jaccard) with word-set Jaccard >= threshold;
-    max_df caps stop-tokens (see _set_jaccard)."""
-    return _set_jaccard(tokens_df(docs), "token", threshold, max_df)
+def jaccard_pairs(docs: DataFrame, max_df: int | None = None) -> DataFrame:
+    """Pairs (id_a < id_b, jaccard) with word-set Jaccard >=
+    JACCARD_THRESHOLD; max_df caps stop-tokens (see _set_jaccard)."""
+    return _set_jaccard(tokens_df(docs), "token", JACCARD_THRESHOLD, max_df)
 
 
 def _perm_params() -> tuple[np.ndarray, np.ndarray]:
@@ -280,16 +275,15 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return votes.select("doc_id", sim.cast("long").alias("simhash"))
 
 
-def _simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
-    """(offset, width) chunk layout: max_hamming+1 chunks over SIMHASH_BITS.
+def _simhash_chunks() -> list[tuple[int, int]]:
+    """(offset, width) chunk layout: SIMHASH_MAX_HAMMING+1 chunks over
+    SIMHASH_BITS.
 
-    Pigeonhole: a pair differing in <= max_hamming bits leaves at least one of
-    the max_hamming+1 chunks untouched — the recall guarantee round 1 violated
-    by fixing 4 chunks regardless of max_hamming (VERDICT.md "What's wrong" 1).
+    Pigeonhole: a pair differing in <= SIMHASH_MAX_HAMMING bits leaves at
+    least one of the chunks untouched — the recall guarantee round 1 violated
+    by fixing 4 chunks regardless of the bound (VERDICT.md "What's wrong" 1).
     """
-    n_chunks = max_hamming + 1
-    if n_chunks > SIMHASH_BITS:
-        raise ValueError(f"max_hamming {max_hamming} needs > {SIMHASH_BITS} chunks")
+    n_chunks = SIMHASH_MAX_HAMMING + 1
     base, rem = divmod(SIMHASH_BITS, n_chunks)
     layout = []
     off = 0
@@ -300,11 +294,11 @@ def _simhash_chunks(max_hamming: int) -> list[tuple[int, int]]:
     return layout
 
 
-def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
-    """Near-dup pairs with SimHash Hamming distance <= max_hamming — EXACT
-    recall: blocked on max_hamming+1 chunks (pigeonhole), refined by
-    bit_count(xor) JVM-side. Output: (id_a, id_b, hamming:int)."""
-    layout = _simhash_chunks(max_hamming)
+def simhash_dedup_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs with SimHash Hamming distance <= SIMHASH_MAX_HAMMING —
+    EXACT recall: blocked on SIMHASH_MAX_HAMMING+1 chunks (pigeonhole),
+    refined by bit_count(xor) JVM-side. Output: (id_a, id_b, hamming:int)."""
+    layout = _simhash_chunks()
     chunk_exprs = [
         F.shiftright(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
         for off, w in layout
@@ -319,7 +313,7 @@ def simhash_dedup_pairs(docs: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING)
         .select("id_a", "id_b", "sh_a", "sh_b")
         .distinct()
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"))
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
     return pairs.select("id_a", "id_b", "hamming")
 

@@ -35,7 +35,7 @@ LSH_PLANES = 6  # sign bits per table
 LSH_MIN_SIM = 0.25  # rp_lsh_pairs' cosine refine; random 64-d vectors top out near 0.5
 IVF_LISTS = 16
 IVF_NPROBE = 4
-ANN_K = 10  # neighbors per probe of the ANN queries
+ANN_K = 10  # neighbors per probe of the top-k and ANN queries
 EMB_SQL = "SELECT vec_id, embedding FROM embeddings"  # the oracles' input
 PROBE_PRED = "vec_id % 50 = 0"  # the ANN oracles' probe set
 
@@ -93,12 +93,8 @@ def _dot_lits_sql(coeffs) -> str:
     )
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    probes: DataFrame,
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k cosine neighbors per probe (excluding self).
+def cosine_topk(embeddings: DataFrame, probes: DataFrame) -> DataFrame:
+    """Exact top-ANN_K cosine neighbors per probe (excluding self).
 
     Plan: norms precomputed on each side BEFORE the broadcast nested-loop join
     (once per row, not once per pair); the rank window sees only
@@ -118,7 +114,7 @@ def cosine_topk(
     joined = e.join(F.broadcast(p), F.col("vec_id") != F.col("probe_id"))
     sim = _dot(F.col("__pv"), F.col("__v")) / (F.col("__pn") * F.col("__n"))
     scored = joined.select("probe_id", F.col("vec_id").alias("neighbor_id"), sim.alias("sim"))
-    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
+    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], ANN_K, "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -181,14 +177,14 @@ def rp_lsh_pairs(embeddings: DataFrame) -> DataFrame:
     )
 
 
-def ann_lsh_topk(embeddings: DataFrame, probes: DataFrame, k: int = 10) -> DataFrame:
+def ann_lsh_topk(embeddings: DataFrame, probes: DataFrame) -> DataFrame:
     """Bucketed ANN: LSH candidate generation + exact cosine re-rank.
 
     The scale path for similarity search (VERDICT.md "the composition that
     doesn't exist yet"): each probe meets only its bucket collisions — work is
     |collisions|, not |emb| x |probes| — then cosine_topk-style re-rank over
-    the candidate set. Results are the exact top-k OF THE CANDIDATE SET (ANN
-    semantics); the oracle replicates the buckets so the gate is exact."""
+    the candidate set. Results are the exact top-ANN_K OF THE CANDIDATE SET
+    (ANN semantics); the oracle replicates the buckets so the gate is exact."""
     planes = rp_planes(DIM, LSH_TABLES, LSH_PLANES)
     eb = _bucketed(embeddings, planes, "neighbor_id")
     pb = _bucketed(probes, planes, "probe_id")
@@ -207,7 +203,7 @@ def ann_lsh_topk(embeddings: DataFrame, probes: DataFrame, k: int = 10) -> DataF
             "probe_id", "neighbor_id", cosine_expr(F.col("__pv"), F.col("__v")).alias("sim")
         )
     )
-    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], k, "rank")
+    return best_per_key(scored, "probe_id", [F.desc("sim"), "neighbor_id"], ANN_K, "rank")
 
 
 def ivf_centroids(dim: int, n_lists: int) -> np.ndarray:

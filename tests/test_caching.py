@@ -138,7 +138,7 @@ def test_greedy_nms_holds_only_what_its_plan_reads(spark, monkeypatch, driver_ma
     monkeypatch.setattr(nms, "_DRIVER_FIXPOINT_MAX", driver_max)
     polys = _chain(spark)
     before = registry(spark)
-    out = nms.greedy_nms(polys, id_col="pid", score_col="score", cell_size=2.0)
+    out = nms.greedy_nms(polys, id_col="pid", score_col="score")
     assert len(new_rdds(spark, before)) == held
     got = {r.pid: r.selected for r in out.collect()}
     assert got == {f"b{i}": i % 2 == 0 for i in range(8)}
@@ -146,11 +146,12 @@ def test_greedy_nms_holds_only_what_its_plan_reads(spark, monkeypatch, driver_ma
 
 
 def _weighted(polys):
-    return nms.weighted_nms(polys, id_col="pid", priority_col="priority", threshold=0.3,
-                            cell_size=2.0)
+    return nms.weighted_nms(polys, id_col="pid", priority_col="priority")
 
 
-def test_weighted_nms_releases_its_pair_cache(spark):
+def test_weighted_nms_releases_its_pair_cache(spark, monkeypatch):
+    # the chain's neighbours have IoU 1/3: conflict edges exist under 0.3
+    monkeypatch.setattr(nms, "WEIGHTED_THRESHOLD", 0.3)
     polys = _chain(spark).withColumnRenamed("score", "priority")
     before = registry(spark)
     out = _weighted(polys)
@@ -174,7 +175,7 @@ def test_greedy_nms_failure_leaves_registry(spark, monkeypatch):
     polys = _chain(spark)
     before = registry(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
-        nms.greedy_nms(polys, id_col="pid", score_col="score", cell_size=2.0)
+        nms.greedy_nms(polys, id_col="pid", score_col="score")
     assert not new_rdds(spark, before)
 
 
@@ -192,7 +193,7 @@ def test_components_failure_leaves_registry(spark, monkeypatch):
 # call with no scope open leaves behind)
 KEEPING = {
     "containing_else_nearest": 4, "pipeline_e2e": 4, "weighted_nms": 2,
-    "random_k_sample": 2, "dup_components": 2, "knn": 1, "knn_quadrant": 1,
+    "random_k_sample": 1, "dup_components": 2, "knn": 1, "knn_quadrant": 1,
     "nms_greedy": 1, "median_pick": 1, "zonal_raster": 1, "jaccard_pairs": 1,
     "ngram_jaccard_pairs": 1, "minhash_lsh_pairs": 1, "simhash_pairs": 1,
     "rp_lsh_pairs": 1,
@@ -208,7 +209,8 @@ def test_scope_frees_what_a_query_kept(spark, name):
     assert not new_rdds(spark, before)
 
 
-def test_scope_spares_caller_caches(spark):
+def test_scope_spares_caller_caches(spark, monkeypatch):
+    monkeypatch.setattr(nms, "WEIGHTED_THRESHOLD", 0.3)
     before = registry(spark)
     polys = _chain(spark).withColumnRenamed("score", "priority").persist()
     assert polys.count() == 8
@@ -233,8 +235,8 @@ def test_failure_inside_scope_leaves_registry(spark, monkeypatch):
     before = registry(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
         with scope():
-            out = knn.knn_join(left, right, k=2, left_id="pid", right_id="cid", cell_size=5.0)
+            out = knn.knn_join(left, right, k=2, left_id="pid", right_id="cid")
             assert out.count() == 40
             assert new_rdds(spark, before)
-            nms.greedy_nms(_chain(spark), id_col="pid", score_col="score", cell_size=2.0)
+            nms.greedy_nms(_chain(spark), id_col="pid", score_col="score")
     assert not new_rdds(spark, before)

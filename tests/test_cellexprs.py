@@ -129,13 +129,13 @@ def test_overlap_selfjoin_matches_brute_force(spark, frame):
     df = _boxes_df(spark, boxes)
     hit = _brute_overlap(boxes)
 
-    sym = overlap_selfjoin(df, "bid", CELL, BOUNDS).select("a_bid", "b_bid").toPandas()
+    sym = overlap_selfjoin(df, "bid", CELL).select("a_bid", "b_bid").toPandas()
     want = sorted(zip(*(a.tolist() for a in np.nonzero(np.triu(hit)))))
     assert len(want) > 100
     assert sorted(zip(sym.a_bid.tolist(), sym.b_bid.tolist())) == want, frame
 
     probe = overlap_selfjoin(
-        df, "bid", CELL, BOUNDS, left_filter=F.col("bid") % 3 == 0
+        df, "bid", CELL, left_filter=F.col("bid") % 3 == 0
     ).select("a_bid", "b_bid").toPandas()
     hit[np.arange(len(boxes)) % 3 != 0, :] = False
     want = sorted(zip(*(a.tolist() for a in np.nonzero(hit))))

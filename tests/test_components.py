@@ -21,13 +21,6 @@ def test_two_cliques_and_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 13: 10, 20: 20, 21: 20}
 
 
-def test_singletons_via_node_universe(spark):
-    edges = spark.createDataFrame([(2, 5)], "id_a long, id_b long")
-    nodes = spark.createDataFrame([(1,), (2,), (5,), (9,)], "doc_id long")
-    got = _comp_map(connected_components(edges, nodes=nodes))
-    assert got == {1: 1, 2: 2, 5: 2, 9: 9}
-
-
 def test_long_chain_converges(spark):
     # path graph 0-1-2-...-12: worst-case diameter for label propagation
     edges = spark.createDataFrame(

@@ -74,11 +74,11 @@ def test_lidar_docs_roundtrip(spark):
     from geotreehealth_spark import media
 
     tiles = synth.tiles(spark).where(F.col("tile_key") < 4)
-    docs = generator.lidar_to_docs(tiles, n_points=50)
+    docs = generator.lidar_to_docs(tiles)
     manifest = decode.decode_lidar(docs)
     assert manifest.count() == 4
     pts = media.load_lidar_points(manifest).toPandas().sort_values("point_id")
-    assert len(pts) == 200
+    assert len(pts) == 4 * 1000
     tb = tiles.toPandas().set_index("tile_id")
     for tid, g in pts.groupby("tile_id"):
         t = tb.loc[tid]

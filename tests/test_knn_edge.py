@@ -21,34 +21,29 @@ def _points(spark, rows, xcol="x", ycol="y", idcol="pid"):
 def test_knn_join_empty_right(spark):
     left = _points(spark, [("a", 1.0, 1.0), ("b", 5.0, 5.0)])
     right = _points(spark, [], xcol="cx", ycol="cy", idcol="cid")
-    out = knn.knn_join(
-        left, right, k=2, left_id="pid", right_id="cid", cell_size=10.0
-    )
+    out = knn.knn_join(left, right, k=2, left_id="pid", right_id="cid")
     assert out.count() == 0
-    assert {"pid", "cid", "dist", "knn_rank"} <= set(out.columns)
+    assert out.columns == ["pid", "x", "y", "cid", "cx", "cy", "dist", "knn_rank"]
 
 
 def test_quadrant_knn_join_empty_right(spark):
     left = _points(spark, [("a", 1.0, 1.0)])
     right = _points(spark, [], xcol="cx", ycol="cy", idcol="cid")
-    out = knn.quadrant_knn_join(
-        left, right, left_id="pid", right_id="cid", cell_size=10.0, min_dist=0.0,
-    )
+    out = knn.quadrant_knn_join(left, right, left_id="pid", right_id="cid")
     assert out.count() == 0
-    assert "quadrant" in out.columns
+    assert out.columns == ["pid", "x", "y", "cid", "cx", "cy", "dist", "quadrant"]
 
 
-def test_knn_join_no_cache_leak(spark):
+def test_knn_join_no_cache_leak(spark, monkeypatch):
     left = _points(spark, [(f"p{i}", float(i), float(i)) for i in range(50)])
     right = _points(
         spark,
         [(f"c{i}", float(i) + 0.25, float(i) - 0.25) for i in range(50)],
         xcol="cx", ycol="cy", idcol="cid",
     )
+    monkeypatch.setattr(knn, "_cell_size", lambda *a: 5.0)
     before = registry(spark)
-    out = knn.knn_join(
-        left, right, k=3, left_id="pid", right_id="cid", cell_size=5.0
-    )
+    out = knn.knn_join(left, right, k=3, left_id="pid", right_id="cid")
     assert out.count() == 50 * 3
     new = new_rdds(spark, before)
     # the returned prologue checkpoint is the only retained block set
@@ -74,7 +69,7 @@ QCOLS = ("pid", "cid", "quadrant", "dist")
 KCOLS = ("pid", "cid", "dist", "knn_rank")
 
 
-def test_corner_probe_proofs_match_brute_force(spark):
+def test_corner_probe_proofs_match_brute_force(spark, monkeypatch):
     """Exact-reach + empty-quadrant proof arms, checked against the brute
     force. The fixture pins the failure mode that kept a 1-probe residue at
     sf0.1: a probe AT the data min corner, whose west and south quadrants are
@@ -83,10 +78,11 @@ def test_corner_probe_proofs_match_brute_force(spark):
     rrows = [(f"c{i}", (i * 37.0) % 90 + 5.0, (i * 53.0) % 90 + 5.0) for i in range(40)]
     rrows.append(("far", 99.0, 99.0))
     left, right = _points(spark, lrows), _points(spark, rrows, "cx", "cy", "cid")
-    kw = dict(left_id="pid", right_id="cid", cell_size=8.0)
-    qa = _rows(knn.quadrant_knn_join(left, right, min_dist=3.0, **kw), QCOLS)
+    monkeypatch.setattr(knn, "_cell_size", lambda *a: 8.0)
+    kw = dict(left_id="pid", right_id="cid")
+    qa = _rows(knn.quadrant_knn_join(left, right, **kw), QCOLS)
     ka = _rows(knn.knn_join(left, right, k=4, **kw), KCOLS)
-    assert qa == _brute(lrows, rrows, min_dist=3.0) and qa
+    assert qa == _brute(lrows, rrows, min_dist=knn.MIN_DIST) and qa
     assert ka == _brute(lrows, rrows, k=4) and len(ka) == 3 * 4
     # the corner probe's NW/SW/SE quadrants are provably empty: its only
     # output rows are NE ones
@@ -105,7 +101,9 @@ def test_escalation_exact(spark, monkeypatch):
     rrows = [(f"c{i}", i * 17.0 % 100, i * 29.0 % 100) for i in range(50)]
     rrows.append(("far", 400.0, 400.0))
     left, right = _points(spark, lrows), _points(spark, rrows, "cx", "cy", "cid")
-    kw = dict(left_id="pid", right_id="cid", cell_size=50.0)
+    monkeypatch.setattr(knn, "_cell_size", lambda *a: 50.0)
+    monkeypatch.setattr(knn, "MIN_DIST", 0.0)
+    kw = dict(left_id="pid", right_id="cid")
     rings = []
     ring_cells = knn.cellexprs.with_ring_cells
 
@@ -119,7 +117,7 @@ def test_escalation_exact(spark, monkeypatch):
         rings.clear()
         a = _rows(knn.knn_join(left, right, k=3, **kw), KCOLS)
         assert a == _brute(lrows, rrows, k=3) and len(a) == 21 * 3
-        qa = _rows(knn.quadrant_knn_join(left, right, min_dist=0.0, **kw), QCOLS)
+        qa = _rows(knn.quadrant_knn_join(left, right, **kw), QCOLS)
         assert qa == _brute(lrows, rrows, min_dist=0.0) and qa
         assert rings == ([1, 1] if cross_rows else [1, 4, 1, 4])
 
@@ -135,15 +133,16 @@ def test_null_id_raises(spark, side):
     with pytest.raises(ValueError, match=f"NULL values in {side} id column '{col}'"):
         knn.knn_join(left, right, k=1, left_id="pid", right_id="cid")
     with pytest.raises(ValueError, match=f"'{col}'"):
-        knn.quadrant_knn_join(left, right, left_id="pid", right_id="cid", min_dist=0.0)
+        knn.quadrant_knn_join(left, right, left_id="pid", right_id="cid")
     # the failed calls released everything they stored, checkpoints included
     assert new_rdds(spark, before) == set()
 
 
-def test_cell_stride_guard(spark):
+def test_cell_stride_guard(spark, monkeypatch):
     """A tiny cell over a wide frame would need more than CELL_STRIDE cells
     on one axis, and such keys alias: the call must raise, not answer."""
     left = _points(spark, [("a", 0.0, 0.0)])
     right = _points(spark, [("x", -5000.0, 0.0), ("y", 5000.0, 1.0)], "cx", "cy", "cid")
+    monkeypatch.setattr(knn, "_cell_size", lambda *a: 1e-3)
     with pytest.raises(ValueError, match="fewer than 4194304 cells"):
-        knn.knn_join(left, right, k=1, left_id="pid", right_id="cid", cell_size=1e-3)
+        knn.knn_join(left, right, k=1, left_id="pid", right_id="cid")

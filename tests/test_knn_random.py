@@ -9,8 +9,8 @@ which numpy and the JVM both evaluate in correctly rounded IEEE doubles.
 
 ``KNN_RANDOM_SEEDS`` (default 2) sets the seeds per (frame, shape); the
 default gives the 24 cases of the tier-1 run. Odd seeds give both sides an
-extra attribute column, so the enrich joins that re-attach full rows run
-too (even seeds: (id, x, y) sides, which need none).
+extra attribute column, which the joins drop: the output is always the ids,
+coordinates, distance and tag (even seeds: (id, x, y) sides).
 """
 
 import os
@@ -26,7 +26,6 @@ SHAPES = ("uniform", "clustered", "edges", "outside")
 SEEDS = range(int(os.environ.get("KNN_RANDOM_SEEDS", "2")))
 EDGE_CELL = 4.0
 K = 4
-MIN_DIST = 3.0
 
 
 def _ulp_jitter(rng, v):
@@ -79,8 +78,8 @@ def _ids(pids, cids, probes, cands):
     return pids, np.array(cids)
 
 
-def _frames(spark, probes, cands, wide):
-    pids, cids = _ids(None, None, probes, cands)
+def _frames(spark, probes, cands, wide, cids=None):
+    pids, cids = _ids(None, cids, probes, cands)
     left = pd.DataFrame({"pid": pids, "x": probes[:, 0], "y": probes[:, 1]})
     right = pd.DataFrame({"cid": cids, "cx": cands[:, 0], "cy": cands[:, 1]})
     if wide:
@@ -124,21 +123,40 @@ def _rows(df, cols):
 @pytest.mark.parametrize("seed", SEEDS)
 @pytest.mark.parametrize("shape", SHAPES)
 @pytest.mark.parametrize("frame", FRAMES)
-def test_knn_matches_brute_force(spark, frame, shape, seed):
+def test_knn_matches_brute_force(spark, monkeypatch, frame, shape, seed):
     probes, cands, cell = _inputs(frame, shape, seed)
-    wide = seed % 2 == 1
-    left, right = _frames(spark, probes, cands, wide)
-    kw = dict(left_id="pid", right_id="cid", cell_size=cell)
+    if cell is not None:  # the lattice's own cell, so its points sit on cell edges
+        monkeypatch.setattr(knn, "_cell_size", lambda *a: cell)
+    left, right = _frames(spark, probes, cands, wide=seed % 2 == 1)
+    kw = dict(left_id="pid", right_id="cid")
     cols = ("pid", "cid", "dist", "knn_rank")
     outs = [knn.knn_join(left, right, k=1, **kw), knn.knn_join(left, right, k=K, **kw)]
     assert _rows(outs[0], cols) == brute_knn(probes, cands, 1)
     assert _rows(outs[1], cols) == brute_knn(probes, cands, K)
-    outs.append(knn.quadrant_knn_join(left, right, min_dist=MIN_DIST, **kw))
+    outs.append(knn.quadrant_knn_join(left, right, **kw))
     assert _rows(outs[2], ("pid", "cid", "quadrant", "dist")) == brute_quadrant(
-        probes, cands, MIN_DIST
+        probes, cands, knn.MIN_DIST
     )
     for out in outs:
-        assert out.columns[:-2] == left.columns + right.columns
-        if wide:  # the attribute columns belong to the matched rows
-            for pid, ptag, cid, cw in out.select("pid", "ptag", "cid", "cw").collect():
-                assert (ptag, cw) == ("t" + pid, int(cid[1:]))
+        assert out.columns[:-1] == ["pid", "x", "y", "cid", "cx", "cy", "dist"]
+
+
+@pytest.mark.parametrize("frame", FRAMES)
+def test_duplicate_right_ids_are_separate_candidates(spark, frame):
+    """Candidates that share an id at different coordinates are ranked as
+    separate rows: each probe's winners carry the coordinates of the row
+    that won, and no id is multiplied by a join back onto the inputs."""
+    probes, cands, _ = _inputs(frame, "uniform", 0)
+    cids = [f"c{i // 2:04d}" for i in range(len(cands))]
+    left, right = _frames(spark, probes, cands, wide=False, cids=cids)
+    kw = dict(left_id="pid", right_id="cid")
+    cols = ("pid", "cid", "dist", "knn_rank")
+    rows = set(zip(cids, cands[:, 0], cands[:, 1]))
+    for k in (1, K):
+        got = knn.knn_join(left, right, k=k, **kw)
+        assert _rows(got, cols) == brute_knn(probes, cands, k, cids=cids)
+        assert set(map(tuple, got.select("cid", "cx", "cy").collect())) <= rows
+    got = knn.quadrant_knn_join(left, right, **kw)
+    assert _rows(got, ("pid", "cid", "quadrant", "dist")) == brute_quadrant(
+        probes, cands, knn.MIN_DIST, cids=cids
+    )

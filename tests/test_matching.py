@@ -1,18 +1,19 @@
-"""J7 random_k_sample: the scale plan must equal the direct plan exactly.
+"""J7 random_k_sample: the bucketed threshold plan must equal the draw it
+defines exactly.
 
-The operator cost-switches between a direct window-rank over the enumerated
-product and a hash-threshold prefilter + escalate-on-shortfall plan
-(matching.py random_k_sample). Both are defined to return the SAME rows —
-the k smallest draw hashes per probe, ties by right_id — so this forces each
-path on the same input and asserts byte-identical sorted output, including
-an _OVERSAMPLE=1 run where ~half the probes fall short of k survivors in
-round 1 and the escalation loop actually executes.
+The draw is the k smallest h = (48271·lk + 40503·rk) mod 1000003 per probe,
+ties by right_id, with a NULL key on either side never drawn. The tests
+compute it in pure Python and compare the plan's sorted output byte for byte,
+including an _OVERSAMPLE=1 run where ~half the probes fall short of k
+survivors in round 1 and the escalation loop actually executes.
 """
 
 from pyspark.sql import functions as F
 
 from geotreehealth_spark.operators import matching
 from tests.conftest import new_rdds, registry
+
+KW = dict(left_id="pid", right_id="cid", left_key="lkey", right_key="rkey")
 
 
 def _inputs(spark):
@@ -31,51 +32,51 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _sample(monkeypatch, left, right, direct_max_pairs,
-            oversample=matching._OVERSAMPLE, **kw):
-    """random_k_sample with its plan-switch constants patched."""
-    monkeypatch.setattr(matching, "_DIRECT_MAX_PAIRS", direct_max_pairs)
+def _draw(left, right, k):
+    """The draw in pure Python: (pid, cid, draw_rank) rows, sorted."""
+    out = []
+    rights = right.collect()
+    for pid, lk in left.collect():
+        if lk is None:
+            continue
+        hs = sorted(
+            ((48271 * lk + 40503 * rk) % matching.RANDOM_K_HASH_P, cid)
+            for cid, rk in rights if rk is not None
+        )
+        out += [(pid, cid, r + 1) for r, (_, cid) in enumerate(hs[:k])]
+    return sorted(out)
+
+
+def _sample(monkeypatch, left, right, k, oversample=matching._OVERSAMPLE):
+    """random_k_sample with its oversampling factor patched."""
     monkeypatch.setattr(matching, "_OVERSAMPLE", oversample)
-    return _rows(matching.random_k_sample(left, right, **kw))
+    return _rows(matching.random_k_sample(left, right, k=k, **KW))
 
 
-def test_threshold_path_equals_direct(spark, monkeypatch):
+def test_threshold_path_equals_python_draw(spark, monkeypatch):
     left, right = _inputs(spark)
-    kw = dict(k=7, left_id="pid", right_id="cid", left_key="lkey",
-              right_key="rkey")
-    direct = _sample(monkeypatch, left, right, 10**9, **kw)
-    assert len(direct) == 60 * 7
-    thresh = _sample(monkeypatch, left, right, 0, **kw)
-    assert thresh == direct
+    want = _draw(left, right, 7)
+    assert len(want) == 60 * 7
+    assert _sample(monkeypatch, left, right, 7) == want
     # _OVERSAMPLE=1: expected survivors per probe == k, so shortfall probes
     # exist with near-certainty and the escalation re-scan runs
-    tight = _sample(monkeypatch, left, right, 0, oversample=1, **kw)
-    assert tight == direct
+    assert _sample(monkeypatch, left, right, 7, oversample=1) == want
 
 
-def test_threshold_path_self_exclusion_and_small_pool(spark, monkeypatch):
-    # candidate pool smaller than k: every probe returns all (non-self)
-    # candidates, both paths
+def test_threshold_path_small_pool(spark, monkeypatch):
+    # candidate pool smaller than k: every probe draws all 4 candidates, in
+    # the final (T = p) round
     left = spark.range(30).select(
         F.concat(F.lit("p"), F.col("id")).alias("pid"),
         F.col("id").alias("lkey"),
-        F.col("id").alias("self_rk"),
     )
     right = spark.range(4).select(
         F.concat(F.lit("c"), F.col("id")).alias("cid"),
         F.col("id").alias("rkey"),
     )
-    kw = dict(k=9, left_id="pid", right_id="cid", left_key="lkey",
-              right_key="rkey", self_key="self_rk")
-    direct = _sample(monkeypatch, left, right, 10**9, **kw)
-    thresh = _sample(monkeypatch, left, right, 0, **kw)
-    assert thresh == direct
-    # probes 0-3 exclude their self candidate (3 rows), probes 4+ get all 4
-    per_probe = {}
-    for pid, _, _ in direct:
-        per_probe[pid] = per_probe.get(pid, 0) + 1
-    assert all(n in (3, 4) for n in per_probe.values())
-    assert len(per_probe) == 30
+    want = _draw(left, right, 9)
+    assert len(want) == 30 * 4
+    assert _sample(monkeypatch, left, right, 9) == want
 
 
 def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
@@ -108,13 +109,9 @@ def test_threshold_path_failure_releases_checkpoints(spark, monkeypatch):
     import pytest
 
     # _OVERSAMPLE=1 guarantees shortfall probes -> a second round
-    monkeypatch.setattr(matching, "_DIRECT_MAX_PAIRS", 0)
     monkeypatch.setattr(matching, "_OVERSAMPLE", 1)
     with pytest.raises(RuntimeError, match="injected"):
-        matching.random_k_sample(
-            left, right, k=5, left_id="pid", right_id="cid",
-            left_key="lkey", right_key="rkey",
-        )
+        matching.random_k_sample(left, right, k=5, **KW)
     assert calls["n"] >= 2, "escalation never reached a second round"
     leaked = new_rdds(spark, before)
     assert not leaked, f"leaked persistent RDDs after failure: {leaked}"
@@ -124,7 +121,7 @@ def test_threshold_path_bucketed_wraparound_and_nulls(spark, monkeypatch):
     # r6 bucketed admissible-window join: large scattered keys make the
     # per-probe window a = (48271*lk) mod p land anywhere in [0, p), so both
     # the [0, T-a) and the wraparound [p-a, p-a+T) interval arms are
-    # exercised; NULL keys on either side must be undrawable in both plans.
+    # exercised; NULL keys on either side must be undrawable.
     left = spark.range(50).select(
         F.concat(F.lit("p"), F.col("id")).alias("pid"),
         F.when(F.col("id") == 49, F.lit(None)).otherwise(
@@ -137,11 +134,7 @@ def test_threshold_path_bucketed_wraparound_and_nulls(spark, monkeypatch):
             F.col("id") * 334214467 + 11
         ).alias("rkey"),
     )
-    kw = dict(k=5, left_id="pid", right_id="cid", left_key="lkey",
-              right_key="rkey")
-    direct = _sample(monkeypatch, left, right, 10**9, **kw)
-    assert len(direct) == 49 * 5  # the NULL-key probe draws nothing
-    thresh = _sample(monkeypatch, left, right, 0, **kw)
-    assert thresh == direct
-    tight = _sample(monkeypatch, left, right, 0, oversample=1, **kw)
-    assert tight == direct
+    want = _draw(left, right, 5)
+    assert len(want) == 49 * 5  # the NULL-key probe draws nothing
+    assert _sample(monkeypatch, left, right, 5) == want
+    assert _sample(monkeypatch, left, right, 5, oversample=1) == want

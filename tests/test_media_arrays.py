@@ -78,8 +78,8 @@ def test_audio_features(spark):
         [("a1", "aud://clip/1"), ("a2", "aud://clip/2")],
         "doc_id string, media_ref string",
     )
-    out = media_features.audio_features(refs, n_samples=8000).toPandas()
-    n_frames = (8000 - 1024) // 512 + 1
+    out = media_features.audio_features(refs).toPandas()
+    n_frames = (media.SAMPLE_RATE - 1024) // 512 + 1
     assert len(out) == 2 * n_frames
     assert set(out.doc_id) == {"a1", "a2"}
     assert (out.rms > 0).all() and (out.rms < 1.0).all()
@@ -89,6 +89,6 @@ def test_audio_features(spark):
     c1 = out[out.doc_id == "a1"].centroid.mean()
     c2 = out[out.doc_id == "a2"].centroid.mean()
     assert abs(c1 - c2) > 1.0
-    out2 = media_features.audio_features(refs, n_samples=8000).toPandas()
+    out2 = media_features.audio_features(refs).toPandas()
     assert (out.sort_values(["doc_id", "frame_idx"]).reset_index(drop=True)
             == out2.sort_values(["doc_id", "frame_idx"]).reset_index(drop=True)).all().all()

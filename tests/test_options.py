@@ -1,23 +1,28 @@
 """Operator options: every defaulted parameter of a function in
-geotreehealth_spark/ takes at least two values across the calls in the
-repository, or is listed in ALLOWED with the reason it stays. An option that
+geotreehealth_spark/ takes at least two values across the calls outside
+tests/, or is listed in ALLOWED with the reason it stays. An option that
 every caller gives the same value is a constant spelled as a knob: each one
 doubles the configurations that tests and benchmarks must cover, and an
 option no caller sets at all is the special case with only its default.
 
+Tests are not callers. A test that needs another value patches the module
+constant or function the operator reads (``knn.MIN_DIST``,
+``nms.WEIGHTED_THRESHOLD``, ``knn._cell_size``); an option that only tests
+vary is a code path that only tests run.
+
 The scan is an AST source scan (no imports). It reads every .py file in the
-repository and every multi-line string in one that parses as Python, so a
-script run through `python -c` counts as a caller. A call counts against every
-engine function of the same name, wherever it is defined — so a name shared
-by two functions can hide a constant, never invent one. For each defaulted
-parameter it collects the value each call passes: the argument passed by
-keyword or by position, else the default. Equal literals are one value
-(`25` and `25.0`). A non-literal argument varies, and so does a `*args`
-argument at or before the parameter's position. A `**kw` argument passes the
-keywords of the dict display or `dict(...)` call that `kw` is bound to, when
-that is its one binding in the enclosing function body and the body reads
-`kw` only to unpack it; any other `**kw` argument, such as a `**` parameter
-passed on, varies every parameter.
+repository outside tests/ and every multi-line string in one that parses as
+Python, so a script run through `python -c` counts as a caller. A call
+counts against every engine function of the same name, wherever it is
+defined — so a name shared by two functions can hide a constant, never
+invent one. For each defaulted parameter it collects the value each call
+passes: the argument passed by keyword or by position, else the default.
+Equal literals are one value (`25` and `25.0`). A non-literal argument
+varies, and so does a `*args` argument at or before the parameter's
+position. A `**kw` argument passes the keywords of the dict display or
+`dict(...)` call that `kw` is bound to, when that is its one binding in the
+enclosing function body and the body reads `kw` only to unpack it; any other
+`**kw` argument, such as a `**` parameter passed on, varies every parameter.
 """
 
 import ast
@@ -27,7 +32,19 @@ ROOT = pathlib.Path(__file__).resolve().parents[1]
 ENGINE = ROOT / "geotreehealth_spark"
 
 # "module:function(param)" -> why the option stays although it takes one value
-ALLOWED: dict[str, str] = {}
+_WKB_PATH = (
+    "selects the WKB path for the reference's irregular crowns, which no DuckDB "
+    "oracle can check; tests/test_spatial_parity.py and tests/test_vectorize.py "
+    "compare it to numpy"
+)
+_OWNERSHIP = "gives exactly-once pixel ownership on overlapping tiles"
+ALLOWED: dict[str, str] = {
+    "geotreehealth_spark.operators.pip_join:pip_join(poly_wkb)": _WKB_PATH,
+    "geotreehealth_spark.operators.nms:greedy_nms(wkb_col)": _WKB_PATH,
+    "geotreehealth_spark.operators.vectorize:geometric_union(wkb_col)": _WKB_PATH,
+    "geotreehealth_spark.operators.zonal:zonal_raster_stats(core_bounds)": _OWNERSHIP,
+    "geotreehealth_spark.operators.tiling:tile_grid(overlap)": _OWNERSHIP,
+}
 
 VARIES = object()  # the value of an argument the scan cannot pin down
 
@@ -207,12 +224,17 @@ def engine_sources() -> dict[str, str]:
     return {_module(p): p.read_text() for p in sorted(ENGINE.rglob("*.py"))}
 
 
-def _repo_single_valued() -> list[str]:
-    callers = [
-        p.read_text() for p in sorted(ROOT.rglob("*.py"))
-        if ".git" not in p.relative_to(ROOT).parts
+def caller_sources(root: pathlib.Path) -> list[str]:
+    """The source of every .py file under ``root`` whose calls count: all but
+    those under tests/ (and .git/)."""
+    return [
+        p.read_text() for p in sorted(root.rglob("*.py"))
+        if p.relative_to(root).parts[0] not in (".git", "tests")
     ]
-    return single_valued(engine_sources(), callers)
+
+
+def _repo_single_valued() -> list[str]:
+    return single_valued(engine_sources(), caller_sources(ROOT))
 
 
 def test_every_option_takes_two_values():
@@ -227,7 +249,7 @@ def test_allowlist_entries_are_live_and_reasoned():
     assert not set(ALLOWED) - single, sorted(set(ALLOWED) - single)
 
 
-def test_scan_self_check():
+def test_scan_self_check(tmp_path):
     engine = {"m": (
         "def f(a, b=1, c=2, *, d=3, e=4):\n    pass\n"
         "class K:\n    def g(self, x=1, y=2):\n        pass\n"
@@ -279,3 +301,11 @@ def test_scan_self_check():
     script = 'WORKER = r"""\nimport m\nm.h(p=7)\n"""\n'
     assert "m:h(p)" not in scan(script, "h()\n")
     assert "m:h(p)" in scan('NOTE = "h(p=7)"\n', "h()\n")
+    # a call under tests/ is no caller: p takes 7 only there, so it still
+    # has one value; a call anywhere else counts
+    for rel, src in {"tests/test_h.py": "h(p=7)\n", "tools/run.py": "h()\n"}.items():
+        (tmp_path / rel).parent.mkdir(exist_ok=True)
+        (tmp_path / rel).write_text(src)
+    assert "m:h(p)" in scan(*caller_sources(tmp_path))
+    (tmp_path / "tools" / "other.py").write_text("h(p=7)\n")
+    assert "m:h(p)" not in scan(*caller_sources(tmp_path))

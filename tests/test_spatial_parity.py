@@ -3,7 +3,7 @@
 These cover the WKB-polygon paths that the SQL oracles can't express:
 - filter-refine PIP join with irregular convex crowns (J3)
 - greedy NMS vs the reference-order sequential oracle (W3) — including
-  cross-cell borders (crowns straddle the 50 m cells by construction).
+  cross-cell borders (crowns straddle the 10 m NMS cells).
 """
 
 import numpy as np
@@ -23,9 +23,18 @@ def crowns_geo_pd(spark):
     geo = generator.crowns_with_geometry(crowns)
     pdf = geo.select(
         "crown_id", "crown_key", "score", "geometry_wkb",
-        "gxmin", "gymin", "gxmax", "gymax", "garea",
+        "gxmin", "gymin", "gxmax", "gymax",
     ).toPandas()
     return pdf
+
+
+def _nms_input(spark, pdf):
+    """The crowns as greedy_nms reads them: polygon bboxes in xmin..ymax."""
+    return spark.createDataFrame(
+        pdf[["crown_id", "score", "geometry_wkb", "gxmin", "gymin", "gxmax", "gymax"]].rename(
+            columns={"gxmin": "xmin", "gymin": "ymin", "gxmax": "xmax", "gymax": "ymax"}
+        )
+    )
 
 
 def test_pip_polygon_parity(spark, crowns_geo_pd):
@@ -96,16 +105,10 @@ def test_greedy_nms_parity(spark, crowns_geo_pd):
     assert len(pdf) > 1500
     expected = sequential_nms(pdf, threshold=nms.GREEDY_THRESHOLD)
 
-    geo = spark.createDataFrame(pdf)
     got = (
         nms.greedy_nms(
-            geo,
-            id_col="crown_id",
-            score_col="score",
-            cell_size=50.0,
-            bounds=("gxmin", "gymin", "gxmax", "gymax"),
+            _nms_input(spark, pdf), id_col="crown_id", score_col="score",
             wkb_col="geometry_wkb",
-            area_col="garea",  # sound JVM prune: box_inter / max(poly_area)
         )
         .select("crown_id", "selected")
         .toPandas()
@@ -127,12 +130,8 @@ def test_greedy_nms_distributed_fixpoint_matches_driver_path(
     pdf = crowns_geo_pd[
         (crowns_geo_pd.gxmin < 60.0) & (crowns_geo_pd.gymin < 300.0)
     ].reset_index(drop=True)
-    geo = spark.createDataFrame(pdf)
-    kwargs = dict(
-        id_col="crown_id", score_col="score", cell_size=50.0,
-        bounds=("gxmin", "gymin", "gxmax", "gymax"), wkb_col="geometry_wkb",
-        area_col="garea",
-    )
+    geo = _nms_input(spark, pdf)
+    kwargs = dict(id_col="crown_id", score_col="score", wkb_col="geometry_wkb")
     a = nms.greedy_nms(geo, **kwargs).select("crown_id", "selected").toPandas()
     monkeypatch.setattr(nms, "_DRIVER_FIXPOINT_MAX", 0)
     b = nms.greedy_nms(geo, **kwargs).select("crown_id", "selected").toPandas()
@@ -182,12 +181,9 @@ def test_weighted_nms_parity(spark):
         "crown_id", "xmin", "ymin", "xmax", "ymax", "priority"
     )
     pdf = polys.toPandas()
-    expected, exp_score = sequential_weighted_nms(pdf, threshold=0.5)
+    expected, exp_score = sequential_weighted_nms(pdf, threshold=nms.WEIGHTED_THRESHOLD)
     got = (
-        nms.weighted_nms(
-            polys, id_col="crown_id", priority_col="priority", threshold=0.5,
-            cell_size=10.0,
-        )
+        nms.weighted_nms(polys, id_col="crown_id", priority_col="priority")
         .select("crown_id", "wscore", "selected")
         .toPandas()
     )
@@ -234,20 +230,13 @@ def test_greedy_nms_parity_concave_crowns(spark, crowns_geo_pd):
     pdf["gxmax"] = [r[:, 0].max() for r in rings]
     pdf["gymin"] = [r[:, 1].min() for r in rings]
     pdf["gymax"] = [r[:, 1].max() for r in rings]
-    pdf["garea"] = [kernels.polygon_area(r) for r in rings]
     assert sum(1 for r in rings if not kernels.is_convex(r)) > 350
 
     expected = sequential_nms(pdf, threshold=nms.GREEDY_THRESHOLD)
-    geo = spark.createDataFrame(pdf)
     got = (
         nms.greedy_nms(
-            geo,
-            id_col="crown_id",
-            score_col="score",
-            cell_size=50.0,
-            bounds=("gxmin", "gymin", "gxmax", "gymax"),
+            _nms_input(spark, pdf), id_col="crown_id", score_col="score",
             wkb_col="geometry_wkb",
-            area_col="garea",
         )
         .select("crown_id", "selected")
         .toPandas()

@@ -58,11 +58,12 @@ def test_minhash_matches_oracle_and_estimates_jaccard(spark, docs):
     assert abs(est - true_j) < 0.25
 
 
-def test_minhash_lsh_recall(spark, docs):
+def test_minhash_lsh_recall(spark, docs, monkeypatch):
     """LSH candidates must contain every pair above the band threshold."""
     pairs = tdedup.minhash_lsh_pairs(docs).toPandas()
     cand = set(zip(pairs.id_a, pairs.id_b))
-    exact = tdedup.jaccard_pairs(docs, threshold=0.9).toPandas()
+    monkeypatch.setattr(tdedup, "JACCARD_THRESHOLD", 0.9)
+    exact = tdedup.jaccard_pairs(docs).toPandas()
     for ia, ib in zip(exact.id_a, exact.id_b):
         assert (ia, ib) in cand, f"high-jaccard pair ({ia},{ib}) missed by LSH"
 
@@ -78,7 +79,7 @@ def test_simhash_matches_python_oracle(spark, docs):
 def test_simhash_pairs_exact_recall(spark, docs):
     """Blocked pairs == brute-force hamming <= h pairs (pigeonhole recall)."""
     sub = docs.limit(120)
-    got = tdedup.simhash_dedup_pairs(sub, max_hamming=3).toPandas()
+    got = tdedup.simhash_dedup_pairs(sub).toPandas()
     sh = tdedup.simhash_signatures(sub).toPandas()
     sigs = dict(zip(sh.doc_id, sh.simhash))
     ids = sorted(sigs)
@@ -86,24 +87,26 @@ def test_simhash_pairs_exact_recall(spark, docs):
         (a, b)
         for i, a in enumerate(ids)
         for b in ids[i + 1 :]
-        if bin(int(sigs[a]) ^ int(sigs[b])).count("1") <= 3
+        if bin(int(sigs[a]) ^ int(sigs[b])).count("1") <= tdedup.SIMHASH_MAX_HAMMING
     }
     assert set(zip(got.id_a, got.id_b)) == brute
 
 
-def test_simhash_identical_texts(spark):
+def test_simhash_identical_texts(spark, monkeypatch):
     two = spark.createDataFrame(
         [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
         "doc_id int, text string",
     )
-    out = tdedup.simhash_dedup_pairs(two, max_hamming=0).toPandas()
+    monkeypatch.setattr(tdedup, "SIMHASH_MAX_HAMMING", 0)
+    out = tdedup.simhash_dedup_pairs(two).toPandas()
     assert len(out) == 1 and out.hamming[0] == 0
 
 
-def test_cosine_topk_exact(spark):
+def test_cosine_topk_exact(spark, monkeypatch):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     probes = emb.where(F.col("vec_id") < 3)
-    got = similarity.cosine_topk(emb, probes, k=5).toPandas()
+    monkeypatch.setattr(similarity, "ANN_K", 5)
+    got = similarity.cosine_topk(emb, probes).toPandas()
     pdf = emb.toPandas()
     M = np.asarray(pdf.embedding.tolist(), dtype=np.float64)
     Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
@@ -132,12 +135,13 @@ def test_rp_lsh_buckets_match_numpy(spark):
             assert int(sub[vid]) == int(e)
 
 
-def test_ann_lsh_topk_subset_of_exact(spark):
+def test_ann_lsh_topk_subset_of_exact(spark, monkeypatch):
     """ANN results are exact top-k of the candidate set: every returned
     neighbor's sim is correct and ranks are consistent."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     probes = emb.where(F.col("vec_id") < 2)
-    got = similarity.ann_lsh_topk(emb, probes, k=5).toPandas()
+    monkeypatch.setattr(similarity, "ANN_K", 5)
+    got = similarity.ann_lsh_topk(emb, probes).toPandas()
     pdf = emb.toPandas().set_index("vec_id")
     for row in got.itertuples():
         a = np.asarray(pdf.loc[row.probe_id].embedding, dtype=np.float64)
@@ -184,7 +188,7 @@ def _brute_set_jaccard(sets: dict, threshold: float, max_df):
 
 
 @pytest.mark.parametrize("max_df", [None, 3])
-def test_set_jaccard_matches_brute_force(spark, max_df):
+def test_set_jaccard_matches_brute_force(spark, monkeypatch, max_df):
     """jaccard_pairs (word sets) and ngram_jaccard_pairs (character 4-gram
     sets) equal an all-pairs Python Jaccard exactly, with and without the
     stop-element cap."""
@@ -192,9 +196,11 @@ def test_set_jaccard_matches_brute_force(spark, max_df):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     words = {i: set(t.lower().split()) for i, t in rows}
     grams = {i: {t.lower()[j:j + 4] for j in range(len(t) - 3)} for i, t in rows}
+    monkeypatch.setattr(tdedup, "JACCARD_THRESHOLD", 0.3)
+    monkeypatch.setattr(tdedup, "NGRAM_JACCARD_THRESHOLD", 0.25)
     for got, sets, threshold in (
-        (tdedup.jaccard_pairs(docs, threshold=0.3, max_df=max_df), words, 0.3),
-        (tdedup.ngram_jaccard_pairs(docs, threshold=0.25, max_df=max_df), grams, 0.25),
+        (tdedup.jaccard_pairs(docs, max_df=max_df), words, 0.3),
+        (tdedup.ngram_jaccard_pairs(docs, max_df=max_df), grams, 0.25),
     ):
         expect = _brute_set_jaccard(sets, threshold, max_df)
         assert expect, "corpus must produce pairs"

@@ -7,7 +7,9 @@ to its records. Where bench.py sweeps the session's caches between queries,
 the tools build and run each query inside ``caching.scope()``, which frees
 the storage that query kept.
 
-Importing this module puts the repository root on ``sys.path``.
+Importing this module puts the repository root on ``sys.path``, and on the
+``PYTHONPATH`` that the Spark session started later hands its Python workers,
+so a tool runs from any working directory.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 
 def parse_args(argv: list[str]) -> tuple[list[str], int, str]:

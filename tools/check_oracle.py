@@ -9,6 +9,8 @@ Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
 
 A query name that ``queries()`` does not have is an error (exit 2), raised
 before any query runs, so a mistyped name cannot pass by checking nothing.
+Each query is built and collected inside its own ``caching.scope()``, which
+frees the storage it kept, so no later query reads an earlier one's caches.
 """
 
 from __future__ import annotations
@@ -20,9 +22,9 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, ".")
-
+import _harness  # noqa: F401  puts the repository root on sys.path
 import __spark_entry__ as entrymod  # noqa: E402
+from geotreehealth_spark.operators.caching import scope  # noqa: E402
 from geotreehealth_spark.session import get_spark  # noqa: E402
 from geotreehealth_spark.synth import TPCH_TABLES  # noqa: E402
 
@@ -54,8 +56,8 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
-        sdf = fn(spark, sf_dir)
-        sp = sdf.toPandas()
+        with scope():
+            sp = fn(spark, sf_dir).toPandas()
         t_spark = time.time() - t0
         if name not in oracles:
             print(f"{name:28s} rows={len(sp):8d} (rows-only, no oracle) {t_spark:6.1f}s")

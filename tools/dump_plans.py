@@ -23,12 +23,11 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
+import _harness  # puts the repository root on sys.path
 import __spark_entry__ as entrymod  # noqa: E402
 from geotreehealth_spark.operators.caching import scope  # noqa: E402
 from geotreehealth_spark.session import get_spark  # noqa: E402
-from tools.plan_audit import fingerprint, normalize, plan_string  # noqa: E402
+from plan_audit import fingerprint, normalize, plan_string  # noqa: E402
 
 
 def main() -> None:
@@ -36,7 +35,7 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
+    out_dir = os.path.join(_harness.REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="plan-dump", cores=8)
     queries = entrymod.queries()
