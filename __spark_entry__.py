@@ -187,7 +187,7 @@ def q_zonal_lidar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zonal_lidar_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6/A7: the LiDAR media_ref path end-to-end — tile docs with laz://
-    spans → decode_lidar view → mapInPandas point-cloud load → bbox zonal
+    spans → decode_lidar view → mapInArrow point-cloud load → bbox zonal
     stats. The synthetic resolver's integer-modular milli-quantized formulas
     (media.resolve_lidar) are regenerated verbatim by the SQL oracle."""
     from geotreehealth_spark import media
@@ -573,7 +573,7 @@ def q_weighted_nms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_zonal_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: per-crown band stats through the FULL zonal path (tile assignment,
-    count-proportional salting, applyInPandas rasterize, partial merge) —
+    count-proportional salting, applyInArrow rasterize, partial merge) —
     exact SQL oracle: crown footprints are boxes snapped to the 0.25 grid
     (every decision boundary lands a quarter-pixel away from pixel centers,
     so all arithmetic is exact in both engines) over constant-per-band hsic
@@ -683,7 +683,7 @@ RECTS_SQL = """
 
 def q_polygonize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raster→vector: mask → per-component polygons (get_polygons.py:75-111,
-    batch_sam.py:496-548) through the full mapInPandas path, aggregated to
+    batch_sam.py:496-548) through the full mapInArrow path, aggregated to
     (mask_id, n_polys, total_px, max_area) whose closed forms the oracle
     rebuilds from the two-rectangle mask construction."""
     from geotreehealth_spark.docs import generator
@@ -765,7 +765,7 @@ def _const_media_refs(spark: SparkSession, sf_dir: str, prefix: str) -> DataFram
 
 def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal image path under the oracle gate: imgc:// constant-color
-    refs → mapInPandas decode → bilinear 64→16 resize → channel mean/std.
+    refs → mapInArrow decode → bilinear 64→16 resize → channel mean/std.
     The 4:1 resize has exactly-0.5 weights, so the constant survives
     bit-exact and mean/std are closed-form in SQL (media.resolve_image)."""
     from geotreehealth_spark.operators import media_features
@@ -776,7 +776,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal audio path under the oracle gate: audc:// constant clips →
-    mapInPandas decode → strided framing → windowed RMS/ZCR. For a constant
+    mapInArrow decode → strided framing → windowed RMS/ZCR. For a constant
     float32 amplitude a, every frame's RMS is exactly sqrt(a*a) and ZCR is
     exactly 0 (media.resolve_audio); the spectral centroid column is kept out
     of the gated projection (FFT round-off is not SQL-reproducible)."""
@@ -791,7 +791,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal video path under the oracle gate: vidc:// clips with
     constant frames (source frame j channel c = (key*31 + j*11 + c*7) % 256)
-    → mapInPandas frame sampling (media.resolve_frames) → per-frame channel
+    → mapInArrow frame sampling (media.resolve_frames) → per-frame channel
     means, closed-form in SQL."""
     from geotreehealth_spark.operators import media_features
 

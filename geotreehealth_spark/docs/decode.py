@@ -14,19 +14,20 @@ spans.doc_fingerprint.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
 from geotreehealth_spark.docs.generator import ATTR_FIELDS
 from geotreehealth_spark.geo import wkb
+from geotreehealth_spark.operators.udfs import list_column
 
 
-@F.pandas_udf(ArrayType(DoubleType()))
-def point_xy_udf(geom: pd.Series) -> pd.Series:
-    xs, ys = wkb.decode_points(list(geom))
-    return pd.Series(np.stack([xs, ys], axis=1).tolist())
+@F.arrow_udf(ArrayType(DoubleType()))
+def point_xy_udf(geom: pa.Array) -> pa.Array:
+    xs, ys = wkb.decode_points(geom.to_pylist())
+    return list_column(np.stack([xs, ys], axis=1))
 
 
 def _span_of_kind(kind: str):

@@ -16,7 +16,7 @@ the real WKB path that the box-based SQL oracles cannot.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType, StructField, StructType
@@ -78,47 +78,31 @@ def crown_polygon_ring(key: int, cx: float, cy: float, radius: float) -> np.ndar
     return kernels.convex_hull(pts)
 
 
+_BOUNDS = ("xmin", "ymin", "xmax", "ymax")
+
+
 # one combined UDF: polygon WKB + bounds in a single pass, so Catalyst cannot
 # inline-and-recompute the expensive polygon build once per derived column
-_CROWN_GEO_TYPE = StructType(
-    [
-        StructField("wkb", BinaryType()),
-        StructField("xmin", DoubleType()),
-        StructField("ymin", DoubleType()),
-        StructField("xmax", DoubleType()),
-        StructField("ymax", DoubleType()),
-        StructField("area", DoubleType()),
-    ]
+@F.arrow_udf(
+    StructType([StructField("wkb", BinaryType()), *(StructField(c, DoubleType()) for c in _BOUNDS)])
 )
-
-
-@F.pandas_udf(_CROWN_GEO_TYPE)
-def crown_geo_udf(
-    key: pd.Series, cx: pd.Series, cy: pd.Series, radius: pd.Series
-) -> pd.DataFrame:
-    wkbs, xmin, ymin, xmax, ymax, area = [], [], [], [], [], []
-    for k, x, y, r in zip(key, cx, cy, radius):
-        ring = crown_polygon_ring(int(k), float(x), float(y), float(r))
-        wkbs.append(wkb.encode_polygon(ring))
-        mn = ring.min(axis=0)
-        mx = ring.max(axis=0)
-        xmin.append(mn[0])
-        ymin.append(mn[1])
-        xmax.append(mx[0])
-        ymax.append(mx[1])
-        # true polygon area alongside the bbox: greedy_nms's sound JVM prune
-        # (box_inter / max(poly_area) > threshold) needs it
-        area.append(kernels.polygon_area(ring))
-    return pd.DataFrame(
-        {"wkb": wkbs, "xmin": xmin, "ymin": ymin, "xmax": xmax, "ymax": ymax, "area": area}
+def crown_geo_udf(key: pa.Array, cx: pa.Array, cy: pa.Array, radius: pa.Array) -> pa.Array:
+    rings = [
+        crown_polygon_ring(int(k), float(x), float(y), float(r))
+        for k, x, y, r in zip(*(np.asarray(c) for c in (key, cx, cy, radius)))
+    ]
+    bounds = np.array([[*r.min(axis=0), *r.max(axis=0)] for r in rings]).reshape(-1, 4)
+    return pa.StructArray.from_arrays(
+        [pa.array([wkb.encode_polygon(r) for r in rings], pa.binary()), *map(pa.array, bounds.T)],
+        names=["wkb", *_BOUNDS],
     )
 
 
-@F.pandas_udf(BinaryType())
+@F.arrow_udf(BinaryType())
 def two_rect_mask_udf(
-    ar0: pd.Series, ac0: pd.Series, ah: pd.Series, aw: pd.Series,
-    br0: pd.Series, bc0: pd.Series, bh: pd.Series, bw: pd.Series,
-) -> pd.Series:
+    ar0: pa.Array, ac0: pa.Array, ah: pa.Array, aw: pa.Array,
+    br0: pa.Array, bc0: pa.Array, bh: pa.Array, bw: pa.Array,
+) -> pa.Array:
     """100x100 boolean mask = union of two integer rectangles, packed bits.
 
     Deterministic synthetic SAM-mask stand-in for the polygonize driver query:
@@ -126,32 +110,34 @@ def two_rect_mask_udf(
     union pixel count have closed forms the SQL oracle reproduces."""
     out = []
     for a_r, a_c, a_h, a_w, b_r, b_c, b_h, b_w in zip(
-        ar0, ac0, ah, aw, br0, bc0, bh, bw
+        *(np.asarray(c) for c in (ar0, ac0, ah, aw, br0, bc0, bh, bw))
     ):
         m = np.zeros((100, 100), dtype=np.uint8)
         m[int(a_r):int(a_r + a_h), int(a_c):int(a_c + a_w)] = 1
         m[int(b_r):int(b_r + b_h), int(b_c):int(b_c + b_w)] = 1
         out.append(np.packbits(m).tobytes())
-    return pd.Series(out)
+    return pa.array(out, pa.binary())
 
 
-@F.pandas_udf(BinaryType())
+@F.arrow_udf(BinaryType())
 def two_box_multi_udf(
-    x0: pd.Series, y0: pd.Series, x1: pd.Series, y1: pd.Series,
-    u0: pd.Series, v0: pd.Series, u1: pd.Series, v1: pd.Series,
-) -> pd.Series:
+    x0: pa.Array, y0: pa.Array, x1: pa.Array, y1: pa.Array,
+    u0: pa.Array, v0: pa.Array, u1: pa.Array, v1: pa.Array,
+) -> pa.Array:
     """MultiPolygon WKB of two axis-aligned boxes (P8 explode fixtures)."""
     out = []
-    for a0, b0, a1, b1, c0, d0, c1, d1 in zip(x0, y0, x1, y1, u0, v0, u1, v1):
+    for a0, b0, a1, b1, c0, d0, c1, d1 in zip(
+        *(np.asarray(c) for c in (x0, y0, x1, y1, u0, v0, u1, v1))
+    ):
         out.append(wkb.encode_multipolygon(
             [kernels.box_ring(a0, b0, a1, b1), kernels.box_ring(c0, d0, c1, d1)]
         ))
-    return pd.Series(out)
+    return pa.array(out, pa.binary())
 
 
-@F.pandas_udf(BinaryType())
-def point_wkb_udf(x: pd.Series, y: pd.Series) -> pd.Series:
-    return pd.Series(wkb.encode_points(x.to_numpy(), y.to_numpy()))
+@F.arrow_udf(BinaryType())
+def point_wkb_udf(x: pa.Array, y: pa.Array) -> pa.Array:
+    return pa.array(wkb.encode_points(np.asarray(x), np.asarray(y)), pa.binary())
 
 
 def crowns_with_geometry(crowns: DataFrame) -> DataFrame:
@@ -175,7 +161,6 @@ def crowns_with_geometry(crowns: DataFrame) -> DataFrame:
         .withColumn("gymin", F.col("__g.ymin"))
         .withColumn("gxmax", F.col("__g.xmax"))
         .withColumn("gymax", F.col("__g.ymax"))
-        .withColumn("garea", F.col("__g.area"))
         .drop("__g")
     )
 

@@ -3,7 +3,8 @@
 No shapely / GEOS dependency — the sandbox has none, and the kernels the
 reference needs (PIP, area, polygon clip overlap, distance) are small
 enough to implement vectorized from scratch. All functions operate on numpy
-arrays so they stay Arrow-batch-friendly inside pandas UDFs. Spatial cell
+arrays so they stay Arrow-batch-friendly inside the Arrow UDFs
+(operators/udfs.py). Spatial cell
 keys are Catalyst expressions, not numpy: see ``geo/cellexprs.py``.
 """
 

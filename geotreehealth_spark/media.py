@@ -38,7 +38,7 @@ def resolve_raster(media_ref: str, bands: int, height: int, width: int) -> np.nd
     - hsic:// — constant-per-band cube value = (tile_key*31 + band*7) % 1000;
       band statistics over it have closed forms, which is what lets the
       zonal_raster driver query carry an exact SQL oracle while still running
-      the full rasterize/applyInPandas path.
+      the full rasterize/applyInArrow path.
     """
     if media_ref.startswith(HSI_PREFIX):
         tile_id = media_ref[len(HSI_PREFIX):]
@@ -86,7 +86,7 @@ def resolve_lidar(
     spany = int(round((tymax - tymin) * 1000.0))
     if spanx <= 0 or spany <= 0:
         # fail loudly with the tile named instead of a bare integer-mod-zero
-        # crash deep inside mapInPandas (ADVICE r3)
+        # crash deep inside mapInArrow (ADVICE r3)
         raise ValueError(
             f"degenerate lidar tile {media_ref!r}: extent "
             f"({txmin}, {tymin})..({txmax}, {tymax}) spans < 1 mm on an axis"
@@ -100,27 +100,22 @@ def resolve_lidar(
 def load_lidar_points(tiles: "DataFrame") -> "DataFrame":  # noqa: F821
     """Tile manifest (tile_id, txmin..tymax, media_ref, n_points) → exploded
     point DataFrame (tile_id, point_id, x, y, z). The decode runs inside
-    Arrow batches via mapInPandas — tiles are the parallelism unit, payloads
-    never leave the python worker except as slim point rows."""
-    import pandas as pd
+    Arrow batches via mapInArrow, one point batch per tile batch — tiles are
+    the parallelism unit, payloads never leave the python worker except as
+    slim point rows."""
+    from geotreehealth_spark.operators.udfs import map_rows
 
-    schema = "tile_id string, point_id long, x double, y double, z double"
+    def cloud(row):
+        return resolve_lidar(
+            row["media_ref"], int(row["n_points"]),
+            float(row["txmin"]), float(row["tymin"]),
+            float(row["txmax"]), float(row["tymax"]),
+        )
 
-    def per_batch(it):
-        for pdf in it:
-            for row in pdf.itertuples():
-                pid, x, y, z = resolve_lidar(
-                    row.media_ref, int(row.n_points),
-                    float(row.txmin), float(row.tymin),
-                    float(row.txmax), float(row.tymax),
-                )
-                yield pd.DataFrame(
-                    {"tile_id": row.tile_id, "point_id": pid, "x": x, "y": y, "z": z}
-                )
-
-    return tiles.select(
-        "tile_id", "txmin", "tymin", "txmax", "tymax", "media_ref", "n_points"
-    ).mapInPandas(per_batch, schema)
+    return map_rows(
+        tiles.select("tile_id", "txmin", "tymin", "txmax", "tymax", "media_ref", "n_points"),
+        "tile_id", cloud, "tile_id string, point_id long, x double, y double, z double",
+    )
 
 
 IMG_PREFIX = "img://"
@@ -148,7 +143,7 @@ def resolve_image(media_ref: str, height: int, width: int) -> np.ndarray:
     mean/std through decode→bilinear-resize→aggregate have closed forms (the
     64→16 resize weights are exactly 0.5, so the constant survives bit-exact),
     which is what lets the image_features driver query carry an exact SQL
-    oracle while running the full mapInPandas feature path."""
+    oracle while running the full mapInArrow feature path."""
     if media_ref.startswith(IMG_PREFIX):
         seed = (abs(hash_ref(media_ref)) * 2654435761 + 7) & 0xFFFFFFFF
         rng = np.random.default_rng(seed)

@@ -29,8 +29,12 @@ NMS which drifts at tile borders.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from geotreehealth_spark.operators.caching import Owner, owned
 from geotreehealth_spark.operators.overlap import (
@@ -132,21 +136,16 @@ def _suppress(o: Owner, polys: DataFrame, id_col: str, edges: DataFrame) -> Data
     distributed join-based fixpoint takes over (identical semantics).
     """
     if edges.count() <= _DRIVER_FIXPOINT_MAX:
-        suppressed_ids = _fixpoint_local(edges.toPandas())
+        suppressed_ids = _fixpoint_local(edges.toArrow())
         o.release(edges)
-        if not suppressed_ids:
+        if len(suppressed_ids) == 0:
             return polys.withColumn("selected", F.lit(True))
-        spark = polys.sparkSession
-        from pyspark.sql.types import StructField, StructType
-
-        id_type = polys.schema[id_col].dataType  # not hardcoded string (ADVICE.md)
-        # r6: ship the suppressed ids through the Arrow createDataFrame path
-        # (pandas input) — the row-tuple path pickles ~60k ids one by one
-        import pandas as pd
-
-        supp_df = spark.createDataFrame(
-            pd.DataFrame({id_col: suppressed_ids}),
-            StructType([StructField(id_col, id_type)]),
+        # the ids go back as one Arrow table, typed like polys' id column
+        # (not hardcoded string, ADVICE.md) — the row-tuple path pickles
+        # ~60k ids one by one
+        id_type = polys.schema[id_col].dataType
+        supp_df = polys.sparkSession.createDataFrame(
+            pa.table({id_col: suppressed_ids}), StructType([StructField(id_col, id_type)])
         ).withColumn("__supp", F.lit(True))
         return (
             polys.join(F.broadcast(supp_df), id_col, "left")
@@ -387,23 +386,19 @@ SELECT crown_id, wscore, crown_id NOT IN (SELECT id FROM supp) AS selected FROM 
 """
 
 
-def _fixpoint_local(edge_pdf) -> list:
+def _fixpoint_local(edges: pa.Table) -> pa.Array:
     """Vectorized greedy fixpoint on the driver: same rule as the distributed
     loop (a node is suppressed iff a surviving winner points at it), numpy
     per-round. Returns the suppressed ids."""
-    import numpy as np
-    import pandas as pd
-
-    if len(edge_pdf) == 0:
-        return []
-    # r6: pd.factorize (hash-based, O(n)) instead of np.unique, which SORTS
-    # the ~2x|edges| id strings (~0.4 s at 264k edges); the integer coding
+    # hash-based dictionary coding, O(n) — np.unique would SORT the
+    # ~2x|edges| id strings (~0.4 s at 264k edges); the integer coding
     # differs but the suppressed id SET is identical
-    codes, all_ids = pd.factorize(
-        np.concatenate([edge_pdf["winner"].to_numpy(), edge_pdf["loser"].to_numpy()])
+    enc = pc.dictionary_encode(
+        pa.concat_arrays([edges[c].combine_chunks() for c in ("winner", "loser")])
     )
-    all_ids = np.asarray(all_ids)
-    m = len(edge_pdf)
+    codes = enc.indices.to_numpy()
+    all_ids = enc.dictionary
+    m = edges.num_rows
     w = codes[:m]
     l = codes[m:]
     n = len(all_ids)
@@ -419,4 +414,4 @@ def _fixpoint_local(edge_pdf) -> list:
             break  # acyclic graph: cannot happen while edges remain
         suppressed[new_supp] = True
         alive &= ~suppressed[w] & ~suppressed[l]
-    return all_ids[suppressed].tolist()
+    return all_ids.filter(pa.array(suppressed))

@@ -13,16 +13,17 @@ Reference semantics:
   own polygons ARE mask-derived, so the grid is their native domain) and a
   faithful approximation otherwise; SURVEY.md §7-style documented deviation.
 
-Physical plan: both are applyInPandas per mask/group — the payload (mask
-bytes / member rings) never leaves the Arrow batch, output is slim rows
-(ids, counts, areas, part WKBs). Groups are the parallelism unit; salt
-upstream if group cardinality is skewed.
+Physical plan: polygonize_masks is a mapInArrow over mask batches and
+geometric_union an applyInArrow per group — the payload (mask bytes / member
+rings) never leaves the Arrow batch, output is slim rows (ids, counts, areas,
+part WKBs). Groups are the parallelism unit; salt upstream if group
+cardinality is skewed.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BinaryType
@@ -30,27 +31,25 @@ from pyspark.sql.types import ArrayType, BinaryType
 from geotreehealth_spark import media
 from geotreehealth_spark.geo import kernels, wkb
 from geotreehealth_spark.geo import polygonize as pz
+from geotreehealth_spark.operators.udfs import arrow_schema, map_rows
 
 
 def _parts_schema(key_col: str) -> str:
     return f"{key_col} string, part_idx int, n_px long, area double, geometry_wkb binary"
 
 
-def _parts(key_col: str, items) -> pd.DataFrame:
-    """Parts rows of (key, mask, txmin, tymax) items, masks of unit pixels:
+def _parts(mask: np.ndarray, txmin: float, tymax: float) -> tuple:
+    """(part_idx, n_px, area, geometry_wkb) columns of a mask of unit pixels:
     one row per 4-connected mask component, part_idx in polygonize's
     first-pixel (row-major) order — the one emitter behind every mask→parts
     operator."""
-    out = {key_col: [], "part_idx": [], "n_px": [], "area": [], "geometry_wkb": []}
-    for key, mask, txmin, tymax in items:
-        polys = pz.polygonize(mask, txmin=txmin, tymax=tymax)
-        for i, p in enumerate(polys):
-            out[key_col].append(key)
-            out["part_idx"].append(i)
-            out["n_px"].append(p["n_px"])
-            out["area"].append(p["area"])
-            out["geometry_wkb"].append(wkb.encode_polygon(p["ring"]))
-    return pd.DataFrame(out)
+    polys = pz.polygonize(mask, txmin=txmin, tymax=tymax)
+    return (
+        np.arange(len(polys)),
+        np.array([p["n_px"] for p in polys], dtype=np.int64),
+        np.array([p["area"] for p in polys], dtype=np.float64),
+        np.array([wkb.encode_polygon(p["ring"]) for p in polys], dtype=object),
+    )
 
 
 def _grid(mn: np.ndarray, mx: np.ndarray):
@@ -76,21 +75,12 @@ def polygonize_masks(masks: DataFrame) -> DataFrame:
     same order rasterio.features.shapes emits them.
     """
 
-    def bits(row) -> np.ndarray:
-        h = int(row.height)
-        w = int(row.width)
-        return np.unpackbits(
-            np.frombuffer(row.mask_bits, dtype=np.uint8), count=h * w
-        ).astype(bool).reshape(h, w)
+    def parts(row) -> tuple:
+        h, w = row["height"], row["width"]
+        bits = np.unpackbits(np.frombuffer(row["mask_bits"], dtype=np.uint8), count=h * w)
+        return _parts(bits.astype(bool).reshape(h, w), float(row["txmin"]), float(row["tymax"]))
 
-    def per_batch(it):
-        for pdf in it:
-            yield _parts("mask_id", (
-                (row.mask_id, bits(row), float(row.txmin), float(row.tymax))
-                for row in pdf.itertuples()
-            ))
-
-    return masks.mapInPandas(per_batch, _parts_schema("mask_id"))
+    return map_rows(masks, "mask_id", parts, _parts_schema("mask_id"))
 
 
 def geometric_union(
@@ -110,13 +100,15 @@ def geometric_union(
     the per-row decode, like zonal_raster_stats/pip_join's box conventions.
     """
     bounds_cols = ("x0", "y0", "x1", "y1")
+    ddl = _parts_schema(group_col)
+    schema = arrow_schema(ddl)
 
-    def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_group(table: pa.Table) -> pa.Table:
         if wkb_col is None:
-            bx0, by0, bx1, by1 = (pdf[c].to_numpy(dtype=float) for c in bounds_cols)
+            bx0, by0, bx1, by1 = (np.asarray(table[c], dtype=float) for c in bounds_cols)
             rings = [kernels.box_ring(*b) for b in zip(bx0, by0, bx1, by1)]
         else:
-            rings = [wkb.decode_polygon(b) for b in pdf[wkb_col]]
+            rings = [wkb.decode_polygon(b) for b in table[wkb_col].to_pylist()]
         mn = np.array([r.min(axis=0) for r in rings]).min(axis=0)
         mx = np.array([r.max(axis=0) for r in rings]).max(axis=0)
         gx0, gy1, mask = _grid(mn, mx)
@@ -124,12 +116,12 @@ def geometric_union(
             rr, cc, ok = media.rasterize_mask(ring, gx0, gy1, *mask.shape, 1.0, 1.0)
             if ok:
                 mask[rr, cc] = True
-        return _parts(group_col, [(pdf[group_col].iloc[0], mask, gx0, gy1)])
+        cols = _parts(mask, gx0, gy1)
+        key = pa.repeat(table[group_col][0], len(cols[0]))
+        return pa.Table.from_arrays([key, *cols], schema=schema)
 
     cols = [group_col, *bounds_cols] if wkb_col is None else [group_col, wkb_col]
-    return polys.select(*cols).groupBy(group_col).applyInPandas(
-        per_group, _parts_schema(group_col)
-    )
+    return polys.select(*cols).groupBy(group_col).applyInArrow(per_group, ddl)
 
 
 # ---------------------------------------------------------------------------
@@ -152,9 +144,9 @@ def geometry_type_col(wkb_col) -> "F.Column":
     )
 
 
-@F.pandas_udf(ArrayType(BinaryType()))
-def _multi_parts_udf(buf: pd.Series) -> pd.Series:
-    return pd.Series([wkb.split_multipolygon(b) for b in buf])
+@F.arrow_udf(ArrayType(BinaryType()))
+def _multi_parts_udf(buf: pa.Array) -> pa.Array:
+    return pa.array([wkb.split_multipolygon(b) for b in buf.to_pylist()], pa.list_(pa.binary()))
 
 
 def explode_multi(df: DataFrame) -> DataFrame:

@@ -8,7 +8,7 @@ per band.
 Physical plan:
 1. tile assignment (J12, broadcast range join) pairs each crown with every
    tile window overlapping its bbox;
-2. `applyInPandas` grouped by tile_id: the tile cube is resolved ONCE per
+2. `applyInArrow` grouped by tile_id: the tile cube is resolved ONCE per
    group (the reference's embedding-cache trick, batch_sam.py:420,483 —
    SURVEY.md §4) and every crown polygon in the group is rasterized against
    it — no per-row decode, no Python row loop;
@@ -25,7 +25,7 @@ bands*h*w floats — sized like the reference's seg batches (config.py:44).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,42 +33,38 @@ from geotreehealth_spark import media
 from geotreehealth_spark.geo import wkb
 from geotreehealth_spark.operators.caching import owned
 from geotreehealth_spark.operators.tiling import assign_tiles
+from geotreehealth_spark.operators.udfs import arrow_schema, list_column
 
 
 # COUNT-PROPORTIONAL salting (north_rule skew handling): a cheap
 # groupBy(tile_id).count() sketch sizes each tile's salt so every
-# applyInPandas group holds ~_ROWS_PER_GROUP crowns. Round 1 used a constant
+# applyInArrow group holds ~_ROWS_PER_GROUP crowns. Round 1 used a constant
 # salt, which left the dense-strip tiles 5x heavier than the rest and capped
 # tile_zonal scaling efficiency at 0.375 (VERDICT.md); proportional salt
 # flattens group cost regardless of skew. The tile cube is re-resolved per
 # sub-group (cheap — seeded generator / cached tile-store read) and the
-# partial-sum merge is unchanged. 4096 (r6, was 256): each applyInPandas
-# group pays a fixed Arrow/pandas dispatch cost, so thousands of ~256-row
-# groups spent more wall time on dispatch than on rasterizing (A/B at sf0.1:
-# 8.3 s -> 6.4 s min-of-3); ~4k rows is still far below a task's memory
+# partial-sum merge is unchanged. 4096 (r6, was 256): each group pays a
+# fixed Python dispatch cost (measured when the groups still crossed as
+# pandas frames), so thousands of ~256-row groups spent more wall time on
+# dispatch than on rasterizing (A/B at sf0.1: 8.3 s -> 6.4 s min-of-3);
+# ~4k rows is still far below a task's memory
 # budget (one tile cube + slim crown rows) and leaves salt splitting active
 # for genuinely hot tiles.
 _ROWS_PER_GROUP = 4096
 
 
-def _partials(rows) -> pd.DataFrame:
+def _partials(schema: pa.Schema, bands: int, rows) -> pa.Table:
     """Partial rows (crown_id, n_px, band_sum, band_sumsq) of (crown_id,
     n_px, vals) items, vals a crown's F-ordered (bands, n) pixel values —
     consumed one item at a time, so only one crown's pixels are held."""
-    out = {"crown_id": [], "n_px": [], "band_sum": [], "band_sumsq": []}
-    for crown_id, n_px, vals in rows:
-        out["crown_id"].append(crown_id)
-        out["n_px"].append(n_px)
-        out["band_sum"].append(vals.sum(axis=1).tolist())
-        out["band_sumsq"].append((vals * vals).sum(axis=1).tolist())
-    return pd.DataFrame(
-        {
-            "crown_id": pd.Series(out["crown_id"], dtype=object),
-            "n_px": pd.Series(out["n_px"], dtype="int64"),
-            "band_sum": pd.Series(out["band_sum"], dtype=object),
-            "band_sumsq": pd.Series(out["band_sumsq"], dtype=object),
-        }
-    )
+    ids, n_px, sums, sumsqs = [], [], [], []
+    for crown_id, n, vals in rows:
+        ids.append(crown_id)
+        n_px.append(n)
+        sums.append(vals.sum(axis=1))
+        sumsqs.append((vals * vals).sum(axis=1))
+    blocks = [list_column(np.array(b).reshape(-1, bands)) for b in (sums, sumsqs)]
+    return pa.Table.from_arrays([ids, n_px, *blocks], schema=schema)
 
 
 def zonal_raster_stats(
@@ -84,7 +80,7 @@ def zonal_raster_stats(
     tiles must carry (tile_id, txmin, tymin, txmax, tymax, media_ref, bands,
     height, width). Output: crown_id, n_px, band_mean: array<double>,
     band_std: array<double> (population std, like np.std). Crowns are salted
-    into applyInPandas groups of ~_ROWS_PER_GROUP per tile.
+    into applyInArrow groups of ~_ROWS_PER_GROUP per tile.
 
     core_bounds — optional names of the tile's OWNED (unbuffered) window
     columns. When tiles overlap, a pixel lies in several windows; clipping
@@ -120,25 +116,21 @@ def zonal_raster_stats(
         .drop("__cnt")
     )
 
-    partial_schema = (
+    partial_ddl = (
         "crown_id string, n_px long, band_sum array<double>, band_sumsq array<double>"
     )
+    partial_schema = arrow_schema(partial_ddl)
     cb = core_bounds
 
-    def per_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
-        bands, h, w = int(first.bands), int(first.height), int(first.width)
-        txmin, tymin, txmax, tymax = (
-            float(first.txmin),
-            float(first.tymin),
-            float(first.txmax),
-            float(first.tymax),
-        )
+    def per_tile(table: pa.Table) -> pa.Table:
+        first = table.slice(0, 1).to_pylist()[0]
+        bands, h, w = (int(first[c]) for c in ("bands", "height", "width"))
+        txmin, tymin, txmax, tymax = (float(first[c]) for c in ("txmin", "tymin", "txmax", "tymax"))
         res_x = (txmax - txmin) / w
         res_y = (tymax - tymin) / h
         if cb is not None:
-            core = tuple(float(getattr(first, c)) for c in cb)
-        cube = media.resolve_raster(first.media_ref, bands, h, w).astype(np.float64)
+            core = tuple(float(first[c]) for c in cb)
+        cube = media.resolve_raster(first["media_ref"], bands, h, w).astype(np.float64)
 
         def box_rows():
             # batch box path (r6): every footprint is an axis-aligned box, so
@@ -155,7 +147,7 @@ def zonal_raster_stats(
             # half-open pixel-center test, so it is two more limits per axis.
             px = txmin + (np.arange(w) + 0.5) * res_x
             qy = -(tymax - (np.arange(h) + 0.5) * res_y)  # increasing
-            bx0, by0, bx1, by1 = (pdf[c].to_numpy(dtype=np.float64) for c in crown_bounds)
+            bx0, by0, bx1, by1 = (np.asarray(table[c], dtype=np.float64) for c in crown_bounds)
             # rasterize_mask normalizes via ring.min/max — mirror it so an
             # inverted box selects the same (possibly empty) block
             bx0, bx1 = np.minimum(bx0, bx1), np.maximum(bx0, bx1)
@@ -170,7 +162,7 @@ def zonal_raster_stats(
                 r_lo = np.maximum(r_lo, np.searchsorted(qy, -core[3], side="right"))
                 r_hi = np.minimum(r_hi, np.searchsorted(qy, -core[1], side="right"))
             n_px = np.maximum(r_hi - r_lo, 0) * np.maximum(c_hi - c_lo, 0)
-            ids = pdf["crown_id"].to_numpy()
+            ids = table["crown_id"].to_pylist()
             for i in np.nonzero(n_px > 0)[0]:
                 # F-ordered (bands, n) — the LAYOUT is load-bearing: fancy
                 # indexing flat[:, idx] returns an F-contiguous array, and
@@ -182,8 +174,8 @@ def zonal_raster_stats(
 
         def ring_rows():
             flat = cube.reshape(bands, -1)
-            for row in pdf.itertuples():
-                ring = wkb.decode_polygon(getattr(row, wkb_col))
+            for crown_id, buf in zip(table["crown_id"].to_pylist(), table[wkb_col].to_pylist()):
+                ring = wkb.decode_polygon(buf)
                 rr, cc, any_px = media.rasterize_mask(ring, txmin, tymax, h, w, res_x, res_y)
                 if not any_px:
                     continue
@@ -197,11 +189,11 @@ def zonal_raster_stats(
                     if len(rr) == 0:
                         continue
                 idx = rr * w + cc
-                yield row.crown_id, len(idx), flat[:, idx]
+                yield crown_id, len(idx), flat[:, idx]
 
-        return _partials(box_rows() if wkb_col is None else ring_rows())
+        return _partials(partial_schema, bands, box_rows() if wkb_col is None else ring_rows())
 
-    partials = assigned.groupBy("tile_id", "__salt").applyInPandas(per_tile, partial_schema)
+    partials = assigned.groupBy("tile_id", "__salt").applyInArrow(per_tile, partial_ddl)
 
     merged = partials.groupBy("crown_id").agg(
         F.sum("n_px").alias("n_px"),

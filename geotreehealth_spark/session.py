@@ -1,8 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
 Every entry point (tests, bench, driver contract) builds its session here so the
-whole engine runs with one consistent config: Arrow transport across the
-Python boundary (pandas UDFs, mapInPandas, applyInPandas, toPandas), AQE
+whole engine runs with one consistent config: Arrow batches of a fixed size
+across the Python boundary (arrow UDFs, mapInArrow, applyInArrow), AQE
 with skew-join splitting (north_rule: "salted repartitioning on H3 cell keys
 plus AQE skew-join splitting"), shuffle parallelism tied to core count, and a
 generated-code class cache that holds the engine's whole working set.
@@ -56,9 +56,9 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
-        # Arrow everywhere: pandas UDFs, mapInPandas and applyInPandas always
-        # move Arrow batches (sized below); this flag also puts toPandas and
-        # createDataFrame(pandas) on Arrow.
+        # The engine's Python boundary is Arrow-native (arrow UDFs,
+        # mapInArrow, applyInArrow) and moves batches of the size below. This
+        # flag puts callers' toPandas and createDataFrame(pandas) on Arrow.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # AQE: runtime coalescing, skew-join splitting (dense forest cells).

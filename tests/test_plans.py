@@ -29,7 +29,8 @@ PURE_JVM = [
     "minhash_lsh_pairs", "simhash_pairs", "stratified_split", "ann_ivf_topk",
     "group_first", "distinct_count", "drop_smallest", "pair_distances",
 ]
-# Arrow-vectorized queries: pandas UDF / mapInPandas allowed, row-Python not.
+# Arrow-vectorized queries: arrow UDF / mapInArrow / applyInArrow allowed,
+# row-Python not.
 # kNN-family and similarity queries carry documented bounded fallback branches
 # (crossJoin on a proven-tiny residue / scalar broadcast joins), so the
 # cartesian count is not asserted for them.

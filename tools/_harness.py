@@ -61,7 +61,7 @@ def start_session(
 
     spark = get_spark(app_name=app_name, cores=cores, shuffle_partitions=shuffle_partitions)
 
-    @F.pandas_udf(LongType())
+    @F.arrow_udf(LongType())
     def _warm(v):
         return v
 

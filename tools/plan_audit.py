@@ -3,7 +3,7 @@
 For every driver query this inspects the FORMATTED Catalyst plan and counts
 the markers that decide 100-TB behavior:
 - BatchEvalPython   row-at-a-time Python UDF — banned everywhere (the engine
-                    uses only Arrow-vectorized pandas UDFs / mapInPandas)
+                    uses only arrow UDFs / mapInArrow / applyInArrow)
 - CartesianProduct  shuffled nested-loop pair blowup — allowed only in the
                     kNN family's documented bounded fallback branches
 - BroadcastNestedLoopJoin — counted separately, NOT asserted: with a tiny
@@ -84,7 +84,7 @@ def audit(df, execute: bool = False) -> dict:
         spans = int(m.group(1)) if m else 0
     return {
         "batch_eval_python": len(re.findall(r"BatchEvalPython", p)),
-        "arrow_python": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", p)),
+        "arrow_python": len(re.findall(r"ArrowEvalPython|MapInArrow|FlatMapGroupsInArrow", p)),
         "cartesian": len(re.findall(r"CartesianProduct", p)),
         "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", p)),
         "codegen_spans": spans,
